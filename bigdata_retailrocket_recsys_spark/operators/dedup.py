@@ -45,7 +45,10 @@ _span_islands_lazy :1531        span frame                     freed by
                                                                checkpoint
 connected_components* / LSH     per-round labels / bucket      eager local-
                                 frames                         Checkpoint,
-                                                               bounded
+                                                               bounded; CC
+                                                               rounds freed
+                                                               on return
+                                                               (iterate.py)
 winnowing_pairs (r13)           distinct (doc, fp) — corpus-   lazy return
                                 proportional NARROW (density
                                 2/(w+1) of grams)
@@ -82,6 +85,11 @@ from bigdata_retailrocket_recsys_spark.functions.vector import (
     cosine_similarity,
     l2_norm,
     to_double_array,
+)
+from bigdata_retailrocket_recsys_spark.operators.iterate import (
+    Iteration,
+    Round,
+    require_pinned,
 )
 from bigdata_retailrocket_recsys_spark.operators.text import ws_tokens
 
@@ -1444,146 +1452,81 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 25,
-    strict: bool = True,
     edges_pinned: bool = False,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over near-dup
-    candidate pairs (the step after any pairwise dedup — LSH/Jaccard pairs
-    only say "a~b"; picking one canonical doc per GROUP needs components).
+    candidate pairs (LSH/Jaccard pairs only say "a~b"; picking one
+    canonical doc per GROUP needs components). Output: ``node_col``,
+    ``cluster_id`` (min node id reachable).
 
-    ``nodes``: the node universe (must be a superset of the edge
-    endpoints); singletons with no edges keep their own id via a lazy
-    anti-join branch in the returned frame. Pass ``None`` (r14) to get
-    labels for the EDGE-ADJACENT nodes only — every other node is a
-    singleton by definition, and callers that consume losers/keepers
-    (``cluster_id != id``) never need the passive rows; skipping them
-    removes the endpoint distinct + the passive anti-join + union from
-    the plan.
+    ``nodes``: the node universe (a superset of the edge endpoints);
+    singletons keep their own id via a lazy anti-join branch. ``None``
+    labels the edge endpoints only, which is all a loser/keeper consumer
+    (``cluster_id != id``) needs. Edges with a NULL endpoint are dropped
+    (as in :func:`connected_components_bigstar`): no NULL node is labeled,
+    and a node whose only edges have a NULL end is a singleton.
 
-    ``edges_pinned`` (r14): promise that ``edges`` is already
-    materialized (an eager ``localCheckpoint``/cached frame — e.g.
-    :func:`jaccard_verify` output). The per-round symmetrized view is
-    then a narrow union over that pinned frame and the one-job eager
-    checkpoint of ``sym`` is skipped. Leave False for lazy edge
-    pipelines (LSH → verify built inline): without the pin every round
-    would re-execute the whole upstream.
+    ``edges_pinned``: promise that ``edges`` is already materialized (e.g.
+    :func:`jaccard_verify` output), so the symmetrized edges need no
+    checkpoint of their own. A lazy frame raises ValueError: every round
+    would re-run its upstream.
 
-    ``strict`` (default): raise RuntimeError if labels have not converged
-    after ``max_iter`` rounds instead of silently returning a partial
-    (over-segmented) clustering — a graph deeper than ``max_iter`` should
-    use :func:`connected_components_bigstar` (O(log² n) rounds), which the
-    error message points at. ``strict=False`` restores best-effort labels.
-
-    Iterative min-label propagation: every node starts labeled with its own
-    id; each round a node takes the min of its label and its neighbors'
-    labels, until a fixpoint (≤ graph diameter rounds, bounded by
-    ``max_iter``). Each round is one join + one map-side-combinable min
-    aggregate; lineage is truncated per round with ``localCheckpoint`` so
-    the plan stays flat. The driver-side loop is orchestration only — no
-    data is collected beyond the 1-value convergence count.
-
-    Convergence detection is FUSED into the round (r13, guide §2.4): the
-    old label rides the same min aggregate (tagged union →
-    ``min(when(src=old))``), the changed count is an ``Observation``
-    metric collected BY the eager checkpoint's own job — one job and one
-    exchange per round. Labels never increase under min-propagation, so
-    ``new < old`` is exactly the old ``new != old`` check (unit-locked).
-
-    Round 1 is FUSED off the edge set itself (r14): the identity labels
-    are implicit in ``sym`` (node n's round-0 label IS n), so the old
-    labels-init eager checkpoint, the endpoint ``distinct`` exchange and
-    the node semi-join are gone — round 1 aggregates
-    ``sym ∪ {(n, n)}`` directly, which is the same multiset the old
-    shape fed it (duplicate identity rows collapse under min).
-    Value-identical labels and round count for any ``nodes`` ⊇
-    endpoints (unit-locked).
-
-    Output: ``node_col``, ``cluster_id`` (min node id reachable; singleton
-    nodes keep their own id — omitted entirely when ``nodes=None``).
+    Min-label propagation: each round a node takes the min of its label
+    and its neighbors' (round 1 reads the identity labels off the edges)
+    until no label changes — ≤ diameter rounds; deeper graphs than
+    ``max_iter`` raise RuntimeError and belong to the bigstar form. The
+    round's min aggregate also carries the old label, so the changed count
+    (labels never increase) rides the round's own job.
     """
-    from pyspark.sql import Observation
-
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    # The symmetrized edge set drives EVERY round — checkpoint it once so
-    # a lazy upstream edge pipeline (LSH → verify) executes once, not
-    # once per round (r13; bounded: 2·|edges| narrow rows). When the
-    # caller pinned the edges already, the union is narrow work over a
-    # LogicalRDD — skip the extra checkpoint job (r14).
-    sym = edges.select(
-        F.col(src_col).alias("__n"), F.col(dst_col).alias("__peer")
-    ).union(
-        edges.select(
-            F.col(dst_col).alias("__n"), F.col(src_col).alias("__peer")
-        )
+    if edges_pinned:
+        require_pinned(edges)
+    e = edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
+    sym = e.select(F.col(src_col).alias("__n"), F.col(dst_col).alias("__peer")).union(
+        e.select(F.col(dst_col).alias("__n"), F.col(src_col).alias("__peer"))
     )
-    if not edges_pinned:
-        sym = sym.localCheckpoint(eager=True)
-    # Only edge-adjacent nodes can ever change labels; iterate over the
-    # edge-bounded set and union the untouched singletons back at the end
-    # (r13, guide §8). The anti-join right side needs no distinct.
-    passive = None
-    if nodes is not None:
-        passive = nodes.select(F.col(node_col).alias("__n")).join(
-            sym.select("__n"), "__n", "left_anti"
-        )
-    labels: DataFrame | None = None  # round 1 reads identity labels off sym
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame | None) -> DataFrame:
         if labels is None:
-            tagged = sym.select(
-                "__n", F.col("__peer").alias("__lbl"), F.lit(1).alias("__src")
-            ).union(
-                sym.select(
-                    "__n", F.col("__n").alias("__lbl"), F.lit(0).alias("__src")
-                )
-            )
+            old = sym.select("__n", F.col("__n").alias("__lbl"))
+            nbr = sym.select("__n", F.col("__peer").alias("__lbl"))
         else:
+            old = labels.select("__n", "__lbl")
             nbr = sym.join(
-                labels.select(
-                    F.col("__n").alias("__peer"), F.col("__lbl")
-                ),
-                "__peer",
-            ).select("__n", "__lbl", F.lit(1).alias("__src"))
-            tagged = labels.select(
-                "__n", "__lbl", F.lit(0).alias("__src")
-            ).union(nbr)
-        obs = Observation()
-        new_labels = (
-            tagged.groupBy("__n")
+                labels.select(F.col("__n").alias("__peer"), "__lbl"), "__peer"
+            ).select("__n", "__lbl")
+        return (
+            old.withColumn("__src", F.lit(0))
+            .union(nbr.withColumn("__src", F.lit(1)))
+            .groupBy("__n")
             .agg(
                 F.min("__lbl").alias("__lbl"),
-                F.min(F.when(F.col("__src") == 0, F.col("__lbl"))).alias(
-                    "__old"
-                ),
+                F.min(F.when(F.col("__src") == 0, F.col("__lbl"))).alias("__old"),
             )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("__lbl") < F.col("__old")).cast("bigint")
-                ).alias("__changed"),
-            )
-            .select("__n", "__lbl")
-            .localCheckpoint(eager=True)
         )
-        changed = obs.get["__changed"] or 0
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        if strict:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "rounds (graph diameter exceeds max_iter) — returning "
-                "labels here would silently over-segment clusters. Use "
-                "connected_components_bigstar (O(log^2 n) rounds) or "
-                "raise max_iter / pass strict=False."
+
+    changed = F.sum((F.col("__lbl") < F.col("__old")).cast("bigint"))
+    with Iteration() as it:
+        if not edges_pinned:  # a lazy upstream runs once, not per round
+            sym = it.checkpoint(sym).df
+        labels = it.fixpoint(
+            step,
+            Round(None),
+            max_iter=max_iter,
+            metrics=(changed.alias("changed"),),
+            converged=lambda prev, cur: not cur.seen["changed"],
+            hint="connected_components: use connected_components_bigstar "
+            "(O(log^2 n) rounds) or raise max_iter.",
+        ).select("__n", "__lbl")
+        if nodes is not None:
+            passive = nodes.select(F.col(node_col).alias("__n")).join(
+                sym.select("__n"), "__n", "left_anti"
             )
-    out = labels
-    if passive is not None:
-        out = out.union(passive.select("__n", F.col("__n").alias("__lbl")))
-    return out.select(
-        F.col("__n").alias(node_col), F.col("__lbl").alias("cluster_id")
-    )
+            labels = labels.union(passive.select("__n", F.col("__n").alias("__lbl")))
+        return it.result(
+            labels.select(F.col("__n").alias(node_col), F.col("__lbl").alias("cluster_id"))
+        )
 
 
 def connected_components_bigstar(
@@ -1598,59 +1541,31 @@ def connected_components_bigstar(
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log² n) rounds regardless of graph diameter, vs the
-    O(diameter) rounds of min-label propagation
-    (:func:`connected_components`). Same output contract: ``node_col``,
-    ``cluster_id`` = min node id in the component (any orderable id type).
-
-    This is the scale tier for pathological (chain/mirror-crawl) near-dup
-    graphs: a 10⁶-long chain takes 10⁶ min-label rounds but ~20 star
-    rounds. Each round is two groupBy-min passes over the *edge* set only
-    (never the node set), with lineage truncated per round via
-    ``localCheckpoint``; the driver-side loop is orchestration only (the
-    per-round convergence probe collects a single boolean).
+    SoCC'14) — O(log² n) rounds regardless of graph diameter (a 10⁶-long
+    chain takes ~20), vs the O(diameter) rounds of
+    :func:`connected_components`, with the same output contract (any
+    orderable id type). Not converging within ``max_iter`` rounds raises
+    RuntimeError.
 
     - large-star: for each node u, hook every neighbor v > u onto
       m = min({u} ∪ N(u)).
     - small-star: orient edges (big, small); hook every small neighbor and
       u itself onto m = min of that star.
 
-    At the fixpoint the edge set is exactly the star forest
-    {(u, component_min) : u ≠ component_min}; labels read off it with one
-    left join (singletons keep their own id).
+    Each round is two groupBy-min passes over the edge set only. At the
+    fixpoint the edges are the star forest {(u, component_min)}; labels
+    read off it with one left join (singletons keep their own id). Edges
+    with a NULL endpoint are dropped, so no NULL node is labeled. Each
+    round observes its edge count and a checksum (xxhash64 mod 2^30
+    summed, in range up to ~2^33 edges under ANSI); the exact
+    ``exceptAll`` proof runs only when both match the previous round.
 
     ``stats``: optional dict; ``stats["rounds"]`` is set to the number of
-    large+small iterations executed (tests assert the log² bound on a
-    deep chain).
+    large+small iterations executed.
     """
-    from pyspark.sql import Observation
 
-    # per-round fingerprint (r14, VERDICT r13 #5): edge count + a
-    # content checksum ride the checkpoint's own job; the exact
-    # ``exceptAll`` set-equality shuffle now fires only when BOTH match
-    # the previous round — i.e. exactly once, at true convergence —
-    # instead of on every count coincidence. pmod to 2^30 before the
-    # sum: a raw xxhash64 sum overflows bigint under ANSI (CLAUDE.md),
-    # and 2^30 keeps the sum in range up to ~2^33 edges.
-    _ck = F.sum(
-        F.pmod(F.xxhash64("__u", "__v"), F.lit(1 << 30))
-    ).alias("__ck")
-
-    obs0 = Observation()
-    e = (
-        edges.select(F.col(src_col).alias("__u"), F.col(dst_col).alias("__v"))
-        .filter(F.col("__u") != F.col("__v"))
-        .filter(F.col("__u").isNotNull() & F.col("__v").isNotNull())
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("__n"), _ck)
-        .localCheckpoint(eager=True)
-    )
-    n_e = obs0.get["__n"]
-    ck_e = obs0.get["__ck"]
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # --- large-star: symmetrize, per-u min over {u} ∪ N(u), hook v > u
+    def step(e: DataFrame) -> DataFrame:
+        # large-star: symmetrize, per-u min over {u} ∪ N(u), hook v > u
         sym = e.union(e.select(F.col("__v").alias("__u"), F.col("__u").alias("__v")))
         mins = sym.groupBy("__u").agg(F.min("__v").alias("__nm")).select(
             "__u", F.least("__u", "__nm").alias("__m")
@@ -1662,48 +1577,52 @@ def connected_components_bigstar(
             .filter(F.col("__u") != F.col("__v"))
             .distinct()
         )
-        # --- small-star: orient (big, small), per-u min, hook smalls and u
+        # small-star: orient (big, small), per-u min, hook smalls and u
         oriented = e_large.select(
-            F.greatest("__u", "__v").alias("__u"),
-            F.least("__u", "__v").alias("__v"),
+            F.greatest("__u", "__v").alias("__u"), F.least("__u", "__v").alias("__v")
         )
-        mins_s = oriented.groupBy("__u").agg(F.min("__v").alias("__m"))
-        hooked = oriented.join(mins_s, "__u")
-        obs = Observation()
-        e_small = (
+        hooked = oriented.join(
+            oriented.groupBy("__u").agg(F.min("__v").alias("__m")), "__u"
+        )
+        return (
             hooked.select(F.col("__v").alias("__u"), F.col("__m").alias("__v"))
             .union(hooked.select(F.col("__u"), F.col("__m").alias("__v")))
             .filter(F.col("__u") != F.col("__v"))
             .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("__n"), _ck)
-            .localCheckpoint(eager=True)
         )
-        # count + checksum ride the checkpoint job (r14): the count job
-        # per round is gone, and the exact exceptAll proof only runs
-        # when count AND checksum both match the previous round —
-        # exactly once, at true convergence (the checksum is a cheap
-        # NEGATIVE filter; equality is still proven exactly).
-        n_small = obs.get["__n"]
-        ck_small = obs.get["__ck"]
-        converged = (
-            n_small == n_e
-            and ck_small == ck_e
-            and e_small.exceptAll(e).isEmpty()
-        )
-        e, n_e, ck_e = e_small, n_small, ck_small
-        if converged:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    roots = e.groupBy("__u").agg(F.min("__v").alias("__root"))
-    return (
-        nodes.select(F.col(node_col).alias("__n"))
-        .join(roots.select(F.col("__u").alias("__n"), "__root"), "__n", "left")
-        .select(
-            F.col("__n").alias(node_col),
-            F.coalesce("__root", "__n").alias("cluster_id"),
-        )
+
+    fingerprint = (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.pmod(F.xxhash64("__u", "__v"), F.lit(1 << 30))).alias("ck"),
     )
+    with Iteration() as it:
+        start = it.checkpoint(
+            edges.select(F.col(src_col).alias("__u"), F.col(dst_col).alias("__v"))
+            .filter(F.col("__u") != F.col("__v"))
+            .filter(F.col("__u").isNotNull() & F.col("__v").isNotNull())
+            .distinct(),
+            *fingerprint,
+        )
+        e = it.fixpoint(
+            step,
+            start,
+            max_iter=max_iter,
+            metrics=fingerprint,
+            converged=lambda prev, cur: cur.seen == prev.seen
+            and cur.df.exceptAll(prev.df).isEmpty(),
+            hint="connected_components_bigstar: raise max_iter.",
+        )
+        if stats is not None:
+            stats["rounds"] = it.rounds
+        roots = e.groupBy(F.col("__u").alias("__n")).agg(F.min("__v").alias("__root"))
+        return it.result(
+            nodes.select(F.col(node_col).alias("__n"))
+            .join(roots, "__n", "left")
+            .select(
+                F.col("__n").alias(node_col),
+                F.coalesce("__root", "__n").alias("cluster_id"),
+            )
+        )
 
 
 def embedding_cosine_pairs(

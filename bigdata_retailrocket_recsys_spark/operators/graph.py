@@ -6,18 +6,34 @@ classic "importance in the co-visitation graph" signal a recommender
 blends with popularity (the reference's pop_cands strategy, py:331-340,
 is the degenerate damping=1-iteration version of this).
 
-Scale notes: each power iteration is ONE job — the dangling-mass scalar is
-a 1-row aggregate broadcast-joined INTO the rank-update dataflow (no
-driver ``collect`` sync barrier, no double execution of the ranks
-lineage), and each iteration's ranks are materialized with an eager
-``localCheckpoint`` so the plan stays constant-size however many
-iterations run (same discipline as connected_components).
+The iterative operators here (``pagerank``, ``pagerank_exact``,
+``k_core``, ``bfs_distances``) run through ``operators/iterate.py``,
+which states their round, round-limit and pin-lifetime contract once.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bigdata_retailrocket_recsys_spark.operators.iterate import (
+    Iteration,
+    Round,
+)
+
+
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Distinct undirected edges as ``(u < v)``, self-loops dropped."""
+    return (
+        edges.select(
+            F.least(src_col, dst_col).alias("u"),
+            F.greatest(src_col, dst_col).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -27,99 +43,73 @@ def pagerank(
     dst_col: str = "dst",
     damping: float = 0.85,
     iters: int = 10,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
 
     Standard formulation: ``r' = (1-d)/N + d * (Σ_in r/outdeg +
     dangling_mass/N)`` — dangling nodes (no out-edges) redistribute their
     mass uniformly, so total rank mass stays 1 every iteration (asserted
-    in tests). Fixed ``iters`` rounds; the dangling-mass term stays inside
-    the dataflow as a broadcast 1-row aggregate, so the driver never
-    synchronizes mid-loop and each iteration's lineage executes exactly
-    once (``checkpoint_every`` is kept for signature compatibility; ranks
-    are checkpointed eagerly every iteration, which IS the per-iteration
-    materialization any Pregel-style loop needs).
+    in tests). Exactly ``iters >= 1`` rounds; the dangling mass is a 1-row
+    aggregate broadcast into the rank update (no driver round-trip), and
+    the last round stays lazy for the caller's action.
 
     Output: (node, rank) — float ranks are reduction-order dependent →
     rows-only in the driver contract; invariants (mass conservation,
     NumPy power-iteration agreement) are property-tested.
     """
-    # Pin the canonical edge set ONCE (r14): every derived frame below —
-    # nodes, out-degrees, weights AND the per-iteration dangling branch —
-    # reads the pinned LogicalRDD instead of re-executing the caller's
-    # edge pipeline (often itself a covis self-join; the old shape
-    # re-derived src degrees from RAW edges once per iteration).
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # per-node dangling flag carried THROUGH the iteration (r14, §2.4):
-    # the dangling mass becomes a 1-row aggregate over the checkpointed
-    # ranks themselves — the old per-iteration node-sized anti-join
-    # shuffle against the src list is gone. Same mass over the same node
-    # set (reduction order may differ in the last ulp; ranks are
-    # documented reduction-order-dependent floats, rows-only).
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(
-            outdeg.select(F.col("src").alias("node"), F.lit(1).alias("__o")),
-            "node",
-            "left",
-        )
-        .select("node", F.col("__o").isNull().alias("__dng"))
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    # edge weight = 1/outdeg of the source, fixed for all iterations
-    w = e.join(outdeg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")
-    ).cache()
-
-    ranks = nodes.select("node", "__dng", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for i in range(iters):
-        # mass parked on dangling nodes (no out-edges) this round:
-        # a 1-row aggregate kept IN the dataflow (broadcast nested-loop
-        # join fans the scalar to every row — no driver round-trip)
-        dangling = ranks.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("__dng"), F.col("rank"))), F.lit(0.0)
-            ).alias("dangling_m")
-        )
-        contribs = (
-            w.join(
-                ranks.select(F.col("node").alias("src"), "rank"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
+    if iters < 1:
+        raise ValueError(f"iters must be >= 1, got {iters}")
+    with Iteration() as it:
+        e = it.checkpoint(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .distinct()
+        ).df
+        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        # each node carries its dangling flag: the dangling mass is then a
+        # 1-row aggregate over the ranks themselves
+        nodes = it.checkpoint(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+            .join(
+                outdeg.select(F.col("src").alias("node"), F.lit(1).alias("__o")),
                 "node",
-                "__dng",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("dangling_m") / F.lit(float(n))
-                    )
-                ).alias("rank"),
+                "left",
+            )
+            .select("node", F.col("__o").isNull().alias("__dng"))
+        ).df
+        n = nodes.count()
+        w = it.cache(  # edge weight = 1/outdeg of the source
+            e.join(outdeg, "src").select(
+                "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")
             )
         )
-        # one materialization per iteration: both the contribs branch and
-        # the dangling branch read the SAME checkpointed ranks, and the
-        # next iteration starts from a constant-size plan
-        if i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", "rank")
+        base = (1.0 - damping) / n
+
+        def step(ranks: DataFrame) -> DataFrame:
+            dangling = ranks.agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("__dng"), F.col("rank"))), F.lit(0.0)
+                ).alias("dangling_m")
+            )
+            contribs = (
+                w.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum(F.col("rank") * F.col("w")).alias("inflow"))
+            )
+            rank = F.lit(base) + F.lit(damping) * (
+                F.coalesce("inflow", F.lit(0.0))
+                + F.col("dangling_m") / F.lit(float(n))
+            )
+            return (
+                nodes.join(contribs, "node", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select("node", "__dng", rank.alias("rank"))
+            )
+
+        ranks = nodes.select("node", "__dng", F.lit(1.0 / n).alias("rank"))
+        ranks = it.fixpoint(step, Round(ranks), max_iter=iters - 1)
+        return it.result(step(ranks).select("node", "rank"))
 
 
 def triangle_counts(
@@ -157,15 +147,7 @@ def triangle_counts(
     naive a<b<c enumeration in DuckDB (orientation changes which join
     finds a triangle, never the triangle set).
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected(edges, src_col, dst_col).cache()
     deg = (
         und.select(F.col("u").alias("vtx"))
         .unionAll(und.select(F.col("v").alias("vtx")))
@@ -224,7 +206,7 @@ def pagerank_exact(
     Semantics: canonicalize input to the SYMMETRIC directed graph (both
     orientations of each undirected edge — guarantees every node has
     out- and in-degree, so no dangling handling), start every node at
-    ``unit`` micro-mass, then ``iters`` rounds of
+    ``unit`` micro-mass, then exactly ``iters >= 1`` rounds of
 
         mass'(v) = base + (num · Σ_{u→v} floor(mass(u)/outdeg(u))) div den
 
@@ -232,48 +214,41 @@ def pagerank_exact(
     mass (deterministically — this is a defined fixed-point scheme, not
     an approximation of the float one); ranking order converges to the
     same importance order as float PageRank on these graphs. One
-    join+agg shuffle per round, eager localCheckpoint keeps the plan
-    constant-size (same discipline as `pagerank`).
+    join+agg shuffle per round; the last round stays lazy.
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = und.select(F.col("u").alias("s"), F.col("v").alias("d")).unionAll(
-        und.select(F.col("v").alias("s"), F.col("u").alias("d"))
-    ).localCheckpoint(eager=True)
-    outdeg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("o"))
-    # cached (r14): the loop references out_edges every iteration and
-    # Spark never reuses a twice-referenced subtree — uncached, each
-    # round re-aggregates degrees and re-joins them onto sym. Exact
-    # integers, so caching cannot perturb values.
-    out_edges = sym.join(outdeg, "s").cache()
-    base = (unit * (damping_den - damping_num)) // damping_den
-    ranks = sym.select(F.col("s").alias("vtx")).distinct().withColumn(
-        "mass", F.lit(unit).cast("bigint")
-    )
-    for i in range(iters):
-        contrib = out_edges.join(
-            ranks, out_edges.s == ranks.vtx
-        ).select(
-            F.col("d").alias("vtx"),
-            F.expr("mass div o").alias("c"),
-        )
-        ranks = contrib.groupBy("vtx").agg(
-            (
-                F.lit(base)
-                + F.expr(f"({damping_num} * sum(c)) div {damping_den}")
+    if iters < 1:
+        raise ValueError(f"iters must be >= 1, got {iters}")
+    und = _undirected(edges, src_col, dst_col)
+    with Iteration() as it:
+        sym = it.checkpoint(
+            und.select(F.col("u").alias("s"), F.col("v").alias("d")).unionAll(
+                und.select(F.col("v").alias("s"), F.col("u").alias("d"))
             )
-            .cast("bigint")
-            .alias("mass")
+        ).df
+        # cached: every round reads it, and Spark never reuses a
+        # twice-referenced subtree
+        out_edges = it.cache(
+            sym.join(sym.groupBy("s").agg(F.count(F.lit(1)).alias("o")), "s")
         )
-        if i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+        base = (unit * (damping_den - damping_num)) // damping_den
+
+        def step(ranks: DataFrame) -> DataFrame:
+            return (
+                out_edges.join(ranks, out_edges.s == ranks.vtx)
+                .select(F.col("d").alias("vtx"), F.expr("mass div o").alias("c"))
+                .groupBy("vtx")
+                .agg(
+                    (F.lit(base) + F.expr(f"({damping_num} * sum(c)) div {damping_den}"))
+                    .cast("bigint")
+                    .alias("mass")
+                )
+            )
+
+        ranks = sym.select(F.col("s").alias("vtx")).distinct().withColumn(
+            "mass", F.lit(unit).cast("bigint")
+        )
+        ranks = it.fixpoint(step, Round(ranks), max_iter=iters - 1)
+        return it.result(step(ranks))
 
 
 def edge_jaccard(
@@ -305,15 +280,7 @@ def edge_jaccard(
 
     Returns ``(u, v, common, deg_u, deg_v, jaccard)``.
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected(edges, src_col, dst_col).cache()
     deg = (
         und.select(F.col("u").alias("vtx"))
         .unionAll(und.select(F.col("v").alias("vtx")))
@@ -409,67 +376,44 @@ def k_core(
     co-visitation graph (py:331-340), like the other graph operators.
 
     Each round is one degree agg + two semi joins (edges keep only
-    endpoints that survived); the loop runs O(peeling-rounds) times with
-    a driver-side count check per round — same discipline (and the same
-    honest caveat) as min-label connected components: rounds are
-    data-shaped, bounded by the degeneracy ordering depth, typically
-    ≪ 20 on real graphs. Not SQL-recursion expressible (fixpoint needs
-    aggregation in the recursive term, which neither engine allows) →
-    rows-only entry with the defining invariant locked in tests.
+    endpoints that survived), until a round keeps every edge; rounds are
+    bounded by the degeneracy ordering depth, typically ≪ 20 on real
+    graphs. Not SQL-recursion expressible (fixpoint needs aggregation in
+    the recursive term, which neither engine allows) → rows-only entry
+    with the defining invariant locked in tests.
 
     Returns ``(vtx, deg)`` — vertices of the k-core with their degree
     WITHIN the core.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    # localCheckpoint per round: the loop otherwise nests each round's
-    # plan inside the next and planning blows up long before the data
-    # does (same discipline as pagerank / connected_components)
-    from pyspark.sql import Observation
 
-    cur = und.localCheckpoint(eager=True)
-    n_prev = cur.count()
-    for _ in range(max_iter):
-        deg = (
-            cur.select(F.col("u").alias("vtx"))
-            .unionAll(cur.select(F.col("v").alias("vtx")))
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
+            e.select(F.col("u").alias("vtx"))
+            .unionAll(e.select(F.col("v").alias("vtx")))
             .groupBy("vtx")
-            .agg(F.count("*").alias("deg"))
+            .agg(F.count("*").cast("bigint").alias("deg"))
         )
-        keep = deg.filter(F.col("deg") >= k).select("vtx")
-        # surviving-edge count rides the checkpoint's own job as an
-        # Observation metric (r13) — the old separate count() job per
-        # peeling round is gone; count(*) is 0, never NULL, on empty
-        obs = Observation()
-        nxt = (
+
+    def step(cur: DataFrame) -> DataFrame:
+        keep = degrees(cur).filter(F.col("deg") >= k).select("vtx")
+        return (
             cur.join(keep.withColumnRenamed("vtx", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("vtx", "v"), "v", "left_semi")
-            .select("u", "v")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        n_now = obs.get["n"]
-        cur = nxt
-        if n_now == n_prev:
-            break
-        n_prev = n_now
-    else:
-        raise RuntimeError(f"k_core did not converge in {max_iter} rounds")
-    out = (
-        cur.select(F.col("u").alias("vtx"))
-        .unionAll(cur.select(F.col("v").alias("vtx")))
-        .groupBy("vtx")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
-    return out
+
+    n_edges = F.count(F.lit(1)).alias("n")
+    with Iteration() as it:
+        cur = it.fixpoint(
+            step,
+            it.checkpoint(_undirected(edges, src_col, dst_col), n_edges),
+            max_iter=max_iter,
+            metrics=(n_edges,),
+            converged=lambda prev, cur: cur.seen == prev.seen,
+            hint="k_core is still peeling.",
+        )
+        return it.result(degrees(cur))
 
 
 def bfs_distances(
@@ -483,13 +427,10 @@ def bfs_distances(
     """Single-source shortest hop distances over an undirected edge
     list — the SCALE path for reachability that `q_sql_recursive_bfs`'s
     recursive CTE enumerates by paths (exponential on dense graphs):
-    classic frontier BFS, one round per hop level, each round ONE join
-    (frontier → neighbors) + ONE left-anti (drop already-visited) +
-    dedup. Work is O(edges-touched) total — every edge relaxes at most
-    twice over the whole run, never per path — and rounds are bounded by
-    the graph's hop diameter from the source (≤ ``max_hops``).
-    localCheckpoint per round keeps the plan constant-size (k_core /
-    pagerank discipline).
+    classic frontier BFS, exactly ``max_hops`` rounds (frontiers past the
+    source's eccentricity are empty), each ONE join (frontier →
+    neighbors) + ONE left-anti against the union of the checkpointed
+    frontiers + dedup. Every edge relaxes at most twice over the run.
 
     Returns ``(node, min_hop)`` for every node reachable within
     ``max_hops`` (source included at hop 0). Deterministic exact ints →
@@ -497,49 +438,31 @@ def bfs_distances(
     Reachability over the reference's co-visitation pair graph
     (py:252-260 builds the edges this walks).
     """
-    adj = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    adj = (
-        adj.select(F.col("u").alias("x"), F.col("v").alias("y"))
-        .unionAll(adj.select(F.col("v").alias("x"), F.col("u").alias("y")))
-        .localCheckpoint(eager=True)
-    )
-    from pyspark.sql import Observation
+    visited = []  # one (node, min_hop) arm per frontier
 
-    spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(source, 0)], ["node", "min_hop"]
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    for hop in range(1, max_hops + 1):
-        # frontier size rides the checkpoint's job as an Observation
-        # metric, and ``visited`` accumulates as a UNION of the per-hop
-        # checkpointed frames instead of re-materializing per hop (r13):
-        # one job per hop where the old loop paid three (checkpoint +
-        # take(1) probe + visited re-checkpoint). Each union arm is a
-        # LogicalRDD, so the anti-join right side never recomputes and
-        # the plan stays ≤ max_hops unions wide.
-        obs = Observation()
-        nxt = (
+    def visit(frontier: DataFrame) -> DataFrame:
+        visited.append(frontier.select("node", F.lit(len(visited)).alias("min_hop")))
+        return reduce(DataFrame.union, visited)
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(adj, frontier.node == adj.x)
             .select(F.col("y").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(visit(frontier).select("node"), "node", "left_anti")
         )
-        if obs.get["n"] == 0:
-            break
-        visited = visited.unionByName(
-            nxt.select("node", F.lit(hop).alias("min_hop"))
+
+    und = _undirected(edges, src_col, dst_col)
+    with Iteration() as it:
+        adj = it.checkpoint(
+            und.select(F.col("u").alias("x"), F.col("v").alias("y")).unionAll(
+                und.select(F.col("v").alias("x"), F.col("u").alias("y"))
+            )
+        ).df
+        start = it.checkpoint(
+            edges.sparkSession.createDataFrame([(source,)], ["node"])
         )
-        frontier = nxt
-    return visited.select(
-        "node", F.col("min_hop").cast("bigint").alias("min_hop")
-    )
+        last = it.fixpoint(step, start, max_iter=max_hops)
+        return it.result(
+            visit(last).select("node", F.col("min_hop").cast("bigint").alias("min_hop"))
+        )

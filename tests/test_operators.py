@@ -606,6 +606,108 @@ def test_connected_components_nodes_none_and_pinned(spark):
     assert connected_components(None, empty).count() == 0
 
 
+def test_connected_components_null_endpoints_dropped(spark):
+    """An edge with a NULL endpoint connects nothing: both CC algorithms,
+    in both ``nodes`` modes, agree and never label a NULL node."""
+    from bigdata_retailrocket_recsys_spark.operators.dedup import (
+        connected_components,
+        connected_components_bigstar,
+    )
+
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "node bigint")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, None), (None, 2), (3, 4), (None, None), (5, None)],
+        "src bigint, dst bigint",
+    )
+    expect = {0: 0, 1: 0, 2: 2, 3: 3, 4: 3, 5: 5}
+    assert dict(connected_components(nodes, edges).collect()) == expect
+    assert dict(connected_components_bigstar(nodes, edges).collect()) == expect
+    assert dict(connected_components(None, edges).collect()) == {
+        0: 0, 1: 0, 3: 3, 4: 3,
+    }
+
+
+@pytest.mark.slow
+def test_edges_pinned_promise_is_checked(spark):
+    """``edges_pinned=True`` on a lazy frame raises instead of silently
+    re-running its upstream every round; the real call sites, which pass
+    ``jaccard_verify(...).select(...)``, pass the check."""
+    from bigdata_retailrocket_recsys_spark.operators.dedup import (
+        connected_components,
+    )
+    from bigdata_retailrocket_recsys_spark.plans import QUERIES
+    from tests.conftest import SF_SMOKE
+
+    lazy = spark.range(6).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    with pytest.raises(ValueError, match="pinned"):
+        connected_components(None, lazy, edges_pinned=True)
+    # pipelines/corpus.build_corpus, operators/splits.leakage_safe_split
+    # and q_dedup_keeper_quality
+    for name in (
+        "q_corpus_pipeline_neardup",
+        "q_split_leakage_safe",
+        "q_dedup_keeper_quality",
+    ):
+        assert QUERIES[name].fn(spark, SF_SMOKE).count() > 0
+
+
+def _rdds_read(df) -> set:
+    """RDD ids of the LogicalRDD leaves of ``df``'s withCachedData plan
+    (a fresh one: the plan is computed once per query execution)."""
+    ids, stack = set(), [df.select("*")._jdf.queryExecution().withCachedData()]
+    while stack:
+        p = stack.pop()
+        if p.nodeName() == "LogicalRDD":
+            ids.add(p.rdd().id())
+        children = p.children().iterator()
+        while children.hasNext():
+            stack.append(children.next())
+    return ids
+
+
+@pytest.mark.fast
+@pytest.mark.parametrize(
+    "op",
+    [
+        "bfs_distances",
+        "connected_components",
+        "connected_components_bigstar",
+        "k_core",
+        "pagerank",
+        "pagerank_exact",
+    ],
+)
+def test_iterative_operator_releases_its_pins(spark, op):
+    """After the call, a consuming action and clearCache(), every RDD the
+    call pinned and still holds is one its output reads."""
+    from bigdata_retailrocket_recsys_spark.operators import dedup, graph
+
+    g = spark.range(300).select(
+        F.pmod(F.xxhash64("id"), 60).alias("src"),
+        F.pmod(F.xxhash64("id", F.lit(7)), 60).alias("dst"),
+    )
+    nodes = spark.range(60).withColumnRenamed("id", "node")
+    call = {
+        "bfs_distances": lambda: graph.bfs_distances(g, 0, max_hops=6),
+        "connected_components": lambda: dedup.connected_components(nodes, g),
+        "connected_components_bigstar": (
+            lambda: dedup.connected_components_bigstar(nodes, g)
+        ),
+        "k_core": lambda: graph.k_core(g, 3),
+        "pagerank": lambda: graph.pagerank(g),
+        "pagerank_exact": lambda: graph.pagerank_exact(g),
+    }[op]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    out = call()
+    assert out.count() > 0
+    spark.catalog.clearCache()
+    held = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert held <= _rdds_read(out), (op, sorted(held - _rdds_read(out)))
+
+
 def test_tfidf_hand_computed(spark):
     import math
 
@@ -2075,6 +2177,22 @@ def test_connected_components_bigstar_chain_rounds(spark):
     assert got == ref
 
 
+def test_connected_components_bigstar_nonconvergence_raises(spark):
+    """Stars still changing after max_iter rounds raise instead of being
+    returned as final components."""
+    from bigdata_retailrocket_recsys_spark.operators.dedup import (
+        connected_components_bigstar,
+    )
+
+    n = 40
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "node bigint")
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src bigint, dst bigint"
+    )
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components_bigstar(nodes, chain, max_iter=1)
+
+
 def test_connected_components_bigstar_string_ids(spark):
     """Star hooking relies only on a total order — string doc ids (the
     documents-table case) must work identically."""
@@ -2255,7 +2373,7 @@ def test_time_decay_popularity_hand_computed(spark):
 
 def test_connected_components_strict_nonconvergence_raises(spark):
     """A chain deeper than max_iter must raise loudly (silent partial
-    labels over-segment clusters); strict=False restores best-effort."""
+    labels over-segment clusters)."""
     import pytest as _pytest
 
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
@@ -2269,8 +2387,6 @@ def test_connected_components_strict_nonconvergence_raises(spark):
     )
     with _pytest.raises(RuntimeError, match="bigstar"):
         connected_components(nodes, edges, max_iter=3)
-    out = connected_components(nodes, edges, max_iter=3, strict=False)
-    assert out.count() == n  # partial labels still produced on opt-out
 
 
 def test_connected_components_fused_convergence_signal(spark):

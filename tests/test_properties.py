@@ -365,7 +365,7 @@ def test_pagerank_invariants(spark):
     edges = spark.createDataFrame(edge_list, "src bigint, dst bigint")
     got = {
         r.node: r.rank
-        for r in pagerank(edges, iters=10, checkpoint_every=3).collect()
+        for r in pagerank(edges, iters=10).collect()
     }
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
