@@ -9,7 +9,7 @@ in the loop.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,3 +51,48 @@ def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     recomputation at 64 dims — r12 measured)."""
     denom = na * nb
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
+
+
+def quantizable(
+    df: DataFrame,
+    *,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    bound: float | None = None,
+) -> DataFrame:
+    """Rows whose vectors the exact-integer tiers accept: non-NULL id and
+    vector, exactly ``dim`` components, every component non-NULL and
+    finite and, when ``bound`` is given, ``|x| < bound`` (the domain in
+    which a tier's bigint sums cannot overflow). A vector outside the
+    rule is excluded, never truncated: a NULL/NaN/inf component would
+    fail the :func:`quantized` bigint cast under ANSI on both engines,
+    and a wrong-length one would pad ``zip_with`` with NULLs. The DuckDB
+    oracles apply the same rule."""
+    x = "CAST(x AS DOUBLE)"
+    bad = f"x IS NULL OR isnan({x}) OR abs({x}) = CAST('inf' AS DOUBLE)"
+    if bound is not None:
+        bad += f" OR abs({x}) >= {bound}"
+    return df.filter(
+        F.col(id_col).isNotNull()
+        & F.col(vec_col).isNotNull()
+        & (F.size(vec_col) == dim)
+        & ~F.expr(f"exists({vec_col}, x -> {bad})")
+    )
+
+
+def quantize_sql(vec_col: str, scale: int) -> str:
+    """SQL text of the component-wise ``floor(x·scale)`` bigint
+    quantization — the arbitrary-float determinism rule (raw FLOAT →
+    DECIMAL rounds differently across engines; floor-scaled bigints never
+    do), so integer dots over the result are exact on every engine.
+    Apply it only to :func:`quantizable` rows."""
+    return (
+        f"transform({vec_col}, x -> "
+        f"CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
+    )
+
+
+def quantized(vec_col: str, scale: int) -> Column:
+    """:func:`quantize_sql` as a Column."""
+    return F.expr(quantize_sql(vec_col, scale))

@@ -52,13 +52,6 @@ def collect_ordered_seq(
     )
 
 
-def conditional_agg(when_cond: Column, value: Column, agg: str = "sum") -> Column:
-    """A4 — filtered aggregation: agg(CASE WHEN cond THEN value END)
-    (reference: cat_count_in_prefix / recency at py:479-483)."""
-    fn = getattr(F, agg)
-    return fn(F.when(when_cond, value))
-
-
 def time_decay_popularity(
     events: DataFrame,
     *,

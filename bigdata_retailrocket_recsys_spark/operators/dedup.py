@@ -77,13 +77,15 @@ returning (the dot_topk_int8 rule).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_retailrocket_recsys_spark.functions.vector import (
     cosine_from_norms,
-    cosine_similarity,
     l2_norm,
+    quantizable,
+    quantize_sql,
+    quantized,
     to_double_array,
 )
 from bigdata_retailrocket_recsys_spark.operators.iterate import (
@@ -367,23 +369,6 @@ def shingle_rows(
         F.col("full") | ((F.col("pos") == 0) & (F.col("doc_len") < n))
     ).select("doc", *carry, "shingle")
     return out.distinct() if distinct else out
-
-
-def minhash_signature(shingle_arr: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature expression: for seed j, min over shingles of
-    xxhash64(shingle, j). Returns array<bigint> of length ``num_hashes``.
-    Pure JVM (xxhash64 + array HOFs). NOTE: pass a *bound column* (already
-    materialized in a projection), not a fresh ``shingles(...)`` expression —
-    Spark does not CSE across the array elements, so an inline expression
-    would re-tokenize the document ``num_hashes`` times."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_arr, lambda s: F.xxhash64(s, F.lit(j)))
-            )
-            for j in range(num_hashes)
-        ]
-    )
 
 
 def minhash_signatures(
@@ -1639,7 +1624,7 @@ def embedding_cosine_pairs(
 
     EXACT but quadratic per block — a hot block with N vectors generates
     O(N²) candidates. This is the oracle-checkable small/medium path; at
-    scale use :func:`embedding_cosine_pairs_lsh`, whose banded sign-LSH
+    scale use :func:`embed_lsh_pairs`, whose banded sign-LSH
     bounds candidate generation by bucket size (the same candidates→verify
     shape as :func:`minhash_lsh_candidates`).
 
@@ -1668,7 +1653,7 @@ def embedding_cosine_pairs(
                 f"(> max_block_rows={max_block_rows}); quadratic pair "
                 f"generation would emit ~{worst * (worst - 1) // 2} "
                 "candidates in that block alone. Use "
-                "embedding_cosine_pairs_lsh (bounded sign-LSH buckets), a "
+                "embed_lsh_pairs (bounded sign-LSH buckets), a "
                 "finer block_col, or pass max_block_rows=None to override."
             )
     a = v.alias("a")
@@ -1684,141 +1669,6 @@ def embedding_cosine_pairs(
         .select(
             F.col("a.vid").alias("id_a"),
             F.col("b.vid").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(
-            # explicit NaN policy: BOTH engines compare NaN as greater than
-            # everything (NaN >= t is TRUE in Spark and DuckDB 1.0+), but
-            # they don't produce the same degenerate value — Spark's cosine
-            # yields NaN for a zero/NaN vector while DuckDB's
-            # list_cosine_similarity yields -1.0 (ADVICE r2 #2). The
-            # explicit isnan filter drops those rows on the Spark side so
-            # the pair sets agree on every engine version.
-            ~F.isnan("cosine")
-            & (F.col("cosine") >= min_cosine)
-        )
-    )
-
-
-def embedding_cosine_pairs_lsh(
-    df: DataFrame,
-    *,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = None,
-    min_cosine: float = 0.9,
-    bits: int = 8,
-    tables: int = 12,
-    seed: int = 42,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Embedding near-dup pairs at scale: banded sign-LSH candidate
-    generation + exact cosine verify (the embedding twin of
-    :func:`minhash_lsh_candidates`, VERDICT r1 scale-killer #2).
-    ``max_bucket=`` enables the same hot-bucket star pre-collapse as the
-    MinHash/SimHash tiers (VERDICT r10 #1): an over-cap (table, bucket
-    [, block]) cell emits hub→member edges (linear) instead of the
-    quadratic clique — a 10⁵-strong cluster of near-identical embeddings
-    (re-encoded uploads) otherwise floods the verify stage from one
-    cell; star edges still pass the exact-cosine verify.
-
-    Each of ``tables`` independent sign-LSH tables hashes a vector to a
-    ``bits``-bit bucket; candidate pairs are vectors sharing a
-    (table, bucket[, block]) cell — a shuffle bounded by cell size, never
-    all-pairs — then exact cosine keeps pairs ≥ ``min_cosine``.
-    Probabilistic recall: a pair at cosine t lands in one table's shared
-    bucket with p=(1-acos(t)/π)^bits and any of the ``tables`` tables
-    suffices (~88% at t=0.9 exactly, →1 fast above it; locked by a
-    regression test vs the exact operator). Output columns match
-    :func:`embedding_cosine_pairs` (id_a, id_b, cosine).
-
-    Plan shape (100 TB notes): the ``tables×bits`` hyperplanes are a TINY
-    literal table (seeded numpy) broadcast against the vectors — the
-    hash pass is one broadcast nested-loop join + one map-side-combinable
-    groupBy, linear in N·tables, instead of 96 nested aggregate
-    expressions per row (which parse/codegen quadratically). The banded
-    buckets are localCheckpoint-ed once and reused on both self-join
-    sides; candidates dedup on (vid_a, vid_b) BEFORE the verify so each
-    surviving pair pays exactly one exact-cosine evaluation.
-    """
-    import numpy as np
-
-    spark = df.sparkSession
-    planes = np.random.RandomState(seed).randn(tables * bits, dim)
-    plane_rows = [
-        (int(i // bits), int(i % bits), [float(x) for x in planes[i]])
-        for i in range(tables * bits)
-    ]
-    pdf = spark.createDataFrame(plane_rows, "table int, bit int, w array<double>")
-
-    blk = ["blk"] if block_col else []
-    # size(vec) == dim guard (ADVICE r2 #3): a mismatched vector would make
-    # zip_with pad with NULLs → NULL dot → every bit 0 → ALL vectors hash
-    # to bucket 0, silently reverting candidate generation to the all-pairs
-    # blowup this operator exists to prevent. Mismatched-dim vectors cannot
-    # be hashed by fixed hyperplanes; they are excluded here.
-    v = df.filter(
-        F.col(vec_col).isNotNull() & (F.size(to_double_array(vec_col)) == dim)
-    ).select(
-        F.col(id_col).alias("vid"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
-        to_double_array(vec_col).alias("vec"),
-    )
-    dot = F.aggregate(
-        F.zip_with("vec", "w", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    banded = (
-        v.crossJoin(F.broadcast(pdf))
-        .select(
-            "vid",
-            *blk,
-            "table",
-            F.when(dot > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bit)"))
-            .otherwise(F.lit(0))
-            .alias("bitval"),
-        )
-        .groupBy("vid", *blk, "table")
-        .agg(F.sum("bitval").alias("bucket"))
-        .localCheckpoint()  # hash pass runs once, reused on both join sides
-    )
-
-    join_keys = ["table", "bucket"] + blk
-    if max_bucket is None:
-        a = banded.alias("a")
-        b = banded.alias("b")
-        cand = (
-            a.join(
-                b,
-                [F.col(f"a.{k}") == F.col(f"b.{k}") for k in join_keys]
-                + [F.col("a.vid") < F.col("b.vid")],
-            )
-            .select(
-                F.col("a.vid").alias("vid_a"), F.col("b.vid").alias("vid_b")
-            )
-            .distinct()  # a pair may share cells in several tables
-        )
-    else:
-        # shared star guard (r11 verdict consolidation): the sized frame
-        # feeds clique AND star, so _hot_bucket_edges caches it — the old
-        # inline copy here skipped the cache and recomputed the banding
-        # per branch (the "ReuseExchange does NOT dedupe" class)
-        sized, edges = _hot_bucket_edges(
-            banded, keys=join_keys, id_col="vid", max_bucket=max_bucket
-        )
-        cand = _finalize_capped(
-            edges.select("vid_a", "vid_b").distinct(), sized
-        )
-    vecs = v.select("vid", "vec", l2_norm(F.col("vec")).alias("nrm"))
-    cos = cosine_from_norms(
-        F.col("va.vec"), F.col("vb.vec"), F.col("va.nrm"), F.col("vb.nrm")
-    )
-    return (
-        cand.join(vecs.alias("va"), F.col("vid_a") == F.col("va.vid"))
-        .join(vecs.alias("vb"), F.col("vid_b") == F.col("vb.vid"))
-        .select(
-            F.col("vid_a").alias("id_a"),
-            F.col("vid_b").alias("id_b"),
             cos.alias("cosine"),
         )
         .filter(
@@ -1863,18 +1713,6 @@ def _rademacher_planes(tables: int, bits: int, dim: int):
     ]
 
 
-def _quantized_vec(vec_col: str) -> Column:
-    """Component-wise floor(v·1e9) bigint quantization — the repo's
-    arbitrary-float determinism rule (CLAUDE.md: raw FLOAT→DECIMAL
-    rounds differently across engines; floor-scaled bigints never do).
-    Sign-LSH dots over these are EXACT integer arithmetic, so bucket
-    ids are bit-reproducible in any engine."""
-    return F.expr(
-        f"transform({vec_col}, x -> "
-        "CAST(floor(CAST(x AS DOUBLE) * 1e9) AS BIGINT))"
-    )
-
-
 def _auto_bits(n_vectors: int) -> int:
     """Scale-aware bucket width: ``bits ≈ log2(N) + 4`` (CLAUDE.md rule,
     VERDICT r12 #1) — enough cells that an N-vector table averages
@@ -1886,6 +1724,11 @@ def _auto_bits(n_vectors: int) -> int:
 
     return min(62, max(8, math.ceil(math.log2(max(n_vectors, 2))) + 4))
 
+
+# Sign-LSH components quantize to floor(v·1e9) bigints (quantize_sql):
+# the dots over them are exact integers, so bucket ids replay in any
+# engine.
+_EMBED_SCALE = 10**9
 
 # Above this many literal ints the plane family stops being a sane
 # expression-tree literal (tables·bits·dim; 16 tables × 62 bits × 256
@@ -1927,9 +1770,7 @@ def _sign_bucket_exprs(tables: int, bits: int, dim: int, n_probes: int):
     )
     # quantize ONCE per row via the single-element-transform LET idiom,
     # then every (t, j) dot reads the bound q
-    quant_sql = (
-        "transform(v, x -> CAST(floor(CAST(x AS DOUBLE) * 1e9) AS BIGINT))"
-    )
+    quant_sql = quantize_sql("v", _EMBED_SCALE)
     dot_sql = (
         f"aggregate(zip_with(q, element_at({planes_sql}, "
         f"t * {bits} + j + 1), (x, y) -> x * CAST(y AS BIGINT)), "
@@ -1967,35 +1808,6 @@ def _sign_bucket_exprs(tables: int, bits: int, dim: int, n_probes: int):
     return pair
 
 
-def _hashable_filter(
-    df: DataFrame, *, dim: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """Rows whose vectors fixed sign-planes can hash: non-NULL id and
-    vector, exact ``dim``, every component finite and non-NULL (a
-    NaN/inf/NULL component would poison the quantization cast; the
-    exists() three-valued logic drops NULL-component vectors too)."""
-    finite = ~F.expr(
-        f"exists({vec_col}, x -> isnan(CAST(x AS DOUBLE)) "
-        "OR abs(CAST(x AS DOUBLE)) = CAST('inf' AS DOUBLE))"
-    )
-    return df.filter(
-        F.col(id_col).isNotNull()
-        & F.col(vec_col).isNotNull()
-        & (F.size(vec_col) == dim)
-        & finite
-    )
-
-
-def _hashable_vectors(
-    df: DataFrame, *, dim: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(vid, q): the hashable rows (:func:`_hashable_filter`) with
-    their floor(v·1e9)-quantized component vectors."""
-    return _hashable_filter(
-        df, dim=dim, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col).alias("vid"), _quantized_vec(vec_col).alias("q"))
-
-
 def embed_sign_buckets(
     df: DataFrame,
     *,
@@ -2015,8 +1827,7 @@ def embed_sign_buckets(
     components quantized to floor(v·1e9) bigints, dot products and the
     bucket's bit-OR all exact integers — no float ever crosses an
     engine boundary, so the persisted artifact can be value-hashed by
-    a DuckDB oracle (unlike the seeded-numpy Gaussian planes of
-    :func:`embedding_cosine_pairs_lsh`, which stay the in-memory tier).
+    a DuckDB oracle.
 
     ``bits`` (r13, VERDICT r12 #1): default ``None`` derives
     ``bits = clamp(ceil(log2(N)) + 4, 8, 62)`` from ONE ``count()`` of
@@ -2072,11 +1883,10 @@ def embed_sign_buckets(
                 f"{_LITERAL_PLANES_MAX}"
             )
         return _embed_sign_buckets_join_form(
-            _hashable_vectors(df, dim=dim, id_col=id_col, vec_col=vec_col),
-            df.sparkSession, tables=tables, bits=bits, dim=dim,
-            id_col=id_col,
+            df, tables=tables, bits=bits, dim=dim, id_col=id_col,
+            vec_col=vec_col,
         )
-    v = _hashable_filter(df, dim=dim, id_col=id_col, vec_col=vec_col).select(
+    v = quantizable(df, dim=dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     )
     dss_expr, barr_expr = _sign_bucket_exprs(tables, bits, dim, n_probes)
@@ -2092,20 +1902,23 @@ def embed_sign_buckets(
 
 
 def _embed_sign_buckets_join_form(
-    v: DataFrame,
-    spark: SparkSession,
+    df: DataFrame,
     *,
     tables: int,
     bits: int,
     dim: int,
     id_col: str,
+    vec_col: str,
 ) -> DataFrame:
     """Broadcast-join fallback for plane families too large to inline as
     a literal (> ``_LITERAL_PLANES_MAX`` ints): tiny plane frame
     broadcast against the vectors, one map-side-combinable groupBy per
     bucket — linear in N·tables·bits, value-identical to the literal
     form (unit-locked)."""
-    pdf = spark.createDataFrame(
+    v = quantizable(df, dim=dim, id_col=id_col, vec_col=vec_col).select(
+        F.col(id_col).alias("vid"), quantized(vec_col, _EMBED_SCALE).alias("q")
+    )
+    pdf = df.sparkSession.createDataFrame(
         _rademacher_planes(tables, bits, dim),
         "tbl int, bit int, w array<int>",
     )
@@ -2214,7 +2027,7 @@ def embed_lsh_audit(
     n_false_alarms).
     """
     vecs = (
-        _hashable_filter(df, dim=dim, id_col=id_col, vec_col=vec_col)
+        quantizable(df, dim=dim, id_col=id_col, vec_col=vec_col)
         .select(F.col(id_col).alias("vid"), to_double_array(vec_col).alias("vec"))
         .withColumn("nrm", l2_norm(F.col("vec")))
     )
@@ -2267,19 +2080,18 @@ def embed_lsh_pairs(
 ) -> DataFrame:
     """WITHIN-SET embedding near-dup pairs over the deterministic
     Rademacher sign-LSH (:func:`embed_sign_buckets`) + exact-cosine
-    verify — the oracle-replayable twin of
-    :func:`embedding_cosine_pairs_lsh` (r12 graduation, VERDICT r11
-    #8): bucket ids are exact integers both engines reproduce, so the
-    candidate SET (not just its statistics) replays in DuckDB; the
-    Gaussian-plane operator stays the in-memory tier. Candidate volume
-    is bounded by cell size, never all-pairs; ``max_bucket=`` routes
-    over-cap cells through the shared :func:`_hot_bucket_edges` star
-    guard. Recall is the standard sign-LSH curve ((1-θ/π)^bits per
-    table) — probabilistic in the DATA but deterministic in the
-    ENGINE, which is what an oracle needs — and what
-    :func:`embed_lsh_audit` measures against exact ground truth at
-    sample scale. Output: id_a, id_b, cosine
-    (NaN-cosine pairs dropped, the embedding_cosine_pairs_lsh rule).
+    verify — the scale tier whose exact twin is
+    :func:`embedding_cosine_pairs` (r12 graduation, VERDICT r11 #8):
+    bucket ids are exact integers both engines reproduce, so the
+    candidate SET (not just its statistics) replays in DuckDB.
+    Candidate volume is bounded by cell size, never all-pairs;
+    ``max_bucket=`` routes over-cap cells through the shared
+    :func:`_hot_bucket_edges` star guard. Recall is the standard
+    sign-LSH curve ((1-θ/π)^bits per table) — probabilistic in the
+    DATA but deterministic in the ENGINE, which is what an oracle
+    needs — and what :func:`embed_lsh_audit` measures against exact
+    ground truth at sample scale. Output: id_a, id_b, cosine
+    (NaN-cosine pairs dropped, the embedding_cosine_pairs rule).
 
     Storage note (ADVICE r12 #3): both candidate paths pin a bounded
     frame with a localCheckpoint that lives until session end — the

@@ -25,21 +25,8 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
-)
-
-#: metadata contract for a multimodal asset column
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("format", StringType()),  # jpeg|png|wav|mp4|...
-        StructField("n_bytes", LongType()),
-        StructField("width", IntegerType()),  # -1 when not applicable
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),  # -1 for still images
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -223,53 +210,6 @@ def resize_images(
 
     return assets.select("asset_id", "payload").mapInPandas(
         _resize, schema=RESIZED_SCHEMA
-    )
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    assets: DataFrame, *, every_n: int = 8, decode_stub: str = "fake"
-) -> DataFrame:
-    """Video frame sampling over ``mapInPandas`` — a row-expanding UDF
-    (one asset → many frames), the shape ffmpeg-based extraction uses.
-    ``'fake'`` emits deterministic byte-slices as stand-in frames; the
-    explode-like fan-out, Arrow batching, and schema contract are real."""
-
-    def _sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    continue  # missing payload -> no frames
-                data = bytes(payload)
-                if decode_stub == "error":
-                    raise NotImplementedError(
-                        "frame extraction requires ffmpeg; plug the real "
-                        "demuxer in here"
-                    )
-                # fake: every_n-th 16-byte slice acts as a frame
-                for i, off in enumerate(range(0, max(len(data), 1), 16 * every_n)):
-                    out.append(
-                        {
-                            "asset_id": int(asset_id),
-                            "frame_idx": i,
-                            "frame": data[off : off + 16],
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA])
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        _sample, schema=FRAME_SCHEMA
     )
 
 

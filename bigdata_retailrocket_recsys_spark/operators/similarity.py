@@ -1,27 +1,30 @@
 """Similarity search over embedding columns (north-star extension).
 
-Two tiers (SURVEY §2.11):
+Retrieval paths (SURVEY §2.11), each an exact oracle or its scale tier:
 - ``cosine_topk``: brute-force top-k — broadcast the (small) query set,
   JVM-side cosine via array HOFs, per-query top-k via WindowGroupLimit.
-  Exact; one pass over the corpus; scales to any corpus size but is
-  O(queries × corpus).
-- ``lsh_bucket`` / ``cosine_topk_lsh``: random-hyperplane (sign) LSH — each
-  vector maps to a b-bit bucket; queries only scan their bucket (and
-  optionally neighboring probes). The scale path: corpus can be written
-  bucket-partitioned so a query prunes to one partition.
+  Exact; one pass over the corpus; O(queries × corpus).
+- ``dot_topk_lsh_int``: sign-LSH buckets over md5-derived ±1 planes;
+  queries only score their own bucket, by exact integer dot.
+- ``dot_topk_int8``: brute force in the symmetric int8 domain.
+- ``cosine_topk_ivf`` (KMeans cells, rows-only) and
+  ``ivf_pinned_write_at_rest`` / ``dot_topk_ivf_pinned_at_rest`` (the
+  exact-integer IVF index written cell-partitioned, so a probe prunes
+  directories).
 
-The hyperplanes are generated deterministically from a seed via xxhash64 —
-no driver-side randomness, no numpy shipping: plane_i component_j =
-(xxhash64(seed, i, j) % 2001 - 1000) / 1000.0.
+The integer tiers share one eligibility rule and one quantizer
+(``functions.vector.quantizable`` / ``quantized``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_retailrocket_recsys_spark.functions.vector import (
     cosine_similarity,
+    quantizable,
+    quantized,
     to_double_array,
 )
 from bigdata_retailrocket_recsys_spark.operators.windows import topk_per_group
@@ -65,40 +68,6 @@ def cosine_topk(
     )
 
 
-def _hyperplane(dim: int, plane: int, seed: int = 42) -> Column:
-    """Deterministic pseudo-random hyperplane as array<double> literal-free
-    expression: component j = (xxhash64(seed, plane, j) mod 2001 - 1000)/1000."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: (
-            F.pmod(F.xxhash64(F.lit(seed), F.lit(plane), j), F.lit(2001)) - 1000
-        ).cast("double")
-        / 1000.0,
-    )
-
-
-def lsh_bucket(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    dim: int,
-    bits: int = 8,
-    seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Sign-LSH bucket id (0..2^bits-1) per vector: bit_i = sign(v·plane_i).
-    Deterministic across engines and runs (hyperplanes from xxhash64)."""
-    v = to_double_array(vec_col)
-    bucket = F.lit(0).cast("bigint")
-    for i in range(bits):
-        plane = _hyperplane(dim, i, seed)
-        d = F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        )
-        bucket = bucket + F.when(d > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(F.lit(0))
-    return df.withColumn(out_col, bucket)
-
-
 def _int_plane(dim: int, plane: int) -> list[int]:
     """±1 hyperplane weights from md5 — Python hashlib md5 ≡ SQL md5 on
     both engines, so the identical weights are derivable in SQL:
@@ -126,9 +95,8 @@ def dot_topk_lsh_int(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Sign-LSH bucketed top-k by EXACT-INTEGER dot product — the
-    oracle-replayable twin of :func:`cosine_topk_lsh` (same move as the
-    exact-integer PageRank twin): components quantize to
+    """Sign-LSH bucketed top-k by EXACT-INTEGER dot product, with
+    :func:`cosine_topk` as its exact twin: components quantize to
     ``floor(v*1e6)`` bigints (CLAUDE.md arbitrary-float rule — the
     double multiply is IEEE-deterministic, the floor exact), hyperplanes
     are md5-derived ±1 weights (:func:`_int_plane`), so bucket
@@ -137,22 +105,14 @@ def dot_topk_lsh_int(
     contract (rank-by-dot; for normalized embeddings the two orders
     coincide). Dims fit bigint: |v|≤1 → |idot| ≤ dim·1e12.
 
-    Vectors with NULL/NaN/±inf components or wrong length are excluded
-    up front (quantization would otherwise throw under ANSI on BOTH
-    engines — same guard in the oracle). Same scale shape as the float
-    path: bucket join with broadcast queries, WindowGroupLimit top-k.
+    Vectors outside :func:`quantizable` are excluded up front (same
+    rule in the oracle). Scale shape: bucket join with broadcast
+    queries, WindowGroupLimit top-k.
     """
-    guard = F.expr(
-        f"size({vec_col}) = {dim} AND !exists({vec_col}, "
-        "x -> x IS NULL OR isnan(x) OR abs(x) = double('infinity'))"
-    )
-    qv = F.transform(
-        to_double_array(vec_col), lambda x: F.floor(x * F.lit(1000000.0))
-    )
 
     def bucketed(df: DataFrame, out_id: str, src_id: str) -> DataFrame:
-        base = df.filter(F.col(vec_col).isNotNull() & guard).select(
-            F.col(src_id).alias(out_id), qv.alias("qv")
+        base = quantizable(df, dim=dim, id_col=src_id, vec_col=vec_col).select(
+            F.col(src_id).alias(out_id), quantized(vec_col, 1_000_000).alias("qv")
         )
         bucket = F.lit(0).cast("bigint")
         for i in range(bits):
@@ -285,141 +245,6 @@ def cosine_topk_ivf(
     )
 
 
-def ivf_write_at_rest(
-    corpus: DataFrame,
-    path: str,
-    *,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> None:
-    """Materialize the IVF index AT REST: fit KMeans once, write the corpus
-    cell-partitioned parquet (``{path}/vectors`` with ``partitionBy("cell")``)
-    plus the tiny centroid table (``{path}/centroids``). This is the pay-once
-    layout ``cosine_topk_ivf``'s docstring promises: a probe afterwards reads
-    nprobe/n_cells of the data via directory pruning, never the full corpus.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("cvec")
-    )
-    sq = F.aggregate("cvec", F.lit(0.0), lambda a, x: a + x * x)
-    c = c.filter(
-        F.col("cvec").isNotNull()
-        & ~F.isnan(sq)
-        & (sq != float("inf"))
-        & (sq > 0.0)
-    )
-    fitted = KMeans(
-        k=n_cells, seed=seed, featuresCol="features", predictionCol="cell"
-    ).fit(c.select(array_to_vector("cvec").alias("features")))
-    assigned = fitted.transform(
-        c.select("vec_id", "cvec", array_to_vector("cvec").alias("features"))
-    ).select("vec_id", "cvec", "cell")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path + "/vectors")
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(fitted.clusterCenters())],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(path + "/centroids")
-
-
-def cosine_topk_ivf_at_rest(
-    spark,
-    path: str,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    nprobe: int = 3,
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Probe a persisted IVF index (see ``ivf_write_at_rest``): pick each
-    query's ``nprobe`` nearest centroids, then scan ONLY those cell
-    partitions — the probe cells become a literal ``cell IN (...)`` so the
-    parquet scan carries a PartitionFilter (directory pruning, plan-locked
-    in tests/test_plans.py). The one driver-side collect is the distinct
-    probe-cell set — ≤ nprobe × n_queries ints by construction, the same
-    bounded class as KMeans ``clusterCenters()``.
-    """
-    cent_df = spark.read.parquet(path + "/centroids")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), to_double_array(vec_col).alias("qvec")
-    )
-    probes = topk_per_group(
-        q.crossJoin(F.broadcast(cent_df)).select(
-            "query_id",
-            "qvec",
-            "cell",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qvec"), F.col("centroid"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("dist2"),
-        ),
-        group_cols=["query_id"],
-        order_by=[F.col("dist2").asc(), F.col("cell").asc()],
-        k=nprobe,
-        rank_col="probe_rank",
-    ).select("query_id", "qvec", "cell")
-    cells = sorted(
-        r["cell"] for r in probes.select("cell").distinct().collect()
-    )
-    assigned = spark.read.parquet(path + "/vectors").filter(
-        F.col("cell").isin(cells)
-    )
-    pairs = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        "vec_id",
-        cosine_similarity(F.col("qvec"), F.col("cvec")).alias("cosine"),
-    )
-    return topk_per_group(
-        scored,
-        group_cols=["query_id"],
-        order_by=[F.col("cosine").desc(), F.col("vec_id").asc()],
-        k=k,
-        rank_col="rank",
-    )
-
-
-def _ivf_pinned_eligible(
-    df: DataFrame, *, dim: int, id_col: str, vec_col: str, bound: float
-) -> DataFrame:
-    """Vectors the exact-integer IVF tier can quantize: non-NULL id and
-    vector, exact ``dim``, every component non-NULL, finite, and
-    |v| < ``bound`` (the quantization domain — floor(v·1e6) over
-    |v| < 100 keeps dist² and dot sums inside bigint: (2e8)²·64 ≈
-    2.6e18 < 2⁶³). Out-of-domain vectors are excluded exactly like
-    unhashable ones in the sign-LSH tier — documented, never silent
-    truncation of a value."""
-    in_domain = ~F.expr(
-        f"exists({vec_col}, x -> isnan(CAST(x AS DOUBLE)) "
-        "OR abs(CAST(x AS DOUBLE)) >= CAST('inf' AS DOUBLE) "
-        f"OR abs(CAST(x AS DOUBLE)) >= {bound})"
-    )
-    return df.filter(
-        F.col(id_col).isNotNull()
-        & F.col(vec_col).isNotNull()
-        & (F.size(vec_col) == dim)
-        & in_domain
-    )
-
-
-def _quantized(vec_col: str, scale: int) -> Column:
-    return F.expr(
-        f"transform({vec_col}, x -> "
-        f"CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
-    )
-
-
 def ivf_pinned_write_at_rest(
     corpus: DataFrame,
     path: str,
@@ -432,27 +257,27 @@ def ivf_pinned_write_at_rest(
     bound: float = 100.0,
 ) -> None:
     """Exact-integer IVF index AT REST with PINNED sample centroids —
-    the ORACLED twin of :func:`ivf_write_at_rest` (r13 graduation,
-    VERDICT r12 #4; the simhash_md5 twin move applied to IVF): instead
-    of iterative float KMeans, the centroids are the quantized vectors
-    of the ``n_cells`` smallest eligible corpus ids (sample-initialized
+    the ORACLED twin of the KMeans tier :func:`cosine_topk_ivf` (r13
+    graduation, VERDICT r12 #4; the simhash_md5 twin move applied to
+    IVF): instead of iterative float KMeans, the centroids are the
+    quantized vectors of the ``n_cells`` smallest eligible corpus ids (sample-initialized
     cells — the standard no-iteration IVF seeding), every assignment is
     an argmin of EXACT bigint squared distances over floor(v·scale)
     components with a deterministic (dist², cell) tie-break, and the
     probe ranks by exact bigint dot — so the whole
     write→partition→probe→top-k chain is bit-reproducible in DuckDB.
-    The KMeans tier (:func:`ivf_write_at_rest`) stays the
-    quality-centroid path (rows-only, floats inherent to the fit);
-    this tier is the at-rest MACHINERY value-checked end to end.
+    Vectors outside :func:`quantizable` with ``|v| < bound`` are
+    excluded: floor(v·1e6) over |v| < 100 keeps dist² and dot sums
+    inside bigint ((2e8)²·64 ≈ 2.6e18 < 2⁶³).
 
-    Layout (same shape as the KMeans tier): ``{path}/vectors`` —
+    Layout: ``{path}/vectors`` —
     (vec_id, qv, cell) parquet partitioned by cell so a probe prunes
     directories; ``{path}/centroids`` — n_cells rows of
     (cell, cent: array<bigint>).
     """
-    elig = _ivf_pinned_eligible(
+    elig = quantizable(
         corpus, dim=dim, id_col=id_col, vec_col=vec_col, bound=bound
-    ).select(F.col(id_col).alias("vec_id"), _quantized(vec_col, scale).alias("qv"))
+    ).select(F.col(id_col).alias("vec_id"), quantized(vec_col, scale).alias("qv"))
     from pyspark.sql import Window
 
     # n_cells smallest ids → cells 0..n_cells-1 (bounded frame: limit
@@ -503,18 +328,18 @@ def dot_topk_ivf_pinned_at_rest(
     """Probe the pinned exact-integer IVF index
     (:func:`ivf_pinned_write_at_rest`): each query picks its ``nprobe``
     nearest centroids by exact bigint dist² (ties → smaller cell),
-    scans ONLY those cell partitions (the probe-cell set is the same
-    bounded driver-side collect as the KMeans tier — ≤ nprobe ×
-    n_queries ints), and ranks candidates by exact bigint dot with a
+    scans ONLY those cell partitions (the probe-cell set is one bounded
+    driver-side collect — ≤ nprobe × n_queries ints, the same class as
+    KMeans ``clusterCenters()``), and ranks candidates by exact bigint dot with a
     total (dot desc, vec_id asc) tie-break. Output: query_id, vec_id,
     dot (bigint), rank — every column integer, full DuckDB hash oracle.
     """
     cent = spark.read.parquet(path + "/centroids")
-    q = _ivf_pinned_eligible(
+    q = quantizable(
         queries, dim=dim, id_col=query_id_col, vec_col=vec_col, bound=bound
     ).select(
         F.col(query_id_col).alias("query_id"),
-        _quantized(vec_col, scale).alias("qq"),
+        quantized(vec_col, scale).alias("qq"),
     )
     dist2 = F.aggregate(
         F.zip_with("qq", "cent", lambda x, y: (x - y) * (x - y)),
@@ -555,48 +380,6 @@ def dot_topk_ivf_pinned_at_rest(
     )
 
 
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    dim: int,
-    bits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k: only candidates in the query's LSH bucket are
-    scored. Recall < 1 by design; bench compares against cosine_topk."""
-    c = lsh_bucket(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col)),
-        vec_col=vec_col,
-        dim=dim,
-        bits=bits,
-    ).select("vec_id", F.col("bucket"), to_double_array(vec_col).alias("cvec"))
-    q = lsh_bucket(
-        queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col)),
-        vec_col=vec_col,
-        dim=dim,
-        bits=bits,
-    ).select("query_id", F.col("bucket"), to_double_array(vec_col).alias("qvec"))
-    pairs = c.join(F.broadcast(q), "bucket").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        "vec_id",
-        cosine_similarity(F.col("qvec"), F.col("cvec")).alias("cosine"),
-    )
-    return topk_per_group(
-        scored,
-        group_cols=["query_id"],
-        order_by=[F.col("cosine").desc(), F.col("vec_id").asc()],
-        k=k,
-        rank_col="rank",
-    )
-
-
 def dot_topk_int8(
     corpus: DataFrame,
     query_ids: "list[int]",
@@ -621,8 +404,8 @@ def dot_topk_int8(
     Σ(a·v+b)(a·v'+b) rank by component sums, not similarity (measured:
     recall ≈ 0; this split is the documented lesson).
 
-    Relational shape — ARRAY-GRAIN, not component-grain: guard out
-    non-finite/wrong-width vectors (the dot_topk_lsh_int guard), one
+    Relational shape — ARRAY-GRAIN, not component-grain: keep the
+    :func:`quantizable` vectors, one
     global-max aggregate over ``array_max(transform(abs))`` (no explode)
     broadcast as a 1-row frame, per-vector code ARRAYS via one
     ``transform``, broadcast of the |queries| query arrays, and each
@@ -637,17 +420,11 @@ def dot_topk_int8(
     (rehearsals, q_retrieval_rrf) no longer accumulate executor
     storage.
     """
-    guard = F.expr(
-        f"size({vec_col}) = {dim} AND !exists({vec_col}, "
-        "x -> x IS NULL OR isnan(x) OR abs(x) = double('infinity'))"
-    )
     # S7 discipline: both derived frames are referenced twice (base by
     # the scale agg AND the code projection; codes by the query filter
     # AND the scoring crossJoin) and Spark never reuses a shared
     # exchange — cache both or the scan+quantization recompute per ref.
-    base = corpus.filter(
-        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull() & guard
-    ).select(
+    base = quantizable(corpus, dim=dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("__id"), to_double_array(vec_col).alias("__v")
     ).cache()
     s = base.agg(

@@ -167,19 +167,6 @@ def kfold_assign(
     return df.withColumn(fold_col, fold.cast("int"))
 
 
-def hash_sample(
-    df: DataFrame,
-    *,
-    key_cols: list[str],
-    fraction: float,
-) -> DataFrame:
-    """Deterministic ~``fraction`` sample by content hash — reproducible
-    across engines and runs, unlike ``df.sample`` (partition-seeded RNG).
-    """
-    bound = format(min(int(round(fraction * 65536)), 65535), "04x")
-    return df.filter(_bucket_hex(key_cols) < F.lit(bound))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     *,

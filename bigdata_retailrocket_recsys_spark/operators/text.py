@@ -48,13 +48,6 @@ def token_count(
     )
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str]) -> Column:
-    """Fraction of whitespace tokens that are in ``stopwords``."""
-    toks = ws_tokens(text)
-    hits = F.size(F.filter(toks, lambda t: t.isin(stopwords)))
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
 def lang_id(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

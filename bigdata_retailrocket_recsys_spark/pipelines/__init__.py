@@ -4,7 +4,6 @@ from bigdata_retailrocket_recsys_spark.pipelines.retailrocket import (
     build_candidates,
     build_features,
     extract_anchors,
-    latest_item_category,
     run_events_pipeline,
 )
 
@@ -14,6 +13,5 @@ __all__ = [
     "build_candidates",
     "build_features",
     "extract_anchors",
-    "latest_item_category",
     "run_events_pipeline",
 ]

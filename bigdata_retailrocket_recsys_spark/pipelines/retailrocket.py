@@ -30,10 +30,7 @@ from pyspark.sql import functions as F
 
 from bigdata_retailrocket_recsys_spark.operators.joins import covis_pairs
 from bigdata_retailrocket_recsys_spark.operators.sessionize import sessionize
-from bigdata_retailrocket_recsys_spark.operators.windows import (
-    latest_per_key,
-    topk_per_group,
-)
+from bigdata_retailrocket_recsys_spark.operators.windows import topk_per_group
 from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 
 
@@ -69,34 +66,6 @@ class PipelineConfig:
 # ---------------------------------------------------------------------------
 
 
-def prepare_events(
-    raw: DataFrame,
-    *,
-    start: str,
-    end: str,
-    ts_ms_col: str = "timestamp",
-    user_col: str = "visitorid",
-    item_col: str = "itemid",
-    event_col: str = "event",
-) -> DataFrame:
-    """Epoch-ms → timestamp, half-open window filter, typed projection
-    (py:74-91)."""
-    ts = F.timestamp_millis(F.col(ts_ms_col).cast("bigint"))
-    return (
-        raw.withColumn("ts", ts)
-        .filter(
-            (F.col("ts") >= F.lit(start).cast("timestamp"))
-            & (F.col("ts") < F.lit(end).cast("timestamp"))
-        )
-        .select(
-            F.col(user_col).cast("bigint").alias("user_id"),
-            F.col("ts"),
-            F.col(item_col).cast("bigint").alias("item_id"),
-            F.col(event_col).cast("string").alias("event"),
-        )
-    )
-
-
 def sessionize_events(events: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """30-min-gap session ids (py:96-131) with deterministic tiebreaks."""
     return sessionize(
@@ -109,46 +78,27 @@ def sessionize_events(events: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stage 2 — item→category dimension (py:146-173)
-# ---------------------------------------------------------------------------
-
-
-def latest_item_category(props: DataFrame) -> DataFrame:
-    """property='categoryid' rows → latest snapshot per item (py:162-173,
-    W3 latest-per-key with tiebreak)."""
-    cat = props.filter(F.col("property") == "categoryid").select(
-        F.col("itemid").cast("bigint").alias("item_id"),
-        F.timestamp_millis(F.col("timestamp").cast("bigint")).alias("ts"),
-        F.col("value").cast("bigint").alias("category_id"),
-    )
-    return latest_per_key(
-        cat, key_cols=["item_id"], ts_col="ts", tiebreak_cols=["category_id"]
-    ).select("item_id", "category_id")
-
-
-# ---------------------------------------------------------------------------
-# Stage 3 — anchor (ATC) extraction + time split (py:186-216)
+# Stage 2 — anchor (ATC) extraction + time split (py:186-216)
 # ---------------------------------------------------------------------------
 
 
 def extract_anchors(
-    events_sess: DataFrame,
-    item_cat: DataFrame,
+    events_cat: DataFrame,
     *,
     start: str,
     end: str,
     anchor_event: str = "addtocart",
 ) -> DataFrame:
     """Anchor events with their true category, in [start, end)
-    (py:186-207). Output: session_id, user_id, atc_ts, item_id,
-    category_id (the label's true category)."""
+    (py:186-207), read off the categorized events (session_id, user_id,
+    ts, item_id, category_id, event). Output: session_id, user_id,
+    atc_ts, item_id, category_id (the label's true category)."""
     return (
-        events_sess.filter(F.col("event") == anchor_event)
+        events_cat.filter(F.col("event") == anchor_event)
         .filter(
             (F.col("ts") >= F.lit(start).cast("timestamp"))
             & (F.col("ts") < F.lit(end).cast("timestamp"))
         )
-        .join(F.broadcast(item_cat), "item_id", "inner")
         .select(
             "session_id",
             "user_id",
@@ -160,7 +110,7 @@ def extract_anchors(
 
 
 # ---------------------------------------------------------------------------
-# Stage 4 — candidate generation (py:225-375)
+# Stage 3 — candidate generation (py:225-375)
 # ---------------------------------------------------------------------------
 
 
@@ -316,7 +266,7 @@ def build_candidates(
 
 
 # ---------------------------------------------------------------------------
-# Stage 5 — feature assembly (py:441-626)
+# Stage 4 — feature assembly (py:441-626)
 # ---------------------------------------------------------------------------
 
 
@@ -465,7 +415,7 @@ def build_features(
 
 
 # ---------------------------------------------------------------------------
-# Stage 6 — embeddings (py:378-431, 603-622 → MLlib + broadcast join)
+# Stage 5 — embeddings (py:378-431, 603-622 → MLlib + broadcast join)
 # ---------------------------------------------------------------------------
 
 
@@ -579,9 +529,9 @@ def run_events_pipeline(
         .alias("event"),
     )
     events_sess = sessionize_events(raw, cfg)
-    # cached (r13): the dim is read 3× — the events_cat broadcast join,
-    # the anchor broadcast join, and build_candidates' item→category
-    # lookup; uncached, each reference re-scans + re-parses the raw JSON
+    # cached (r13): the dim is read twice — the events_cat broadcast join
+    # and build_candidates' item→category lookup; uncached, each
+    # reference re-scans + re-parses the raw JSON
     item_cat = (
         raw.select("item_id")
         .distinct()
@@ -607,25 +557,7 @@ def run_events_pipeline(
         a_start, a_end = train_cutoff, end
     else:
         raise ValueError(f"split must be 'train' or 'valid', got {split!r}")
-    # anchor extraction off the categorized cache — identical rows to
-    # extract_anchors(events_sess, item_cat): same anchor filter, and the
-    # category comes from the same broadcast item_cat dim that built
-    # events_cat (inner join both ways)
-    anchors = (
-        events_cat.filter(F.col("event") == "addtocart")
-        .filter(
-            (F.col("ts") >= F.lit(a_start).cast("timestamp"))
-            & (F.col("ts") < F.lit(a_end).cast("timestamp"))
-        )
-        .select(
-            "session_id",
-            "user_id",
-            F.col("ts").alias("atc_ts"),
-            "item_id",
-            "category_id",
-        )
-        .cache()
-    )
+    anchors = extract_anchors(events_cat, start=a_start, end=a_end).cache()
     # the anchor-prefix theta join feeds 3 candidate strategies + 2 feature
     # dims — compute the SortMergeJoin once, cache, reuse (SURVEY §7.3)
     prefix = prefix_events(anchors, events_cat).cache()
@@ -651,8 +583,25 @@ def run_events_pipeline(
         # candidate stages after the fit. Same jobs, overlapped wall
         # (FIFO scheduling; actions are only sequential because driver
         # code calls them sequentially). Output is unchanged: the fit
-        # input and the candidate plan are byte-identical.
-        from concurrent.futures import ThreadPoolExecutor
+        # input and the candidate plan are byte-identical. If the candidate
+        # write fails, the fit's jobs (tagged in its thread) are cancelled,
+        # their tasks interrupted so the cores free at once, and the
+        # write's error is raised with the fit's error chained: neither
+        # failure waits on nor hides the other.
+        import uuid
+        from concurrent.futures import ThreadPoolExecutor, wait
+
+        sc = spark.sparkContext
+        tag = f"bdrr-w2v-fit-{uuid.uuid4().hex}"
+
+        def tagged_fit():
+            sc.addJobTag(tag)
+            sc.setInterruptOnCancel(True)
+            try:
+                return train_category_embeddings(train_ev, cfg)
+            finally:
+                sc.setInterruptOnCancel(False)
+                sc.removeJobTag(tag)
 
         train_ev = events_cat.filter(
             F.col("ts") < F.lit(train_cutoff).cast("timestamp")
@@ -663,8 +612,16 @@ def run_events_pipeline(
         # events: the race cost ~15% of the soak wall)
         events_cat.write.format("noop").mode("overwrite").save()
         with ThreadPoolExecutor(max_workers=1) as pool:
-            fit = pool.submit(train_category_embeddings, train_ev, cfg)
-            candidates.write.format("noop").mode("overwrite").save()
+            fit = pool.submit(tagged_fit)
+            try:
+                candidates.write.format("noop").mode("overwrite").save()
+            except BaseException as write_err:
+                while not fit.done():  # a job may start between cancels
+                    sc.cancelJobsWithTag(tag)
+                    wait([fit], timeout=0.2)
+                if fit.exception() is not None:
+                    raise write_err from fit.exception()
+                raise
             emb = fit.result()
         features = attach_embeddings(features, emb, cfg)
     if observe is not None:

@@ -14,11 +14,13 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_retailrocket_recsys_spark.functions.vector import to_double_array
+from bigdata_retailrocket_recsys_spark.functions.vector import (
+    quantizable,
+    to_double_array,
+)
 from bigdata_retailrocket_recsys_spark.operators.dedup import (
     contamination_check,
     embedding_cosine_pairs,
-    embedding_cosine_pairs_lsh,
     exact_dedup,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
@@ -537,9 +539,8 @@ def q_dedup_embed_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     .embed_lsh_pairs — md5-derived ±1 planes over floor(v·1e9)-quantized
     components give exact-integer buckets DuckDB reproduces bit-for-bit,
     so the candidate SET itself is value-hashed, then the 0.42
-    margin-threshold verify — the q_dedup_embed_apply rule); the
-    Gaussian-plane embedding_cosine_pairs_lsh stays the in-memory tier,
-    its exact-subset + recall invariants still unit-locked. Banding is
+    margin-threshold verify — the q_dedup_embed_apply rule); its
+    exact-subset + recall invariants are unit-locked at 12×8. Banding is
     tuned to the fixture's similarity regime (pairs near cosine 0.42,
     θ≈65° → P(bit)≈0.64): 4-bit buckets × 16 tables ≈ 95% recall; for
     true near-dup work (cosine ≥0.9) the defaults (8×12) are the right
@@ -599,13 +600,6 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "vec_id", "rank")
 
 
-# q_sim_topk_lsh (xxhash64 hyperplanes, rows-only) RETIRED r9 (VERDICT
-# r8 #4): superseded by q_sim_topk_lsh_exactint — the full-oracle twin
-# that value-checks the identical bucket→integer-dot→rank machinery
-# (md5-derived ±1 hyperplanes, floor(v·1e6) quantization). The
-# cosine_topk_lsh operator stays exported + recall-property-tested.
-
-
 @query("q_sim_topk_ivf", oracle=None)
 def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-indexed approximate top-k: MLlib KMeans cells, queries probe
@@ -624,15 +618,6 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, queries, k=10, n_cells=8, nprobe=3, id_col="vec_id",
         vec_col="embedding",
     ).select("query_id", "vec_id", "rank")
-
-
-# q_sim_topk_ivf_at_rest RETIRED r13 (the r9 q_sim_topk_lsh precedent):
-# superseded by q_sim_topk_ivf_pinned, which value-hashes the same
-# at-rest write→partition→probe machinery with pinned exact-integer
-# centroids. The KMeans operators (ivf_write_at_rest /
-# cosine_topk_ivf_at_rest) stay exported and unit-tested
-# (test_ivf_at_rest_matches_in_memory); KMeans assignment itself stays
-# covered by the rows-only q_sim_topk_ivf.
 
 
 @query(
@@ -15184,10 +15169,7 @@ def q_dedup_embed_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the truth SET is cross-engine exact despite float cosines.
     (tables=4, bits=12) is the non-vacuous fixture family — the
     audited answer to "is bits ≈ log2(N)+4 right for this corpus?"."""
-    from bigdata_retailrocket_recsys_spark.operators.dedup import (
-        _hashable_filter,
-        embed_lsh_audit,
-    )
+    from bigdata_retailrocket_recsys_spark.operators.dedup import embed_lsh_audit
 
     emb = (
         _t(spark, sf_dir, "embeddings")
@@ -15195,7 +15177,7 @@ def q_dedup_embed_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
     )
     copies = (
-        _hashable_filter(emb, dim=64, id_col="vec_id", vec_col="embedding")
+        quantizable(emb, dim=64, id_col="vec_id", vec_col="embedding")
         .orderBy(F.col("vec_id").asc())
         .limit(10)
         .select(

@@ -21,48 +21,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# --- RetailRocket-shaped raw inputs (FIXTURES.md §A) -----------------------
-
-#: data/raw/events.csv of the reference (read at py:70-71; cols used py:86-91)
-RETAILROCKET_EVENTS_RAW = StructType(
-    [
-        StructField("timestamp", LongType()),  # epoch milliseconds
-        StructField("visitorid", LongType()),
-        StructField("event", StringType()),  # view | addtocart | transaction
-        StructField("itemid", LongType()),
-        StructField("transactionid", LongType()),  # never selected: pruned
-    ]
-)
-
-#: item_properties_part{1,2}.csv (read py:146-153, used py:162-173)
-RETAILROCKET_ITEM_PROPERTIES_RAW = StructType(
-    [
-        StructField("timestamp", LongType()),  # epoch ms of snapshot
-        StructField("itemid", LongType()),
-        StructField("property", StringType()),
-        StructField("value", StringType()),
-    ]
-)
-
-#: sessionized events contract (py:131): the pipeline's working grain
-SESSIONIZED_EVENTS = StructType(
-    [
-        StructField("session_id", StringType()),
-        StructField("user_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("item_id", LongType()),
-        StructField("event", StringType()),
-    ]
-)
-
-#: item → latest category dimension (py:173)
-ITEM_CATEGORY = StructType(
-    [
-        StructField("item_id", LongType()),
-        StructField("category_id", LongType()),
-    ]
-)
-
 # --- driver testdata tables (/root/testdata/sf*/, TESTDATA.md) -------------
 
 TESTDATA_SCHEMAS: dict[str, StructType] = {

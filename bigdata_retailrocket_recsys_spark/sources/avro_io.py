@@ -13,14 +13,11 @@ spark-sql_2.13-4.1.2.jar and a full round-trip works) — only the alias
 registration is external. These wrappers therefore resolve the format
 name at call time: the ``"avro"`` alias when the connector is deployed,
 else the full provider class name, else (older/unbundled builds) a loud
-NotImplementedError with deployment guidance — the
-transformWithStateInPandas gate precedent, but with a working fallback
-tier on this sandbox.
+NotImplementedError with deployment guidance.
 
 Scale notes: Avro is a row-major ingest/wire format — land it, then
 convert to Parquet for analytics (columnar pruning/pushdown do not exist
-in Avro scans; ``avro_to_parquet`` does the standard hop in one lazy
-plan). Schema evolution rides the embedded writer schema; pass
+in Avro scans). Schema evolution rides the embedded writer schema; pass
 ``avro_schema`` to pin a reader schema across heterogeneous files.
 """
 
@@ -95,13 +92,3 @@ def read_avro(
     return r.load(path)
 
 
-def avro_to_parquet(
-    spark: SparkSession,
-    avro_path: str,
-    parquet_path: str,
-    *,
-    mode: str = "overwrite",
-) -> None:
-    """The standard intake hop: land row-major Avro, persist columnar
-    Parquet for analytics — one lazy plan, no driver materialization."""
-    read_avro(spark, avro_path).write.mode(mode).parquet(parquet_path)

@@ -88,10 +88,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
-
-
 def _events_ts_unit(path: str) -> str:
     """Physical time unit of ``events.ts`` ('ns' or 'us') from the parquet
     footer — a driver-side metadata peek, no data read."""

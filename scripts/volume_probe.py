@@ -1214,7 +1214,6 @@ def probe_r13embed(n_vecs: int, n_batch: int = 100_000) -> None:
 
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
         _embed_sign_buckets_join_form,
-        _hashable_vectors,
         embed_bucket_table,
         embed_candidates_vs_corpus,
         embed_sign_buckets,
@@ -1242,12 +1241,10 @@ def probe_r13embed(n_vecs: int, n_batch: int = 100_000) -> None:
         )
 
     def run_join():
-        v = _hashable_vectors(
-            corpus, dim=64, id_col="vec_id", vec_col="embedding"
-        )
         return (
             _embed_sign_buckets_join_form(
-                v, spark, tables=4, bits=16, dim=64, id_col="vec_id"
+                corpus, tables=4, bits=16, dim=64, id_col="vec_id",
+                vec_col="embedding",
             )
             .agg(F.sum("bucket"), F.count(F.lit(1)))
             .collect()[0]

@@ -27,13 +27,13 @@ _SLOW_NAME_RE = re.compile(
     # keeps `-m fast` under 90 s; all still run in the full gate
     r"|no_row_python_udf|generator|observation_metrics|lsh_recall"
     r"|jaccard_prefix|compact_parquet|multimodal_stub"
-    r"|sessionize_gap_boundary|tfidf_hand|bucket_containment|hll_sketch"
+    r"|sessionize_gap_boundary|tfidf_hand|hll_sketch"
     r"|multimodal_resize|spreads_hot_key|asof_join_nearest"
     r"|load_table_normalizes|covis_pairs_dedup|salted_join_matches"
     r"|minhash_estimates|all_pairs_guard|tie_determinism"
     r"|association_rules|hash_split_deterministic"
     # round-6 operator tests measured >10 s each (Spark job latency)
-    r"|k_core_peels|bfs_distances|frequent_sequences|transform_with_state"
+    r"|k_core_peels|bfs_distances|frequent_sequences"
     r"|jsonl_audit|edge_jaccard|arrow_matches_pandas|boilerplate_spans"
 )
 

@@ -72,9 +72,9 @@ def test_pipeline_golden_counts(fixture_frames):
     assert len(set(u2_first)) == 1, "exact-gap event must stay in session"
 
     events_cat = sess.join(item_cat, "item_id").select(
-        "session_id", "user_id", "ts", "item_id", "category_id"
+        "session_id", "user_id", "ts", "item_id", "category_id", "event"
     )
-    anchors = extract_anchors(sess, item_cat, start=START, end=END)
+    anchors = extract_anchors(events_cat, start=START, end=END)
     assert anchors.count() == 2  # the two addtocart events
 
     prefix = prefix_events(anchors, events_cat)
@@ -194,3 +194,51 @@ def test_candidate_recall_matches_reference_claim(spark):
     )
     assert rec >= 0.95, rec
     spark.catalog.clearCache()
+
+
+def test_w2v_fit_and_candidates_failures_both_surface_promptly(spark, monkeypatch):
+    """The W2V fit runs in a driver thread while the main thread writes
+    the candidates. If that write fails while the fit is still running,
+    the pipeline must cancel the fit's jobs and raise at once — the
+    write's error with the fit's error chained — rather than wait out
+    the fit and drop its failure."""
+    import time
+
+    from bigdata_retailrocket_recsys_spark.pipelines import retailrocket as rr
+    from tests.conftest import SF_SMOKE
+
+    fit_started = []
+
+    def slow_failing_fit(train_ev, cfg):
+        fit_started.append(time.monotonic())
+        try:  # a 60 s job holding cores, as the real fit's jobs do
+            spark.range(2).select(
+                F.expr("reflect('java.lang.Thread', 'sleep', 60000L)")
+            ).collect()
+        finally:
+            raise RuntimeError("w2v fit failed")
+
+    def failing_candidates(anchors, *args, **kwargs):
+        return anchors.limit(1).select(
+            "session_id",
+            "atc_ts",
+            F.raise_error(F.lit("candidates write failed"))
+            .cast("bigint")
+            .alias("category_id"),
+        )
+
+    monkeypatch.setattr(rr, "train_category_embeddings", slow_failing_fit)
+    monkeypatch.setattr(rr, "build_candidates", failing_candidates)
+    spark.catalog.clearCache()
+    with pytest.raises(Exception) as raised:
+        rr.run_events_pipeline(spark, SF_SMOKE)
+    elapsed = time.monotonic() - fit_started[0]
+    spark.catalog.clearCache()
+    chain, err = [], raised.value
+    while err is not None:
+        chain.append(str(err))
+        err = err.__cause__ or err.__context__
+    text = "\n".join(chain)
+    assert "candidates write failed" in chain[0]
+    assert "w2v fit failed" in text
+    assert elapsed < 20, f"raised {elapsed:.1f} s after the fit started"

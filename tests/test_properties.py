@@ -1086,9 +1086,7 @@ def test_lsh_hot_bucket_cap_embedding(spark):
     uncapped."""
     import random
 
-    from bigdata_retailrocket_recsys_spark.operators.dedup import (
-        embedding_cosine_pairs_lsh,
-    )
+    from bigdata_retailrocket_recsys_spark.operators.dedup import embed_lsh_pairs
 
     random.seed(3)
     rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(200)]
@@ -1099,12 +1097,12 @@ def test_lsh_hot_bucket_cap_embedding(spark):
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     unc = {
         (r.id_a, r.id_b)
-        for r in embedding_cosine_pairs_lsh(
-            df, dim=4, min_cosine=0.99
+        for r in embed_lsh_pairs(
+            df, dim=4, tables=12, bits=8, min_cosine=0.99
         ).collect()
     }
-    capped = embedding_cosine_pairs_lsh(
-        df, dim=4, min_cosine=0.99, max_bucket=50
+    capped = embed_lsh_pairs(
+        df, dim=4, tables=12, bits=8, min_cosine=0.99, max_bucket=50
     ).collect()
     fam = [r for r in capped if r.id_a < 1000 and r.id_b < 1000]
     assert {(r.id_a, r.id_b) for r in fam} == {(0, b) for b in range(1, 200)}
@@ -1112,8 +1110,8 @@ def test_lsh_hot_bucket_cap_embedding(spark):
     assert len(capped) < len(unc)
     hi = {
         (r.id_a, r.id_b)
-        for r in embedding_cosine_pairs_lsh(
-            df, dim=4, min_cosine=0.99, max_bucket=10**6
+        for r in embed_lsh_pairs(
+            df, dim=4, tables=12, bits=8, min_cosine=0.99, max_bucket=10**6
         ).collect()
     }
     assert hi == unc

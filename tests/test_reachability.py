@@ -1,0 +1,85 @@
+"""Every public engine function has a caller outside its own tests.
+
+A rung reachable only from its own unit test is dead weight: it costs
+reading, review and maintenance, and no catalog entry, pipeline,
+streaming job or benchmark ever runs it. This parses the source with
+``ast`` (no imports, no Spark) and fails on any public top-level
+function or class in the engine layers that nothing uses.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "bigdata_retailrocket_recsys_spark"
+ENGINE_LAYERS = ("operators", "functions", "sources", "streaming", "pipelines")
+# callers outside the package that count as real uses
+EXTRA_ROOTS = ("perfbench", "scripts", "bench.py", "scale_bench.py", "__spark_entry__.py")
+
+# name → why it stays without a non-test caller
+ALLOWED_UNREACHED = {
+    "bpe_encode": "pure-Python reference the Spark BPE is tested against",
+    "avro_available": "skip probe the tests use when spark-avro is absent",
+}
+
+
+def _py_files(path: str):
+    if path.endswith(".py"):
+        yield path
+        return
+    for d, _, files in os.walk(path):
+        yield from (os.path.join(d, f) for f in sorted(files) if f.endswith(".py"))
+
+
+def _uses(tree: ast.Module):
+    """(name, enclosing top-level def or None) for every Name/Attribute.
+    Import aliases and docstrings are not ast.Name/ast.Attribute nodes,
+    so neither counts as a use."""
+    for top in tree.body:
+        owner = (
+            top.name
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            else None
+        )
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                yield node.id, owner
+            elif isinstance(node, ast.Attribute):
+                yield node.attr, owner
+
+
+@pytest.mark.fast
+def test_every_public_engine_function_is_reached():
+    defs = {}  # name → defining files
+    used = {}  # name → set of (file, enclosing def)
+    roots = [os.path.join(ROOT, PKG)] + [os.path.join(ROOT, r) for r in EXTRA_ROOTS]
+    for root in roots:
+        for path in _py_files(root):
+            rel = os.path.relpath(path, ROOT)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), rel)
+            for name, owner in _uses(tree):
+                used.setdefault(name, set()).add((rel, owner))
+            layer = rel.split(os.sep)[1] if rel.startswith(PKG + os.sep) else None
+            if layer not in ENGINE_LAYERS:
+                continue
+            for top in tree.body:
+                if isinstance(
+                    top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ) and not top.name.startswith("_"):
+                    defs.setdefault(top.name, set()).add(rel)
+    unreached = sorted(
+        f"{'/'.join(sorted(files))}:{name}"
+        for name, files in defs.items()
+        if name not in ALLOWED_UNREACHED
+        and not used.get(name, set()) - {(f, name) for f in files}
+    )
+    assert not unreached, (
+        f"{len(unreached)} public engine functions have no caller outside "
+        "their own tests — retire them or wire them in:\n  "
+        + "\n  ".join(unreached)
+    )
