@@ -22,24 +22,24 @@ this module, classified:
 ==============================  =============================  ==========
 site                            cached set                     lifetime
 ==============================  =============================  ==========
-minhash_lsh_candidates :437     (doc, band, md5) — corpus-     backs the
+minhash_lsh_candidates          (doc, band, md5) — corpus-     backs the
 (df= mode only)                 proportional but NARROW        lazy return
                                 (~50 B/doc·band)               (see below)
-simhash*_near_pairs :619/:1390  (doc, sig) — 1 narrow row/doc  lazy return
-ngram_jaccard_pairs :744        distinct (doc, shingle) —      lazy return
+simhash*_near_pairs             (doc, sig) — 1 narrow row/doc  lazy return
+ngram_jaccard_pairs             distinct (doc, shingle) —      lazy return
 (df= mode only)                 corpus-TOKEN-proportional
-ngram_jaccard_prefix :823       ranked shingle prefix —        lazy return
+ngram_jaccard_pairs_prefix      ranked shingle prefix —        lazy return
                                 corpus-token-proportional
-jaccard_verify :~895            distinct (doc, shingle)        EAGERLY
+jaccard_verify                  distinct (doc, shingle)        EAGERLY
                                                                FREED (the
                                                                island rule)
-containment_pairs :805          via ngram_jaccard_pairs        lazy return
+containment_pairs               via ngram_jaccard_pairs        lazy return
                                 (df= mode)                     (same class)
-lsh_audit :~1035                distinct (doc, shingle) —      EAGERLY
+lsh_audit                       distinct (doc, shingle) —      EAGERLY
                                 owned here, 1-row output       FREED; the
                                                                banded cache
                                                                stays lazy
-_span_islands_lazy :1531        span frame                     freed by
+_span_islands_lazy              span frame                     freed by
                                                                caller after
                                                                island
                                                                checkpoint
@@ -77,6 +77,8 @@ returning (the dot_topk_int8 rule).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -85,7 +87,6 @@ from bigdata_retailrocket_recsys_spark.functions.vector import (
     l2_norm,
     quantizable,
     quantize_sql,
-    quantized,
     to_double_array,
 )
 from bigdata_retailrocket_recsys_spark.operators.iterate import (
@@ -654,25 +655,35 @@ def _capped_bucket_pairs(banded: DataFrame, *, max_bucket: int) -> DataFrame:
 
 def _bitsum_signature(sh: DataFrame, bit_exprs: list[str]) -> DataFrame:
     """Generic SimHash reducer (arbitrary per-bit expressions — the md5
-    oracle twin's path; the xxhash word paths use the 4x-cheaper
-    :func:`_swar_signatures`): per doc, 64 bit-count sums + one row count
-    in a SINGLE map-side-combinable aggregation, then the signature via
-    the majority rule (vote_j > 0 ⟺ 2·Σbit_j > n). One shuffle of
-    65-column partial aggregates; NO bit explode — the r7 volume probe
-    measured the old explode form (64 vote rows per shingle → 1.9B rows
-    at 1M docs) at 578 s vs ~20 s for this shape, value-identical."""
+    oracle twins' path; the xxhash word paths use the 4x-cheaper
+    :func:`_swar_signatures`): per doc, one bit-count sum per expression
+    + one row count in a SINGLE map-side-combinable aggregation, then
+    the signature via the majority rule (vote_j > 0 ⟺ 2·Σbit_j > n).
+    One shuffle of partial aggregates; NO bit explode — the r7 volume
+    probe measured the old explode form (64 vote rows per shingle →
+    1.9B rows at 1M docs) at 578 s vs ~20 s for this shape,
+    value-identical. Returns one signature column per 64 bit
+    expressions, named ``sig0, sig1, ...`` like
+    :func:`_swar_signatures`."""
     sums = sh.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n"),
         *[F.sum(F.expr(e)).alias(f"s{j}") for j, e in enumerate(bit_exprs)],
     )
-    sig = None
-    for j in range(64):
-        term = F.when(
-            F.col(f"s{j}") * 2 > F.col("n"),
-            F.lit(1 << j if j < 63 else -(1 << 63)).cast("bigint"),
-        ).otherwise(F.lit(0).cast("bigint"))
-        sig = term if sig is None else sig + term
-    return sums.select("doc", sig.alias("simhash"))
+
+    def _sig(i: int):
+        sig = None
+        for j in range(64):
+            term = F.when(
+                F.col(f"s{64 * i + j}") * 2 > F.col("n"),
+                F.lit(1 << j if j < 63 else -(1 << 63)).cast("bigint"),
+            ).otherwise(F.lit(0).cast("bigint"))
+            sig = term if sig is None else sig + term
+        return sig
+
+    return sums.select(
+        "doc",
+        *[_sig(i).alias(f"sig{i}") for i in range(len(bit_exprs) // 64)],
+    )
 
 
 _SWAR16_MASK = 0x0001_0001_0001_0001  # 4 × 16-bit lanes per bigint
@@ -767,7 +778,7 @@ def simhash_md5(
     )
     return _bitsum_signature(
         sh, [f"(nibs[{j // 4}] >> {j % 4}) & 1" for j in range(64)]
-    )
+    ).select("doc", F.col("sig0").alias("simhash"))
 
 
 def simhash128_md5(
@@ -780,8 +791,8 @@ def simhash128_md5(
     :func:`simhash_md5` (bit ``j`` = bit ``j%4`` of nibble ``j//4``) —
     both engines reproduce every vote, signature word, and Hamming
     distance exactly. ALL 128 bit sums ride ONE map-side-combinable
-    aggregation. Returns ``(doc, sig_lo, sig_hi)`` like the xxhash64
-    scale tier."""
+    aggregation (:func:`_bitsum_signature`). Returns
+    ``(doc, sig_lo, sig_hi)`` like the xxhash64 scale tier."""
     sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n).select(
         "doc",
         F.expr(
@@ -789,24 +800,10 @@ def simhash128_md5(
             "instr('0123456789abcdef', substring(md5(shingle), k + 1, 1)) - 1)"
         ).alias("nibs"),
     )
-    exprs = [f"(nibs[{j // 4}] >> {j % 4}) & 1" for j in range(128)]
-    sums = sh.groupBy("doc").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(F.expr(e)).alias(f"s{j}") for j, e in enumerate(exprs)],
-    )
-
-    def _word(w: int):
-        sig = None
-        for j in range(64):
-            term = F.when(
-                F.col(f"s{64 * w + j}") * 2 > F.col("n"),
-                F.lit(1 << j if j < 63 else -(1 << 63)).cast("bigint"),
-            ).otherwise(F.lit(0).cast("bigint"))
-            sig = term if sig is None else sig + term
-        return sig
-
-    return sums.select(
-        "doc", _word(0).alias("sig_lo"), _word(1).alias("sig_hi")
+    return _bitsum_signature(
+        sh, [f"(nibs[{j // 4}] >> {j % 4}) & 1" for j in range(128)]
+    ).select(
+        "doc", F.col("sig0").alias("sig_lo"), F.col("sig1").alias("sig_hi")
     )
 
 
@@ -819,8 +816,8 @@ def simhash128(
     docs in the r7 volume probe), while 128 bits give 32-bit band keys
     at n_bands=4 — saturation pushed to the billions. Two independent
     xxhash64 streams (seeds 0 and 1) supply the bit source; ALL 128 bit
-    sums ride ONE map-side-combinable aggregation (same
-    :func:`_bitsum_signature` shape, fused for both halves).
+    sums ride ONE map-side-combinable aggregation
+    (:func:`_swar_signatures`, fused for both halves).
 
     Returns ``(doc, sig_lo, sig_hi)`` — bits 0-63 and 64-127."""
     sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n).select(
@@ -1730,49 +1727,22 @@ def _auto_bits(n_vectors: int) -> int:
 # engine.
 _EMBED_SCALE = 10**9
 
-# Above this many literal ints the plane family stops being a sane
-# expression-tree literal (tables·bits·dim; 16 tables × 62 bits × 256
-# dims ≈ 2.5e5) and the hash pass falls back to the broadcast-join form.
-_LITERAL_PLANES_MAX = 1 << 18
 
-# Session-scoped parse cache for the sign-bucket expressions (r14,
-# VERDICT r13 #4): the plane-family SQL string embeds tables·bits·dim
-# literal ints, and F.expr() re-parsed it (~0.25 s at 4×12×64) on EVERY
-# embed_sign_buckets call — the vs-corpus apply path pays it twice per
-# query (corpus write + batch side). Column objects are immutable
-# unresolved trees, reusable across DataFrames; keying on the full
-# (tables, bits, dim, n_probes) family makes reuse exact. Driver-side
-# only (py4j expression handles — nothing is captured into executor
-# closures).
-_SIGN_BUCKET_EXPR_CACHE: dict = {}
-
-
-def _sign_bucket_exprs(tables: int, bits: int, dim: int, n_probes: int):
-    """(dss, barr) Column pair for :func:`embed_sign_buckets`, memoized
-    per (tables, bits, dim, n_probes). ``dss`` computes the per-vector
-    exact-integer dot grid (quantize bound ONCE via the
-    single-element-transform LET idiom — see embed_sign_buckets);
-    ``barr`` folds each table's dots into the bucket id (+ the
-    ``n_probes`` least-confident Hamming-1 probe buckets)."""
-    key = (tables, bits, dim, n_probes)
-    hit = _SIGN_BUCKET_EXPR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    planes = _rademacher_planes(tables, bits, dim)
-    # planes[t*bits + j] — _rademacher_planes iterates t-major, j-minor
-    planes_sql = (
-        "array("
-        + ",".join(
-            "array(" + ",".join(str(x) for x in w) + ")"
-            for (_t, _j, w) in planes
-        )
-        + ")"
-    )
+def _sign_bucket_exprs(tables: int, bits: int, n_probes: int):
+    """(dss, barr) Column pair for :func:`embed_sign_buckets`, over a
+    row with the vector ``v`` and the plane family ``planes``
+    (``planes[t*bits + j]`` — :func:`_rademacher_planes` iterates
+    t-major, j-minor). ``dss`` computes the per-vector exact-integer dot
+    grid (quantize bound ONCE via the single-element-transform LET
+    idiom — see embed_sign_buckets); ``barr`` folds each table's dots
+    into the bucket id (+ the ``n_probes`` least-confident Hamming-1
+    probe buckets). The SQL text carries no plane ints, so it is a
+    cheap parse per call."""
     # quantize ONCE per row via the single-element-transform LET idiom,
     # then every (t, j) dot reads the bound q
     quant_sql = quantize_sql("v", _EMBED_SCALE)
     dot_sql = (
-        f"aggregate(zip_with(q, element_at({planes_sql}, "
+        f"aggregate(zip_with(q, element_at(planes, "
         f"t * {bits} + j + 1), (x, y) -> x * CAST(y AS BIGINT)), "
         "CAST(0 AS BIGINT), (a, x) -> a + x)"
     )
@@ -1803,9 +1773,7 @@ def _sign_bucket_exprs(tables: int, bits: int, dim: int, n_probes: int):
             f"transform(dss, ds -> concat(array({bucket_sql}), "
             f"{probes_sql}))"
         )
-    pair = (F.expr(dss_sql), F.expr(barr_sql))
-    _SIGN_BUCKET_EXPR_CACHE[key] = pair
-    return pair
+    return F.expr(dss_sql), F.expr(barr_sql)
 
 
 def embed_sign_buckets(
@@ -1849,9 +1817,12 @@ def embed_sign_buckets(
     projected ``q`` alias referenced by only one top-level expression
     gets INLINED by CollapseProject and re-quantized per (table, bit)
     (measured at 1M×64: let-bind 15.0 s, per-bit re-quantize 23.4 s,
-    old join form 19-20 s). Families larger than
-    ``_LITERAL_PLANES_MAX`` literal ints fall back to the
-    broadcast-join form (value-identical; locked by unit test).
+    old join form 19-20 s). The planes enter as DATA, not SQL text:
+    one JSON string literal parsed by ``from_json`` into an
+    ``array<array<int>>`` column, which Catalyst constant-folds into
+    the same array literal at every family size (no ``from_json``
+    survives optimization), so one form serves every size and
+    ``n_probes`` works everywhere.
 
     ``n_probes`` (r13, VERDICT r12 #8): QUERY-SIDE multi-probe — per
     table, also emit the ``n_probes`` Hamming-1 neighbor buckets
@@ -1875,21 +1846,15 @@ def embed_sign_buckets(
         raise ValueError(
             f"n_probes must be in [0, bits={bits}], got {n_probes}"
         )
-    if tables * bits * dim > _LITERAL_PLANES_MAX:
-        if n_probes > 0:
-            raise ValueError(
-                "n_probes requires the literal-planes form; "
-                f"tables*bits*dim = {tables * bits * dim} exceeds "
-                f"{_LITERAL_PLANES_MAX}"
-            )
-        return _embed_sign_buckets_join_form(
-            df, tables=tables, bits=bits, dim=dim, id_col=id_col,
-            vec_col=vec_col,
-        )
+    planes = [w for _t, _j, w in _rademacher_planes(tables, bits, dim)]
     v = quantizable(df, dim=dim, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).alias("v"),
+        F.from_json(F.lit(json.dumps(planes)), "array<array<int>>").alias(
+            "planes"
+        ),
     )
-    dss_expr, barr_expr = _sign_bucket_exprs(tables, bits, dim, n_probes)
+    dss_expr, barr_expr = _sign_bucket_exprs(tables, bits, n_probes)
     return (
         v.select("vid", dss_expr.alias("dss"))
         .select("vid", F.posexplode(barr_expr).alias("tbl", "barr"))
@@ -1898,47 +1863,6 @@ def embed_sign_buckets(
             "tbl",
             F.explode("barr").alias("bucket"),
         )
-    )
-
-
-def _embed_sign_buckets_join_form(
-    df: DataFrame,
-    *,
-    tables: int,
-    bits: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Broadcast-join fallback for plane families too large to inline as
-    a literal (> ``_LITERAL_PLANES_MAX`` ints): tiny plane frame
-    broadcast against the vectors, one map-side-combinable groupBy per
-    bucket — linear in N·tables·bits, value-identical to the literal
-    form (unit-locked)."""
-    v = quantizable(df, dim=dim, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("vid"), quantized(vec_col, _EMBED_SCALE).alias("q")
-    )
-    pdf = df.sparkSession.createDataFrame(
-        _rademacher_planes(tables, bits, dim),
-        "tbl int, bit int, w array<int>",
-    )
-    dot = F.aggregate(
-        F.zip_with("q", "w", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x,
-    )
-    return (
-        v.crossJoin(F.broadcast(pdf))
-        .select(
-            "vid",
-            "tbl",
-            F.when(dot > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bit)"))
-            .otherwise(F.lit(0).cast("bigint"))
-            .alias("bitval"),
-        )
-        .groupBy("vid", "tbl")
-        .agg(F.sum("bitval").alias("bucket"))
-        .select(F.col("vid").alias(id_col), "tbl", "bucket")
     )
 
 

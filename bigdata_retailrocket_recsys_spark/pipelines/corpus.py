@@ -63,7 +63,6 @@ def build_corpus(
     min_quality: float = 0.5,
     min_tokens: int = 5,
     shingle_n: int = 3,
-    cache: bool = True,
     near_dup: bool = False,
     near_dup_hash_fn: str = "xxhash64",
     near_dup_num_hashes: int = 16,
@@ -77,7 +76,6 @@ def build_corpus(
     line_min_docs: int = 3,
     decontaminate_mode: str = "drop",
     gate=None,
-    recluster_by_id: bool = True,
 ) -> DataFrame:
     """Run the corpus pipeline; returns the kept training docs as
     ``(id, domain, n_tok, cum_tok)`` (the budget-sample surface).
@@ -88,16 +86,6 @@ def build_corpus(
     :func:`~bigdata_retailrocket_recsys_spark.operators.dedup
     .strip_contaminated_spans`, the rest of each doc survives, the
     budget charges cleaned token counts, emptied docs drop).
-
-    ``recluster_by_id`` (r14, VERDICT r13 #6): keep the post-dedup
-    ``repartition(id)`` that restores the id layout for downstream
-    id-keyed consumers. Measured on sf0.1 (min-of-3, interleaved, one
-    session): True wins for EVERY variant — plain 2.29 s vs 2.66 s,
-    surgical 3.05 s vs 3.44 s — the extra lazy plan Exchanges are
-    cheaper than each id-keyed consumer re-exchanging the cached
-    digest-partitioned window output, so the uniform default stays True
-    (the surgical variant's 4 extra lazy Exchange nodes are paid once
-    and win ~11% wall).
 
     ``gate``: optional ``Callable[[DataFrame], DataFrame]`` replacing
     the default composite-score quality gate (``quality_filter`` with
@@ -134,9 +122,7 @@ def build_corpus(
     excluded from the output corpus by construction. NULL-``domain``
     docs stay and form their own budget pool; NULL id/text rows are
     dropped up front (ids key the dedup/budget hashing — the CLAUDE.md
-    non-null hash-key rule — and textless docs have nothing to gate).
-    ``cache=False`` lets a caller that persists stage outputs itself
-    (the warehouse shape) skip the in-session caching."""
+    non-null hash-key rule — and textless docs have nothing to gate)."""
     base = docs.filter(
         F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
     ).select(id_col, text_col, domain_col)
@@ -153,8 +139,7 @@ def build_corpus(
             ),
             id_col,
         ).select(id_col, text_col, domain_col)
-    if cache:
-        base = base.cache()
+    base = base.cache()
     if gate is not None:
         gated = gate(base).withColumn("__norm", normalize_text(text_col))
     else:
@@ -164,8 +149,7 @@ def build_corpus(
             min_quality=min_quality,
             min_tokens=min_tokens,
         ).withColumn("__norm", normalize_text(text_col))
-    if cache:
-        gated = gated.cache()
+    gated = gated.cache()
     # Exact dedup as ONE exchange (r13): keeper = min id per normalized-
     # text digest ≡ row_number()=1 over (digest, id asc) — the operator
     # form (exact_dedup agg + keeper semi-join) pays a digest exchange
@@ -188,23 +172,18 @@ def build_corpus(
             F.col(domain_col).isNull() | (F.col(domain_col) != eval_source)
         )
     )
-    if recluster_by_id:
-        # re-cluster by id before the cache: the old keeper semi-join
-        # left train hash-partitioned by id and every id-keyed consumer
-        # (shingle windows, strip joins, loser/decon anti-joins — the
-        # near-dup path has many) reused that layout from the cache;
-        # without this, each consumer re-exchanges the digest-partitioned
-        # window output (measured: neardup 1.21 vs r13 before, 2
-        # exchanges → 1+1 with it, downstream layout restored)
-        train = train.repartition(F.col(id_col))
-    if cache:
-        # train is multiply referenced on EVERY path — at minimum the
-        # contamination shingle scan + the clean anti-join (default
-        # path), plus the LSH candidates / Jaccard verification / CC
-        # node list / keeper semi-join / strip+domain-join pair when
-        # the bracketed stages are on (S7: Spark never reuses a
-        # twice-referenced exchange; VERDICT r9 #5)
-        train = train.cache()
+    # re-cluster by id before the cache: the old keeper semi-join left
+    # train hash-partitioned by id and every id-keyed consumer (shingle
+    # windows, strip joins, loser/decon anti-joins — the near-dup path
+    # has many) reused that layout from the cache; without this, each
+    # consumer re-exchanges the digest-partitioned window output
+    # (measured on sf0.1, min-of-3, with vs without: plain 2.29 s vs
+    # 2.66 s, surgical 3.05 s vs 3.44 s). train is multiply referenced
+    # on EVERY path — at minimum the contamination shingle scan + the
+    # clean anti-join, plus the LSH candidates / Jaccard verification /
+    # CC node list / strip+domain-join pair when the bracketed stages
+    # are on (S7: Spark never reuses a twice-referenced exchange)
+    train = train.repartition(F.col(id_col)).cache()
     if near_dup:
         # near_dup_max_bucket: the hot-bucket star guard (VERDICT r10
         # #1) — None (default) keeps the oracle-tier clique; set it for

@@ -43,23 +43,8 @@ from bigdata_retailrocket_recsys_spark.plans.catalog import (
     _t,
     query,
 )
+from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
 
-
-def _session_tmp(spark: SparkSession, name: str) -> str:
-    """Per-session scratch path for write→read-back roundtrip queries.
-
-    Keyed on the Spark applicationId so two concurrent driver/rehearsal
-    sessions on one machine never rmtree each other's in-flight reads
-    (ADVICE r6 #4). Within one session the path is stable, so a repeated
-    query still exercises its own overwrite/rmtree discipline. One
-    definition engine-wide: sources/scratch.session_scratch (r7 — a
-    concurrent gate overwrote the late-drop stage mid-stream; EVERY
-    write→read path is per-session now, not just the roundtrips)."""
-    from bigdata_retailrocket_recsys_spark.sources.scratch import (
-        session_scratch,
-    )
-
-    return session_scratch(spark, name)
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -144,7 +129,7 @@ def q_dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures_table,
     )
 
-    sig_path = _session_tmp(spark, "minhash_sigs")
+    sig_path = session_scratch(spark, "minhash_sigs")
     minhash_signatures_table(
         _t(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull()),
         sig_path,
@@ -248,7 +233,7 @@ def q_dedup_ngram_jaccard_persisted(spark: SparkSession, sf_dir: str) -> DataFra
     q_dedup_ngram_jaccard (locked in tests/test_operators.py)."""
     from bigdata_retailrocket_recsys_spark.operators.dedup import shingle_table
 
-    sh_path = _session_tmp(spark, "shingles")
+    sh_path = session_scratch(spark, "shingles")
     shingle_table(
         _t(spark, sf_dir, "documents"),
         sh_path,
@@ -298,7 +283,7 @@ def q_dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    dig_path = _session_tmp(spark, "corpus_digests")
+    dig_path = session_scratch(spark, "corpus_digests")
     content_digest_table(
         docs.filter(F.col("doc_id") % 5 != 0), dig_path, key_cols=["text"]
     )
@@ -361,7 +346,7 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    sig_path = _session_tmp(spark, "corpus_sigs")
+    sig_path = session_scratch(spark, "corpus_sigs")
     minhash_signatures_table(
         docs.filter(F.col("doc_id") % 5 != 0),
         sig_path,
@@ -693,7 +678,7 @@ def q_sim_topk_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pinned_write_at_rest,
     )
 
-    idx_path = _session_tmp(spark, "ivf_pinned_index")
+    idx_path = session_scratch(spark, "ivf_pinned_index")
     emb = _t(spark, sf_dir, "embeddings")
     ivf_pinned_write_at_rest(emb, idx_path, dim=64, n_cells=8)
     queries = emb.filter(
@@ -3564,7 +3549,7 @@ def q_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events")
-    base_dir = _session_tmp(spark, "upsert")
+    base_dir = session_scratch(spark, "upsert")
     target_path = os.path.join(base_dir, "v1")
     out_path = os.path.join(base_dir, "v2")
     ev.filter(F.col("user_id") < 50).select(
@@ -3766,7 +3751,7 @@ def q_scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import tempfile as _tmp
 
-    out = _session_tmp(spark, "corrupt_csv")
+    out = session_scratch(spark, "corrupt_csv")
     _os.makedirs(out, exist_ok=True)
     with open(_os.path.join(out, "part-0.csv"), "w") as f:
         f.write("event_id,user_id,value\n")
@@ -3824,7 +3809,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_parquet,
     )
 
-    base = _session_tmp(spark, "compaction")
+    base = session_scratch(spark, "compaction")
     frag, out = os.path.join(base, "frag"), os.path.join(base, "out")
     (
         _t(spark, sf_dir, "events")
@@ -5431,7 +5416,7 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the only affordable evolution path (footer-merge,
     not data-rewrite); pair with explicit casts to keep types stable."""
     ev = _t(spark, sf_dir, "events").select("event_id", "value")
-    base = _session_tmp(spark, "merge_schema_snapshot")
+    base = session_scratch(spark, "merge_schema_snapshot")
     g1 = ev.filter(F.col("event_id") < 1000)
     g2 = ev.filter(
         (F.col("event_id") >= 1000) & (F.col("event_id") < 2000)
@@ -7286,7 +7271,7 @@ def q_sink_pysource_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(AuditJsonlDataSource)
     except Exception:
         pass  # already registered in this session
-    path = _session_tmp(spark, "audit_jsonl")
+    path = session_scratch(spark, "audit_jsonl")
     import shutil as _sh
 
     _sh.rmtree(path, ignore_errors=True)
@@ -7338,7 +7323,7 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    path = _session_tmp(spark, "xml_part")
+    path = session_scratch(spark, "xml_part")
     _sh.rmtree(path, ignore_errors=True)
     p = _t(spark, sf_dir, "part").filter(
         F.col("p_size").isNotNull()
@@ -7386,7 +7371,7 @@ def q_scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied on BOTH the write format and the oracle identically."""
     import shutil as _sh
 
-    path = _session_tmp(spark, "fixed_width")
+    path = session_scratch(spark, "fixed_width")
     _sh.rmtree(path, ignore_errors=True)
     c = _t(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isNotNull()
@@ -8737,7 +8722,7 @@ def q_dedup_winnowing_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = F.pmod(F.col("doc_id"), F.lit(3))
     corpus = docs.filter(m != 0)
     batch = docs.filter(m == 0)
-    path = _session_tmp(spark, "winnow_fp_table")
+    path = session_scratch(spark, "winnow_fp_table")
     winnowing_fingerprint_table(corpus, path, k=3, w=4, hash_fn="md5")
     bfp = (
         winnowing_fingerprints(batch, k=3, w=4, hash_fn="md5")
@@ -9382,7 +9367,7 @@ def q_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("source").isNull() | (F.col("source") != "src0"))
         .withColumn("__norm", normalize_text("text"))
     )
-    dig_path = _session_tmp(spark, "corpus_inc_digests")
+    dig_path = session_scratch(spark, "corpus_inc_digests")
     content_digest_table(corp, dig_path, key_cols=["__norm"])
     return build_corpus_incremental(
         base.filter(F.col("doc_id") % 4 == 0),
@@ -9991,8 +9976,8 @@ def q_corpus_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("source").isNull() | (F.col("source") != "src0"))
         .withColumn("__norm", normalize_text("text"))
     )
-    dig_path = _session_tmp(spark, "corpus_incnd_digests")
-    sig_path = _session_tmp(spark, "corpus_incnd_sigs")
+    dig_path = session_scratch(spark, "corpus_incnd_digests")
+    sig_path = session_scratch(spark, "corpus_incnd_sigs")
     content_digest_table(corp, dig_path, key_cols=["__norm"])
     minhash_signatures_table(
         corp, sig_path, id_col="doc_id", text_col="text",
@@ -10455,8 +10440,8 @@ def q_corpus_incremental_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("source").isNull() | (F.col("source") != "src0"))
         .withColumn("__norm", normalize_text("text"))
     )
-    dig_path = _session_tmp(spark, "corpus_commit_digests")
-    sig_path = _session_tmp(spark, "corpus_commit_sigs")
+    dig_path = session_scratch(spark, "corpus_commit_digests")
+    sig_path = session_scratch(spark, "corpus_commit_sigs")
     content_digest_table(corp0, dig_path, key_cols=["__norm"])
     minhash_signatures_table(
         corp0, sig_path, id_col="doc_id", text_col="text",
@@ -10753,8 +10738,8 @@ def q_corpus_snapshot_recut(spark: SparkSession, sf_dir: str) -> DataFrame:
     corp0 = quality_filter(base.filter(F.col("doc_id") % 4 != 0)).filter(
         F.col("source").isNull() | (F.col("source") != "src0")
     )
-    dig_path = _session_tmp(spark, "corpus_recut_digests")
-    corpus_path = _session_tmp(spark, "corpus_recut_rows")
+    dig_path = session_scratch(spark, "corpus_recut_digests")
+    corpus_path = session_scratch(spark, "corpus_recut_rows")
     import shutil
 
     for p in (dig_path, corpus_path):
@@ -13983,7 +13968,7 @@ def q_dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     day0 = docs.filter(s == 0)
     day1 = docs.filter(s == 1)
     day2 = docs.filter(s == 2)
-    path = _session_tmp(spark, "inc_span_ngrams")
+    path = session_scratch(spark, "inc_span_ngrams")
     ngram_count_table(day0, path, n=5)
     s1 = duplicated_spans_vs_corpus(
         day1,
@@ -14181,7 +14166,7 @@ def q_text_incremental_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
     s = F.pmod(F.col("doc_id"), F.lit(3))
-    path = _session_tmp(spark, "inc_line_prev")
+    path = session_scratch(spark, "inc_line_prev")
     line_prevalence_table(docs.filter(s == 0), path)
     s1 = strip_repeated_lines_vs_corpus(
         docs.filter(s == 1),
@@ -14289,7 +14274,7 @@ def q_multimodal_neardup_incremental(
     corpus_assets = attach_fake_media(
         docs.filter(s == 0), id_col="doc_id", payload_from="text"
     )
-    path = _session_tmp(spark, "chunk_digests")
+    path = session_scratch(spark, "chunk_digests")
     chunk_digest_table(corpus_assets, path)
     batch_assets = attach_fake_media(
         docs.filter(s == 1), id_col="doc_id", payload_from="text"
@@ -14396,7 +14381,7 @@ def q_dedup_incremental_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
     s = F.pmod(F.col("doc_id"), F.lit(3))
-    path = _session_tmp(spark, "inc_strip_ngrams")
+    path = session_scratch(spark, "inc_strip_ngrams")
     ngram_count_table(docs.filter(s == 0), path, n=5)
     s1 = strip_duplicated_spans_vs_corpus(
         docs.filter(s == 1),
@@ -14920,7 +14905,7 @@ def q_dedup_incremental_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus0 = emb.filter(m >= 2)
     day1 = emb.filter(m == 0)
     day2 = emb.filter(m == 1)
-    path = _session_tmp(spark, "inc_embed_buckets")
+    path = session_scratch(spark, "inc_embed_buckets")
     # bits=12: see the oracle note — 8 bits is vacuous on random fixtures
     embed_bucket_table(corpus0, path, dim=64, bits=12)
     dup1 = (
@@ -15027,7 +15012,7 @@ def q_dedup_embed_vs_corpus_apply(
     batch = emb.filter(m == 0).select(
         "vec_id", "embedding", "label"
     ).unionByName(copies)
-    path = _session_tmp(spark, "embed_apply_buckets")
+    path = session_scratch(spark, "embed_apply_buckets")
     # bits explicit since r13: the vs-corpus family requires the batch's
     # plane params to MATCH the persisted table's (no silent default)
     embed_bucket_table(corpus, path, dim=64, bits=12)
@@ -15096,7 +15081,7 @@ def q_dedup_embed_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = F.pmod(F.col("vec_id"), F.lit(5))
     corpus = emb.filter(m >= 2)
     batch = emb.filter(m == 0)
-    path = _session_tmp(spark, "embed_multiprobe_buckets")
+    path = session_scratch(spark, "embed_multiprobe_buckets")
     embed_bucket_table(corpus, path, dim=64, bits=12)
     return embed_candidates_vs_corpus(
         batch, spark.read.parquet(path), dim=64, bits=12, n_probes=2
@@ -15219,7 +15204,7 @@ def q_scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_avro,
     )
 
-    out = _session_tmp(spark, "avro_roundtrip")
+    out = session_scratch(spark, "avro_roundtrip")
     write_avro(
         _t(spark, sf_dir, "events")
         .filter(F.col("user_id") % 3 == 0)

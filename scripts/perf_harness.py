@@ -3,8 +3,8 @@
 
 Modes:
   plans [names...]        — write .explain("formatted") for the named queries
-                            (default: all headline) to plans/r13/<name>_<suffix>.txt
-                            (suffix via --suffix, default "before").
+                            (default: all headline) to plans/<round>/<name>_<suffix>.txt
+                            (round via $BDRR_PLANS_ROUND, default r14; --suffix, default "before").
   audit                   — plan-shape sweep over the WHOLE catalog: count
                             Exchange nodes, join strategies, BatchEvalPython/
                             ArrowEvalPython presence, scans without pushed

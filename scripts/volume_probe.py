@@ -1197,9 +1197,7 @@ def probe_r12embed(n_vecs: int, n_batch: int = 100_000) -> None:
 
 
 def probe_r13embed(n_vecs: int, n_batch: int = 100_000) -> None:
-    """r13 embedding-tier probes (VERDICT r12 #2/#8): (a) interleaved
-    A/B of the array-grain literal bucket build vs the broadcast-join
-    form at volume (the rewrite's honest wall), and (b) the multi-probe
+    """r13 embedding-tier probe (VERDICT r12 #8): the multi-probe
     recall trade on the vs-corpus path — ``n_planted`` batch vectors
     are NEAR-duplicates (small deterministic perturbation, cosine
     ≈0.98) of corpus vectors, so single-probe banding misses the
@@ -1213,10 +1211,8 @@ def probe_r13embed(n_vecs: int, n_batch: int = 100_000) -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
-        _embed_sign_buckets_join_form,
         embed_bucket_table,
         embed_candidates_vs_corpus,
-        embed_sign_buckets,
     )
 
     def vecs(base):
@@ -1232,36 +1228,7 @@ def probe_r13embed(n_vecs: int, n_batch: int = 100_000) -> None:
     corpus = vecs(spark.range(n_vecs).repartition(64)).localCheckpoint()
     corpus.count()
 
-    # (a) bucket-build A/B, warm interleaved x2 each
-    def run_lit():
-        return (
-            embed_sign_buckets(corpus, dim=64, tables=4, bits=16)
-            .agg(F.sum("bucket"), F.count(F.lit(1)))
-            .collect()[0]
-        )
-
-    def run_join():
-        return (
-            _embed_sign_buckets_join_form(
-                corpus, tables=4, bits=16, dim=64, id_col="vec_id",
-                vec_col="embedding",
-            )
-            .agg(F.sum("bucket"), F.count(F.lit(1)))
-            .collect()[0]
-        )
-
-    run_lit(), run_join()  # warm both plans
-    for i in range(2):
-        for name, fn in (("literal", run_lit), ("join", run_join)):
-            t0 = time.time()
-            chk = tuple(fn())
-            print(
-                f"[r13embed] bucket build {name} pass {i}: "
-                f"{time.time() - t0:.1f}s checksum={chk}",
-                flush=True,
-            )
-
-    # (b) multi-probe recall on NEAR-dup (not identical) planted members:
+    # multi-probe recall on NEAR-dup (not identical) planted members:
     # batch vector i (< n_planted) = corpus vector i with component j
     # nudged by a deterministic ±0.06 — cosine ≈ 0.98, so each sign
     # decision near its margin can flip and single-probe banding loses

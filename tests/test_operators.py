@@ -5574,32 +5574,140 @@ def test_stream_embed_commit_equals_batch_chain(spark):
         surv.extend((r.vec_id, r.label) for r in s.collect())
     assert got == set(surv) and len(got) > 0
 
-def test_embed_sign_buckets_literal_vs_join_form(spark):
-    """r13 array-grain rewrite (VERDICT r12 #2): the literal-planes
-    single-projection form is value-identical to the broadcast-join
-    fallback, and its optimized plan has ZERO Exchange and exactly ONE
-    quantization site (fused into the dot lambda — a separate q alias
-    is inlined by CollapseProject and would re-quantize per bit)."""
+def _sign_bucket_reference(rows, *, dim, tables, bits, n_probes=0):
+    """NumPy replay of embed_sign_buckets: floor(v·1e9) bigints dotted
+    with the md5 ±1 planes; bucket bit j = (dot_j > 0); each probe flips
+    one of the n_probes smallest-(|dot|, j) bits."""
+    import numpy as np
+
+    from bigdata_retailrocket_recsys_spark.operators.dedup import (
+        _rademacher_planes,
+    )
+
+    w = np.array(
+        [p for _t, _j, p in _rademacher_planes(tables, bits, dim)],
+        dtype=np.int64,
+    ).reshape(tables, bits, dim)
+    out = []
+    for vid, vec in rows:
+        q = np.floor(np.array(vec, dtype=np.float64) * 1e9).astype(np.int64)
+        for t in range(tables):
+            dots = [int(x) for x in w[t] @ q]
+            bucket = sum(1 << j for j, d in enumerate(dots) if d > 0)
+            out.append((vid, t, bucket))
+            flips = sorted((abs(d), j) for j, d in enumerate(dots))
+            out += [(vid, t, bucket ^ (1 << j)) for _a, j in flips[:n_probes]]
+    return sorted(out)
+
+
+def test_embed_sign_buckets_folded_planes_plan(spark):
+    """The ±1 plane family rides as one from_json literal that Catalyst
+    folds: rows equal the NumPy replay, and the optimized plan has ZERO
+    Exchange, no surviving from_json, and exactly ONE quantization site
+    (fused into the dot lambda — a separate q alias is inlined by
+    CollapseProject and would re-quantize per bit)."""
     import random
 
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
-        _embed_sign_buckets_join_form,
         embed_sign_buckets,
     )
 
     random.seed(11)
     rows = [(i, [random.gauss(0, 1) for _ in range(8)]) for i in range(80)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    lit_form = embed_sign_buckets(df, dim=8, tables=3, bits=5)
-    join_form = _embed_sign_buckets_join_form(
-        df, tables=3, bits=5, dim=8, id_col="vec_id", vec_col="embedding"
-    )
-    a = sorted((r.vec_id, r.tbl, r.bucket) for r in lit_form.collect())
-    b = sorted((r.vec_id, r.tbl, r.bucket) for r in join_form.collect())
-    assert a == b and len(a) == 80 * 3
-    plan = lit_form._jdf.queryExecution().optimizedPlan().toString()
+    out = embed_sign_buckets(df, dim=8, tables=3, bits=5)
+    got = sorted((r.vec_id, r.tbl, r.bucket) for r in out.collect())
+    assert got == _sign_bucket_reference(rows, dim=8, tables=3, bits=5)
+    assert len(got) == 80 * 3
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Exchange" not in plan
     assert plan.count("FLOOR(") == 1
+    assert "JsonToStructs" not in plan and "from_json" not in plan.lower()
+
+
+def test_embed_sign_buckets_large_family_with_probes(spark):
+    """A 268,800-int plane family (8 tables × 16 bits × 2100 dims) hashes
+    through the same single form, n_probes included, and matches the
+    NumPy replay."""
+    import random
+
+    from bigdata_retailrocket_recsys_spark.operators.dedup import (
+        embed_sign_buckets,
+    )
+
+    random.seed(21)
+    rows = [
+        (i, [random.gauss(0, 1) for _ in range(2100)]) for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    out = embed_sign_buckets(df, dim=2100, tables=8, bits=16, n_probes=2)
+    got = sorted((r.vec_id, r.tbl, r.bucket) for r in out.collect())
+    assert got == _sign_bucket_reference(
+        rows, dim=2100, tables=8, bits=16, n_probes=2
+    )
+    assert len(got) == 20 * 8 * 3
+
+
+@pytest.mark.slow
+def test_embed_sign_buckets_survives_gateway_relaunch():
+    """Driver-side state must not outlive the gateway that created it:
+    hash, stop the session AND its py4j gateway, launch a fresh one in
+    the same process, hash again — equal rows, no dangling handle."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        """
+        import random
+
+        from pyspark import SparkContext
+        from pyspark.sql import SparkSession
+
+        from bigdata_retailrocket_recsys_spark.operators.dedup import (
+            embed_sign_buckets,
+        )
+
+        random.seed(3)
+        rows = [(i, [random.gauss(0, 1) for _ in range(8)]) for i in range(30)]
+
+        def run():
+            spark = (
+                SparkSession.builder.master("local[1]")
+                .config("spark.ui.enabled", "false")
+                .getOrCreate()
+            )
+            spark.sparkContext.setLogLevel("ERROR")
+            df = spark.createDataFrame(
+                rows, "vec_id int, embedding array<double>"
+            )
+            out = embed_sign_buckets(df, dim=8, tables=3, bits=5, n_probes=1)
+            return spark, sorted(tuple(r) for r in out.collect())
+
+        spark, first = run()
+        spark.stop()
+        SparkContext._gateway.shutdown()
+        SparkContext._gateway = SparkContext._jvm = None
+        spark, second = run()
+        spark.stop()
+        assert first == second and len(first) == 30 * 3 * 2, (first, second)
+        print("RELAUNCH_OK")
+        """
+    )
+    env = dict(os.environ, PYTHONPATH=root)
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0 and "RELAUNCH_OK" in proc.stdout, (
+        proc.stdout[-2000:] + proc.stderr[-4000:]
+    )
 
 
 def test_embed_sign_buckets_multiprobe(spark):

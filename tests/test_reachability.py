@@ -1,10 +1,15 @@
-"""Every public engine function has a caller outside its own tests.
+"""Static locks on the engine layers, parsed with ``ast`` (no imports,
+no Spark).
 
-A rung reachable only from its own unit test is dead weight: it costs
-reading, review and maintenance, and no catalog entry, pipeline,
-streaming job or benchmark ever runs it. This parses the source with
-``ast`` (no imports, no Spark) and fails on any public top-level
-function or class in the engine layers that nothing uses.
+Every public engine function has a caller outside its own tests: a rung
+reachable only from its own unit test is dead weight. It costs reading,
+review and maintenance, and no catalog entry, pipeline, streaming job
+or benchmark ever runs it.
+
+No engine module keeps a process-wide driver cache: a module-level
+container or memoized function outlives the SparkSession (and the py4j
+gateway) that filled it, so a handle cached under one session dangles
+under the next.
 """
 
 from __future__ import annotations
@@ -82,4 +87,48 @@ def test_every_public_engine_function_is_reached():
         f"{len(unreached)} public engine functions have no caller outside "
         "their own tests — retire them or wire them in:\n  "
         + "\n  ".join(unreached)
+    )
+
+
+def _is_empty_container(node: ast.expr | None) -> bool:
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, ast.List):
+        return not node.elts
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id in ("dict", "set")
+        and not node.args
+        and not node.keywords
+    )
+
+
+def _is_memo_decorator(node: ast.expr) -> bool:
+    if isinstance(node, ast.Call):
+        node = node.func
+    if isinstance(node, ast.Attribute):
+        return node.attr in ("lru_cache", "cache")
+    return isinstance(node, ast.Name) and node.id in ("lru_cache", "cache")
+
+
+@pytest.mark.fast
+def test_no_process_wide_driver_caches_in_engine():
+    found = []
+    for layer in ENGINE_LAYERS:
+        for path in _py_files(os.path.join(ROOT, PKG, layer)):
+            rel = os.path.relpath(path, ROOT)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), rel)
+            for top in tree.body:
+                if isinstance(top, ast.Assign) and _is_empty_container(top.value):
+                    found += [f"{rel}:{ast.unparse(t)}" for t in top.targets]
+                elif isinstance(top, ast.AnnAssign) and _is_empty_container(top.value):
+                    found.append(f"{rel}:{ast.unparse(top.target)}")
+                elif isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    if any(_is_memo_decorator(d) for d in top.decorator_list):
+                        found.append(f"{rel}:{top.name}")
+    assert not found, (
+        "module-level driver caches outlive the session that filled them — "
+        "scope them to the call or the session:\n  " + "\n  ".join(sorted(found))
     )
