@@ -7,9 +7,10 @@ Scale design notes:
 - ``minhash_lsh_candidates``: shingle → 64-bit hashes → k min-hash
   signatures → band buckets → shuffle on (band, bucket) → pairs only within
   buckets. Pair generation is bounded by bucket size, never all-pairs.
-- ``simhash``: 64-bit weighted-majority hash; near-dups differ in few bits;
-  banding the 64 bits into 4×16-bit chunks gives exact-match buckets for
-  Hamming distance ≤ 3 candidates.
+- ``simhash``: 64- or 128-bit weighted-majority hash from an xxhash64
+  (scale) or md5 (oracle-replayable) bit source; near-dups differ in few
+  bits; banding the bits into 4 chunks gives exact-match buckets for
+  Hamming distance ≤ 3 candidates (``simhash_near_pairs``).
 - ``ngram_jaccard_pairs``: relational form — explode distinct shingles,
   self-join on shingle within a blocking key, count intersections; union
   sizes from per-doc counts. No UDF, no quadratic all-pairs.
@@ -25,7 +26,8 @@ site                            cached set                     lifetime
 minhash_lsh_candidates          (doc, band, md5) — corpus-     backs the
 (df= mode only)                 proportional but NARROW        lazy return
                                 (~50 B/doc·band)               (see below)
-simhash*_near_pairs             (doc, sig) — 1 narrow row/doc  lazy return
+simhash_near_pairs              (doc, sig0[, sig1]) — 1        lazy return
+                                narrow row/doc
 ngram_jaccard_pairs             distinct (doc, shingle) —      lazy return
 (df= mode only)                 corpus-TOKEN-proportional
 ngram_jaccard_pairs_prefix      ranked shingle prefix —        lazy return
@@ -388,12 +390,12 @@ def minhash_signatures(
     window's doc partitioning: ONE data shuffle end-to-end instead of
     three. Output: doc, sig (array<bigint>).
 
-    ``hash_fn='md5'`` is the cross-engine-replayable tier (the simhash_md5
-    move): per seed j the hash is ``md5('j:' || shingle)`` and the min is
-    the LEXICOGRAPHIC min of fixed-width hex — deterministic on any
-    engine, so the whole signature→band→pair chain can be value-checked
-    by a SQL oracle. sig becomes array<string>; ~2× the bytes of the
-    xxhash64 tier, which stays the scale default."""
+    ``hash_fn='md5'`` is the cross-engine-replayable tier (the md5
+    SimHash move): per seed j the hash is ``md5('j:' || shingle)`` and
+    the min is the LEXICOGRAPHIC min of fixed-width hex — deterministic
+    on any engine, so the whole signature→band→pair chain can be
+    value-checked by a SQL oracle. sig becomes array<string>; ~2× the
+    bytes of the xxhash64 tier, which stays the scale default."""
     exploded = shingle_rows(
         df, id_col=id_col, text_col=text_col, n=shingle_n, distinct=False
     ).withColumnRenamed("shingle", "s")
@@ -740,168 +742,154 @@ def _swar_signatures(sh: DataFrame, word_cols: list[str]) -> DataFrame:
 
 
 def simhash(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", shingle_n: int = 2
-) -> DataFrame:
-    """SimHash signatures: per (doc, shingle) xxhash64, then SWAR-packed
-    bit sums per doc in one aggregation (:func:`_swar_signatures`)."""
-    sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n).select(
-        "doc", F.xxhash64("shingle").alias("h")
-    )
-    return _swar_signatures(sh, ["h"]).select(
-        "doc", F.col("sig0").alias("simhash")
-    )
-
-
-def simhash_md5(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", shingle_n: int = 1
-) -> DataFrame:
-    """SimHash with an md5-derived bit source — the ORACLE-REPLAYABLE
-    twin of :func:`simhash` (same exact-integer-twin move as the
-    PageRank pair): both Spark and DuckDB compute md5 hex identically,
-    so per-shingle bits, per-bit ±1 votes, and the final signature are
-    bit-reproducible cross-engine with integer-only arithmetic (no
-    xxhash64, the one piece DuckDB can't replay). Bit ``j`` of a shingle
-    is bit ``j%4`` of hex nibble ``j//4``, nibble = position of the hex
-    char in ``0123456789abcdef``; signature bit j = (Σ votes) > 0.
-
-    ~2× the hash bytes of the xxhash64 path (md5 is 128-bit, strings not
-    ints) — keep :func:`simhash` as the scale path; this twin exists so
-    the banded-pairs operator has a FULL value-hash oracle instead of a
-    rows-only check. Same plan shape: one projection to 16 nibble ints,
-    then the shared 64-bit-sum aggregation (:func:`_bitsum_signature`)."""
-    sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n).select(
-        "doc",
-        F.expr(
-            "transform(sequence(0, 15), k -> "
-            "instr('0123456789abcdef', substring(md5(shingle), k + 1, 1)) - 1)"
-        ).alias("nibs"),
-    )
-    return _bitsum_signature(
-        sh, [f"(nibs[{j // 4}] >> {j % 4}) & 1" for j in range(64)]
-    ).select("doc", F.col("sig0").alias("simhash"))
-
-
-def simhash128_md5(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", shingle_n: int = 2
-) -> DataFrame:
-    """128-bit SimHash from the FULL md5 digest — the oracle-replayable
-    twin of :func:`simhash128` (r12 graduation of the 128-bit tier,
-    VERDICT r11 #8): md5 is 128 bits, so its 32 hex nibbles supply all
-    128 vote bits with the same integer-only nibble extraction as
-    :func:`simhash_md5` (bit ``j`` = bit ``j%4`` of nibble ``j//4``) —
-    both engines reproduce every vote, signature word, and Hamming
-    distance exactly. ALL 128 bit sums ride ONE map-side-combinable
-    aggregation (:func:`_bitsum_signature`). Returns
-    ``(doc, sig_lo, sig_hi)`` like the xxhash64 scale tier."""
-    sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n).select(
-        "doc",
-        F.expr(
-            "transform(sequence(0, 31), k -> "
-            "instr('0123456789abcdef', substring(md5(shingle), k + 1, 1)) - 1)"
-        ).alias("nibs"),
-    )
-    return _bitsum_signature(
-        sh, [f"(nibs[{j // 4}] >> {j % 4}) & 1" for j in range(128)]
-    ).select(
-        "doc", F.col("sig0").alias("sig_lo"), F.col("sig1").alias("sig_hi")
-    )
-
-
-def simhash128(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", shingle_n: int = 2
-) -> DataFrame:
-    """128-bit SimHash — the >10M-doc tier of the banding family: the
-    64-bit signature's band keys saturate at N ≈ 2^(64/n_bands) docs
-    (random-collision candidates ≈ N²·n_bands/2^(w+1); measured at 1M
-    docs in the r7 volume probe), while 128 bits give 32-bit band keys
-    at n_bands=4 — saturation pushed to the billions. Two independent
-    xxhash64 streams (seeds 0 and 1) supply the bit source; ALL 128 bit
-    sums ride ONE map-side-combinable aggregation
-    (:func:`_swar_signatures`, fused for both halves).
-
-    Returns ``(doc, sig_lo, sig_hi)`` — bits 0-63 and 64-127."""
-    sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n).select(
-        "doc",
-        F.xxhash64("shingle").alias("h1"),
-        F.xxhash64("shingle", F.lit(1)).alias("h2"),
-    )
-    return _swar_signatures(sh, ["h1", "h2"]).select(
-        "doc", F.col("sig0").alias("sig_lo"), F.col("sig1").alias("sig_hi")
-    )
-
-
-def simhash128_near_pairs(
     df: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 2,
+    bits: int = 64,
+    hash_fn: str = "xxhash64",
+) -> DataFrame:
+    """SimHash signatures of ``bits`` ∈ {64, 128} from one of two bit
+    sources, returned as ``(doc, sig0[, sig1])`` — bits 0-63 and 64-127.
+
+    - ``hash_fn='xxhash64'`` (the scale tier): word 0 is
+      ``xxhash64(shingle)``, word 1 is ``xxhash64(shingle, 1)``; all bit
+      sums ride ONE aggregation of SWAR-packed lanes
+      (:func:`_swar_signatures`).
+    - ``hash_fn='md5'`` (the oracle-replayable tier, the same
+      exact-integer-twin move as the PageRank pair): bit ``j`` of a
+      shingle is bit ``j%4`` of hex nibble ``j//4`` of ``md5(shingle)``,
+      nibble = position of the hex char in ``0123456789abcdef``. Spark
+      and DuckDB compute md5 hex identically, so every vote, signature
+      word and Hamming distance replays exactly with integer-only
+      arithmetic; md5 is 128 bits, so its 32 nibbles cover the wide
+      tier too. One bit-count sum per bit (:func:`_bitsum_signature`);
+      ~2× the hash bytes of xxhash64, which stays the scale path.
+
+    Signature bit j = (Σ ±1 votes over the doc's distinct shingles) > 0."""
+    if bits not in (64, 128):
+        raise ValueError(f"bits must be 64 or 128, got {bits}")
+    sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n)
+    if hash_fn == "xxhash64":
+        words = [F.xxhash64("shingle"), F.xxhash64("shingle", F.lit(1))]
+        sh = sh.select(
+            "doc", *[w.alias(f"h{i}") for i, w in enumerate(words[: bits // 64])]
+        )
+        return _swar_signatures(sh, sh.columns[1:])
+    if hash_fn == "md5":
+        sh = sh.select(
+            "doc",
+            F.expr(
+                f"transform(sequence(0, {bits // 4 - 1}), k -> "
+                "instr('0123456789abcdef', substring(md5(shingle), k + 1, 1)) - 1)"
+            ).alias("nibs"),
+        )
+        return _bitsum_signature(
+            sh, [f"(nibs[{j // 4}] >> {j % 4}) & 1" for j in range(bits)]
+        )
+    raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+
+
+def simhash_near_pairs(
+    df: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_n: int = 2,
+    bits: int = 64,
     max_hamming: int = 3,
     n_bands: int = 4,
     hash_fn: str = "xxhash64",
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Banded near-dup candidate pairs over the 128-bit signature — the
-    scale tier of :func:`simhash_near_pairs` (same Manku pigeonhole:
-    Hamming ≤ max_hamming < n_bands ⟹ exact agreement on ≥1 band).
-    ``hash_fn='md5'`` swaps in the :func:`simhash128_md5` bit source —
-    the oracle-replayable twin (r12 graduation); ``'xxhash64'`` stays
-    the scale tier (int hashes, half the hash bytes).
-    Bands split the concatenated 128-bit space with remainder bits
-    spread over the leading bands; a band straddling the lo/hi word
-    boundary is stitched from both words (all integer shifts, no UDF).
-    Verify = ``bit_count(lo⊕lo) + bit_count(hi⊕hi)``.
+    """SimHash near-duplicate CANDIDATE PAIRS over the :func:`simhash`
+    signature of ``bits`` and ``hash_fn``. Standard banding argument
+    (Manku et al., WWW'07 web-crawl dedup): split the signature into
+    ``n_bands`` contiguous blocks; two signatures within Hamming
+    distance ``max_hamming`` < ``n_bands`` MUST agree exactly on at
+    least one block (pigeonhole), so exact-match joins on block keys
+    find every such pair without an all-pairs comparison. Survivors are
+    verified with ``Σ bit_count(xor)`` over the signature words —
+    JVM-side, no UDF — and deduped (a pair can collide in several
+    bands). Bands split the ``bits`` with the remainder spread over the
+    leading bands, so EVERY bit is banded; a band straddling a word
+    boundary is stitched from both words (integer shifts only).
 
-    ``max_bucket=`` enables the hot-bucket star pre-collapse — same
-    guard, semantics, and ``from_capped_bucket`` audit column as
-    :func:`simhash_near_pairs` (VERDICT r10 #1).
+    Scale shape: one signature pass, then ``n_bands`` block-key
+    shuffles of narrow rows; bucket sizes bound the pair fan-out
+    exactly like MinHash-LSH banding. BUCKET SATURATION bound
+    (measured, r7 volume probe): with ``w = bits/n_bands``-bit block
+    keys the random-collision candidate volume is ≈ N²·n_bands/2^(w+1)
+    — at N=1M docs, 64 bits, n_bands=4 (w=16) that is ~30M verified
+    candidates (sig pass 10.4 s, banded join 85 s on local[32]); beyond
+    N≈10M the right move is ``bits=128`` (32-bit keys at n_bands=4),
+    not more bands (pigeonhole needs max_hamming < n_bands). xxhash64
+    signatures are not DuckDB-expressible, so the scale tier is
+    property-tested (brute-force recall equality); the md5 tier is
+    value-hashed against DuckDB.
 
-    Returns ``(doc_a, doc_b, hamming)`` with ``doc_a < doc_b``."""
-    if not 2 <= n_bands <= 128:
-        raise ValueError(f"n_bands must be in [2, 128], got {n_bands}")
+    HOT-BUCKET GUARD (``max_bucket=``, default off; VERDICT r10 #1): an
+    over-cap (band, key) group is pre-collapsed to a spanning star from
+    hub = min(doc, sig…) instead of the B(B−1)/2 clique — see
+    :func:`minhash_lsh_candidates` for the full rationale. Star edges
+    still pass through the Hamming verify, so a family member whose
+    Hamming to the HUB exceeds ``max_hamming`` (but is within it to
+    some other member) is not emitted from that bucket — cluster recall
+    on genuinely near-identical families is unaffected (Hamming ≈ 0 to
+    every member incl. the hub; property-locked). With the cap set the
+    output gains a ``from_capped_bucket`` audit column (1 = at least one
+    of the pair's colliding buckets was over-cap).
+
+    Returns ``(doc_a, doc_b, hamming)`` with ``doc_a < doc_b``.
+    """
+    if not 2 <= n_bands <= bits:
+        # n_bands=1 degenerates to exact signature equality: exact_dedup
+        raise ValueError(f"n_bands must be in [2, {bits}], got {n_bands}")
     if max_hamming >= n_bands:
         raise ValueError(
             "banding guarantee needs max_hamming < n_bands "
             f"(got {max_hamming} >= {n_bands})"
         )
-    if hash_fn == "xxhash64":
-        sig_fn = simhash128
-    elif hash_fn == "md5":
-        sig_fn = simhash128_md5
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    sigs = sig_fn(df, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+    sigs = simhash(
+        df,
+        id_col=id_col,
+        text_col=text_col,
+        shingle_n=shingle_n,
+        bits=bits,
+        hash_fn=hash_fn,
+    )
+    sig_cols = [f"sig{i}" for i in range(bits // 64)]
     if max_bucket is None:
-        # uncapped: banded feeds BOTH self-join sides (S7); capped mode
-        # reads banded once into _hot_bucket_edges' released sized cache
+        # uncapped: banded feeds BOTH self-join sides (S7). Capped mode
+        # skips the cache — _hot_bucket_edges reads banded exactly once
+        # into its own (released) sized cache, so caching here would
+        # just pin a docs-grain frame for the session (ADVICE r11 #1).
         sigs = sigs.cache()
-    base, rem = divmod(128, n_bands)
+    base, rem = divmod(bits, n_bands)
     widths = [base + (1 if b < rem else 0) for b in range(n_bands)]
     offsets = [sum(widths[:b]) for b in range(n_bands)]
 
     def _key(o: int, w: int) -> str:
-        # extract bits [o, o+w) of the 128-bit (sig_hi:sig_lo) value.
-        # >> in Spark is arithmetic shift on bigint — mask AFTER shifting
-        # to kill sign extension; w <= 64 always (n_bands >= 2), and at
-        # w == 64 the band IS the whole word (a (1<<64)-1 literal would
-        # parse as DECIMAL, not BIGINT)
+        # bits [o, o+w) of the signature. >> in Spark is an arithmetic
+        # shift on bigint — mask AFTER shifting to kill sign extension;
+        # w <= 64 always (n_bands >= 2), and at w == 64 the band IS the
+        # whole word (a (1<<64)-1 literal would parse as DECIMAL)
+        i, lo = divmod(o, 64)
         if w == 64:
-            return "sig_lo" if o == 0 else "sig_hi"
-        if o + w <= 64:
-            return f"(sig_lo >> {o}) & {(1 << w) - 1}"
-        if o >= 64:
-            return f"(sig_hi >> {o - 64}) & {(1 << w) - 1}"
-        lo_bits = 64 - o
+            return f"sig{i}"
+        if lo + w <= 64:
+            return f"(sig{i} >> {lo}) & {(1 << w) - 1}"
+        lo_bits = 64 - lo
         hi_bits = w - lo_bits
         return (
-            f"((sig_lo >> {o}) & {(1 << lo_bits) - 1}) | "
-            f"(((sig_hi) & {(1 << hi_bits) - 1}) << {lo_bits})"
+            f"((sig{i} >> {lo}) & {(1 << lo_bits) - 1}) | "
+            f"(((sig{i + 1}) & {(1 << hi_bits) - 1}) << {lo_bits})"
         )
 
     banded = sigs.select(
         "doc",
-        "sig_lo",
-        "sig_hi",
+        *sig_cols,
         F.explode(
             F.array(
                 *[
@@ -913,10 +901,10 @@ def simhash128_near_pairs(
                 ]
             )
         ).alias("bk"),
-    ).select("doc", "sig_lo", "sig_hi", "bk.band", "bk.key")
+    ).select("doc", *sig_cols, "bk.band", "bk.key")
     return _banded_sig_pairs(
         banded,
-        sig_cols=["sig_lo", "sig_hi"],
+        sig_cols=sig_cols,
         max_hamming=max_hamming,
         max_bucket=max_bucket,
     )
@@ -1691,7 +1679,7 @@ def _rademacher_planes(tables: int, bits: int, dim: int):
     random hyperplanes; ±1 entries preserve the collision-probability
     analysis up to constants), and unlike seeded-numpy Gaussians the
     md5 derivation is replayable inside a DuckDB oracle — the same
-    exact-integer-twin move as simhash_md5."""
+    exact-integer-twin move as ``simhash(hash_fn='md5')``."""
     import hashlib
 
     return [
@@ -2503,111 +2491,6 @@ def contamination_check(
     )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 2,
-    max_hamming: int = 3,
-    n_bands: int = 4,
-    hash_fn: str = "xxhash64",
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """SimHash near-duplicate CANDIDATE PAIRS — the pairing stage the
-    plain :func:`simhash` signature table feeds. Standard banding
-    argument (Manku et al., WWW'07 web-crawl dedup): split the 64-bit
-    signature into ``n_bands`` contiguous blocks; two signatures within
-    Hamming distance ``max_hamming`` < ``n_bands`` MUST agree exactly on
-    at least one block (pigeonhole), so exact-match joins on block keys
-    find every such pair without an all-pairs comparison. Survivors are
-    verified with ``bit_count(xor)`` — JVM-side, no UDF — and deduped
-    (a pair can collide in several bands).
-
-    Scale shape: one signature pass (simhash), then ``n_bands``
-    block-key shuffles of 16-byte rows; bucket sizes bound the pair
-    fan-out exactly like MinHash-LSH banding. BUCKET SATURATION bound
-    (measured, r7 volume probe): with ``w = 64/n_bands``-bit block keys
-    the random-collision candidate volume is ≈ N²·n_bands/2^(w+1) —
-    at N=1M docs, n_bands=4 (w=16) that is ~30M verified candidates
-    (sig pass 10.4 s, banded join 85 s on local[32]); beyond N≈10M a
-    64-bit signature saturates and the right move is a wider signature
-    (simhash-128) or Manku's multi-table permutation layout, not more
-    bands (pigeonhole needs max_hamming < n_bands). xxhash64 signatures are
-    not DuckDB-expressible → rows-only entry; the banding guarantee
-    (every emitted pair has Hamming ≤ k; brute-force recall equality on
-    small corpora) is property-tested.
-
-    HOT-BUCKET GUARD (``max_bucket=``, default off; VERDICT r10 #1): an
-    over-cap (band, key) group is pre-collapsed to a spanning star from
-    hub = min(doc, simhash) instead of the B(B−1)/2 clique — see
-    :func:`minhash_lsh_candidates` for the full rationale. Star edges
-    still pass through the ``bit_count(xor) ≤ max_hamming`` verify, so a
-    family member whose Hamming to the HUB exceeds ``max_hamming`` (but
-    is within it to some other member) is not emitted from that bucket —
-    cluster recall on genuinely near-identical families is unaffected
-    (Hamming ≈ 0 to every member incl. the hub; property-locked). With
-    the cap set the output gains a ``from_capped_bucket`` audit column
-    (1 = at least one of the pair's colliding buckets was over-cap).
-
-    Returns ``(doc_a, doc_b, hamming)`` with ``doc_a < doc_b``.
-    """
-    if not 2 <= n_bands <= 64:
-        # n_bands=1 would need a 64-bit band mask ((1<<64)-1 parses as
-        # DECIMAL, not BIGINT, and the banding guarantee degenerates to
-        # exact signature equality anyway — use exact_dedup for that)
-        raise ValueError(f"n_bands must be in [2, 64], got {n_bands}")
-    if max_hamming >= n_bands:
-        raise ValueError(
-            "banding guarantee needs max_hamming < n_bands "
-            f"(got {max_hamming} >= {n_bands})"
-        )
-    if hash_fn == "xxhash64":
-        sig_fn = simhash  # scale path (64-bit int hash, cheapest)
-    elif hash_fn == "md5":
-        sig_fn = simhash_md5  # oracle-replayable twin (see simhash_md5)
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    sigs = sig_fn(df, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
-    if max_bucket is None:
-        # uncapped: banded feeds BOTH self-join sides (S7). Capped mode
-        # skips the cache — _hot_bucket_edges reads banded exactly once
-        # into its own (released) sized cache, so caching here would
-        # just pin a docs-grain frame for the session (ADVICE r11 #1).
-        sigs = sigs.cache()
-    # distribute 64 bits across bands with the remainder spread over the
-    # first (64 % n_bands) bands, so EVERY signature bit is banded (a
-    # uniform 64//n_bands width would drop the top 64 % n_bands bits
-    # from all candidate keys when n_bands does not divide 64)
-    base, rem = divmod(64, n_bands)
-    widths = [base + (1 if b < rem else 0) for b in range(n_bands)]
-    offsets = [sum(widths[:b]) for b in range(n_bands)]
-    banded = sigs.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(
-                            f"(simhash >> {offsets[b]}) & "
-                            f"{(1 << widths[b]) - 1}"
-                        ).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "simhash", "bk.band", "bk.key")
-    return _banded_sig_pairs(
-        banded,
-        sig_cols=["simhash"],
-        max_hamming=max_hamming,
-        max_bucket=max_bucket,
-    )
-
-
 def _banded_sig_pairs(
     banded: DataFrame,
     *,
@@ -3086,85 +2969,38 @@ def strip_contaminated_spans(
     one benchmark question keeps its other 99% instead of dying, the
     trade most open pipelines actually want for partial overlap.
 
-    Relational shape (the strip_repeated_lines one-pass discipline):
-    token rows (posexplode) → spans via ``lead`` windows per doc →
-    semi-join against the eval split's ONE corpus-wide distinct shingle
-    set (eval sets are benchmark-sized — the semi broadcasts) → covered
-    positions via ``sequence`` explode (overlapping spans union through
-    the distinct) → LEFT join back as a membership flag → ONE groupBy
-    per doc emits n_tokens, n_removed, AND the rebuilt text (the
-    removal filter runs inside the collected struct array). Fully
-    covered documents come back with ``text_clean = ''``.
+    Relational shape, on the shared span helpers: the positioned token
+    frame (:func:`_span_tok_frame`) → md5 n-gram keys per start
+    (:func:`_positioned_ngram_keys`) → semi-join against the eval
+    split's ONE corpus-wide distinct md5-shingle set (eval sets are
+    benchmark-sized — the semi broadcasts) → each matching start is an
+    island of length ``n`` → the one-pass covered-position rebuild
+    (:func:`_rebuild_tokens_without_islands`; overlapping islands union
+    through its distinct). The eval side keeps :func:`shingle_rows`, so
+    NULL-id eval docs still count as reference text; its partial
+    shingles from docs shorter than ``n`` can never equal a full
+    n-gram. Fully covered documents come back with ``text_clean = ''``.
 
     Output: (id, n_tokens, n_removed, text_clean).
     """
-    from pyspark.sql import Window
-
-    base = train_df.filter(
-        F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
-    ).select(F.col(id_col).alias("__d"), F.col(text_col).alias("__text"))
-    tok = base.select(
-        "__d", F.posexplode(ws_tokens("__text")).alias("__p", "__t")
-    )
-    w = Window.partitionBy("__d").orderBy("__p")
-    span = F.concat_ws(
-        " ", F.col("__t"), *[F.lead("__t", j).over(w) for j in range(1, n)]
-    )
-    last = F.lead("__t", n - 1).over(w)
-    spans = (
-        tok.select(
-            "__d", F.col("__p").alias("__s"), span.alias("shingle"),
-            last.alias("__last"),
-        )
-        .filter(F.col("__last").isNotNull())
-        .drop("__last")
-    )
+    tok = _span_tok_frame(train_df, id_col=id_col, text_col=text_col)
     ev = (
         shingle_rows(
             eval_df, id_col=id_col, text_col=text_col, n=n, distinct=False
         )
-        .select("shingle")
+        .select(F.md5("shingle").alias("__k"))
         .distinct()
     )
-    covered = (
-        spans.join(ev, "shingle", "left_semi")
+    islands = (
+        _positioned_ngram_keys(tok, n=n, hash_fn="md5")
+        .join(ev, "__k", "left_semi")
         .select(
             "__d",
-            F.explode(
-                F.sequence(F.col("__s"), F.col("__s") + F.lit(n - 1))
-            ).alias("__p"),
+            F.col("__s").cast("bigint").alias("span_start"),
+            F.lit(n).cast("bigint").alias("span_len"),
         )
-        .distinct()
-        .withColumn("__rm", F.lit(1))
     )
-    flagged = tok.join(covered, ["__d", "__p"], "left")
-    out = flagged.groupBy("__d").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-        F.sum(F.when(F.col("__rm").isNotNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_removed"),
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "__p",
-                                F.col("__rm").isNotNull().alias("__r"),
-                                "__t",
-                            )
-                        )
-                    ),
-                    lambda x: ~x["__r"],
-                ),
-                lambda x: x["__t"],
-            ),
-            " ",
-        ).alias("text_clean"),
-    )
-    return out.select(
-        F.col("__d").alias(id_col), "n_tokens", "n_removed", "text_clean"
-    )
+    return _rebuild_tokens_without_islands(tok, islands, id_col=id_col)
 
 
 def keeper_by_score(

@@ -258,7 +258,7 @@ def ivf_pinned_write_at_rest(
 ) -> None:
     """Exact-integer IVF index AT REST with PINNED sample centroids —
     the ORACLED twin of the KMeans tier :func:`cosine_topk_ivf` (r13
-    graduation, VERDICT r12 #4; the simhash_md5 twin move applied to
+    graduation, VERDICT r12 #4; the md5 SimHash twin move applied to
     IVF): instead of iterative float KMeans, the centroids are the
     quantized vectors of the ``n_cells`` smallest eligible corpus ids (sample-initialized
     cells — the standard no-iteration IVF seeding), every assignment is

@@ -51,6 +51,18 @@ from bigdata_retailrocket_recsys_spark.operators.text import (
     strip_repeated_lines,
 )
 
+# The pipelines' fixed shape, shared by build_corpus,
+# build_corpus_incremental and corpus_commit: the signature table
+# corpus_commit appends and the incremental near-dup pass that reads it
+# agree on shingles and hash count by construction.
+SHINGLE_N = 3  # word n-grams for near-dup and decontamination
+NEAR_DUP_NUM_HASHES = 16
+NEAR_DUP_BANDS = 4
+NEAR_DUP_MIN_JACCARD = 0.5
+SUBSTRING_N = 5  # duplicated-span n-gram length
+SUBSTRING_MIN_OCCURRENCES = 2
+LINE_MIN_DOCS = 3  # a line in this many docs is boilerplate
+
 
 def build_corpus(
     docs: DataFrame,
@@ -62,18 +74,11 @@ def build_corpus(
     domain_col: str = "source",
     min_quality: float = 0.5,
     min_tokens: int = 5,
-    shingle_n: int = 3,
     near_dup: bool = False,
     near_dup_hash_fn: str = "xxhash64",
-    near_dup_num_hashes: int = 16,
-    near_dup_bands: int = 4,
-    near_dup_min_jaccard: float = 0.5,
     near_dup_max_bucket: int | None = None,
     strip_substrings: bool = False,
-    substring_n: int = 5,
-    substring_min_occurrences: int = 2,
     strip_lines: bool = False,
-    line_min_docs: int = 3,
     decontaminate_mode: str = "drop",
     gate=None,
 ) -> DataFrame:
@@ -131,7 +136,7 @@ def build_corpus(
         # prevalence over the whole corpus, docs rebuilt from surviving
         # lines, emptied docs dropped rather than shipped blank
         stripped = strip_repeated_lines(
-            docs, id_col=id_col, text_col=text_col, min_docs=line_min_docs
+            docs, id_col=id_col, text_col=text_col, min_docs=LINE_MIN_DOCS
         )
         base = base.select(id_col, domain_col).join(
             stripped.filter(F.col("text_clean") != "").select(
@@ -193,9 +198,9 @@ def build_corpus(
             train,
             id_col=id_col,
             text_col=text_col,
-            shingle_n=shingle_n,
-            num_hashes=near_dup_num_hashes,
-            bands=near_dup_bands,
+            shingle_n=SHINGLE_N,
+            num_hashes=NEAR_DUP_NUM_HASHES,
+            bands=NEAR_DUP_BANDS,
             hash_fn=near_dup_hash_fn,
             max_bucket=near_dup_max_bucket,
         ).select("doc_a", "doc_b")
@@ -204,8 +209,8 @@ def build_corpus(
             train,
             id_col=id_col,
             text_col=text_col,
-            shingle_n=shingle_n,
-            min_jaccard=near_dup_min_jaccard,
+            shingle_n=SHINGLE_N,
+            min_jaccard=NEAR_DUP_MIN_JACCARD,
             # LSH candidates are pair-unique by construction (groupBy
             # doc_a, doc_b in both the clique and capped tails) — skip
             # the defensive dedup exchange (r13)
@@ -245,8 +250,8 @@ def build_corpus(
             train,
             id_col=id_col,
             text_col=text_col,
-            n=substring_n,
-            min_occurrences=substring_min_occurrences,
+            n=SUBSTRING_N,
+            min_occurrences=SUBSTRING_MIN_OCCURRENCES,
         )
         train = train.select(id_col, domain_col).join(
             stripped.filter(F.col("text_clean") != "").select(
@@ -265,7 +270,7 @@ def build_corpus(
             eval_docs,
             id_col=id_col,
             text_col=text_col,
-            n=shingle_n,
+            n=SHINGLE_N,
         )
         clean = train.select(id_col, domain_col).join(
             stripped.filter(F.col("text_clean") != "").select(
@@ -280,7 +285,7 @@ def build_corpus(
         # shingle set and ≥50%-contaminated docs drop whole
         flags = contamination_check(
             eval_docs, train, id_col=id_col, text_col=text_col,
-            shingle_n=shingle_n,
+            shingle_n=SHINGLE_N,
         )
         clean = train.join(
             flags.filter(F.col("contaminated") == 1).select(id_col),
@@ -312,12 +317,8 @@ def build_corpus_incremental(
     domain_col: str = "source",
     min_quality: float = 0.5,
     min_tokens: int = 5,
-    shingle_n: int = 3,
     corpus_signatures: DataFrame | None = None,
     near_dup_hash_fn: str = "xxhash64",
-    near_dup_num_hashes: int = 16,
-    near_dup_bands: int = 4,
-    near_dup_max_bucket: int | None = None,
 ) -> DataFrame:
     """INCREMENTAL corpus maintenance — the daily-delta path: only the
     NEW batch is gated, deduped, and decontaminated; the existing corpus
@@ -385,16 +386,15 @@ def build_corpus_incremental(
             corpus_signatures=corpus_signatures,
             id_col=id_col,
             text_col=text_col,
-            shingle_n=shingle_n,
-            num_hashes=near_dup_num_hashes,
-            bands=near_dup_bands,
+            shingle_n=SHINGLE_N,
+            num_hashes=NEAR_DUP_NUM_HASHES,
+            bands=NEAR_DUP_BANDS,
             hash_fn=near_dup_hash_fn,
-            max_bucket=near_dup_max_bucket,
         ).select(F.col("batch_doc").alias(id_col)).distinct()
         fresh = fresh.join(near, id_col, "left_anti")
     flags = contamination_check(
         eval_docs, fresh, id_col=id_col, text_col=text_col,
-        shingle_n=shingle_n,
+        shingle_n=SHINGLE_N,
     )
     clean = fresh.join(
         flags.filter(F.col("contaminated") == 1).select(id_col),
@@ -426,8 +426,6 @@ def corpus_commit(
     id_col: str = "doc_id",
     text_col: str = "text",
     domain_col: str = "source",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
     hash_fn: str = "xxhash64",
 ) -> None:
     """COMMIT an increment — the append half of the daily-delta loop
@@ -441,8 +439,8 @@ def corpus_commit(
       key (``md5(normalize_text)``), so the next
       ``incremental_exact_dedup`` anti-join sees them.
     - ``signature_path`` (optional): the accepted docs' MinHash
-      signatures under the SAME ``shingle_n``/``num_hashes``/
-      ``hash_fn`` the corpus table was built with
+      signatures under :data:`SHINGLE_N`/:data:`NEAR_DUP_NUM_HASHES`
+      and the ``hash_fn`` the corpus table was built with
       (:func:`minhash_signatures_table` schema), so the next
       ``minhash_lsh_candidates_vs_corpus`` band-join sees them.
     - ``corpus_path`` (optional): the accepted docs themselves
@@ -489,8 +487,8 @@ def corpus_commit(
             committed,
             id_col=id_col,
             text_col=text_col,
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
+            shingle_n=SHINGLE_N,
+            num_hashes=NEAR_DUP_NUM_HASHES,
             hash_fn=hash_fn,
         ).write.mode("append").parquet(signature_path)
     if corpus_path is not None:

@@ -664,7 +664,7 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sim_topk_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer IVF at rest with PINNED sample centroids — the
     ORACLED twin of q_sim_topk_ivf_at_rest (r13 graduation, VERDICT r12
-    #4; the simhash_md5 twin precedent): centroids are the quantized
+    #4; the md5 SimHash twin precedent): centroids are the quantized
     vectors of the 8 smallest eligible ids, cell assignment is an exact
     bigint argmin of squared distances over floor(v·1e6) components
     (ties → smaller cell), queries (vec_id ≡ 7 mod 100) probe their 2
@@ -7975,8 +7975,9 @@ def _simhash_md5_oracle(max_hamming: int = 3) -> str:
 @query("q_dedup_simhash_pairs_md5", oracle=_simhash_md5_oracle())
 def q_dedup_simhash_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banded near-dup pairs with the md5-derived signature
-    (operators/dedup.simhash_md5) — the FULL-ORACLE twin of
-    q_dedup_simhash_pairs (r6 rows-only graduation, VERDICT r6 #5):
+    (operators/dedup.simhash_near_pairs, hash_fn='md5') — the
+    FULL-ORACLE twin of q_dedup_simhash_pairs (r6 rows-only
+    graduation, VERDICT r6 #5):
     md5 hex is bit-identical across Spark and DuckDB, so the whole
     pipeline — nibble bits, ±1 votes, signature, Hamming — replays
     exactly; the oracle brute-forces all pairs (fine at sf0.01) while
@@ -8138,26 +8139,27 @@ def _simhash128_md5_oracle(max_hamming: int = 3) -> str:
 @query("q_dedup_simhash128_pairs", oracle=_simhash128_md5_oracle())
 def q_dedup_simhash128_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """128-bit SimHash banded near-dup pairs
-    (operators/dedup.simhash128_near_pairs) — the >10M-doc tier: the
-    64-bit signature's 16-bit band keys saturate at ~2^16 docs
+    (operators/dedup.simhash_near_pairs, bits=128) — the >10M-doc tier:
+    the 64-bit signature's 16-bit band keys saturate at ~2^16 docs
     (candidates ≈ N²·bands/2^17, measured in the r7 volume probe), while
     128 signature bits give 32-bit keys at the same n_bands=4 —
     saturation pushed to billions of docs, one extra bigint per row.
     GRADUATED r12 (VERDICT r11 #8, the q_dedup_minhash_persisted
-    precedent): runs the md5 bit-source tier (simhash128_md5 — md5 IS
+    precedent): runs the md5 bit-source tier (hash_fn='md5' — md5 IS
     128 bits, its 32 nibbles replay every vote in DuckDB), so the whole
     banded chain incl. the word-straddling band keys is value-hashed;
     the xxhash64 tier stays the scale path, its pigeonhole recall vs
     128-bit brute force property-locked (incl. straddling bands)."""
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
-        simhash128_near_pairs,
+        simhash_near_pairs,
     )
 
-    return simhash128_near_pairs(
+    return simhash_near_pairs(
         _t(spark, sf_dir, "documents"),
         id_col="doc_id",
         text_col="text",
         shingle_n=2,  # bigrams, same discrimination tier as the 64-bit entry
+        bits=128,
         max_hamming=3,
         n_bands=4,
         hash_fn="md5",
@@ -8564,7 +8566,7 @@ def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """md5-MinHash FULL-ORACLE twin of q_dedup_minhash (the simhash_md5
+    """md5-MinHash FULL-ORACLE twin of q_dedup_minhash (the md5 SimHash
     move, r7): per seed j the shingle hash is ``md5('j:' || shingle)``
     and the per-seed min is the LEXICOGRAPHIC min of fixed-width hex —
     deterministic on any engine, so the entire shingle → signature →
@@ -10218,7 +10220,6 @@ def q_corpus_pipeline_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
         eval_source="src0",
         budget_tokens=700,
         strip_lines=True,
-        line_min_docs=3,
     )
 
 
@@ -10461,8 +10462,6 @@ def q_corpus_incremental_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc1,
         digest_path=dig_path,
         signature_path=sig_path,
-        shingle_n=3,
-        num_hashes=16,
         hash_fn="md5",
     )
     day2 = base.filter(F.col("doc_id") % 4 == 0)

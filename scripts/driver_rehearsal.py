@@ -4,13 +4,16 @@ entry executed and compared against its ``oracle_sql()`` twin in DuckDB
 using the driver's compare (sorted column names, stringified rows).
 
 The driver samples ~50 of the catalog per round and rotates; this runs all
-of them, so a rotation can't surprise us. Usage:
+of them, so a rotation can't surprise us. Each result line carries the
+entry's Spark-side wall (build, collect and the pandas/arrow conversions;
+DuckDB excluded), and the run ends with the ten slowest entries. Usage:
 
     python scripts/driver_rehearsal.py [sf_dir]     # default /root/testdata/sf0.01
     python scripts/driver_rehearsal.py tests/_advdata   # adversarial fixture
 """
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,14 +59,29 @@ def _storage_now() -> tuple[int, int]:
 # we — instead the peak and final pinned bytes are asserted bounded.
 _peak_bytes = 0
 _peak_after = ""
+_spark_s: dict[str, float] = {}
+
+
+def _spark(name, fn):
+    """Run a Spark-side call, charging its wall to entry ``name``."""
+    t0 = time.perf_counter()
+    try:
+        return fn()
+    finally:
+        _spark_s[name] = _spark_s.get(name, 0.0) + time.perf_counter() - t0
+
 
 bad = []
 for i, name in enumerate(sorted(qs)):
     try:
-        sdf = qs[name](spark, SF_DIR)
-        rows = sdf.collect()
+        sdf = _spark(name, lambda: qs[name](spark, SF_DIR))
+        rows = _spark(name, sdf.collect)
         if name not in os_:
-            print(f"{i + 1:3d} {name}: rows-only {len(rows)}", flush=True)
+            print(
+                f"{i + 1:3d} {name}: rows-only {len(rows)}"
+                f" [spark {_spark_s[name]:.1f}s]",
+                flush=True,
+            )
             continue
         scols = sorted(sdf.columns)
         srows = sorted(tuple(str(r[c]) for c in scols) for r in rows)
@@ -75,7 +93,7 @@ for i, name in enumerate(sorted(qs)):
         # hash may stringify pandas frames, where type asymmetries invisible
         # to fetchall()+str() surface (DuckDB HUGEINT → float64 "123.0" vs
         # Spark int64 "123" — the r1/r2 driver hash-fail root cause).
-        pdf_s = sdf.toPandas()
+        pdf_s = _spark(name, sdf.toPandas)
         pdf_d = con.sql(os_[name]).df()
         prows_s = sorted(
             tuple(str(v) for v in t)
@@ -91,7 +109,7 @@ for i, name in enumerate(sorted(qs)):
         # paths a driver hash may take; r1/r2 proved an unrehearsed path can
         # hide a type asymmetry for rounds. Spark 4 DataFrame.toArrow() vs
         # DuckDB .arrow(), both flattened via to_pylist() and stringified.
-        at_s = sdf.toArrow()
+        at_s = _spark(name, sdf.toArrow)
         at_d = con.sql(os_[name]).arrow()
 
         def _arrow_rows(tbl, cols):
@@ -108,13 +126,18 @@ for i, name in enumerate(sorted(qs)):
             f"{i + 1:3d} {name}: {'OK' if ok else 'MISMATCH'}"
             f"{'' if pok else ' PANDAS-MISMATCH'}"
             f"{'' if aok else ' ARROW-MISMATCH'}"
-            f" ({len(srows)} vs {len(drows)})",
+            f" ({len(srows)} vs {len(drows)})"
+            f" [spark {_spark_s[name]:.1f}s]",
             flush=True,
         )
         if not (ok and pok and aok):
             bad.append(name)
     except Exception as ex:  # noqa: BLE001 — rehearsal must visit every query
-        print(f"{i + 1:3d} {name}: ERROR {type(ex).__name__}: {str(ex)[:150]}", flush=True)
+        print(
+            f"{i + 1:3d} {name}: ERROR {type(ex).__name__}: {str(ex)[:150]}"
+            f" [spark {_spark_s.get(name, 0.0):.1f}s]",
+            flush=True,
+        )
         bad.append(name)
     finally:
         _b, _n = _storage_now()
@@ -126,6 +149,12 @@ print(
     f"STORAGE: final {_final_bytes / 1048576:.1f} MiB across "
     f"{_final_rdds} pinned RDDs; peak {_peak_bytes / 1048576:.1f} MiB "
     f"(after {_peak_after}); bound {_bound / 1048576:.0f} MiB",
+    flush=True,
+)
+_slowest = sorted(_spark_s.items(), key=lambda kv: -kv[1])[:10]
+print(
+    f"SLOWEST: spark total {sum(_spark_s.values()):.1f}s; "
+    + ", ".join(f"{n} {s:.1f}s" for n, s in _slowest),
     flush=True,
 )
 if _peak_bytes > _bound:

@@ -35,22 +35,18 @@ lines.append(f"Total: {len(QUERIES)} queries, "
 # Rows-only exemption audit (VERDICT r2 #5): each non-SQL-expressible query
 # with WHY it cannot be oracled and WHICH invariant test stands in for the
 # value hash. The generator fails if a rows-only query is missing from this
-# map, so new exemptions must document themselves here.
+# map, so new exemptions must document themselves here, and if an entry
+# names a query that is oracled or gone, so graduations prune it.
 ROWS_ONLY_AUDIT = {
-    "q_agg_approx_percentile": ("Greenwald-Khanna sketch internals differ by engine", "test_properties.py::test_approx_percentile_rank_error"),
-    "q_agg_approx_distinct": ("HLL register layout is implementation-specific", "test_properties.py::test_approx_distinct_within_rsd"),
     "q_dedup_minhash": ("xxhash64 signatures not DuckDB-expressible", "test_operators.py::test_minhash_estimates_jaccard"),
-    "q_dedup_embed_cosine_lsh": ("probabilistic LSH candidate set (recall<1 by design)", "test_operators.py::test_embedding_cosine_lsh_recall_vs_exact"),
     "q_sim_topk_ivf": ("MLlib KMeans cell assignment is iterative/seeded", "test_operators.py::test_cosine_topk_ivf_recall"),
     "q_w2v_embed": ("MLlib Word2Vec floats are seed/impl-specific", "test_operators.py::test_w2v_embeddings_invariants"),
     "q_multimodal_meta": ("binary decode stubbed (no codec libs in sandbox)", "test_operators.py::test_multimodal_stub_paths"),
     "q_multimodal_resize": ("binary image payloads not comparable via DuckDB SQL; decode tier is environment-dependent (PIL when importable)", "test_operators.py::test_multimodal_resize_and_frames + test_resize_images_pil_real_decode"),
     "q_graph_pagerank": ("iterative fixpoint, no closed SQL form", "test_properties.py::test_pagerank_invariants"),
-    "q_dedup_ngram_jaccard_persisted": ("value-identical to oracled q_dedup_ngram_jaccard; this entry exists to lock the persisted-shingle PLAN", "test_operators.py::test_jaccard_persisted_shingles_identical"),
     "q_graph_kcore": ("fixpoint peeling needs aggregation inside the recursion — neither engine's recursive SQL allows it", "test_operators.py::test_k_core_peels_to_fixpoint (invariant + fixpoint + hand case)"),
     "q_multimodal_features_arrow": ("float byte-entropy + binary payloads not comparable via DuckDB SQL (mapInArrow twin)", "test_operators.py::test_extract_features_arrow_matches_pandas (exact-int + 1e-9 entropy equality vs the mapInPandas path)"),
     "q_dedup_simhash_pairs": ("xxhash64 signatures not DuckDB-expressible (pairing stage)", "test_properties.py::test_simhash_pairs_banding_recall_equals_bruteforce (exact recall vs brute force)"),
-    "q_dedup_simhash128_pairs": ("xxhash64 bit streams not DuckDB-expressible (128-bit scale tier)", "test_properties.py::test_simhash128_banding_recall_equals_bruteforce (exact recall vs 128-bit brute force, incl. word-straddling bands)"),
     "q_pack_sequences_bpe": ("packing charged against Python-side BPE counts; the relational cut is oracled via q_pack_sequences", "test_operators.py::test_pack_sequences_tiles_docs_and_sequences (tiling invariants) + test_bpe_token_counts_matches_reference_encoder"),
     "q_text_bpe_tokens": ("greedy-merge BPE tokenization is Python-side (mapInPandas), not SQL-expressible", "test_operators.py::test_bpe_token_counts_matches_reference_encoder (exact vs pure-Python encoder incl. NULL/empty docs)"),
     "q_budget_sample_bpe": ("budget charged against Python-side BPE counts; the relational cut is oracled via q_budget_sample", "test_operators.py::test_token_budget_sample_precomputed_counts (exact greedy-head replay)"),
@@ -58,6 +54,8 @@ ROWS_ONLY_AUDIT = {
 rows_only = [n for n in sorted(QUERIES) if not QUERIES[n].oracle]
 missing = [n for n in rows_only if n not in ROWS_ONLY_AUDIT]
 assert not missing, f"rows-only queries missing an audit entry: {missing}"
+stale = sorted(set(ROWS_ONLY_AUDIT) - set(rows_only))
+assert not stale, f"audit entries for oracled or retired queries: {stale}"
 lines.append("")
 lines.append("## Rows-only exemption audit")
 lines.append("")

@@ -211,7 +211,7 @@ def test_simhash_identical_and_near(spark):
         ],
         "doc_id bigint, text string",
     )
-    out = {r.doc: r.simhash for r in simhash(df).collect()}
+    out = {r.doc: r.sig0 for r in simhash(df).collect()}
     assert out[1] == out[2]
     ham = lambda a, b: bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
     assert ham(out[1], out[3]) < ham(out[1], out[4])
@@ -3154,15 +3154,17 @@ def test_token_budget_sample_precomputed_counts(spark):
     assert max((c for _, c in kept.values()), default=0) <= budget
 
 
-def test_simhash_md5_matches_python_replay(spark):
-    """simhash_md5's nibble/bit/vote convention must match the documented
-    formula exactly (hashlib md5 ≡ engine md5) — this locks the Spark
-    side to the same convention the DuckDB oracle generates; banded md5
-    pairs must equal brute-force pairs from the signatures."""
+@pytest.mark.parametrize("bits", [64, 128])
+def test_simhash_md5_matches_python_replay(spark, bits):
+    """The md5 SimHash's nibble/bit/vote convention must match the
+    documented formula exactly (hashlib md5 ≡ engine md5) at both widths
+    — this locks the Spark side to the same convention the DuckDB
+    oracles generate; banded md5 pairs must equal brute-force pairs from
+    the signatures."""
     import hashlib
 
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
-        simhash_md5,
+        simhash,
         simhash_near_pairs,
     )
 
@@ -3174,26 +3176,27 @@ def test_simhash_md5_matches_python_replay(spark):
         (5, "a b c d"),  # identical text to 1 → identical signature
     ]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
+    words = [f"sig{i}" for i in range(bits // 64)]
     got = {
-        r["doc"]: r["simhash"]
-        for r in simhash_md5(df, shingle_n=1).collect()
+        r["doc"]: sum(
+            (r[w] & ((1 << 64) - 1)) << (64 * i) for i, w in enumerate(words)
+        )
+        for r in simhash(df, shingle_n=1, bits=bits, hash_fn="md5").collect()
     }
 
     def py_sig(text):
         toks = set(text.strip().split()) if text.strip() else {""}
-        votes = [0] * 64
+        votes = [0] * bits
         for t in sorted(toks):
             hx = hashlib.md5(t.encode()).hexdigest()
-            for j in range(64):
+            for j in range(bits):
                 nib = int(hx[j // 4], 16)
                 votes[j] += 1 if (nib >> (j % 4)) & 1 else -1
         sig = 0
-        for j in range(64):
+        for j in range(bits):
             if votes[j] > 0:
                 sig |= 1 << j
-        # Spark builds the signature with signed bigint shifts: bit 63
-        # wraps negative
-        return sig - (1 << 64) if sig >= (1 << 63) else sig
+        return sig
 
     for did, text in docs:
         assert got[did] == py_sig(text), (did, text)
@@ -3202,16 +3205,14 @@ def test_simhash_md5_matches_python_replay(spark):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in simhash_near_pairs(
-            df, shingle_n=1, max_hamming=3, n_bands=4, hash_fn="md5"
+            df, shingle_n=1, bits=bits, max_hamming=3, n_bands=4, hash_fn="md5"
         ).collect()
     }
     exp = {}
     ids = sorted(got)
     for i in range(len(ids)):
         for j in range(i + 1, len(ids)):
-            h = bin(
-                (got[ids[i]] ^ got[ids[j]]) & ((1 << 64) - 1)
-            ).count("1")
+            h = bin(got[ids[i]] ^ got[ids[j]]).count("1")
             if h <= 3:
                 exp[(ids[i], ids[j])] = h
     assert pairs == exp and (1, 5) in pairs and pairs[(1, 5)] == 0
@@ -3517,7 +3518,6 @@ def test_build_corpus_strip_lines_runs_before_gate(spark):
             min_quality=0.0,
             min_tokens=5,
             strip_lines=True,
-            line_min_docs=3,
         ).collect()
     }
     # 1: 3 own tokens after strip -> gated out; 4: emptied -> dropped;

@@ -873,7 +873,7 @@ def test_simhash_pairs_banding_recall_equals_bruteforce(spark, docs):
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in simhash_near_pairs(df, max_hamming=3).collect()
     }
-    sigs = {r["doc"]: r["simhash"] for r in simhash(df).collect()}
+    sigs = {r["doc"]: r["sig0"] for r in simhash(df).collect()}
     exp = {}
     ids = sorted(sigs)
     for i in range(len(ids)):
@@ -913,15 +913,15 @@ def test_simhash128_banding_recall_equals_bruteforce(spark, docs):
     word boundary (n_bands=5: widths 26,26,26,25,25 put band 2 across
     bit 64)."""
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
-        simhash128,
-        simhash128_near_pairs,
+        simhash,
+        simhash_near_pairs,
     )
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sigs = {
-        r["doc"]: ((r["sig_lo"] & ((1 << 64) - 1)) | ((r["sig_hi"] & ((1 << 64) - 1)) << 64))
-        for r in simhash128(df).collect()
+        r["doc"]: ((r["sig0"] & ((1 << 64) - 1)) | ((r["sig1"] & ((1 << 64) - 1)) << 64))
+        for r in simhash(df, bits=128).collect()
     }
     exp = {}
     ids = sorted(sigs)
@@ -933,8 +933,8 @@ def test_simhash128_banding_recall_equals_bruteforce(spark, docs):
     for nb in (4, 5):
         got = {
             (r["doc_a"], r["doc_b"]): r["hamming"]
-            for r in simhash128_near_pairs(
-                df, max_hamming=3, n_bands=nb
+            for r in simhash_near_pairs(
+                df, bits=128, max_hamming=3, n_bands=nb
             ).collect()
         }
         assert got == exp, (nb, got, exp)
@@ -1037,7 +1037,6 @@ def test_lsh_hot_bucket_cap_simhash_and_vs_corpus(spark):
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
         minhash_lsh_candidates_vs_corpus,
         minhash_signatures_table,
-        simhash128_near_pairs,
         simhash_near_pairs,
     )
     from bigdata_retailrocket_recsys_spark.sources.scratch import (
@@ -1047,12 +1046,12 @@ def test_lsh_hot_bucket_cap_simhash_and_vs_corpus(spark):
     F_SZ = 120
     rows = _hot_bucket_docs()
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for fn in (simhash_near_pairs, simhash128_near_pairs):
-        got = fn(df, max_bucket=50).collect()
+    for bits in (64, 128):
+        got = simhash_near_pairs(df, bits=bits, max_bucket=50).collect()
         fam = [r for r in got if r.doc_a < F_SZ and r.doc_b < F_SZ]
         assert {(r.doc_a, r.doc_b) for r in fam} == {
             (0, b) for b in range(1, F_SZ)
-        }, fn.__name__
+        }, bits
         assert all(r.hamming == 0 and r.from_capped_bucket == 1 for r in fam)
         planted = [
             r for r in got if r.doc_a >= 1000 and r.doc_b >= 1000
