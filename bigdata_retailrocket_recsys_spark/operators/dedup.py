@@ -32,25 +32,16 @@ ngram_jaccard_pairs             distinct (doc, shingle) —      lazy return
 (df= mode only)                 corpus-TOKEN-proportional
 ngram_jaccard_pairs_prefix      ranked shingle prefix —        lazy return
                                 corpus-token-proportional
-jaccard_verify                  distinct (doc, shingle)        EAGERLY
-                                                               FREED (the
-                                                               island rule)
+jaccard_verify                  distinct (doc, shingle)        Iteration
 containment_pairs               via ngram_jaccard_pairs        lazy return
                                 (df= mode)                     (same class)
-lsh_audit                       distinct (doc, shingle) —      EAGERLY
-                                owned here, 1-row output       FREED; the
-                                                               banded cache
-                                                               stays lazy
-_span_islands_lazy              span frame                     freed by
-                                                               caller after
-                                                               island
-                                                               checkpoint
-connected_components* / LSH     per-round labels / bucket      eager local-
-                                frames                         Checkpoint,
-                                                               bounded; CC
-                                                               rounds freed
-                                                               on return
-                                                               (iterate.py)
+lsh_audit                       distinct (doc, shingle) +      Iteration
+                                signatures, 1-row output
+_span_islands_lazy /            span frame                     caller's
+_vs_corpus_islands_lazy                                        Iteration
+_hot_bucket_edges (capped       sized bucket rows              caller's
+MinHash / SimHash / sign-LSH)                                  Iteration
+connected_components*           per-round labels               Iteration
 winnowing_pairs (r13)           distinct (doc, fp) — corpus-   lazy return
                                 proportional NARROW (density
                                 2/(w+1) of grams)
@@ -71,10 +62,11 @@ the subtree per consumer (2-3×). They are bounded by ONE narrow row per
 doc (or per doc-shingle for the Jaccard tiers), and each has a
 zero-cache warehouse twin that scans a persisted table instead
 (``signatures=`` / ``shingles=`` modes) — at 100 TB the persisted table
-IS the materialization and nothing lives in executor storage. Operators
-whose output is bounded (jaccard_verify, the span islands, CC labels)
-eagerly checkpoint the bounded output and free the big cache before
-returning (the dot_topk_int8 rule).
+IS the materialization and nothing lives in executor storage.
+"Iteration" rows are the operators whose output is bounded: they
+checkpoint it and cache their shared inputs through an ``Iteration``
+(operators/iterate.py, the engine's one pin rule), which frees every
+pin the output does not read when the call returns or raises.
 """
 
 from __future__ import annotations
@@ -561,13 +553,14 @@ def minhash_lsh_candidates(
 
 
 def _hot_bucket_edges(
+    it: Iteration,
     banded: DataFrame,
     *,
     keys: list[str],
     id_col: str,
     max_bucket: int,
     payload_cols: tuple[str, ...] = (),
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """THE hot-bucket star guard (VERDICT r10 #1 / r11 consolidation) —
     the single producer behind every banded-LSH capped path (MinHash
     within-set, SimHash 64/128, embedding sign-LSH). Semantics over
@@ -582,24 +575,23 @@ def _hot_bucket_edges(
     and come back as ``{c}_a`` / ``{c}_b`` on every edge, so a star
     edge's Hamming/verify input needs no extra join.
 
-    Returns ``(sized, edges)`` LAZY. ``sized`` feeds the clique join
-    (twice) AND the star filter, so it is ``.cache()``d here (S7 —
-    Spark never reuses a twice-referenced subtree); the CALLER must
-    finish with :func:`_finalize_capped` (eagerly materialize the
-    bounded pair output, then unpersist ``sized``) — the dot_topk_int8
-    rule, so no docs×bands signature-grain cache outlives the call
-    (ADVICE r11 #1). Edge columns: ``{id}_a``, ``{id}_b``,
-    ``{payload}_a/_b`` …, ``capped`` (0 clique / 1 star)."""
+    Returns the edges LAZY. The sized rows feed the clique join (twice)
+    AND the star filter, so they are cached on the caller's ``it`` (S7 —
+    Spark never reuses a twice-referenced subtree); each caller
+    checkpoints its bounded pair output through the same ``it``, so no
+    docs×bands signature-grain cache outlives the call (ADVICE r11 #1).
+    Edge columns: ``{id}_a``, ``{id}_b``, ``{payload}_a/_b`` …,
+    ``capped`` (0 clique / 1 star)."""
     from pyspark.sql import Window
 
     wb = Window.partitionBy(*keys)
-    sized = banded.select(
+    sized = it.cache(banded.select(
         id_col,
         *payload_cols,
         *keys,
         F.count(F.lit(1)).over(wb).alias("__bsz"),
         F.min(F.struct(id_col, *payload_cols)).over(wb).alias("__hub"),
-    ).cache()
+    ))
     small = sized.filter(F.col("__bsz") <= max_bucket)
     a = small.alias("a")
     b = small.alias("b")
@@ -625,34 +617,24 @@ def _hot_bucket_edges(
         *[F.col(c).alias(f"{c}_b") for c in payload_cols],
         F.lit(1).alias("capped"),
     )
-    return sized, clique.unionByName(star)
-
-
-def _finalize_capped(pairs: DataFrame, sized: DataFrame) -> DataFrame:
-    """Capped-path cache discipline: eagerly materialize the BOUNDED
-    pair output (≤ cap·N clique rows + linear star rows — orders of
-    magnitude below the docs×bands banding grain), truncate its lineage
-    (localCheckpoint is immune to refreshByPath and never recomputes
-    the banding subtree), then release the corpus-sized ``sized``
-    cache immediately — the same materialize-then-unpersist rule as
-    dot_topk_int8 / duplicated_spans."""
-    out = pairs.localCheckpoint(eager=True)
-    sized.unpersist()
-    return out
+    return clique.unionByName(star)
 
 
 def _capped_bucket_pairs(banded: DataFrame, *, max_bucket: int) -> DataFrame:
     """MinHash tail of :func:`_hot_bucket_edges`: band-grain edges
-    re-aggregated to pair grain. Output: doc_a, doc_b, n_shared_bands,
+    re-aggregated to pair grain, checkpointed (bounded: ≤ cap·N clique
+    rows + linear star rows). Output: doc_a, doc_b, n_shared_bands,
     n_capped_bands."""
-    sized, edges = _hot_bucket_edges(
-        banded, keys=["band", "bucket"], id_col="doc", max_bucket=max_bucket
-    )
-    pairs = edges.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("n_shared_bands"),
-        F.sum("capped").alias("n_capped_bands"),
-    )
-    return _finalize_capped(pairs, sized)
+    with Iteration() as it:
+        edges = _hot_bucket_edges(
+            it, banded, keys=["band", "bucket"], id_col="doc",
+            max_bucket=max_bucket,
+        )
+        pairs = edges.groupBy("doc_a", "doc_b").agg(
+            F.count(F.lit(1)).alias("n_shared_bands"),
+            F.sum("capped").alias("n_capped_bands"),
+        )
+        return it.result(it.checkpoint(pairs).df)
 
 
 def _bitsum_signature(sh: DataFrame, bit_exprs: list[str]) -> DataFrame:
@@ -1285,43 +1267,43 @@ def jaccard_verify(
 
     Output: doc_a, doc_b, n_common, n_a, n_b, jaccard.
     """
-    sh = shingle_rows(
-        docs, id_col=id_col, text_col=text_col, n=shingle_n
-    ).cache()
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    # pairs_distinct=True (r13): skip the dedup exchange when the caller
-    # proves the pair list is already unique — e.g. it is the aggregated
-    # (groupBy doc_a, doc_b) output of minhash_lsh_candidates. The
-    # default stays safe: a duplicated pair would double n_common.
-    p = pairs.select("doc_a", "doc_b")
-    if not pairs_distinct:
-        p = p.distinct()
-    a = sh.select(F.col("doc").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc").alias("doc_b"), "shingle")
-    common = (
-        p.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast(
-                "double"
-            ),
+    with Iteration() as it:
+        sh = it.cache(
+            shingle_rows(docs, id_col=id_col, text_col=text_col, n=shingle_n)
         )
-    )
-    verified = out.filter(F.col("jaccard") >= min_jaccard).select(
-        "doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard"
-    ).localCheckpoint(eager=True)
-    sh.unpersist()
-    return verified
+        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+        # pairs_distinct=True (r13): skip the dedup exchange when the caller
+        # proves the pair list is already unique — e.g. it is the aggregated
+        # (groupBy doc_a, doc_b) output of minhash_lsh_candidates. The
+        # default stays safe: a duplicated pair would double n_common.
+        p = pairs.select("doc_a", "doc_b")
+        if not pairs_distinct:
+            p = p.distinct()
+        a = sh.select(F.col("doc").alias("doc_a"), "shingle")
+        b = sh.select(F.col("doc").alias("doc_b"), "shingle")
+        common = (
+            p.join(a, "doc_a")
+            .join(b, ["doc_b", "shingle"])
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+        )
+        sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
+        sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
+        out = (
+            common.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn(
+                "jaccard",
+                F.col("n_common").cast("double")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast(
+                    "double"
+                ),
+            )
+        )
+        verified = out.filter(F.col("jaccard") >= min_jaccard).select(
+            "doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard"
+        )
+        return it.result(it.checkpoint(verified).df)
 
 
 def lsh_audit(
@@ -1376,25 +1358,38 @@ def lsh_audit(
     base = docs.filter(
         F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
     )
-    # own the big distinct-shingle frame (the truth tier's 3 consumers)
-    # so it can be FREED: the output is one bounded row — island rule
-    sh = shingle_rows(
-        base, id_col=id_col, text_col=text_col, n=shingle_n
-    ).cache()
-    truth = ngram_jaccard_pairs(
-        shingles=sh, min_jaccard=min_jaccard
-    ).select("doc_a", "doc_b", F.lit(1).alias("__t"))
-    cand = minhash_lsh_candidates(
-        base,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        bands=bands,
-        hash_fn=hash_fn,
-        max_bucket=max_bucket,
-    ).select("doc_a", "doc_b", F.lit(1).alias("__c"))
-    j = truth.join(cand, ["doc_a", "doc_b"], "full_outer")
+    with Iteration() as it:
+        # own the truth tier's shingles (3 consumers) and the uncapped
+        # join's signatures (2) so both are FREED: the output is one row
+        sh = it.cache(
+            shingle_rows(base, id_col=id_col, text_col=text_col, n=shingle_n)
+        )
+        truth = ngram_jaccard_pairs(shingles=sh, min_jaccard=min_jaccard)
+        sig = minhash_signatures(
+            base, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
+            num_hashes=num_hashes, hash_fn=hash_fn,
+        )
+        if max_bucket is None:
+            sig = it.cache(sig)
+        cand = minhash_lsh_candidates(
+            signatures=sig, num_hashes=num_hashes, bands=bands,
+            max_bucket=max_bucket,
+        )
+        return it.result(
+            it.checkpoint(_confusion_counts(truth, cand, ["doc_a", "doc_b"])).df
+        )
+
+
+def _confusion_counts(
+    truth: DataFrame, cand: DataFrame, keys: list[str]
+) -> DataFrame:
+    """The audits' confusion counts of a candidate pair set against a
+    truth pair set, both keyed by ``keys``: one full-outer join of the
+    two, then one global aggregate — one ALL-INTEGER row (n_truth,
+    n_candidates, n_hits, n_misses, n_false_alarms)."""
+    j = truth.select(*keys, F.lit(1).alias("__t")).join(
+        cand.select(*keys, F.lit(1).alias("__c")), keys, "full_outer"
+    )
 
     def _n(cond: Column) -> Column:
         return F.coalesce(
@@ -1403,15 +1398,13 @@ def lsh_audit(
 
     t = F.col("__t").isNotNull()
     c = F.col("__c").isNotNull()
-    out = j.agg(
+    return j.agg(
         _n(t).alias("n_truth"),
         _n(c).alias("n_candidates"),
         _n(t & c).alias("n_hits"),
         _n(t & ~c).alias("n_misses"),
         _n(~t & c).alias("n_false_alarms"),
-    ).localCheckpoint(eager=True)
-    sh.unpersist()
-    return out
+    )
 
 
 def connected_components(
@@ -1886,10 +1879,13 @@ def _embed_lsh_candidates(
             .select(F.col("a.vid").alias("vid_a"), F.col("b.vid").alias("vid_b"))
             .distinct()
         )
-    sized, edges = _hot_bucket_edges(
-        b, keys=["tbl", "bucket"], id_col="vid", max_bucket=max_bucket
-    )
-    return _finalize_capped(edges.select("vid_a", "vid_b").distinct(), sized)
+    with Iteration() as it:
+        edges = _hot_bucket_edges(
+            it, b, keys=["tbl", "bucket"], id_col="vid", max_bucket=max_bucket
+        )
+        return it.result(
+            it.checkpoint(edges.select("vid_a", "vid_b").distinct()).df
+        )
 
 
 def embed_lsh_audit(
@@ -1955,28 +1951,12 @@ def embed_lsh_audit(
             cos.alias("cosine"),
         )
         .filter(~F.isnan("cosine") & (F.col("cosine") >= min_cosine))
-        .select("vid_a", "vid_b", F.lit(1).alias("__t"))
     )
     cand = _embed_lsh_candidates(
         df, dim=dim, tables=tables, bits=bits, id_col=id_col,
         vec_col=vec_col, max_bucket=max_bucket,
-    ).select("vid_a", "vid_b", F.lit(1).alias("__c"))
-    j = truth.join(cand, ["vid_a", "vid_b"], "full_outer")
-
-    def _n(cond: Column) -> Column:
-        return F.coalesce(
-            F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)
-        ).cast("bigint")
-
-    t = F.col("__t").isNotNull()
-    c = F.col("__c").isNotNull()
-    return j.agg(
-        _n(t).alias("n_truth"),
-        _n(c).alias("n_candidates"),
-        _n(t & c).alias("n_hits"),
-        _n(t & ~c).alias("n_misses"),
-        _n(~t & c).alias("n_false_alarms"),
     )
+    return _confusion_counts(truth, cand, ["vid_a", "vid_b"])
 
 
 def embed_lsh_pairs(
@@ -2523,21 +2503,21 @@ def _banded_sig_pairs(
             .filter(F.col("hamming") <= max_hamming)
             .distinct()
         )
-    sized, edges = _hot_bucket_edges(
-        banded,
-        keys=["band", "key"],
-        id_col="doc",
-        max_bucket=max_bucket,
-        payload_cols=tuple(sig_cols),
-    )
     edge_ham = " + ".join(f"bit_count({c}_a ^ {c}_b)" for c in sig_cols)
-    pairs = (
-        edges.select("doc_a", "doc_b", F.expr(edge_ham).alias("hamming"), "capped")
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("doc_a", "doc_b", "hamming")
-        .agg(F.max("capped").alias("from_capped_bucket"))
-    )
-    return _finalize_capped(pairs, sized)
+    with Iteration() as it:
+        edges = _hot_bucket_edges(
+            it, banded, keys=["band", "key"], id_col="doc",
+            max_bucket=max_bucket, payload_cols=tuple(sig_cols),
+        )
+        pairs = (
+            edges.select(
+                "doc_a", "doc_b", F.expr(edge_ham).alias("hamming"), "capped"
+            )
+            .filter(F.col("hamming") <= max_hamming)
+            .groupBy("doc_a", "doc_b", "hamming")
+            .agg(F.max("capped").alias("from_capped_bucket"))
+        )
+        return it.result(it.checkpoint(pairs).df)
 
 
 def duplicated_spans(
@@ -2586,15 +2566,14 @@ def duplicated_spans(
     Output: (id, span_start [0-based token index], span_len [tokens]).
     """
     tok = _span_tok_frame(docs, id_col=id_col, text_col=text_col)
-    out, spans = _span_islands_lazy(tok, n=n, min_occurrences=min_occurrences)
-    out = out.select(F.col("__d").alias(id_col), "span_start", "span_len")
-    # Islands are BOUNDED (one row per maximal duplicated run — orders of
-    # magnitude below token count); materialize them eagerly so the
-    # corpus-sized spans cache can be freed immediately instead of
-    # leaking until session end (the dot_topk_int8 unpersist rule).
-    out = out.localCheckpoint(eager=True)
-    spans.unpersist()
-    return out
+    with Iteration() as it:
+        out = _span_islands_lazy(
+            it, tok, n=n, min_occurrences=min_occurrences
+        ).select(F.col("__d").alias(id_col), "span_start", "span_len")
+        # Islands are BOUNDED (one row per maximal duplicated run — orders
+        # of magnitude below token count); materialize them eagerly so the
+        # corpus-sized spans cache is freed on return
+        return it.result(it.checkpoint(out).df)
 
 
 def _span_tok_frame(
@@ -2662,16 +2641,15 @@ def _islands_from_starts(starts: DataFrame, *, n: int) -> DataFrame:
 
 
 def _span_islands_lazy(
-    tok: DataFrame, *, n: int, min_occurrences: int
-) -> "tuple[DataFrame, DataFrame]":
-    """Lazy maximal-island plan over a positioned-token frame. Returns
-    ``(islands, spans)`` where ``spans`` (the tokenize → n−1 lead-window
-    shingle frame — the heaviest stage) is CACHED here because it feeds
-    BOTH the occurrence-count aggregate and the duplicated-start
-    semi-join, and Spark never reuses a twice-referenced exchange (S7).
-    The caller must materialize ``islands`` and then ``spans.unpersist()``
-    — the public wrappers do exactly that."""
-    spans = _positioned_ngram_keys(tok, n=n, hash_fn="xxhash64").cache()
+    it: Iteration, tok: DataFrame, *, n: int, min_occurrences: int
+) -> DataFrame:
+    """Lazy maximal-island plan over a positioned-token frame. The spans
+    (the tokenize → n−1 lead-window shingle frame — the heaviest stage)
+    are cached on the caller's ``it`` because they feed BOTH the
+    occurrence-count aggregate and the duplicated-start semi-join, and
+    Spark never reuses a twice-referenced exchange (S7); the callers
+    checkpoint the islands through the same ``it``."""
+    spans = it.cache(_positioned_ngram_keys(tok, n=n, hash_fn="xxhash64"))
     dup_keys = (
         spans.groupBy("__k")
         .agg(F.count(F.lit(1)).alias("__occ"))
@@ -2679,8 +2657,7 @@ def _span_islands_lazy(
         .select("__k")
     )
     starts = spans.join(dup_keys, "__k", "left_semi").select("__d", "__s")
-    out = _islands_from_starts(starts, n=n)
-    return out, spans
+    return _islands_from_starts(starts, n=n)
 
 
 def ngram_count_table(
@@ -2754,39 +2731,34 @@ def duplicated_spans_vs_corpus(
     Output: (id, span_start [0-based token index], span_len [tokens]).
     """
     tok = _span_tok_frame(batch, id_col=id_col, text_col=text_col)
-    islands, spans = _vs_corpus_islands_lazy(
-        tok,
-        corpus_ngrams,
-        n=n,
-        min_occurrences=min_occurrences,
-        hash_fn=hash_fn,
-    )
-    out = islands.select(
-        F.col("__d").alias(id_col), "span_start", "span_len"
-    ).localCheckpoint(eager=True)
-    spans.unpersist()
-    return out
+    with Iteration() as it:
+        islands = _vs_corpus_islands_lazy(
+            it, tok, corpus_ngrams, n=n, min_occurrences=min_occurrences,
+            hash_fn=hash_fn,
+        ).select(F.col("__d").alias(id_col), "span_start", "span_len")
+        return it.result(it.checkpoint(islands).df)
 
 
 def _vs_corpus_islands_lazy(
+    it: Iteration,
     tok: DataFrame,
     corpus_ngrams: DataFrame,
     *,
     n: int,
     min_occurrences: int,
     hash_fn: str,
-) -> "tuple[DataFrame, DataFrame]":
+) -> DataFrame:
     """Lazy maximal-island plan for the INCREMENTAL span passes:
-    batch-only shingle rows (cached — count aggregate + start semi-join,
-    S7) with the duplicated decision made against artifact + batch
-    counts. The artifact is semi-joined to the BATCH vocabulary before
-    aggregating: keys absent from the batch can never mark a batch
-    start, and a daily delta's vocabulary is far smaller than the
-    corpus table — without this the whole corpus-grain table
-    re-aggregates per batch (measured at 1M-doc corpus / 100k batch:
-    the artifact-side agg was the dominant stage). Caller materializes
-    islands, then ``spans.unpersist()``."""
-    spans = _positioned_ngram_keys(tok, n=n, hash_fn=hash_fn).cache()
+    batch-only shingle rows (cached on the caller's ``it`` — count
+    aggregate + start semi-join, S7) with the duplicated decision made
+    against artifact + batch counts. The artifact is semi-joined to the
+    BATCH vocabulary before aggregating: keys absent from the batch can
+    never mark a batch start, and a daily delta's vocabulary is far
+    smaller than the corpus table — without this the whole corpus-grain
+    table re-aggregates per batch (measured at 1M-doc corpus / 100k
+    batch: the artifact-side agg was the dominant stage). The callers
+    checkpoint the islands through the same ``it``."""
+    spans = it.cache(_positioned_ngram_keys(tok, n=n, hash_fn=hash_fn))
     bc = spans.groupBy("__k").agg(
         F.count(F.lit(1)).cast("bigint").alias("__bc")
     )
@@ -2809,7 +2781,7 @@ def _vs_corpus_islands_lazy(
         .select("__k")
     )
     starts = spans.join(dup_keys, "__k", "left_semi").select("__d", "__s")
-    return _islands_from_starts(starts, n=n), spans
+    return _islands_from_starts(starts, n=n)
 
 
 def strip_duplicated_spans(
@@ -2854,12 +2826,13 @@ def strip_duplicated_spans(
     Output: (id, n_tokens, n_removed, text_clean).
     """
     tok = _span_tok_frame(docs, id_col=id_col, text_col=text_col)
-    islands, spans = _span_islands_lazy(
-        tok, n=n, min_occurrences=min_occurrences
-    )
-    islands = islands.localCheckpoint(eager=True)
-    spans.unpersist()
-    return _rebuild_tokens_without_islands(tok, islands, id_col=id_col)
+    with Iteration() as it:
+        islands = it.checkpoint(
+            _span_islands_lazy(it, tok, n=n, min_occurrences=min_occurrences)
+        ).df
+        return it.result(
+            _rebuild_tokens_without_islands(tok, islands, id_col=id_col)
+        )
 
 
 def _rebuild_tokens_without_islands(
@@ -2940,16 +2913,14 @@ def strip_duplicated_spans_vs_corpus(
     Output: (id, n_tokens, n_removed, text_clean).
     """
     tok = _span_tok_frame(batch, id_col=id_col, text_col=text_col)
-    islands, spans = _vs_corpus_islands_lazy(
-        tok,
-        corpus_ngrams,
-        n=n,
-        min_occurrences=min_occurrences,
-        hash_fn=hash_fn,
-    )
-    islands = islands.localCheckpoint(eager=True)
-    spans.unpersist()
-    return _rebuild_tokens_without_islands(tok, islands, id_col=id_col)
+    with Iteration() as it:
+        islands = it.checkpoint(_vs_corpus_islands_lazy(
+            it, tok, corpus_ngrams, n=n, min_occurrences=min_occurrences,
+            hash_fn=hash_fn,
+        )).df
+        return it.result(
+            _rebuild_tokens_without_islands(tok, islands, id_col=id_col)
+        )
 
 
 def strip_contaminated_spans(

@@ -36,6 +36,45 @@ def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     )
 
 
+def _closed_wedges(with_deg: DataFrame) -> DataFrame:
+    """Every triangle once, as ``(s, a, b)`` at its lowest-order apex
+    ``s``, from canonical edges with endpoint degrees ``(u, v, du,
+    dv)``: each edge is oriented low→high in the (deg, id) total order
+    (the orientation is cached: both wedge sides and the closing join
+    read it), wedges pair two out-neighbors ``a < b`` of ``s`` in that
+    order, and a wedge closes when the oriented a→b edge exists (an
+    inner join cannot duplicate — oriented edges are distinct).
+
+    Each caller builds its own degree table. They differ by a no-op
+    ``bigint`` cast, which keeps the two cached orientations apart: with
+    one plan, a session that ran edge_jaccard first hands triangle_counts
+    the orientation cache planned over edge_jaccard's cached input."""
+    u_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    oriented = (
+        with_deg.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(u_first, F.struct("dv", "v"))
+            .otherwise(F.struct(F.col("du").alias("dv"), F.col("u").alias("v")))
+            .alias("d"),
+        )
+        .select("s", F.col("d.v").alias("d"), F.col("d.dv").alias("dd"))
+        .cache()
+    )
+    e1 = oriented.select("s", F.col("d").alias("a"), F.col("dd").alias("da"))
+    e2 = oriented.select("s", F.col("d").alias("b"), F.col("dd").alias("db"))
+    wedges = e1.join(e2, "s").filter(
+        (F.col("da") < F.col("db"))
+        | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
+    )
+    return wedges.join(
+        oriented.select(F.col("s").alias("a"), F.col("d").alias("b")),
+        ["a", "b"],
+        "inner",
+    ).select("s", "a", "b")
+
+
 def pagerank(
     edges: DataFrame,
     *,
@@ -154,32 +193,11 @@ def triangle_counts(
         .groupBy("vtx")
         .agg(F.count("*").alias("deg"))
     )
-    # orient each edge low→high in the (deg, id) total order
     with_deg = (
         und.join(deg.withColumnRenamed("vtx", "u").withColumnRenamed("deg", "du"), "u")
         .join(deg.withColumnRenamed("vtx", "v").withColumnRenamed("deg", "dv"), "v")
     )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = with_deg.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(u_first, F.struct("dv", "v")).otherwise(F.struct(F.col("du").alias("dv"), F.col("u").alias("v"))).alias("d"),
-    ).select("s", F.col("d.v").alias("d"), F.col("d.dv").alias("dd")).cache()
-    # wedges at the apex: two out-neighbors a<b in the (deg, id) order
-    e1 = oriented.select(F.col("s"), F.col("d").alias("a"), F.col("dd").alias("da"))
-    e2 = oriented.select(F.col("s"), F.col("d").alias("b"), F.col("dd").alias("db"))
-    wedges = e1.join(e2, "s").filter(
-        (F.col("da") < F.col("db"))
-        | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    )
-    # close the wedge: an oriented a→b edge exists (inner join cannot
-    # duplicate — oriented edges are distinct)
-    closed = wedges.join(
-        oriented.select(F.col("s").alias("a"), F.col("d").alias("b")),
-        ["a", "b"],
-        "inner",
-    )
+    closed = _closed_wedges(with_deg)
     tri_vertices = closed.select(
         F.explode(F.array("s", "a", "b")).alias("vtx")
     )
@@ -299,30 +317,7 @@ def edge_jaccard(
         .cache()  # consumed by BOTH the orientation and the output join;
         # ReuseExchange does not dedupe shared subtrees (CLAUDE.md)
     )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        with_deg.select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(u_first, F.struct("dv", "v"))
-            .otherwise(F.struct(F.col("du").alias("dv"), F.col("u").alias("v")))
-            .alias("d"),
-        )
-        .select("s", F.col("d.v").alias("d"), F.col("d.dv").alias("dd"))
-        .cache()
-    )
-    e1 = oriented.select("s", F.col("d").alias("a"), F.col("dd").alias("da"))
-    e2 = oriented.select("s", F.col("d").alias("b"), F.col("dd").alias("db"))
-    wedges = e1.join(e2, "s").filter(
-        (F.col("da") < F.col("db"))
-        | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    )
-    closed = wedges.join(
-        oriented.select(F.col("s").alias("a"), F.col("d").alias("b")),
-        ["a", "b"],
-        "inner",
-    ).select("s", "a", "b")
+    closed = _closed_wedges(with_deg)
     # each triangle (s,a,b) → its three canonical (min,max) edges
     tri_edges = closed.select(
         F.explode(

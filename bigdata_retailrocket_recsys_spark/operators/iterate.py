@@ -1,22 +1,31 @@
-"""Iteration policy of the iterative graph operators, stated once:
-``connected_components`` and ``connected_components_bigstar`` (dedup.py),
-``pagerank``, ``pagerank_exact``, ``k_core`` and ``bfs_distances``
-(graph.py) keep only their own math and iterate through an
-:class:`Iteration`.
+"""The engine's one pin rule: storage a call pins for its own use goes
+through an :class:`Iteration` and is released when the call leaves it,
+by return or by exception::
 
-- Round: :meth:`Iteration.fixpoint` applies the operator's step, attaches
-  its metrics as an ``Observation`` and materializes the result with one
-  eager ``localCheckpoint``: one job per round, no added Exchange, and a
-  constant-size plan for the next round.
-- Round limit: with a convergence test, not converging within
-  ``max_iter`` rounds raises RuntimeError (partial output is never
-  returned as final); without one, exactly ``max_iter`` rounds run.
+    with Iteration() as it:
+        shared = it.cache(frame_read_twice)     # lazy, like .cache()
+        small = it.checkpoint(bounded_frame).df  # eager localCheckpoint
+        return it.result(out)
+
+Only this module calls ``unpersist`` or an eager ``localCheckpoint``
+(tests/test_reachability.py). Caches backing a lazily returned frame
+keep the lifetime their operators document.
+
+- Pin lifetime: on return every pin is released unless the returned
+  frame reads it; after an exception all are. Pins are matched by JVM
+  identity (a checkpoint's RDD, a cache's builder), never by diffing
+  the session's persistent RDDs: another driver thread may be pinning
+  its own meanwhile. Finding what the output reads builds no cache.
 - Pinned input: :func:`require_pinned` checks a caller's promise that a
   frame is already materialized.
-- Pin lifetime: on return, every checkpoint and cache made through the
-  ``Iteration`` is released unless the returned frame reads it. Releases
-  go by RDD id, never by diffing the session's persistent RDDs: another
-  driver thread may be pinning its own meanwhile.
+- Rounds: the iterative operators (``connected_components*`` in
+  dedup.py; ``pagerank``, ``pagerank_exact``, ``k_core`` and
+  ``bfs_distances`` in graph.py) loop through :meth:`Iteration.fixpoint`:
+  per round one eager ``localCheckpoint`` job carrying the step's
+  ``Observation`` metrics, no added Exchange, a constant-size plan for
+  the next round. With a convergence test, not converging within
+  ``max_iter`` rounds raises RuntimeError; without one, exactly
+  ``max_iter`` rounds run.
 """
 
 from __future__ import annotations
@@ -44,21 +53,26 @@ def _plan(df: DataFrame):
     return df.select("*")._jdf.queryExecution().withCachedData()
 
 
-def _rdds_read(df: DataFrame) -> set[int]:
-    """Ids of the checkpointed and cached RDDs ``df`` reads. The
-    checkpoints under a cache count only while the cache is unbuilt: a
-    built one is then the only copy, which ``clearCache`` would lose."""
-    ids, plans = set(), [_plan(df)]
+def _pin_key(df: DataFrame, pin) -> int:
+    """JVM identity of a checkpoint's RDD or a cache's builder."""
+    return df.sparkSession.sparkContext._jvm.System.identityHashCode(pin)
+
+
+def _pins_read(df: DataFrame) -> set[int]:
+    """Keys of the checkpoints and caches ``df`` reads. The checkpoints
+    under a cache count only while the cache is unbuilt: a built one is
+    then the only copy, which ``clearCache`` would lose."""
+    keys, plans = set(), [_plan(df)]
     while plans:
         for p in _nodes(plans.pop()):
             if p.nodeName() == "LogicalRDD":
-                ids.add(p.rdd().id())
+                keys.add(_pin_key(df, p.rdd()))
             elif p.nodeName() == "InMemoryRelation":
                 cache = p.cacheBuilder()
-                ids.add(cache.cachedColumnBuffers().id())
+                keys.add(_pin_key(df, cache))
                 if not cache.isCachedColumnBuffersLoaded():
                     plans.append(cache.logicalPlan())
-    return ids
+    return keys
 
 
 def require_pinned(df: DataFrame) -> None:
@@ -77,15 +91,11 @@ def require_pinned(df: DataFrame) -> None:
 
 
 class Iteration:
-    """Owns the checkpoints and caches of one operator call::
-
-        with Iteration() as it:
-            ...
-            return it.result(out)
-    """
+    """Owns the checkpoints and caches of one operator call (the module
+    docstring states the rule)."""
 
     def __init__(self) -> None:
-        self._release: dict[int, Callable] = {}  # rdd id -> release
+        self._release: dict[int, Callable] = {}  # pin key -> release
         self._out: DataFrame | None = None
         self.rounds = 0  # rounds run by the last fixpoint
 
@@ -94,12 +104,13 @@ class Iteration:
         obs = Observation() if metrics else None
         df = (df.observe(obs, *metrics) if obs else df).localCheckpoint(True)
         rdd = df._jdf.queryExecution().logical().rdd()
-        self._release[rdd.id()] = lambda: rdd.unpersist(False)
+        self._release[_pin_key(df, rdd)] = lambda: rdd.unpersist(False)
         return Round(df, obs.get if obs else {})
 
     def cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, as lazy: the first job that reads it builds it."""
         (imr,) = [p for p in _nodes(_plan(df.cache())) if p.nodeName() == "InMemoryRelation"]
-        self._release[imr.cacheBuilder().cachedColumnBuffers().id()] = df.unpersist
+        self._release[_pin_key(df, imr.cacheBuilder())] = df.unpersist
         return df
 
     def fixpoint(
@@ -136,9 +147,11 @@ class Iteration:
         return self
 
     def __exit__(self, exc_type, *_) -> None:
-        # after an exception nothing is returned, so everything goes
+        # after an exception nothing is returned, so everything goes;
+        # newest first: dropping a cache before the unbuilt caches over it
+        # makes Spark re-plan them
         out = None if exc_type else self._out
-        keep = set() if out is None else _rdds_read(out)
-        for rid, release in self._release.items():
-            if rid not in keep:
+        keep = set() if out is None else _pins_read(out)
+        for key, release in reversed(self._release.items()):
+            if key not in keep:
                 release()

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
+
 #: tiny per-language stopword anchors for the n-gram/stopword-ratio
 #: heuristic language id. Deliberately minimal — the operator's value is the
 #: distributed shape (scan → narrow map → optional agg), not lexicon size.
@@ -1088,7 +1090,7 @@ def strip_repeated_lines(
         .agg(F.countDistinct("__d").alias("__nd"))
         .filter(F.col("__nd") >= min_docs)
         .select("__h", F.lit(1).alias("__rm"))
-    ).localCheckpoint(eager=True)
+    )
     return _rebuild_without_flagged(lines, prevalent, id_col=id_col)
 
 
@@ -1120,39 +1122,40 @@ def _rebuild_without_flagged(
 ) -> DataFrame:
     """Membership-join + single-groupBy rebuild shared by the line-strip
     tiers: drop lines whose ``__h`` appears in ``flagged_keys`` (cols
-    ``__h, __rm``), rebuild each doc from survivors in original order
-    (blank lines always survive). Output: (id, n_lines, n_removed,
-    text_clean)."""
-    flagged = lines.join(flagged_keys, "__h", "left")
-    out = flagged.groupBy("__d").agg(
-        F.sum(F.when(F.col("__h").isNotNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_lines"),
-        F.sum(F.when(F.col("__rm").isNotNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_removed"),
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "__p",
-                                F.col("__rm").isNotNull().alias("__r"),
-                                "__l",
+    ``__h, __rm``; bounded, so checkpointed here), rebuild each doc from
+    survivors in original order (blank lines always survive). Output:
+    (id, n_lines, n_removed, text_clean)."""
+    with Iteration() as it:
+        flagged = lines.join(it.checkpoint(flagged_keys).df, "__h", "left")
+        out = flagged.groupBy("__d").agg(
+            F.sum(F.when(F.col("__h").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_lines"),
+            F.sum(F.when(F.col("__rm").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_removed"),
+            F.array_join(
+                F.transform(
+                    F.filter(
+                        F.array_sort(
+                            F.collect_list(
+                                F.struct(
+                                    "__p",
+                                    F.col("__rm").isNotNull().alias("__r"),
+                                    "__l",
+                                )
                             )
-                        )
+                        ),
+                        lambda x: ~x["__r"],
                     ),
-                    lambda x: ~x["__r"],
+                    lambda x: x["__l"],
                 ),
-                lambda x: x["__l"],
-            ),
-            "\n",
-        ).alias("text_clean"),
-    )
-    return out.select(
-        F.col("__d").alias(id_col), "n_lines", "n_removed", "text_clean"
-    )
+                "\n",
+            ).alias("text_clean"),
+        )
+        return it.result(out.select(
+            F.col("__d").alias(id_col), "n_lines", "n_removed", "text_clean"
+        ))
 
 
 def line_prevalence_table(
@@ -1237,7 +1240,7 @@ def strip_repeated_lines_vs_corpus(
         )
         .filter(F.col("__nd") >= min_docs)
         .select("__h", F.lit(1).alias("__rm"))
-    ).localCheckpoint(eager=True)
+    )
     return _rebuild_without_flagged(lines, prevalent, id_col=id_col)
 
 
@@ -1488,69 +1491,68 @@ def source_overlap_matrix(
         & F.col(id_col).isNotNull()
         & F.col(text_col).isNotNull()
     )
-    sh = (
-        shingle_rows(
-            base,
-            id_col=id_col,
-            text_col=text_col,
-            n=shingle_n,
-            distinct=False,
-            carry_cols=[group_col],
+    with Iteration() as it:
+        sh = it.cache(
+            shingle_rows(
+                base,
+                id_col=id_col,
+                text_col=text_col,
+                n=shingle_n,
+                distinct=False,
+                carry_cols=[group_col],
+            )
+            .filter(F.col("shingle") != "")
+            .select(
+                F.col(group_col).alias("__g"), F.md5("shingle").alias("__h")
+            )
+            .distinct()
         )
-        .filter(F.col("shingle") != "")
-        .select(
-            F.col(group_col).alias("__g"), F.md5("shingle").alias("__h")
+        sizes = sh.groupBy("__g").agg(F.count(F.lit(1)).alias("n_sh"))
+        common = (
+            sh.alias("a")
+            .join(
+                sh.alias("b"),
+                (F.col("a.__h") == F.col("b.__h"))
+                & (F.col("a.__g") < F.col("b.__g")),
+            )
+            .groupBy(
+                F.col("a.__g").alias("src_a"), F.col("b.__g").alias("src_b")
+            )
+            .agg(F.count(F.lit(1)).alias("n_shared"))
         )
-        .distinct()
-        .cache()
-    )
-    sizes = sh.groupBy("__g").agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.__h") == F.col("b.__h"))
-            & (F.col("a.__g") < F.col("b.__g")),
+        grid = (
+            sizes.alias("sa")
+            .join(
+                F.broadcast(sizes.alias("sb")),
+                F.col("sa.__g") < F.col("sb.__g"),
+            )
+            .select(
+                F.col("sa.__g").alias("src_a"),
+                F.col("sb.__g").alias("src_b"),
+                F.col("sa.n_sh").alias("n_a"),
+                F.col("sb.n_sh").alias("n_b"),
+            )
         )
-        .groupBy(
-            F.col("a.__g").alias("src_a"), F.col("b.__g").alias("src_b")
+        out = grid.join(common, ["src_a", "src_b"], "left").select(
+            "src_a",
+            "src_b",
+            "n_a",
+            "n_b",
+            F.coalesce(F.col("n_shared"), F.lit(0)).cast("bigint").alias(
+                "n_shared"
+            ),
         )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    grid = (
-        sizes.alias("sa")
-        .join(
-            F.broadcast(sizes.alias("sb")),
-            F.col("sa.__g") < F.col("sb.__g"),
+        shared = F.col("n_shared").cast("double")
+        result = out.select(
+            "*",
+            (shared / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast(
+                "double"
+            )).alias("jaccard"),
+            (shared / F.least("n_a", "n_b").cast("double")).alias(
+                "overlap_coef"
+            ),
         )
-        .select(
-            F.col("sa.__g").alias("src_a"),
-            F.col("sb.__g").alias("src_b"),
-            F.col("sa.n_sh").alias("n_a"),
-            F.col("sb.n_sh").alias("n_b"),
-        )
-    )
-    out = grid.join(common, ["src_a", "src_b"], "left").select(
-        "src_a",
-        "src_b",
-        "n_a",
-        "n_b",
-        F.coalesce(F.col("n_shared"), F.lit(0)).cast("bigint").alias(
-            "n_shared"
-        ),
-    )
-    shared = F.col("n_shared").cast("double")
-    result = out.select(
-        "*",
-        (shared / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast(
-            "double"
-        )).alias("jaccard"),
-        (shared / F.least("n_a", "n_b").cast("double")).alias(
-            "overlap_coef"
-        ),
-    ).localCheckpoint(eager=True)
-    sh.unpersist()
-    return result
+        return it.result(it.checkpoint(result).df)
 
 
 def dedup_lines_within(
@@ -1955,7 +1957,6 @@ def bm25_hard_negatives(
     b: float = 0.75,
     top_k: int = 5,
     positives: DataFrame | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for embedding/contrastive training: for each
     query document, the top-k BM25-scored corpus documents that are NOT
@@ -1979,13 +1980,10 @@ def bm25_hard_negatives(
     (labeled true pairs must not become negatives). Output:
     (qid, neg_id, n_terms_hit, bm25_u, rank).
 
-    EAGER by default: the output is bounded (≤ queries × top_k rows),
-    so it is ``localCheckpoint(eager=True)``-ed and the corpus-sized
-    per-doc length cache is unpersisted before returning (the
-    dot_topk_int8 rule — ADVICE r10 closed: a lazily-returned frame
-    would pin the 10M-row dl cache in executor storage for the
-    session). ``eager=False`` keeps the lazy plan (and the dl cache
-    pinned) — for plan inspection/tests only.
+    EAGER: the output is bounded (≤ queries × top_k rows), so it is
+    checkpointed and the corpus-sized per-doc length cache is released
+    before returning (ADVICE r10 closed: a lazily-returned frame would
+    pin the 10M-row dl cache in executor storage for the session).
     """
     from pyspark.sql import Window
 
@@ -2003,65 +2001,62 @@ def bm25_hard_negatives(
         .distinct()
     )
     tok = _bag_tokens(corpus, id_col, text_col)
-    dl = tok.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_dl")
-    ).cache()
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_dl").cast("bigint").alias("tot_dl"),
-    )
-    tf = (
-        tok.join(
-            F.broadcast(qterms.select("term").distinct()), "term", "semi"
+    with Iteration() as it:
+        dl = it.cache(
+            tok.groupBy(id_col).agg(F.count(F.lit(1)).cast("bigint").alias("n_dl"))
         )
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_tf"))
-    )
-    dfq = tf.groupBy("term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_df")
-    )
-    contrib = F.expr(
-        BM25_CONTRIB_SQL.format(
-            N="n_docs", df="n_df", tf="n_tf", dl="n_dl", totdl="tot_dl",
-            k1p1=repr(k1 + 1.0), k1_1mb=repr(k1 * (1.0 - b)), k1b=repr(k1 * b),
+        stats = dl.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("n_dl").cast("bigint").alias("tot_dl"),
         )
-    )
-    scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(dfq), "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-        .filter(F.col("qid") != F.col(id_col))
-        .groupBy("qid", id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
-            F.sum(contrib).cast("bigint").alias("bm25_u"),
+        tf = (
+            tok.join(
+                F.broadcast(qterms.select("term").distinct()), "term", "semi"
+            )
+            .groupBy(id_col, "term")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_tf"))
         )
-    )
-    if positives is not None:
-        pos = positives.select(
-            F.col(qid_col).alias("qid"), F.col(id_col)
+        dfq = tf.groupBy("term").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_df")
         )
-        scored = scored.join(pos, ["qid", id_col], "anti")
-    w = Window.partitionBy("qid").orderBy(
-        F.col("bm25_u").desc(), F.col(id_col).asc()
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            F.col("qid"),
-            F.col(id_col).alias("neg_id"),
-            "n_terms_hit",
-            "bm25_u",
-            "rank",
+        contrib = F.expr(
+            BM25_CONTRIB_SQL.format(
+                N="n_docs", df="n_df", tf="n_tf", dl="n_dl", totdl="tot_dl",
+                k1p1=repr(k1 + 1.0), k1_1mb=repr(k1 * (1.0 - b)), k1b=repr(k1 * b),
+            )
         )
-    )
-    if not eager:
-        return out
-    out = out.localCheckpoint(eager=True)
-    dl.unpersist()
-    return out
+        scored = (
+            tf.join(F.broadcast(qterms), "term")
+            .join(F.broadcast(dfq), "term")
+            .join(dl, id_col)
+            .crossJoin(F.broadcast(stats))
+            .filter(F.col("qid") != F.col(id_col))
+            .groupBy("qid", id_col)
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
+                F.sum(contrib).cast("bigint").alias("bm25_u"),
+            )
+        )
+        if positives is not None:
+            pos = positives.select(
+                F.col(qid_col).alias("qid"), F.col(id_col)
+            )
+            scored = scored.join(pos, ["qid", id_col], "anti")
+        w = Window.partitionBy("qid").orderBy(
+            F.col("bm25_u").desc(), F.col(id_col).asc()
+        )
+        out = (
+            scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+            .filter(F.col("rank") <= top_k)
+            .select(
+                F.col("qid"),
+                F.col(id_col).alias("neg_id"),
+                "n_terms_hit",
+                "bm25_u",
+                "rank",
+            )
+        )
+        return it.result(it.checkpoint(out).df)
 
 
 def readability_scores(
@@ -2176,27 +2171,27 @@ def collocations_pmi(
         .filter(F.col("w2").isNotNull())
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    cab = big.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_ab")
-    )
-    # margins from the SAME bigram event space (left/right position
-    # counts) — cached: three consumers (S7)
-    cab = cab.cache()
-    ca = cab.groupBy("w1").agg(F.sum("n_ab").cast("bigint").alias("n_a"))
-    cb = cab.groupBy("w2").agg(F.sum("n_ab").cast("bigint").alias("n_b"))
-    n = cab.agg(F.sum("n_ab").cast("bigint").alias("__n"))
-    contrib = F.expr(
-        PMI_CONTRIB_SQL.format(cab="n_ab", n="__n", ca="n_a", cb="n_b")
-    )
-    out = (
-        cab.filter(F.col("n_ab") >= min_count)
-        .join(ca, "w1")
-        .join(cb, "w2")
-        .crossJoin(F.broadcast(n))
-        .select("w1", "w2", "n_ab", "n_a", "n_b", contrib.alias("pmi_u"))
-        .orderBy(F.col("pmi_u").desc(), F.col("w1").asc(), F.col("w2").asc())
-        .limit(top_k)
-        .localCheckpoint(eager=True)  # bounded top-k; free the cache
-    )
-    cab.unpersist()
-    return out
+    with Iteration() as it:
+        # margins from the SAME bigram event space (left/right position
+        # counts) — cached: three consumers (S7)
+        cab = it.cache(
+            big.groupBy("w1", "w2").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_ab")
+            )
+        )
+        ca = cab.groupBy("w1").agg(F.sum("n_ab").cast("bigint").alias("n_a"))
+        cb = cab.groupBy("w2").agg(F.sum("n_ab").cast("bigint").alias("n_b"))
+        n = cab.agg(F.sum("n_ab").cast("bigint").alias("__n"))
+        contrib = F.expr(
+            PMI_CONTRIB_SQL.format(cab="n_ab", n="__n", ca="n_a", cb="n_b")
+        )
+        out = (
+            cab.filter(F.col("n_ab") >= min_count)
+            .join(ca, "w1")
+            .join(cb, "w2")
+            .crossJoin(F.broadcast(n))
+            .select("w1", "w2", "n_ab", "n_a", "n_b", contrib.alias("pmi_u"))
+            .orderBy(F.col("pmi_u").desc(), F.col("w1").asc(), F.col("w2").asc())
+            .limit(top_k)
+        )
+        return it.result(it.checkpoint(out).df)  # bounded top-k

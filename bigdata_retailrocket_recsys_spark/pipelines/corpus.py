@@ -42,6 +42,7 @@ from bigdata_retailrocket_recsys_spark.operators.dedup import (
     strip_contaminated_spans,
     strip_duplicated_spans,
 )
+from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
 from bigdata_retailrocket_recsys_spark.operators.splits import (
     token_budget_sample,
 )
@@ -477,22 +478,23 @@ def corpus_commit(
     # append would silently rebuild ``committed`` against the
     # just-appended digests, every accepted doc would self-collide, and
     # the remaining artifacts would commit ZERO rows (measured, r10).
-    # Batch-sized, so checkpoint storage is bounded.
-    committed = committed.localCheckpoint(eager=True)
-    committed.select(
-        F.md5(normalize_text(text_col)).alias("dup_key")
-    ).distinct().write.mode("append").parquet(digest_path)
-    if signature_path is not None:
-        minhash_signatures(
-            committed,
-            id_col=id_col,
-            text_col=text_col,
-            shingle_n=SHINGLE_N,
-            num_hashes=NEAR_DUP_NUM_HASHES,
-            hash_fn=hash_fn,
-        ).write.mode("append").parquet(signature_path)
-    if corpus_path is not None:
-        committed.write.mode("append").parquet(corpus_path)
+    # Batch-sized, and released once the appends finish.
+    with Iteration() as it:
+        committed = it.checkpoint(committed).df
+        committed.select(
+            F.md5(normalize_text(text_col)).alias("dup_key")
+        ).distinct().write.mode("append").parquet(digest_path)
+        if signature_path is not None:
+            minhash_signatures(
+                committed,
+                id_col=id_col,
+                text_col=text_col,
+                shingle_n=SHINGLE_N,
+                num_hashes=NEAR_DUP_NUM_HASHES,
+                hash_fn=hash_fn,
+            ).write.mode("append").parquet(signature_path)
+        if corpus_path is not None:
+            committed.write.mode("append").parquet(corpus_path)
 
 
 def corpus_profile(

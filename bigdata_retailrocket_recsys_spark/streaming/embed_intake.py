@@ -17,9 +17,9 @@ through the shared md5-Rademacher bucket CTEs.
 
 refreshByPath discipline (CLAUDE.md hard-won fact): each batch's
 survivors derive from a READ of the very bucket table the commit
-appends to — they are pinned with ``localCheckpoint(eager=True)``
-BEFORE the first write, so the append cannot invalidate and silently
-rebuild their lineage against post-append state.
+appends to — they are pinned with an eager checkpoint BEFORE the first
+write, so the append cannot invalidate and silently rebuild their
+lineage against post-append state; the appends end the pin.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
 from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
 from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
@@ -82,17 +83,18 @@ def run_streaming_embed_commit(
             .select(F.col("batch_vid").alias("vec_id"))
             .distinct()
         )
-        surv = (
-            batch_df.join(dup, "vec_id", "left_anti")
-            .select("vec_id", "embedding", "label")
-            .localCheckpoint(eager=True)  # pin BEFORE the appends
-        )
-        embed_sign_buckets(
-            surv, dim=dim, tables=tables, bits=bits
-        ).write.mode("append").parquet(bucket_path)
-        surv.select("vec_id", "label").write.mode("append").parquet(
-            rows_path
-        )
+        with Iteration() as it:
+            surv = it.checkpoint(  # pin BEFORE the appends
+                batch_df.join(dup, "vec_id", "left_anti").select(
+                    "vec_id", "embedding", "label"
+                )
+            ).df
+            embed_sign_buckets(
+                surv, dim=dim, tables=tables, bits=bits
+            ).write.mode("append").parquet(bucket_path)
+            surv.select("vec_id", "label").write.mode("append").parquet(
+                rows_path
+            )
 
     stream = (
         spark.readStream.schema(base.schema)

@@ -18,8 +18,8 @@ one DuckDB CTE chain replays through the winnowing window explode.
 
 refreshByPath discipline (CLAUDE.md hard-won fact): each batch's
 survivors derive from a READ of the very fingerprint table the commit
-appends to — pinned with ``localCheckpoint(eager=True)`` BEFORE the
-first write.
+appends to — pinned with an eager checkpoint BEFORE the first write
+until the appends end.
 
 Docs with no fingerprints in common — including NULL-text docs, which
 have no fingerprints at all — always survive (the q_dedup_exact NULL
@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
 from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
 from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
@@ -96,17 +97,18 @@ def run_streaming_winnowing_commit(
             .select(F.col("doc").alias("doc_id"))
             .distinct()
         )
-        surv = (
-            batch_df.join(dup, "doc_id", "left_anti")
-            .select("doc_id", "text", "source")
-            .localCheckpoint(eager=True)  # pin BEFORE the appends
-        )
-        winnowing_fingerprint_table(
-            surv, fp_path, k=k, w=w, hash_fn=hash_fn, mode="append"
-        )
-        surv.select("doc_id", "source").write.mode("append").parquet(
-            rows_path
-        )
+        with Iteration() as it:
+            surv = it.checkpoint(  # pin BEFORE the appends
+                batch_df.join(dup, "doc_id", "left_anti").select(
+                    "doc_id", "text", "source"
+                )
+            ).df
+            winnowing_fingerprint_table(
+                surv, fp_path, k=k, w=w, hash_fn=hash_fn, mode="append"
+            )
+            surv.select("doc_id", "source").write.mode("append").parquet(
+                rows_path
+            )
 
     stream = (
         spark.readStream.schema(base.schema)

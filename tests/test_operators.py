@@ -651,6 +651,118 @@ def _rdds_read(df) -> set:
     return ids
 
 
+def _pin_inputs(spark, raising: bool = False):
+    """Docs with planted duplicate spans, near-dup pairs and repeated
+    bigrams, and 4-dim vectors; with ``raising``, row 7's text and
+    vector raise when a job evaluates them."""
+    boom = F.raise_error(F.lit("planted failure"))
+
+    def col(expr, name):
+        if raising:
+            expr = F.when(F.col("id") == 7, boom).otherwise(expr)
+        return expr.alias(name)
+
+    text = F.concat_ws(
+        " ", F.lit("alpha beta gamma delta epsilon"),
+        (F.col("id") % 4).cast("string"), F.lit("zeta eta theta iota"),
+    )
+    docs = spark.range(24).select(
+        F.col("id").alias("doc_id"),
+        col(text, "text"),
+        F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("source"),
+    )
+    vecs = spark.range(30).select(
+        F.col("id").alias("vec_id"),
+        col(
+            F.array(*[((F.col("id") * (j + 3)) % 11 - 5).cast("double")
+                      for j in range(4)]),
+            "embedding",
+        ),
+    )
+    return docs, vecs
+
+
+def _pinning_call(spark, op, docs, vecs, tmp_path):
+    from bigdata_retailrocket_recsys_spark.operators import (
+        dedup,
+        graph,
+        similarity,
+        text,
+    )
+
+    g = spark.range(300).select(
+        F.pmod(F.xxhash64("id"), 60).alias("src"),
+        F.pmod(F.xxhash64("id", F.lit(7)), 60).alias("dst"),
+    )
+    nodes = spark.range(60).withColumnRenamed("id", "node")
+    pairs = spark.createDataFrame([(0, 4), (1, 5)], "doc_a bigint, doc_b bigint")
+    ngrams = spark.createDataFrame([(1, 1)], "gram_key bigint, n_occ bigint")
+    lines = spark.createDataFrame([("x", 1)], "line_key string, n_docs bigint")
+    queries = docs.filter(F.col("doc_id") < 3).select(
+        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
+    )
+
+    def commit():
+        from bigdata_retailrocket_recsys_spark.pipelines.corpus import (
+            corpus_commit,
+        )
+
+        digests = str(tmp_path / "digests")
+        corpus_commit(docs, docs.select("doc_id"), digest_path=digests)
+        return spark.read.parquet(digests)
+
+    def stream():
+        from bigdata_retailrocket_recsys_spark.streaming.winnow_intake import (
+            run_streaming_winnowing_commit,
+        )
+
+        return run_streaming_winnowing_commit(spark, "/root/testdata/sf0.001")
+
+    return {
+        "bfs_distances": lambda: graph.bfs_distances(g, 0, max_hops=6),
+        "connected_components": lambda: dedup.connected_components(nodes, g),
+        "connected_components_bigstar": (
+            lambda: dedup.connected_components_bigstar(nodes, g)
+        ),
+        "k_core": lambda: graph.k_core(g, 3),
+        "pagerank": lambda: graph.pagerank(g),
+        "pagerank_exact": lambda: graph.pagerank_exact(g),
+        "minhash_lsh_candidates_capped": (
+            lambda: dedup.minhash_lsh_candidates(docs, max_bucket=2)
+        ),
+        "jaccard_verify": lambda: dedup.jaccard_verify(pairs, docs),
+        "lsh_audit": lambda: dedup.lsh_audit(docs),
+        "duplicated_spans": lambda: dedup.duplicated_spans(docs),
+        "duplicated_spans_vs_corpus": (
+            lambda: dedup.duplicated_spans_vs_corpus(docs, corpus_ngrams=ngrams)
+        ),
+        "strip_duplicated_spans": lambda: dedup.strip_duplicated_spans(docs),
+        "strip_duplicated_spans_vs_corpus": (
+            lambda: dedup.strip_duplicated_spans_vs_corpus(
+                docs, corpus_ngrams=ngrams
+            )
+        ),
+        "strip_repeated_lines": (
+            lambda: text.strip_repeated_lines(docs, min_docs=2)
+        ),
+        "strip_repeated_lines_vs_corpus": (
+            lambda: text.strip_repeated_lines_vs_corpus(
+                docs, corpus_lines=lines, min_docs=2
+            )
+        ),
+        "source_overlap_matrix": lambda: text.source_overlap_matrix(docs),
+        "bm25_hard_negatives": (
+            lambda: text.bm25_hard_negatives(docs, queries)
+        ),
+        "collocations_pmi": lambda: text.collocations_pmi(docs, min_count=2),
+        "dot_topk_int8": (
+            lambda: similarity.dot_topk_int8(vecs, [0, 1], k=3, dim=4)
+        ),
+        "corpus_commit": commit,
+        "run_streaming_winnowing_commit": stream,
+    }[op]
+
+
 @pytest.mark.fast
 @pytest.mark.parametrize(
     "op",
@@ -661,28 +773,27 @@ def _rdds_read(df) -> set:
         "k_core",
         "pagerank",
         "pagerank_exact",
+        "minhash_lsh_candidates_capped",
+        "jaccard_verify",
+        "lsh_audit",
+        "duplicated_spans",
+        "duplicated_spans_vs_corpus",
+        "strip_duplicated_spans",
+        "strip_duplicated_spans_vs_corpus",
+        "strip_repeated_lines",
+        "strip_repeated_lines_vs_corpus",
+        "source_overlap_matrix",
+        "bm25_hard_negatives",
+        "collocations_pmi",
+        "dot_topk_int8",
+        "corpus_commit",
+        "run_streaming_winnowing_commit",
     ],
 )
-def test_iterative_operator_releases_its_pins(spark, op):
+def test_iterative_operator_releases_its_pins(spark, op, tmp_path):
     """After the call, a consuming action and clearCache(), every RDD the
     call pinned and still holds is one its output reads."""
-    from bigdata_retailrocket_recsys_spark.operators import dedup, graph
-
-    g = spark.range(300).select(
-        F.pmod(F.xxhash64("id"), 60).alias("src"),
-        F.pmod(F.xxhash64("id", F.lit(7)), 60).alias("dst"),
-    )
-    nodes = spark.range(60).withColumnRenamed("id", "node")
-    call = {
-        "bfs_distances": lambda: graph.bfs_distances(g, 0, max_hops=6),
-        "connected_components": lambda: dedup.connected_components(nodes, g),
-        "connected_components_bigstar": (
-            lambda: dedup.connected_components_bigstar(nodes, g)
-        ),
-        "k_core": lambda: graph.k_core(g, 3),
-        "pagerank": lambda: graph.pagerank(g),
-        "pagerank_exact": lambda: graph.pagerank_exact(g),
-    }[op]
+    call = _pinning_call(spark, op, *_pin_inputs(spark), tmp_path)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     out = call()
@@ -690,6 +801,34 @@ def test_iterative_operator_releases_its_pins(spark, op):
     spark.catalog.clearCache()
     held = set(jsc.getPersistentRDDs().keySet().toArray()) - before
     assert held <= _rdds_read(out), (op, sorted(held - _rdds_read(out)))
+
+
+@pytest.mark.fast
+@pytest.mark.parametrize(
+    "op",
+    [
+        "jaccard_verify",
+        "lsh_audit",
+        "strip_duplicated_spans",
+        "duplicated_spans_vs_corpus",
+        "source_overlap_matrix",
+        "bm25_hard_negatives",
+        "collocations_pmi",
+        "dot_topk_int8",
+    ],
+)
+def test_operator_releases_its_pins_when_its_job_raises(spark, op, tmp_path):
+    """A call whose eager job raises leaves no cache in the cache manager
+    and no new persisted RDD: its pins go with the exception."""
+    call = _pinning_call(spark, op, *_pin_inputs(spark, raising=True), tmp_path)
+    spark.catalog.clearCache()  # other tests' lazy-return caches
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(Exception, match="planted failure"):
+        call()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), op
+    added = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert not added, (op, sorted(added))
 
 
 def test_tfidf_hand_computed(spark):

@@ -506,18 +506,16 @@ def test_duplicated_spans_shingle_frame_cached(spark):
         _span_islands_lazy,
         _span_tok_frame,
     )
+    from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
 
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e")],
         "doc_id bigint, text string",
     )
     tok = _span_tok_frame(docs, id_col="doc_id", text_col="text")
-    islands, spans = _span_islands_lazy(tok, n=5, min_occurrences=2)
-    try:
-        plan = plan_str(islands)
-        assert plan.count("InMemoryTableScan") >= 2, plan[:1200]
-    finally:
-        spans.unpersist()
+    with Iteration() as it:
+        plan = plan_str(_span_islands_lazy(it, tok, n=5, min_occurrences=2))
+    assert plan.count("InMemoryTableScan") >= 2, plan[:1200]
 
 
 def test_epoch_shuffle_has_no_single_reducer_window(spark):
@@ -621,21 +619,30 @@ def test_attribution_one_conv_partitioning_no_bnlj(spark):
     assert plan.count("Exchange hashpartitioning(conv_id") == 1, plan
 
 
-def test_hard_negatives_broadcast_terms_and_group_limit(spark):
+def test_hard_negatives_broadcast_terms_and_group_limit(spark, monkeypatch):
     """bm25_hard_negatives: the benchmark-sized query term set joins as
     a broadcast (never shuffling the corpus bag against it as SMJ on
     term alone... the tf/df joins may SMJ, but no quadratic shape), and
     the per-query top-k pushes below the window as WindowGroupLimit.
-    Inspected through eager=False — the production form checkpoints the
-    bounded output (its visible plan is just the checkpoint scan) and
-    frees the dl cache (ADVICE r10)."""
+    Inspected on the frame going into the checkpoint — the production
+    form checkpoints the bounded output (its visible plan is just the
+    checkpoint scan) and frees the dl cache (ADVICE r10)."""
     from pyspark.sql import functions as F
 
+    from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
     from bigdata_retailrocket_recsys_spark.operators.text import (
         bm25_hard_negatives,
     )
     from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 
+    checkpointed = []
+    checkpoint = Iteration.checkpoint
+
+    def spy(self, df, *metrics):
+        checkpointed.append(df)
+        return checkpoint(self, df, *metrics)
+
+    monkeypatch.setattr(Iteration, "checkpoint", spy)
     docs = load_table(spark, SF_DIR, "documents")
     qd = (
         docs.filter(
@@ -647,9 +654,9 @@ def test_hard_negatives_broadcast_terms_and_group_limit(spark):
         .orderBy(F.col("q_id").asc())
         .limit(3)
     )
-    plan = plan_str(
-        bm25_hard_negatives(docs, qd, eager=False), "simple"
-    )
+    bm25_hard_negatives(docs, qd)
+    (pre,) = checkpointed
+    plan = plan_str(pre, "simple")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "WindowGroupLimit" in plan, plan

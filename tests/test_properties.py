@@ -1122,8 +1122,8 @@ def test_capped_lsh_cache_discipline(spark):
     truncates the pair output's lineage at call time — the banding
     subtree is evaluated exactly ONCE, no consumer can re-run it — and
     (b) releases the docs×bands sized cache before returning, so the
-    Spark cache manager is empty after the call (the dot_topk_int8
-    materialize-then-unpersist rule; ADVICE r11 #1)."""
+    Spark cache manager is empty after the call (the Iteration pin
+    rule, operators/iterate.py; ADVICE r11 #1)."""
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
         minhash_lsh_candidates,
         simhash_near_pairs,

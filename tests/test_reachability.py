@@ -10,6 +10,10 @@ No engine module keeps a process-wide driver cache: a module-level
 container or memoized function outlives the SparkSession (and the py4j
 gateway) that filled it, so a handle cached under one session dangles
 under the next.
+
+Storage a call pins for itself is released by ``Iteration``
+(operators/iterate.py) when the call returns or raises: no other engine
+module calls ``unpersist`` or an eager ``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -131,4 +135,41 @@ def test_no_process_wide_driver_caches_in_engine():
     assert not found, (
         "module-level driver caches outlive the session that filled them — "
         "scope them to the call or the session:\n  " + "\n  ".join(sorted(found))
+    )
+
+
+def _is_pin_release_or_eager_checkpoint(node: ast.AST) -> bool:
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    if node.func.attr == "unpersist":
+        return True
+    eager = [a for a in node.args[:1]] + [
+        k.value for k in node.keywords if k.arg == "eager"
+    ]
+    return node.func.attr == "localCheckpoint" and any(
+        isinstance(e, ast.Constant) and e.value is True for e in eager
+    )
+
+
+@pytest.mark.fast
+def test_pins_go_through_iteration():
+    """A hand-written unpersist runs only on the path its author wrote:
+    a raising job skips it and the pin stays for the whole session."""
+    owner = os.path.join(PKG, "operators", "iterate.py")
+    found = []
+    for layer in ENGINE_LAYERS:
+        for path in _py_files(os.path.join(ROOT, PKG, layer)):
+            rel = os.path.relpath(path, ROOT)
+            if rel == owner:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), rel)
+            found += [
+                f"{rel}:{node.lineno}:{node.func.attr}"
+                for node in ast.walk(tree)
+                if _is_pin_release_or_eager_checkpoint(node)
+            ]
+    assert not found, (
+        "pin call-scoped storage through operators/iterate.Iteration "
+        "(it.cache / it.checkpoint / it.result):\n  " + "\n  ".join(sorted(found))
     )
