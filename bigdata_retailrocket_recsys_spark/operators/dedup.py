@@ -637,74 +637,49 @@ def _capped_bucket_pairs(banded: DataFrame, *, max_bucket: int) -> DataFrame:
         return it.result(it.checkpoint(pairs).df)
 
 
-def _bitsum_signature(sh: DataFrame, bit_exprs: list[str]) -> DataFrame:
-    """Generic SimHash reducer (arbitrary per-bit expressions — the md5
-    oracle twins' path; the xxhash word paths use the 4x-cheaper
-    :func:`_swar_signatures`): per doc, one bit-count sum per expression
-    + one row count in a SINGLE map-side-combinable aggregation, then
-    the signature via the majority rule (vote_j > 0 ⟺ 2·Σbit_j > n).
-    One shuffle of partial aggregates; NO bit explode — the r7 volume
-    probe measured the old explode form (64 vote rows per shingle →
-    1.9B rows at 1M docs) at 578 s vs ~20 s for this shape,
-    value-identical. Returns one signature column per 64 bit
-    expressions, named ``sig0, sig1, ...`` like
-    :func:`_swar_signatures`."""
-    sums = sh.groupBy("doc").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(F.expr(e)).alias(f"s{j}") for j, e in enumerate(bit_exprs)],
-    )
-
-    def _sig(i: int):
-        sig = None
-        for j in range(64):
-            term = F.when(
-                F.col(f"s{64 * i + j}") * 2 > F.col("n"),
-                F.lit(1 << j if j < 63 else -(1 << 63)).cast("bigint"),
-            ).otherwise(F.lit(0).cast("bigint"))
-            sig = term if sig is None else sig + term
-        return sig
-
-    return sums.select(
-        "doc",
-        *[_sig(i).alias(f"sig{i}") for i in range(len(bit_exprs) // 64)],
-    )
-
-
 _SWAR16_MASK = 0x0001_0001_0001_0001  # 4 × 16-bit lanes per bigint
 
 
 def _swar_signatures(sh: DataFrame, word_cols: list[str]) -> DataFrame:
-    """SWAR-packed SimHash reducer for hash-WORD bit sources: per word
-    column, 16 sums of ``(w >> k) & 0x0001000100010001`` accumulate FOUR
-    bit-counts each (16-bit lanes) — 4× fewer aggregate buffers than
-    one-sum-per-bit, measured 2.3× faster at 30M shingle rows with
-    bit-identical output (r7 A/B, checksums equal). Lane capacity bounds
-    per-doc shingle counts at 65535; exceeding it would silently carry
-    between lanes, so the majority expression routes through a
-    ``raise_error`` guard instead (a 65k-DISTINCT-shingle doc is ~400 KB
-    of unique bigrams — cap or pre-split such docs, or use the generic
-    :func:`_bitsum_signature` path). Returns one signature column per
-    word column, named ``sig0, sig1, ...``."""
+    """The SimHash reducer for hash-WORD bit sources (xxhash64 words
+    and md5 halves alike): per word column, 16 sums of
+    ``(w >> k) & 0x0001000100010001`` accumulate FOUR bit-counts each
+    (16-bit lanes) — 4× fewer aggregate buffers than one-sum-per-bit,
+    measured 2.3× faster at 30M shingle rows with bit-identical output
+    (r7 A/B, checksums equal). All sums ride ONE map-side-combinable
+    aggregation with the row count, then the majority rule
+    (vote_j > 0 ⟺ 2·Σbit_j > n); NO bit explode — the r7 volume probe
+    measured the explode form (64 vote rows per shingle → 1.9B rows at
+    1M docs) at 578 s vs ~20 s for this shape. Lane capacity bounds
+    per-doc shingle counts at 65535, and a top-lane bit count at 32767
+    (that lane holds the sign bit); exceeding either would carry between
+    lanes or overflow the long, so the majority expression routes
+    through a ``raise_error`` guard instead (a 65k-DISTINCT-shingle doc
+    is ~400 KB of unique bigrams — cap or pre-split such docs). Returns one
+    signature column per word column, named ``sig0, sig1, ...``."""
+    # try_sum: the top lane sits on the sign bit, so under ANSI a plain
+    # sum raises ARITHMETIC_OVERFLOW once a top-lane count reaches 32768
+    # and pre-empts the named guard; try_sum turns that into NULL
     sums = sh.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n"),
         *[
-            F.sum(F.expr(f"({w} >> {k}) & {_SWAR16_MASK}")).alias(
+            F.try_sum(F.expr(f"({w} >> {k}) & {_SWAR16_MASK}")).alias(
                 f"p{i}_{k}"
             )
             for i, w in enumerate(word_cols)
             for k in range(16)
         ],
     )
+    packed = [c for c in sums.columns if c.startswith("p")]
     # the guard must feed the result or column pruning drops it
     n_checked = F.expr(
-        "CASE WHEN n >= 65536 THEN raise_error("
-        "'simhash SWAR lanes overflow: a document has >= 65536 distinct "
-        "shingles; pre-split such documents or use the one-bit-per-sum "
-        "path') ELSE n END"
+        "CASE WHEN n >= 65536 OR "
+        + " OR ".join(f"{c} IS NULL" for c in packed)
+        + " THEN raise_error('simhash SWAR lanes overflow: a document has "
+        "too many distinct shingles for 16-bit lanes; pre-split such "
+        "documents') ELSE n END"
     )
-    sums = sums.select("doc", n_checked.alias("n"), *[
-        c for c in sums.columns if c.startswith("p")
-    ])
+    sums = sums.select("doc", n_checked.alias("n"), *packed)
 
     def _sig(i: int):
         sig = None
@@ -736,9 +711,7 @@ def simhash(
     sources, returned as ``(doc, sig0[, sig1])`` — bits 0-63 and 64-127.
 
     - ``hash_fn='xxhash64'`` (the scale tier): word 0 is
-      ``xxhash64(shingle)``, word 1 is ``xxhash64(shingle, 1)``; all bit
-      sums ride ONE aggregation of SWAR-packed lanes
-      (:func:`_swar_signatures`).
+      ``xxhash64(shingle)``, word 1 is ``xxhash64(shingle, 1)``.
     - ``hash_fn='md5'`` (the oracle-replayable tier, the same
       exact-integer-twin move as the PageRank pair): bit ``j`` of a
       shingle is bit ``j%4`` of hex nibble ``j//4`` of ``md5(shingle)``,
@@ -746,8 +719,14 @@ def simhash(
       and DuckDB compute md5 hex identically, so every vote, signature
       word and Hamming distance replays exactly with integer-only
       arithmetic; md5 is 128 bits, so its 32 nibbles cover the wide
-      tier too. One bit-count sum per bit (:func:`_bitsum_signature`);
-      ~2× the hash bytes of xxhash64, which stays the scale path.
+      tier too. Word ``i`` is hex half ``i`` (nibbles ``16i..16i+15``)
+      read back to front and parsed as a signed 64-bit integer, so its
+      bit ``j`` is exactly bit ``j%4`` of nibble ``16i + j//4``.
+
+    Both sources feed the same SWAR reducer (:func:`_swar_signatures`),
+    so the 65,535-distinct-shingles-per-doc lane cap (a ``raise_error``
+    past it) holds for both; before the md5 tier shared the reducer it
+    summed one bit per aggregate buffer and had no cap.
 
     Signature bit j = (Σ ±1 votes over the doc's distinct shingles) > 0."""
     if bits not in (64, 128):
@@ -755,22 +734,22 @@ def simhash(
     sh = shingle_rows(df, id_col=id_col, text_col=text_col, n=shingle_n)
     if hash_fn == "xxhash64":
         words = [F.xxhash64("shingle"), F.xxhash64("shingle", F.lit(1))]
-        sh = sh.select(
-            "doc", *[w.alias(f"h{i}") for i, w in enumerate(words[: bits // 64])]
-        )
-        return _swar_signatures(sh, sh.columns[1:])
-    if hash_fn == "md5":
-        sh = sh.select(
-            "doc",
+    elif hash_fn == "md5":
+        words = [
             F.expr(
-                f"transform(sequence(0, {bits // 4 - 1}), k -> "
-                "instr('0123456789abcdef', substring(md5(shingle), k + 1, 1)) - 1)"
-            ).alias("nibs"),
+                f"CAST(conv(reverse(substring(md5(shingle), {16 * i + 1}, 16)), "
+                "16, -10) AS BIGINT)"
+            )
+            for i in range(2)
+        ]
+    else:
+        raise ValueError(
+            f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}"
         )
-        return _bitsum_signature(
-            sh, [f"(nibs[{j // 4}] >> {j % 4}) & 1" for j in range(bits)]
-        )
-    raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+    sh = sh.select(
+        "doc", *[w.alias(f"h{i}") for i, w in enumerate(words[: bits // 64])]
+    )
+    return _swar_signatures(sh, sh.columns[1:])
 
 
 def simhash_near_pairs(

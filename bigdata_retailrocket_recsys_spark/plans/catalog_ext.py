@@ -37,6 +37,12 @@ from bigdata_retailrocket_recsys_spark.operators.text import (
     token_count,
     token_repetition,
 )
+from bigdata_retailrocket_recsys_spark.pipelines.corpus import (
+    NEAR_DUP_BANDS,
+    NEAR_DUP_NUM_HASHES,
+    SHINGLE_N,
+)
+from bigdata_retailrocket_recsys_spark.plans import oracle_sql as osql
 from bigdata_retailrocket_recsys_spark.plans.catalog import (
     _dec_value,
     _floormul_sql,
@@ -80,41 +86,28 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         id_col="doc_id",
         text_col="text",
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
+        bands=NEAR_DUP_BANDS,
     )
 
-
-@query(
-    "q_dedup_minhash_persisted",
-    oracle=r"""
-    WITH sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM documents
-                    WHERE text IS NOT NULL AND doc_id IS NOT NULL))
-    ), sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sig GROUP BY doc, j // 4
-    )
+_MINHASH_MD5_ORACLE = r"""
+    WITH {sh}, {sig}, {band}
     SELECT a.doc AS doc_a, b.doc AS doc_b,
            CAST(COUNT(*) AS BIGINT) AS n_shared_bands
     FROM band a JOIN band b
       ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
     GROUP BY a.doc, b.doc
-    """,
+    """.format(
+    sh=osql.minhash_shingles(
+        "sh", "documents", where="text IS NOT NULL AND doc_id IS NOT NULL"
+    ),
+    sig=osql.minhash_sig(),
+    band=osql.minhash_bands(),
 )
+
+
+@query("q_dedup_minhash_persisted", oracle=_MINHASH_MD5_ORACLE)
 def q_dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidates against a PERSISTED signature table — the
     warehouse-scale path the in-memory variant's docstring promises: write
@@ -135,14 +128,14 @@ def q_dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_path,
         id_col="doc_id",
         text_col="text",
-        shingle_n=3,
-        num_hashes=16,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
         hash_fn="md5",
     )
     return minhash_lsh_candidates(
         signatures=spark.read.parquet(sig_path),
-        num_hashes=16,
-        bands=4,
+        num_hashes=NEAR_DUP_NUM_HASHES,
+        bands=NEAR_DUP_BANDS,
     )
 
 
@@ -152,23 +145,8 @@ def q_dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5 twin q_dedup_simhash_pairs_md5, and the 128-bit scale tier. The
 # simhash() operator itself stays exported + unit-tested.
 
-
-@query(
-    "q_dedup_ngram_jaccard",
-    oracle="""
-    WITH tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    )
+_NGRAM_JACCARD_ORACLE = r"""
+    WITH {common}
     SELECT doc_a, doc_b, n_common,
            sa.n_sh AS n_a, sb.n_sh AS n_b,
            CAST(n_common AS DOUBLE)
@@ -178,8 +156,12 @@ def q_dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON sb.doc = doc_b
     WHERE CAST(n_common AS DOUBLE)
               / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    """,
+    """.format(
+    common=osql.ngram_jaccard_common(),
 )
+
+
+@query("q_dedup_ngram_jaccard", oracle=_NGRAM_JACCARD_ORACLE)
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-set Jaccard near-dup pairs, relational form (explode → shingle
     self-join within (lang, source) blocks → intersection counts). No UDF,
@@ -200,30 +182,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carries the SAME oracle (r7 graduation from rows-only — the entry
     # originally existed to lock the persisted-shingle PLAN, which
     # tests/test_plans.py still does; now the values are driver-hashed too)
-    oracle="""
-    WITH tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    )
-    SELECT doc_a, doc_b, n_common,
-           sa.n_sh AS n_a, sb.n_sh AS n_b,
-           CAST(n_common AS DOUBLE)
-               / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-    FROM common
-    JOIN sizes sa ON sa.doc = doc_a
-    JOIN sizes sb ON sb.doc = doc_b
-    WHERE CAST(n_common AS DOUBLE)
-              / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    """,
+    oracle=_NGRAM_JACCARD_ORACLE,
 )
 def q_dedup_ngram_jaccard_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard near-dup pairs against a PERSISTED shingle table — the
@@ -352,8 +311,8 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_path,
         id_col="doc_id",
         text_col="text",
-        shingle_n=3,
-        num_hashes=16,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
         hash_fn="md5",
     )
     batch = docs.filter(F.col("doc_id") % 5 == 0)
@@ -362,9 +321,9 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_signatures=spark.read.parquet(sig_path),
         id_col="doc_id",
         text_col="text",
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
+        bands=NEAR_DUP_BANDS,
         hash_fn="md5",
     )
     dupes = cands.select(F.col("batch_doc").alias("doc_id")).distinct()
@@ -413,7 +372,7 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_check(
         docs.filter(F.col("source") != "src0"),
         docs.filter(F.col("source") == "src0"),
-        shingle_n=3,
+        shingle_n=SHINGLE_N,
     )
 
 
@@ -444,51 +403,6 @@ def q_dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
 
 
-# Shared DuckDB replay of operators/dedup.embed_sign_buckets (VERDICT r11
-# #3): md5-derived Rademacher ±1 planes × floor(v·1e9)-quantized
-# components — every bucket id is exact integer arithmetic, identical in
-# both engines (prototype-verified bit-identical on sf0.01: 2000/2000
-# bucket rows). {src} must provide (uid, embedding); emits bk(uid, t,
-# bucket). The shared-template rule (BM25_CONTRIB_SQL precedent) keeps
-# the two embed-incremental oracles from drifting apart.
-_EMBED_BUCKET_CTES = """
-    planes AS (
-        SELECT t.t, j.j, d.d,
-               CASE WHEN substring(md5(CAST(t.t AS VARCHAR) || ':'
-                        || CAST(j.j AS VARCHAR) || ':'
-                        || CAST(d.d AS VARCHAR)), 1, 1) < '8'
-                    THEN 1 ELSE -1 END AS w
-        FROM (SELECT unnest(generate_series(0, {tables_m1})) AS t) t,
-             (SELECT unnest(generate_series(0, {bits_m1})) AS j) j,
-             (SELECT unnest(generate_series(0, {dim_m1})) AS d) d
-    ), qv AS (
-        SELECT uid, p - 1 AS d,
-               CAST(floor(CAST(embedding[p] AS DOUBLE) * 1e9) AS BIGINT)
-                   AS qv
-        FROM (SELECT uid, embedding FROM {src}
-              WHERE embedding IS NOT NULL AND len(embedding) = {dim}
-                -- NULL-component vectors are excluded like the Spark
-                -- operator (exists() 3VL → NULL → filtered); DuckDB's
-                -- list_bool_or IGNORES NULL elements, so without this
-                -- the oracle would keep them and silently drop the NULL
-                -- positions from the dot (ADVICE r12 #1)
-                AND len(list_filter(embedding, x -> x IS NULL)) = 0
-                AND NOT list_bool_or(list_transform(embedding,
-                        x -> isnan(CAST(x AS DOUBLE))
-                             OR isinf(CAST(x AS DOUBLE))))),
-             LATERAL (SELECT unnest(generate_series(1, {dim})) AS p)
-    ), dots AS (
-        SELECT qv.uid, p.t, p.j, SUM(p.w * qv.qv) AS dot
-        FROM qv JOIN planes p USING (d) GROUP BY qv.uid, p.t, p.j
-    ), bk AS (
-        SELECT uid, t,
-               SUM(CASE WHEN dot > 0 THEN (1::BIGINT << j) ELSE 0 END)
-                   AS bucket
-        FROM dots GROUP BY uid, t
-    )
-"""
-
-
 _EMBED_LSH_PAIRS_ORACLE = """WITH src AS (
         SELECT vec_id AS uid, embedding FROM embeddings
         WHERE vec_id IS NOT NULL
@@ -510,9 +424,7 @@ _EMBED_LSH_PAIRS_ORACLE = """WITH src AS (
 @query(
     "q_dedup_embed_cosine_lsh",
     oracle=_EMBED_LSH_PAIRS_ORACLE.format(
-        bucket_ctes=_EMBED_BUCKET_CTES.format(
-            src="src", tables_m1=15, bits_m1=3, dim=64, dim_m1=63
-        ).lstrip()
+        bucket_ctes=osql.embed_buckets("src", tables=16, bits=4).lstrip()
     ),
 )
 def q_dedup_embed_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -925,30 +837,19 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "q_session_window_batch",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN LAG(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-                            >= 1800000000
-                    THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WHERE ts IS NOT NULL
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-    ), s AS (
-        SELECT user_id, ts,
-               SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST
-                                 ROWS UNBOUNDED PRECEDING) AS sess
-        FROM flagged
-    )
+_SESSION_WINDOW_ORACLE = """
+    WITH {flagged}
     SELECT user_id,
            MIN(epoch_us(ts)) AS start_us,
            MAX(epoch_us(ts)) + 1800000000 AS end_us,
            COUNT(*) AS n_events
     FROM s GROUP BY user_id, sess
-    """,
+    """
+
+
+@query(
+    "q_session_window_batch",
+    oracle=_SESSION_WINDOW_ORACLE.format(flagged=osql.session_flags()),
 )
 def q_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``F.session_window`` in batch mode (same operator Structured
@@ -965,30 +866,8 @@ def q_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_session_window",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN LAG(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-                            >= 1800000000
-                    THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WHERE ts IS NOT NULL
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-    ), s AS (
-        SELECT user_id, ts,
-               SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST
-                                 ROWS UNBOUNDED PRECEDING) AS sess
-        FROM flagged
-    )
-    SELECT user_id,
-           MIN(epoch_us(ts)) AS start_us,
-           MAX(epoch_us(ts)) + 1800000000 AS end_us,
-           COUNT(*) AS n_events
-    FROM s GROUP BY user_id, sess
-    """.replace(
-        "WHERE ts IS NOT NULL",
-        "WHERE ts IS NOT NULL AND epoch_us(ts) >= 0",
+    oracle=_SESSION_WINDOW_ORACLE.format(
+        flagged=osql.session_flags("ts IS NOT NULL AND epoch_us(ts) >= 0")
     ),
 )
 def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1132,16 +1011,15 @@ def q_stream_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return run_generator_stream(spark, rows=30_000, batch_rows=10_000)
 
-
-@query(
-    "q_stream_dedup",
-    oracle="""
+_STREAM_DEDUP_ORACLE = """
     SELECT event_type, COUNT(*) AS n FROM (
         SELECT DISTINCT event_id, event_type FROM events
         WHERE ts IS NOT NULL AND epoch_us(ts) >= 0
     ) GROUP BY event_type
-    """,
-)
+    """
+
+
+@query("q_stream_dedup", oracle=_STREAM_DEDUP_ORACLE)
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: dropDuplicates on the stream (state = seen
     keys, bounded by watermark in production via
@@ -1168,15 +1046,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("bdrr_stream_dedup")
 
 
-@query(
-    "q_stream_dedup_watermarked",
-    oracle="""
-    SELECT event_type, COUNT(*) AS n FROM (
-        SELECT DISTINCT event_id, event_type FROM events
-        WHERE ts IS NOT NULL AND epoch_us(ts) >= 0
-    ) GROUP BY event_type
-    """,
-)
+@query("q_stream_dedup_watermarked", oracle=_STREAM_DEDUP_ORACLE)
 def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup with BOUNDED state: ``dropDuplicatesWithinWatermark``
     evicts seen-key state once the watermark passes — the production form
@@ -1256,28 +1126,18 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_stream_stateful_sessionize",
     oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN LAG(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-                            > 1800000000
-                    THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WHERE user_id IS NOT NULL AND ts IS NOT NULL
-          AND epoch_us(ts) >= 0
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-    ), s AS (
-        SELECT user_id, ts,
-               SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST
-                                 ROWS UNBOUNDED PRECEDING) AS sess
-        FROM flagged
-    )
+    WITH {flagged}
     SELECT user_id,
            MIN(epoch_us(ts)) AS session_start_us,
            MAX(epoch_us(ts)) AS session_end_us,
            COUNT(*) AS n_events
     FROM s GROUP BY user_id, sess
-    """,
+    """.format(
+        flagged=osql.session_flags(
+            "user_id IS NOT NULL AND ts IS NOT NULL", "epoch_us(ts) >= 0",
+            gap_op=">",
+        ),
+    ),
 )
 def q_stream_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
@@ -1781,39 +1641,17 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return tfidf(_t(spark, sf_dir, "documents"), top_k=5)
 
-
-@query(
-    "q_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    ), pairs AS (
-        SELECT doc_a, doc_b FROM common
-        JOIN sizes sa ON sa.doc = doc_a
-        JOIN sizes sb ON sb.doc = doc_b
-        WHERE CAST(n_common AS DOUBLE)
-                  / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ), reach(s, d) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    )
+_JACCARD_CLUSTERS_ORACLE = r"""
+    WITH RECURSIVE {common}, {pairs}, {reach}
     SELECT s AS doc_id, MIN(d) AS cluster_id FROM reach GROUP BY s
-    """,
+    """.format(
+    common=osql.ngram_jaccard_common(),
+    pairs=osql.jaccard_pairs(),
+    reach=osql.cc_reach(),
 )
+
+
+@query("q_dedup_clusters", oracle=_JACCARD_CLUSTERS_ORACLE)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clustering: connected components over Jaccard≥0.5 near-dup
     pairs (min-label propagation, operators/dedup.connected_components) —
@@ -1974,39 +1812,18 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_apply",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    ), pairs AS (
-        SELECT doc_a, doc_b FROM common
-        JOIN sizes sa ON sa.doc = doc_a
-        JOIN sizes sb ON sb.doc = doc_b
-        WHERE CAST(n_common AS DOUBLE)
-                  / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ), reach(s, d) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ), clusters AS (
+    oracle=r"""
+    WITH RECURSIVE {common}, {pairs}, {reach}, clusters AS (
         SELECT s AS doc_id, MIN(d) AS cluster_id FROM reach GROUP BY s
     )
     SELECT d.doc_id, d.lang, d.source
     FROM documents d JOIN clusters c ON d.doc_id = c.doc_id
     WHERE c.doc_id = c.cluster_id
-    """,
+    """.format(
+        common=osql.ngram_jaccard_common(),
+        pairs=osql.jaccard_pairs(),
+        reach=osql.cc_reach(),
+    ),
 )
 def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup REMOVAL: cluster Jaccard≥0.5 pairs, keep one
@@ -2211,33 +2028,7 @@ def q_agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_dedup_jaccard_prefix",
-    oracle="""
-    WITH tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    )
-    SELECT doc_a, doc_b, n_common,
-           sa.n_sh AS n_a, sb.n_sh AS n_b,
-           CAST(n_common AS DOUBLE)
-               / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-    FROM common
-    JOIN sizes sa ON sa.doc = doc_a
-    JOIN sizes sb ON sb.doc = doc_b
-    WHERE CAST(n_common AS DOUBLE)
-              / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    """,
-)
+@query("q_dedup_jaccard_prefix", oracle=_NGRAM_JACCARD_ORACLE)
 def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard near-dup pairs via PREFIX FILTERING (ppjoin-style): shingles
     globally ordered rarest-first, each doc keeps a |S|-ceil(t|S|)+1 prefix,
@@ -2540,17 +2331,16 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
 
-
-@query(
-    "q_stream_foreach_batch",
-    oracle="""
+_STREAM_UPSERT_ORACLE = """
     SELECT event_type,
            COUNT(*) AS n_events,
            CAST(SUM(CASE WHEN isnan(value) OR isinf(value) THEN NULL ELSE CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_value
     FROM events WHERE ts IS NOT NULL AND epoch_us(ts) >= 0
     GROUP BY event_type
-    """,
-)
+    """
+
+
+@query("q_stream_foreach_batch", oracle=_STREAM_UPSERT_ORACLE)
 def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch streaming sink: watermarked aggregate → idempotent
     per-batch parquet overwrite (the exactly-once pattern for sinks
@@ -3934,16 +3724,7 @@ def q_window_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_stream_upsert_merge",
-    oracle="""
-    SELECT event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CASE WHEN isnan(value) OR isinf(value) THEN NULL ELSE CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_value
-    FROM events WHERE ts IS NOT NULL AND epoch_us(ts) >= 0
-    GROUP BY event_type
-    """,
-)
+@query("q_stream_upsert_merge", oracle=_STREAM_UPSERT_ORACLE)
 def q_stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style snapshot maintenance: UPDATE-mode streaming aggregation
     + foreachBatch MERGE (copy-on-write upsert_parquet) across two
@@ -4107,38 +3888,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang")
 
 
-@query(
-    "q_dedup_clusters_bigstar",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    ), pairs AS (
-        SELECT doc_a, doc_b FROM common
-        JOIN sizes sa ON sa.doc = doc_a
-        JOIN sizes sb ON sb.doc = doc_b
-        WHERE CAST(n_common AS DOUBLE)
-                  / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ), reach(s, d) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    )
-    SELECT s AS doc_id, MIN(d) AS cluster_id FROM reach GROUP BY s
-    """,
-)
+@query("q_dedup_clusters_bigstar", oracle=_JACCARD_CLUSTERS_ORACLE)
 def q_dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clustering, scale tier: alternating large-star/small-star
     connected components (operators/dedup.connected_components_bigstar,
@@ -4568,18 +4318,7 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_bm25",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id,
-               unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-        FROM documents
-    ), tok2 AS (SELECT * FROM tok WHERE term <> ''),
-    dl AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dl
-        FROM tok2 GROUP BY doc_id
-    ), st AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_dl) AS BIGINT) AS tot_dl FROM dl
-    ), tf AS (
+    WITH {osql.bm25_corpus_stats()}, tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS n_tf
         FROM tok2 WHERE term IN ('join', 'hash', 'spark')
         GROUP BY doc_id, term
@@ -4958,28 +4697,7 @@ _KL_ORACLE_CONTRIB = KL_CONTRIB_SQL.format(
 @query(
     "q_eval_nextitem",
     oracle=f"""
-    WITH it AS (
-        SELECT user_id, event_id, event_type, ts,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) % 50 AS item
-        FROM events
-        WHERE user_id IS NOT NULL
-          AND json_extract_string(props, '$.k') IS NOT NULL
-    ), pop AS (
-        SELECT item, CAST(COUNT(*) AS BIGINT) AS n
-        FROM it WHERE ts < TIMESTAMP '2024-01-25' GROUP BY item
-    ), topk AS (
-        SELECT item,
-               CAST(ROW_NUMBER() OVER (ORDER BY n DESC, item ASC)
-                    AS BIGINT) AS rank
-        FROM pop QUALIFY rank <= 10
-    ), test AS (
-        SELECT event_type, item FROM (
-            SELECT event_type, item,
-                   ROW_NUMBER() OVER (PARTITION BY user_id
-                                      ORDER BY ts ASC, event_id ASC) AS rn
-            FROM it WHERE ts >= TIMESTAMP '2024-01-25'
-        ) WHERE rn = 1
-    )
+    WITH {osql.popularity_holdout()}
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_test,
            CAST(SUM(CASE WHEN rank IS NOT NULL THEN 1 ELSE 0 END)
@@ -7927,52 +7645,7 @@ def q_budget_sample_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_md5_oracle(max_hamming: int = 3) -> str:
-    """Generated brute-force DuckDB replay of md5-SimHash banded pairs.
-
-    Integer-only end-to-end (hex-nibble bit extraction, ±1 vote sums,
-    bit-difference counts), so it is exactly hash-comparable to the
-    Spark side; banding + hamming filter ≡ all-pairs + hamming filter
-    (pigeonhole, property-locked in test_properties), so the brute
-    force here and the banded join there MUST emit identical pair sets."""
-    nib = "(instr('0123456789abcdef', substr(hex, {pos}, 1)) - 1)"
-    votes = ",\n               ".join(
-        "SUM(CASE WHEN (({n} >> {b}) & 1) = 1 THEN 1 ELSE -1 END) AS v{j}".format(
-            n=nib.format(pos=j // 4 + 1), b=j % 4, j=j
-        )
-        for j in range(64)
-    )
-    bits = ",\n               ".join(
-        f"CASE WHEN v{j} > 0 THEN 1 ELSE 0 END AS b{j}" for j in range(64)
-    )
-    ham = "\n                 + ".join(
-        f"CASE WHEN a.b{j} <> b.b{j} THEN 1 ELSE 0 END" for j in range(64)
-    )
-    return f"""
-    WITH tok AS (
-        SELECT DISTINCT doc_id AS doc,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), h AS (
-        SELECT doc, md5(shingle) AS hex FROM tok
-    ), votes AS (
-        SELECT doc,
-               {votes}
-        FROM h GROUP BY doc
-    ), bits AS (
-        SELECT doc,
-               {bits}
-        FROM votes
-    ), pairs AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b,
-               {ham} AS hamming
-        FROM bits a JOIN bits b ON a.doc < b.doc
-    )
-    SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= {max_hamming}
-    """
-
-
-@query("q_dedup_simhash_pairs_md5", oracle=_simhash_md5_oracle())
+@query("q_dedup_simhash_pairs_md5", oracle=osql.simhash_md5_pairs())
 def q_dedup_simhash_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banded near-dup pairs with the md5-derived signature
     (operators/dedup.simhash_near_pairs, hash_fn='md5') — the
@@ -8077,66 +7750,10 @@ def q_sim_topk_lsh_exactint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash128_md5_oracle(max_hamming: int = 3) -> str:
-    """Generated brute-force DuckDB replay of the 128-bit md5-SimHash
-    banded pairs (the :func:`_simhash_md5_oracle` move over the FULL
-    digest — md5 is 128 bits, so its 32 nibbles supply every vote bit).
-    Integer-only end-to-end; banding + hamming filter ≡ all-pairs +
-    hamming filter by pigeonhole (property-locked), so the brute force
-    here and Spark's banded join MUST emit identical pair sets.
-    Bigram shingles (shingle_n=2), the clamped list_slice pattern."""
-    nib = "(instr('0123456789abcdef', substr(hex, {pos}, 1)) - 1)"
-    votes = ",\n               ".join(
-        "SUM(CASE WHEN (({n} >> {b}) & 1) = 1 THEN 1 ELSE -1 END) AS v{j}".format(
-            n=nib.format(pos=j // 4 + 1), b=j % 4, j=j
-        )
-        for j in range(128)
-    )
-    bits = ",\n               ".join(
-        f"CASE WHEN v{j} > 0 THEN 1 ELSE 0 END AS b{j}" for j in range(128)
-    )
-    # DuckDB binds a left-associated +-chain recursively and caps the
-    # depth at 128 — chunk the 128 Hamming terms into four parenthesized
-    # 32-term groups (32-deep each) summed at the top
-    chunks = []
-    for c in range(0, 128, 32):
-        terms = " + ".join(
-            f"CASE WHEN a.b{j} <> b.b{j} THEN 1 ELSE 0 END"
-            for j in range(c, c + 32)
-        )
-        chunks.append(f"({terms})")
-    ham = "\n                 + ".join(chunks)
-    return rf"""
-    WITH t AS (
-        SELECT doc_id AS doc, string_split_regex(trim(text), '\s+') AS toks
-        FROM documents
-    ), sh AS (
-        SELECT DISTINCT doc,
-               array_to_string(list_slice(toks, st, st + 1), ' ') AS shingle
-        FROM (SELECT doc, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 1, 1)))
-                         AS st
-              FROM t)
-    ), h AS (
-        SELECT doc, md5(shingle) AS hex FROM sh
-    ), votes AS (
-        SELECT doc,
-               {votes}
-        FROM h GROUP BY doc
-    ), bits AS (
-        SELECT doc,
-               {bits}
-        FROM votes
-    ), pairs AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b,
-               {ham} AS hamming
-        FROM bits a JOIN bits b ON a.doc < b.doc
-    )
-    SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= {max_hamming}
-    """
-
-
-@query("q_dedup_simhash128_pairs", oracle=_simhash128_md5_oracle())
+@query(
+    "q_dedup_simhash128_pairs",
+    oracle=osql.simhash_md5_pairs(bits=128, shingle_n=2),
+)
 def q_dedup_simhash128_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """128-bit SimHash banded near-dup pairs
     (operators/dedup.simhash_near_pairs, bits=128) — the >10M-doc tier:
@@ -8325,24 +7942,14 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH t AS (
         SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
         FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), sp AS (
-        SELECT doc_id, st - 1 AS s,
-               array_to_string(list_slice(toks, st, st + 4), ' ') AS span
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, len(toks) - 4)) AS st
-              FROM t WHERE len(toks) >= 5)
-    ), dup AS (
-        SELECT span FROM sp GROUP BY span HAVING COUNT(*) >= 2
-    ), st2 AS (
-        SELECT doc_id, s,
-               s - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY s ASC)
-                   AS grp
-        FROM sp WHERE span IN (SELECT span FROM dup)
-    )
+    ), {sp}, {islands}
     SELECT doc_id, CAST(MIN(s) AS BIGINT) AS span_start,
            CAST(MAX(s) - MIN(s) + 5 AS BIGINT) AS span_len
     FROM st2 GROUP BY doc_id, grp
-    """,
+    """.format(
+        sp=osql.span_rows("t"),
+        islands=osql.span_islands(),
+    ),
 )
 def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplication finder (operators/dedup.
@@ -8431,18 +8038,7 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_retrieval_rrf",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id,
-               unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-        FROM documents
-    ), tok2 AS (SELECT * FROM tok WHERE term <> ''),
-    dl AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dl
-        FROM tok2 GROUP BY doc_id
-    ), st AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_dl) AS BIGINT) AS tot_dl FROM dl
-    ), tf AS (
+    WITH {osql.bm25_corpus_stats()}, tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS n_tf
         FROM tok2 WHERE term IN ('join', 'hash', 'spark')
         GROUP BY doc_id, term
@@ -8536,35 +8132,7 @@ def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fuse([lex, vec], id_col="doc_id", k_const=60, top_k=10)
 
 
-@query(
-    "q_dedup_minhash_md5",
-    oracle=r"""
-    WITH sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM documents
-                    WHERE text IS NOT NULL AND doc_id IS NOT NULL))
-    ), sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sig GROUP BY doc, j // 4
-    )
-    SELECT a.doc AS doc_a, b.doc AS doc_b,
-           CAST(COUNT(*) AS BIGINT) AS n_shared_bands
-    FROM band a JOIN band b
-      ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
-    GROUP BY a.doc, b.doc
-    """,
-)
+@query("q_dedup_minhash_md5", oracle=_MINHASH_MD5_ORACLE)
 def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5-MinHash FULL-ORACLE twin of q_dedup_minhash (the md5 SimHash
     move, r7): per seed j the shingle hash is ``md5('j:' || shingle)``
@@ -8583,9 +8151,9 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull()),
         id_col="doc_id",
         text_col="text",
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
+        bands=NEAR_DUP_BANDS,
         hash_fn="md5",
     )
 
@@ -8596,29 +8164,7 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH base AS (
         SELECT doc_id AS doc, string_split_regex(trim(text), '\s+') AS toks
         FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), g AS (
-        SELECT doc, st - 1 AS pos,
-               md5(array_to_string(list_slice(toks, st, st + 2), ' ')) AS h
-        FROM (SELECT doc, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM base)
-    ), n AS (
-        SELECT doc, COUNT(*) AS npos FROM g GROUP BY doc
-    ), wnd AS (
-        SELECT g.doc, g.pos, g.h, w.j
-        FROM g JOIN n USING (doc),
-             LATERAL (SELECT unnest(generate_series(
-                 GREATEST(g.pos - 3, 0),
-                 LEAST(g.pos, GREATEST(n.npos - 4, 0)))) AS j) w
-    ), pick AS (
-        SELECT DISTINCT doc, h FROM (
-            SELECT doc, pos, h, ROW_NUMBER() OVER (
-                PARTITION BY doc, j ORDER BY h ASC, pos DESC) AS rn
-            FROM wnd) WHERE rn = 1
-    ), cnt AS (
-        SELECT doc, COUNT(*) AS nf FROM pick GROUP BY doc
-    ), pr AS (
+    ), {winnow}, pr AS (
         SELECT a.doc AS doc_a, b.doc AS doc_b,
                CAST(COUNT(*) AS BIGINT) AS n_common
         FROM pick a JOIN pick b ON a.h = b.h AND a.doc < b.doc
@@ -8628,7 +8174,9 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(ca.nf AS BIGINT) AS n_a, CAST(cb.nf AS BIGINT) AS n_b
     FROM pr JOIN cnt ca ON ca.doc = pr.doc_a
     JOIN cnt cb ON cb.doc = pr.doc_b
-    """,
+    """.format(
+        winnow=osql.winnow_fingerprints(),
+    ),
 )
 def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint near-dup pairs (operators/dedup
@@ -8662,29 +8210,7 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id AS doc, ((doc_id % 3) + 3) % 3 AS m,
                string_split_regex(trim(text), '\s+') AS toks
         FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), g AS (
-        SELECT doc, m, st - 1 AS pos,
-               md5(array_to_string(list_slice(toks, st, st + 2), ' ')) AS h
-        FROM (SELECT doc, m, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM base)
-    ), n AS (
-        SELECT doc, COUNT(*) AS npos FROM g GROUP BY doc
-    ), wnd AS (
-        SELECT g.doc, g.m, g.pos, g.h, w.j
-        FROM g JOIN n USING (doc),
-             LATERAL (SELECT unnest(generate_series(
-                 GREATEST(g.pos - 3, 0),
-                 LEAST(g.pos, GREATEST(n.npos - 4, 0)))) AS j) w
-    ), pick AS (
-        SELECT DISTINCT doc, m, h FROM (
-            SELECT doc, m, pos, h, ROW_NUMBER() OVER (
-                PARTITION BY doc, j ORDER BY h ASC, pos DESC) AS rn
-            FROM wnd) WHERE rn = 1
-    ), cnt AS (
-        SELECT doc, COUNT(*) AS nf FROM pick GROUP BY doc
-    ), pr AS (
+    ), {winnow}, pr AS (
         SELECT b.doc AS batch_doc, c.doc AS corpus_doc,
                CAST(COUNT(*) AS BIGINT) AS n_common
         FROM pick b JOIN pick c ON b.h = c.h AND b.m = 0 AND c.m != 0
@@ -8697,7 +8223,9 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN cnt cb ON cb.doc = pr.corpus_doc
     WHERE CAST(pr.n_common AS DOUBLE) /
           (ca.nf + cb.nf - pr.n_common) >= 0.5
-    """,
+    """.format(
+        winnow=osql.winnow_fingerprints(carry="m"),
+    ),
 )
 def q_dedup_winnowing_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL winnowing dedup — batch vs the persisted fingerprint
@@ -8743,27 +8271,7 @@ def q_dedup_winnowing_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE base AS (
         SELECT doc_id AS doc, string_split_regex(trim(text), '\s+') AS toks
         FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), g AS (
-        SELECT doc, st - 1 AS pos,
-               md5(array_to_string(list_slice(toks, st, st + 2), ' ')) AS h
-        FROM (SELECT doc, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM base)
-    ), n AS (
-        SELECT doc, COUNT(*) AS npos FROM g GROUP BY doc
-    ), wnd AS (
-        SELECT g.doc, g.pos, g.h, w.j
-        FROM g JOIN n USING (doc),
-             LATERAL (SELECT unnest(generate_series(
-                 GREATEST(g.pos - 3, 0),
-                 LEAST(g.pos, GREATEST(n.npos - 4, 0)))) AS j) w
-    ), pick AS (
-        SELECT DISTINCT doc, h FROM (
-            SELECT doc, pos, h, ROW_NUMBER() OVER (
-                PARTITION BY doc, j ORDER BY h ASC, pos DESC) AS rn
-            FROM wnd) WHERE rn = 1
-    ), pr AS (
+    ), {winnow}, pr AS (
         SELECT a.doc AS doc_a, b.doc AS doc_b
         FROM pick a JOIN pick b ON a.h = b.h AND a.doc < b.doc
         GROUP BY a.doc, b.doc HAVING COUNT(*) >= 2
@@ -8780,7 +8288,9 @@ def q_dedup_winnowing_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.doc_id, d.source
     FROM documents d JOIN clusters c ON d.doc_id = c.doc_id
     WHERE c.doc_id = c.cluster_id
-    """,
+    """.format(
+        winnow=osql.winnow_fingerprints(counts=False),
+    ),
 )
 def q_dedup_winnowing_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-tier APPLY (r13 — completes detect→cluster→keep for
@@ -8838,21 +8348,15 @@ def q_dedup_winnowing_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, s FROM spans
               WHERE span IN (SELECT span FROM prev)),
              (SELECT unnest(generate_series(0, 4)) AS d)
-    ), kept AS (
-        SELECT t.doc_id, t.p, t.t
-        FROM tok t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.p = c.p
-        WHERE c.p IS NULL
-    ), agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               string_agg(t, ' ' ORDER BY p ASC) AS text_clean
-        FROM kept GROUP BY doc_id
-    )
+    ), {kept}
     SELECT b.doc_id,
            CAST(len(b.toks) AS BIGINT) AS n_tokens,
            CAST(len(b.toks) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
            COALESCE(a.text_clean, '') AS text_clean
     FROM base b LEFT JOIN agg a USING (doc_id)
-    """,
+    """.format(
+        kept=osql.kept_tokens(),
+    ),
 )
 def q_text_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document boilerplate REMOVAL (operators/text.
@@ -8877,80 +8381,26 @@ def q_text_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_corpus_pipeline",
     headline=True,
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), keepers AS (
-        SELECT MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id,
-                     md5(trim(regexp_replace(regexp_replace(lower(text),
-                         '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-              FROM gated)
-        GROUP BY dk
-    ), train AS (
+    WITH {base}, {gate}, {keepers}, train AS (
         SELECT g.doc_id, g.text, g.source
         FROM gated g JOIN keepers k USING (doc_id)
         WHERE g.source IS NULL OR g.source <> 'src0'
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), tr_sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM train))
-    ), cont AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM tr_sh GROUP BY doc_id
-    ), clean AS (
+    ), {ev_sh}, {tr_sh}, {cont}, clean AS (
         SELECT t.doc_id, t.text, t.source
         FROM train t JOIN cont c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
-    ), toks AS (
-        SELECT doc_id, source AS domain,
-               CAST(len(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS BIGINT) AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM clean
-    ), cum AS (
-        SELECT doc_id, domain, n_tok,
-               CAST(SUM(n_tok) OVER (
-                   PARTITION BY domain ORDER BY h ASC, doc_id ASC
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tok
-        FROM toks
-    )
+    ), {toks}, {cum}
     SELECT doc_id, domain, n_tok, cum_tok FROM cum WHERE cum_tok <= 700
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        keepers=osql.exact_keepers(),
+        ev_sh=osql.eval_shingles(),
+        tr_sh=osql.distinct_shingles("tr_sh", "train"),
+        cont=osql.contamination("cont", "tr_sh"),
+        toks=osql.budget_order(),
+        cum=osql.budget_cumsum(),
+    ),
 )
 def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END pretraining-corpus construction — the composition a
@@ -8997,20 +8447,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, toks,
                      unnest(generate_series(1, len(toks))) AS p
               FROM base)
-    ), sp AS (
-        SELECT doc_id, st - 1 AS s,
-               array_to_string(list_slice(toks, st, st + 4), ' ') AS span
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, len(toks) - 4)) AS st
-              FROM base WHERE len(toks) >= 5)
-    ), dup AS (
-        SELECT span FROM sp GROUP BY span HAVING COUNT(*) >= 2
-    ), st2 AS (
-        SELECT doc_id, s,
-               s - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY s ASC)
-                   AS grp
-        FROM sp WHERE span IN (SELECT span FROM dup)
-    ), isl AS (
+    ), {sp}, {islands}, isl AS (
         SELECT doc_id, MIN(s) AS span_start,
                MAX(s) - MIN(s) + 5 AS span_len
         FROM st2 GROUP BY doc_id, grp
@@ -9019,21 +8456,17 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                unnest(generate_series(span_start,
                                       span_start + span_len - 1)) AS p
         FROM isl
-    ), kept AS (
-        SELECT t.doc_id, t.p, t.t
-        FROM tok t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.p = c.p
-        WHERE c.p IS NULL
-    ), agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               string_agg(t, ' ' ORDER BY p ASC) AS text_clean
-        FROM kept GROUP BY doc_id
-    )
+    ), {kept}
     SELECT b.doc_id,
            CAST(len(b.toks) AS BIGINT) AS n_tokens,
            CAST(len(b.toks) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
            COALESCE(a.text_clean, '') AS text_clean
     FROM base b LEFT JOIN agg a USING (doc_id)
-    """,
+    """.format(
+        sp=osql.span_rows("base"),
+        islands=osql.span_islands(),
+        kept=osql.kept_tokens(),
+    ),
 )
 def q_dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplication REMOVAL (operators/dedup.
@@ -9060,60 +8493,11 @@ def q_dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_corpus_pipeline_neardup",
     headline=True,
     oracle=r"""
-    WITH RECURSIVE base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), ekeep AS (
-        SELECT MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id,
-                     md5(trim(regexp_replace(regexp_replace(lower(text),
-                         '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-              FROM gated)
-        GROUP BY dk
-    ), train AS (
+    WITH RECURSIVE {base}, {gate}, {ekeep}, train AS (
         SELECT g.doc_id, g.text, g.source
         FROM gated g JOIN ekeep k USING (doc_id)
         WHERE g.source IS NULL OR g.source <> 'src0'
-    ), msh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM train))
-    ), sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM msh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sig GROUP BY doc, j // 4
-    ), cand AS (
-        SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-        FROM band a JOIN band b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
-    ), vsh AS (
+    ), {msh}, {sig}, {band}, {cand}, vsh AS (
         SELECT DISTINCT doc, s FROM msh
     ), vsizes AS (
         SELECT doc, COUNT(*) AS n_sh FROM vsh GROUP BY doc
@@ -9128,14 +8512,7 @@ def q_dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN vsizes sb ON sb.doc = doc_b
         WHERE CAST(n_common AS DOUBLE)
                   / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ), reach(s, d) AS (
-        SELECT doc_id, doc_id FROM train
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ), clusters AS (
+    ), {reach}, clusters AS (
         SELECT s AS doc_id, MIN(d) AS cluster_id FROM reach GROUP BY s
     ), kept AS (
         SELECT t.doc_id, t.text, t.source
@@ -9183,48 +8560,27 @@ def q_dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT b.doc_id, COALESCE(a.text_clean, '') AS text, b.source
         FROM kbase b LEFT JOIN kagg a USING (doc_id)
         WHERE COALESCE(a.text_clean, '') <> ''
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), tr_sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM cleaned))
-    ), cont AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM tr_sh GROUP BY doc_id
-    ), clean2 AS (
+    ), {ev_sh}, {tr_sh}, {cont}, clean2 AS (
         SELECT t.doc_id, t.text, t.source
         FROM cleaned t JOIN cont c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
-    ), toks2 AS (
-        SELECT doc_id, source AS domain,
-               CAST(len(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS BIGINT) AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM clean2
-    ), cum AS (
-        SELECT doc_id, domain, n_tok,
-               CAST(SUM(n_tok) OVER (
-                   PARTITION BY domain ORDER BY h ASC, doc_id ASC
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tok
-        FROM toks2
-    )
+    ), {toks2}, {cum}
     SELECT doc_id, domain, n_tok, cum_tok FROM cum WHERE cum_tok <= 700
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        ekeep=osql.exact_keepers("ekeep"),
+        msh=osql.minhash_shingles("msh", "train"),
+        sig=osql.minhash_sig(src="msh"),
+        band=osql.minhash_bands(),
+        cand=osql.band_candidates(),
+        reach=osql.cc_reach(nodes="train"),
+        ev_sh=osql.eval_shingles(),
+        tr_sh=osql.distinct_shingles("tr_sh", "cleaned"),
+        cont=osql.contamination("cont", "tr_sh"),
+        toks2=osql.budget_order("toks2", "clean2"),
+        cum=osql.budget_cumsum(src="toks2"),
+    ),
 )
 def q_corpus_pipeline_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL RefinedWeb/FineWeb-shape corpus pipeline as one oracled
@@ -9265,75 +8621,33 @@ def q_corpus_pipeline_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_incremental",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), cdig AS (
+    WITH {base}, {gate}, cdig AS (
         SELECT DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
                    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
         FROM gated
         WHERE doc_id % 4 <> 0 AND (source IS NULL OR source <> 'src0')
-    ), bat AS (
-        SELECT doc_id, text, source,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-        FROM gated
-        WHERE doc_id % 4 = 0 AND (source IS NULL OR source <> 'src0')
-    ), surv AS (
+    ), {bat}, surv AS (
         SELECT * FROM bat WHERE dk NOT IN (SELECT dk FROM cdig)
     ), keep AS (
         SELECT MIN(doc_id) AS doc_id FROM surv GROUP BY dk
     ), fresh AS (
         SELECT s.doc_id, s.text, s.source
         FROM surv s JOIN keep USING (doc_id)
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), tr_sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh))
-    ), cont AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM tr_sh GROUP BY doc_id
-    )
+    ), {ev_sh}, {tr_sh}, {cont}
     SELECT f.doc_id, f.source AS domain,
            CAST(len(list_filter(
                string_split_regex(trim(lower(f.text)), '\s+'),
                t -> t <> '')) AS BIGINT) AS n_tok
     FROM fresh f JOIN cont c USING (doc_id)
     WHERE c.n_hit * 2 < c.n_sh
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        bat=osql.digest_batch("bat", 0),
+        ev_sh=osql.eval_shingles(),
+        tr_sh=osql.distinct_shingles("tr_sh", "fresh"),
+        cont=osql.contamination("cont", "tr_sh"),
+    ),
 )
 def q_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL corpus maintenance (pipelines/corpus
@@ -9382,33 +8696,9 @@ def q_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_lm_score",
     oracle=r"""
-    WITH ref AS (
-        SELECT unnest(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS term
-        FROM documents WHERE source = 'src0' AND text IS NOT NULL
-    ), lm AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS c_w FROM ref GROUP BY term
-    ), tot AS (
-        SELECT CAST(COALESCE(SUM(c_w), 0) AS BIGINT) AS n_ref,
-               CAST(COUNT(*) AS BIGINT) AS v_ref
-        FROM lm
-    ), dt AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c_dt
-        FROM (SELECT doc_id,
-                     unnest(list_filter(
-                         string_split_regex(trim(lower(text)), '\s+'),
-                         t -> t <> '')) AS term
-              FROM documents
-              WHERE doc_id IS NOT NULL AND text IS NOT NULL)
-        GROUP BY doc_id, term
-    ), contrib AS (
+    WITH {lm}, {dt}, contrib AS (
         SELECT doc_id, c_dt,
-               c_dt * CAST(FLOOR(ln((CAST(COALESCE(l.c_w, 0) AS DOUBLE)
-                          + 1.0)
-                     / GREATEST(CAST(t.n_ref AS DOUBLE)
-                                + CAST(t.v_ref AS DOUBLE), 1.0))
-                     * 1e6) AS BIGINT) AS lp
+               c_dt * {logprob} AS lp
         FROM dt LEFT JOIN lm l USING (term) CROSS JOIN tot t
     )
     SELECT doc_id,
@@ -9417,7 +8707,13 @@ def q_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(lp) AS DOUBLE)
                / (CAST(SUM(c_dt) AS DOUBLE) * 1e6) AS lm_score
     FROM contrib GROUP BY doc_id
-    """,
+    """.format(
+        lm=osql.lm_reference(),
+        dt=osql.lm_doc_terms(
+            "documents", where="doc_id IS NOT NULL AND text IS NOT NULL"
+        ),
+        logprob=osql.lm_logprob(),
+    ),
 )
 def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality scoring (operators/text.lm_score): every
@@ -9452,27 +8748,7 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL
     ), m AS (
         SELECT doc_id,
-               CAST(len(words) AS BIGINT) AS n_words,
-               CAST(GREATEST(len(lines), 1) AS BIGINT) AS n_lines,
-               CAST(COALESCE(list_sum(list_transform(words,
-                    w -> strlen(w))), 0) AS BIGINT) AS sum_chars,
-               CAST(len(list_filter(words, w -> position('#' IN w) > 0))
-                    + len(list_filter(words, w -> position('...' IN w) > 0))
-                    + len(list_filter(words, w -> position('…' IN w) > 0))
-                    AS BIGINT) AS n_symbols,
-               CAST(len(list_filter(lines,
-                    l -> regexp_matches(trim(l), '^[-*•‣▪]')))
-                    AS BIGINT) AS n_bullet,
-               CAST(len(list_filter(lines,
-                    l -> regexp_matches(trim(l), '(\.\.\.|…)$')))
-                    AS BIGINT) AS n_ell_end,
-               CAST(len(list_filter(words,
-                    w -> regexp_matches(w, '[A-Za-z]')))
-                    AS BIGINT) AS n_alpha,
-               CAST(len(list_distinct(list_filter(
-                    list_transform(words, w -> lower(w)),
-                    w -> w IN ('the','be','to','of','and','that','have',
-                               'with')))) AS BIGINT) AS n_stop
+               {gopher}
         FROM base
     ), f AS (
         SELECT doc_id, n_words, n_lines,
@@ -9492,7 +8768,9 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AND f_bullet = 1 AND f_ellipsis = 1 AND f_alpha = 1
                 AND f_stop = 1 AS INT) AS gopher_pass
     FROM f
-    """,
+    """.format(
+        gopher=osql.gopher_counts(),
+    ),
 )
 def q_text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher document-quality rules (operators/text.gopher_quality —
@@ -9597,25 +8875,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, text, source FROM documents
         WHERE doc_id IS NOT NULL AND text IS NOT NULL
           AND (source IS NULL OR source <> 'src0')
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), keyed AS (
+    ), {gate}, keyed AS (
         SELECT source AS domain, md5(norm) AS digest,
                CAST(len(list_filter(string_split(norm, ' '),
                                     t -> t <> '')) AS BIGINT) AS n_tok
@@ -9628,7 +8888,9 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(n_tok) AS BIGINT) AS n_tokens
     FROM (SELECT DISTINCT domain, digest, n_tok FROM keyed)
     GROUP BY domain
-    """,
+    """.format(
+        gate=osql.quality_gate(keep="text, source"),
+    ),
 )
 def q_stream_corpus_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING corpus intake (streaming/corpus_intake
@@ -9720,37 +8982,14 @@ def q_dedup_embed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_profile",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), dig AS (
+    WITH {base}, dig AS (
         SELECT doc_id, source AS domain,
                md5(trim(regexp_replace(regexp_replace(lower(text),
                    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS digest
         FROM base
     ), gm AS (
         SELECT doc_id,
-               CAST(len(words) AS BIGINT) AS n_words,
-               CAST(GREATEST(len(lines), 1) AS BIGINT) AS n_lines,
-               CAST(COALESCE(list_sum(list_transform(words,
-                    w -> strlen(w))), 0) AS BIGINT) AS sum_chars,
-               CAST(len(list_filter(words, w -> position('#' IN w) > 0))
-                    + len(list_filter(words, w -> position('...' IN w) > 0))
-                    + len(list_filter(words, w -> position('…' IN w) > 0))
-                    AS BIGINT) AS n_symbols,
-               CAST(len(list_filter(lines,
-                    l -> regexp_matches(trim(l), '^[-*•‣▪]')))
-                    AS BIGINT) AS n_bullet,
-               CAST(len(list_filter(lines,
-                    l -> regexp_matches(trim(l), '(\.\.\.|…)$')))
-                    AS BIGINT) AS n_ell_end,
-               CAST(len(list_filter(words,
-                    w -> regexp_matches(w, '[A-Za-z]')))
-                    AS BIGINT) AS n_alpha,
-               CAST(len(list_distinct(list_filter(
-                    list_transform(words, w -> lower(w)),
-                    w -> w IN ('the','be','to','of','and','that','have',
-                               'with')))) AS BIGINT) AS n_stop
+               {gopher}
         FROM (SELECT doc_id,
                      list_filter(string_split_regex(trim(text), '\s+'),
                                  t -> t <> '') AS words,
@@ -9768,32 +9007,9 @@ def q_dedup_embed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND 5 * n_alpha > 4 * n_words
                     AND n_stop >= 2 AS BIGINT) AS gopher_pass
         FROM gm
-    ), ref AS (
-        SELECT unnest(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS term
-        FROM documents WHERE source = 'src0' AND text IS NOT NULL
-    ), lmt AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS c_w FROM ref GROUP BY term
-    ), tot AS (
-        SELECT CAST(COALESCE(SUM(c_w), 0) AS BIGINT) AS n_ref,
-               CAST(COUNT(*) AS BIGINT) AS v_ref
-        FROM lmt
-    ), dt AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c_dt
-        FROM (SELECT doc_id,
-                     unnest(list_filter(
-                         string_split_regex(trim(lower(text)), '\s+'),
-                         t -> t <> '')) AS term
-              FROM base)
-        GROUP BY doc_id, term
-    ), lmdoc AS (
+    ), {lmt}, {dt}, lmdoc AS (
         SELECT doc_id, SUM(c_dt) AS lm_tok,
-               SUM(c_dt * CAST(FLOOR(ln((CAST(COALESCE(l.c_w, 0) AS DOUBLE)
-                          + 1.0)
-                     / GREATEST(CAST(t.n_ref AS DOUBLE)
-                                + CAST(t.v_ref AS DOUBLE), 1.0))
-                     * 1e6) AS BIGINT)) AS lm_lp
+               SUM(c_dt * {logprob}) AS lm_lp
         FROM dt LEFT JOIN lmt l USING (term) CROSS JOIN tot t
         GROUP BY doc_id
     ), agg AS (
@@ -9813,7 +9029,13 @@ def q_dedup_embed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                      / (CAST(lm_tokens AS DOUBLE) * 1e6)
            END AS lm_avg
     FROM agg
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gopher=osql.gopher_counts(),
+        lmt=osql.lm_reference("lmt"),
+        dt=osql.lm_doc_terms("base"),
+        logprob=osql.lm_logprob(),
+    ),
 )
 def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain corpus REPORT CARD (pipelines/corpus.corpus_profile):
@@ -9834,117 +9056,47 @@ def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_incremental_neardup",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), corp AS (
+    WITH {base}, {gate}, corp AS (
         SELECT doc_id, text FROM gated
         WHERE doc_id % 4 <> 0 AND (source IS NULL OR source <> 'src0')
     ), cdig AS (
         SELECT DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
                    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
         FROM corp
-    ), bat AS (
-        SELECT doc_id, text, source,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-        FROM gated
-        WHERE doc_id % 4 = 0 AND (source IS NULL OR source <> 'src0')
-    ), surv AS (
+    ), {bat}, surv AS (
         SELECT * FROM bat WHERE dk NOT IN (SELECT dk FROM cdig)
     ), keep AS (
         SELECT MIN(doc_id) AS doc_id FROM surv GROUP BY dk
     ), fresh AS (
         SELECT s.doc_id, s.text, s.source
         FROM surv s JOIN keep USING (doc_id)
-    ), csh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM corp))
-    ), bsh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh))
-    ), csig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM csh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), bsig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM bsh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), cband AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM csig GROUP BY doc, j // 4
-    ), bband AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM bsig GROUP BY doc, j // 4
-    ), near AS (
+    ), {csh}, {bsh}, {csig}, {bsig}, {cband}, {bband}, near AS (
         SELECT DISTINCT b.doc
         FROM bband b JOIN cband c
           ON b.band = c.band AND b.bucket = c.bucket
     ), fresh2 AS (
         SELECT * FROM fresh WHERE doc_id NOT IN (SELECT doc FROM near)
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), tr_sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh2))
-    ), cont AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM tr_sh GROUP BY doc_id
-    )
+    ), {ev_sh}, {tr_sh}, {cont}
     SELECT f.doc_id, f.source AS domain,
            CAST(len(list_filter(
                string_split_regex(trim(lower(f.text)), '\s+'),
                t -> t <> '')) AS BIGINT) AS n_tok
     FROM fresh2 f JOIN cont c USING (doc_id)
     WHERE c.n_hit * 2 < c.n_sh
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        bat=osql.digest_batch("bat", 0),
+        csh=osql.minhash_shingles("csh", "corp"),
+        bsh=osql.minhash_shingles("bsh", "fresh"),
+        csig=osql.minhash_sig("csig", "csh"),
+        bsig=osql.minhash_sig("bsig", "bsh"),
+        cband=osql.minhash_bands("cband", "csig"),
+        bband=osql.minhash_bands("bband", "bsig"),
+        ev_sh=osql.eval_shingles(),
+        tr_sh=osql.distinct_shingles("tr_sh", "fresh2"),
+        cont=osql.contamination("cont", "tr_sh"),
+    ),
 )
 def q_corpus_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL corpus maintenance with the NEAR-dup stage ON
@@ -9983,7 +9135,7 @@ def q_corpus_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     content_digest_table(corp, dig_path, key_cols=["__norm"])
     minhash_signatures_table(
         corp, sig_path, id_col="doc_id", text_col="text",
-        shingle_n=3, num_hashes=16, hash_fn="md5",
+        shingle_n=SHINGLE_N, num_hashes=NEAR_DUP_NUM_HASHES, hash_fn="md5",
     )
     return build_corpus_incremental(
         base.filter(F.col("doc_id") % 4 == 0),
@@ -10001,24 +9153,7 @@ def q_corpus_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH base AS (
         SELECT doc_id, text FROM documents
         WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), l AS (
-        SELECT doc_id, p - 1 AS p, lns[p] AS ln
-        FROM (SELECT doc_id, string_split(text, chr(10)) AS lns
-              FROM base),
-             LATERAL (SELECT unnest(generate_series(1, len(lns))) AS p)
-    ), h AS (
-        SELECT doc_id, p, ln,
-               CASE WHEN trim(ln) <> '' THEN
-                   md5(trim(regexp_replace(lower(ln), '\s+', ' ', 'g')))
-               END AS hh
-        FROM l
-    ), prev AS (
-        SELECT hh FROM h WHERE hh IS NOT NULL
-        GROUP BY hh HAVING COUNT(DISTINCT doc_id) >= 3
-    ), kept AS (
-        SELECT * FROM h
-        WHERE hh IS NULL OR hh NOT IN (SELECT hh FROM prev)
-    ), reb AS (
+    ), {lines}, {repeated}, reb AS (
         SELECT doc_id,
                SUM(CASE WHEN hh IS NOT NULL THEN 1 ELSE 0 END) AS n_kept,
                string_agg(ln, chr(10) ORDER BY p ASC) AS text_clean
@@ -10033,7 +9168,10 @@ def q_corpus_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(t.n_lines - COALESCE(r.n_kept, 0) AS BIGINT) AS n_removed,
            COALESCE(r.text_clean, '') AS text_clean
     FROM tot t LEFT JOIN reb r USING (doc_id)
-    """,
+    """.format(
+        lines=osql.line_hashes("base"),
+        repeated=osql.repeated_lines(),
+    ),
 )
 def q_text_strip_repeated_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LINE-grain cross-document dedup (operators/text
@@ -10072,24 +9210,7 @@ def q_text_strip_repeated_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ELSE '' END AS text
         FROM documents
         WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), l AS (
-        SELECT doc_id, p - 1 AS p, lns[p] AS ln
-        FROM (SELECT doc_id, string_split(text, chr(10)) AS lns
-              FROM staged),
-             LATERAL (SELECT unnest(generate_series(1, len(lns))) AS p)
-    ), h AS (
-        SELECT doc_id, p, ln,
-               CASE WHEN trim(ln) <> '' THEN
-                   md5(trim(regexp_replace(lower(ln), '\s+', ' ', 'g')))
-               END AS hh
-        FROM l
-    ), prev AS (
-        SELECT hh FROM h WHERE hh IS NOT NULL
-        GROUP BY hh HAVING COUNT(DISTINCT doc_id) >= 3
-    ), kept AS (
-        SELECT * FROM h
-        WHERE hh IS NULL OR hh NOT IN (SELECT hh FROM prev)
-    ), reb AS (
+    ), {lines}, {repeated}, reb AS (
         SELECT doc_id,
                string_agg(ln, chr(10) ORDER BY p ASC) AS text_clean
         FROM kept GROUP BY doc_id
@@ -10097,32 +9218,7 @@ def q_text_strip_repeated_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT r.doc_id, r.text_clean AS text, s.source
         FROM reb r JOIN staged s USING (doc_id)
         WHERE r.text_clean <> ''
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM cleaned
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), keepers AS (
-        SELECT MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id,
-                     md5(trim(regexp_replace(regexp_replace(lower(text),
-                         '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-              FROM gated)
-        GROUP BY dk
-    ), train AS (
+    ), {gate}, {keepers}, train AS (
         SELECT g.doc_id, g.text, g.source
         FROM gated g JOIN keepers k USING (doc_id)
         WHERE g.source IS NULL OR g.source <> 'src0'
@@ -10134,40 +9230,22 @@ def q_text_strip_repeated_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
                          AS st
               FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
                     FROM cleaned WHERE source = 'src0'))
-    ), tr_sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM train))
-    ), cont AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM tr_sh GROUP BY doc_id
-    ), clean AS (
+    ), {tr_sh}, {cont}, clean AS (
         SELECT t.doc_id, t.text, t.source
         FROM train t JOIN cont c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
-    ), toks AS (
-        SELECT doc_id, source AS domain,
-               CAST(len(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS BIGINT) AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS hk
-        FROM clean
-    ), cum AS (
-        SELECT doc_id, domain, n_tok,
-               CAST(SUM(n_tok) OVER (
-                   PARTITION BY domain ORDER BY hk ASC, doc_id ASC
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tok
-        FROM toks
-    )
+    ), {toks}, {cum}
     SELECT doc_id, domain, n_tok, cum_tok FROM cum WHERE cum_tok <= 700
-    """,
+    """.format(
+        lines=osql.line_hashes("staged"),
+        repeated=osql.repeated_lines(),
+        gate=osql.quality_gate("cleaned"),
+        keepers=osql.exact_keepers(),
+        tr_sh=osql.distinct_shingles("tr_sh", "train"),
+        cont=osql.contamination("cont", "tr_sh"),
+        toks=osql.budget_order(h="hk"),
+        cum=osql.budget_cumsum(h="hk"),
+    ),
 )
 def q_corpus_pipeline_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CCNet-ordered corpus pipeline (Wenzek et al. 2020): the
@@ -10226,28 +9304,7 @@ def q_corpus_pipeline_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_incremental_commit",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), corp0 AS (
+    WITH {base}, {gate}, corp0 AS (
         SELECT doc_id, text FROM gated
         WHERE doc_id % 4 IN (2, 3)
           AND (source IS NULL OR source <> 'src0')
@@ -10255,82 +9312,20 @@ def q_corpus_pipeline_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
                    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
         FROM corp0
-    ), bat1 AS (
-        SELECT doc_id, text, source,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-        FROM gated
-        WHERE doc_id % 4 = 1 AND (source IS NULL OR source <> 'src0')
-    ), surv1 AS (
+    ), {bat1}, surv1 AS (
         SELECT * FROM bat1 WHERE dk NOT IN (SELECT dk FROM dig0)
     ), keep1 AS (
         SELECT MIN(doc_id) AS doc_id FROM surv1 GROUP BY dk
     ), fresh1 AS (
         SELECT s.doc_id, s.text, s.source, s.dk
         FROM surv1 s JOIN keep1 USING (doc_id)
-    ), csh0 AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM corp0))
-    ), f1sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh1))
-    ), csig0 AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM csh0, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), f1sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM f1sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), cband0 AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM csig0 GROUP BY doc, j // 4
-    ), f1band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM f1sig GROUP BY doc, j // 4
-    ), near1 AS (
+    ), {csh0}, {f1sh}, {csig0}, {f1sig}, {cband0}, {f1band}, near1 AS (
         SELECT DISTINCT b.doc
         FROM f1band b JOIN cband0 c
           ON b.band = c.band AND b.bucket = c.bucket
     ), fresh1b AS (
         SELECT * FROM fresh1 WHERE doc_id NOT IN (SELECT doc FROM near1)
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), t1sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh1b))
-    ), cont1 AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM t1sh GROUP BY doc_id
-    ), acc1 AS (
+    ), {ev_sh}, {t1sh}, {cont1}, acc1 AS (
         SELECT f.doc_id, f.text, f.source, f.dk
         FROM fresh1b f JOIN cont1 c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
@@ -10343,68 +9338,47 @@ def q_corpus_pipeline_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT doc, j, h FROM f1sig
         WHERE doc IN (SELECT doc_id FROM acc1)
-    ), cband1 AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sigall GROUP BY doc, j // 4
-    ), bat2 AS (
-        SELECT doc_id, text, source,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-        FROM gated
-        WHERE doc_id % 4 = 0 AND (source IS NULL OR source <> 'src0')
-    ), surv2 AS (
+    ), {cband1}, {bat2}, surv2 AS (
         SELECT * FROM bat2 WHERE dk NOT IN (SELECT dk FROM dig1)
     ), keep2 AS (
         SELECT MIN(doc_id) AS doc_id FROM surv2 GROUP BY dk
     ), fresh2 AS (
         SELECT s.doc_id, s.text, s.source
         FROM surv2 s JOIN keep2 USING (doc_id)
-    ), f2sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh2))
-    ), f2sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM f2sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), f2band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM f2sig GROUP BY doc, j // 4
-    ), near2 AS (
+    ), {f2sh}, {f2sig}, {f2band}, near2 AS (
         SELECT DISTINCT b.doc
         FROM f2band b JOIN cband1 c
           ON b.band = c.band AND b.bucket = c.bucket
     ), fresh2b AS (
         SELECT * FROM fresh2 WHERE doc_id NOT IN (SELECT doc FROM near2)
-    ), t2sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh2b))
-    ), cont2 AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM t2sh GROUP BY doc_id
-    )
+    ), {t2sh}, {cont2}
     SELECT f.doc_id, f.source AS domain,
            CAST(len(list_filter(
                string_split_regex(trim(lower(f.text)), '\s+'),
                t -> t <> '')) AS BIGINT) AS n_tok
     FROM fresh2b f JOIN cont2 c USING (doc_id)
     WHERE c.n_hit * 2 < c.n_sh
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        bat1=osql.digest_batch("bat1", 1),
+        csh0=osql.minhash_shingles("csh0", "corp0"),
+        f1sh=osql.minhash_shingles("f1sh", "fresh1"),
+        csig0=osql.minhash_sig("csig0", "csh0"),
+        f1sig=osql.minhash_sig("f1sig", "f1sh"),
+        cband0=osql.minhash_bands("cband0", "csig0"),
+        f1band=osql.minhash_bands("f1band", "f1sig"),
+        ev_sh=osql.eval_shingles(),
+        t1sh=osql.distinct_shingles("t1sh", "fresh1b"),
+        cont1=osql.contamination("cont1", "t1sh"),
+        cband1=osql.minhash_bands("cband1", "sigall"),
+        bat2=osql.digest_batch("bat2", 0),
+        f2sh=osql.minhash_shingles("f2sh", "fresh2"),
+        f2sig=osql.minhash_sig("f2sig", "f2sh"),
+        f2band=osql.minhash_bands("f2band", "f2sig"),
+        t2sh=osql.distinct_shingles("t2sh", "fresh2b"),
+        cont2=osql.contamination("cont2", "t2sh"),
+    ),
 )
 def q_corpus_incremental_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO increments through the FULL daily-delta loop — decide +
@@ -10446,7 +9420,7 @@ def q_corpus_incremental_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     content_digest_table(corp0, dig_path, key_cols=["__norm"])
     minhash_signatures_table(
         corp0, sig_path, id_col="doc_id", text_col="text",
-        shingle_n=3, num_hashes=16, hash_fn="md5",
+        shingle_n=SHINGLE_N, num_hashes=NEAR_DUP_NUM_HASHES, hash_fn="md5",
     )
     day1 = base.filter(F.col("doc_id") % 4 == 1)
     acc1 = build_corpus_incremental(
@@ -10619,70 +9593,21 @@ def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_snapshot_recut",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), corp0 AS (
+    WITH {base}, {gate}, corp0 AS (
         SELECT doc_id, text, source FROM gated
         WHERE doc_id % 4 <> 0 AND (source IS NULL OR source <> 'src0')
     ), cdig AS (
         SELECT DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
                    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
         FROM corp0
-    ), bat AS (
-        SELECT doc_id, text, source,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-        FROM gated
-        WHERE doc_id % 4 = 0 AND (source IS NULL OR source <> 'src0')
-    ), surv AS (
+    ), {bat}, surv AS (
         SELECT * FROM bat WHERE dk NOT IN (SELECT dk FROM cdig)
     ), keep AS (
         SELECT MIN(doc_id) AS doc_id FROM surv GROUP BY dk
     ), fresh AS (
         SELECT s.doc_id, s.text, s.source
         FROM surv s JOIN keep USING (doc_id)
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), tr_sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh))
-    ), cont AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM tr_sh GROUP BY doc_id
-    ), acc1 AS (
+    ), {ev_sh}, {tr_sh}, {cont}, acc1 AS (
         SELECT f.doc_id, f.text, f.source
         FROM fresh f JOIN cont c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
@@ -10690,22 +9615,18 @@ def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, text, source FROM corp0
         UNION ALL
         SELECT doc_id, text, source FROM acc1
-    ), toks AS (
-        SELECT doc_id, source AS domain,
-               CAST(len(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS BIGINT) AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS hk
-        FROM snap
-    ), cum AS (
-        SELECT doc_id, domain, n_tok,
-               CAST(SUM(n_tok) OVER (
-                   PARTITION BY domain ORDER BY hk ASC, doc_id ASC
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tok
-        FROM toks
-    )
+    ), {toks}, {cum}
     SELECT doc_id, domain, n_tok, cum_tok FROM cum WHERE cum_tok <= 700
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        bat=osql.digest_batch("bat", 0),
+        ev_sh=osql.eval_shingles(),
+        tr_sh=osql.distinct_shingles("tr_sh", "fresh"),
+        cont=osql.contamination("cont", "tr_sh"),
+        toks=osql.budget_order(src="snap", h="hk"),
+        cum=osql.budget_cumsum(h="hk"),
+    ),
 )
 def q_corpus_snapshot_recut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-time budget RE-CUT over the COMMITTED corpus-rows
@@ -10768,102 +9689,33 @@ def q_corpus_snapshot_recut(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_stream_corpus_commit",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), dig0 AS (
+    WITH {base}, {gate}, dig0 AS (
         SELECT DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
                    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
         FROM gated
         WHERE doc_id % 4 IN (2, 3)
           AND (source IS NULL OR source <> 'src0')
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), bat1 AS (
-        SELECT doc_id, text, source,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-        FROM gated
-        WHERE doc_id % 4 = 1 AND (source IS NULL OR source <> 'src0')
-    ), surv1 AS (
+    ), {ev_sh}, {bat1}, surv1 AS (
         SELECT * FROM bat1 WHERE dk NOT IN (SELECT dk FROM dig0)
     ), keep1 AS (
         SELECT MIN(doc_id) AS doc_id FROM surv1 GROUP BY dk
     ), fresh1 AS (
         SELECT s.doc_id, s.text, s.source, s.dk
         FROM surv1 s JOIN keep1 USING (doc_id)
-    ), t1sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh1))
-    ), cont1 AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM t1sh GROUP BY doc_id
-    ), acc1 AS (
+    ), {t1sh}, {cont1}, acc1 AS (
         SELECT f.doc_id, f.text, f.source, f.dk
         FROM fresh1 f JOIN cont1 c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
     ), dig1 AS (
         SELECT dk FROM dig0 UNION SELECT dk FROM acc1
-    ), bat2 AS (
-        SELECT doc_id, text, source,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-        FROM gated
-        WHERE doc_id % 4 = 0 AND (source IS NULL OR source <> 'src0')
-    ), surv2 AS (
+    ), {bat2}, surv2 AS (
         SELECT * FROM bat2 WHERE dk NOT IN (SELECT dk FROM dig1)
     ), keep2 AS (
         SELECT MIN(doc_id) AS doc_id FROM surv2 GROUP BY dk
     ), fresh2 AS (
         SELECT s.doc_id, s.text, s.source
         FROM surv2 s JOIN keep2 USING (doc_id)
-    ), t2sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM fresh2))
-    ), cont2 AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM t2sh GROUP BY doc_id
-    ), acc2 AS (
+    ), {t2sh}, {cont2}, acc2 AS (
         SELECT f.doc_id, f.text, f.source
         FROM fresh2 f JOIN cont2 c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
@@ -10877,7 +9729,17 @@ def q_corpus_snapshot_recut(spark: SparkSession, sf_dir: str) -> DataFrame:
                string_split_regex(trim(lower(text)), '\s+'),
                t -> t <> '')) AS BIGINT) AS n_tok
     FROM snap
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        ev_sh=osql.eval_shingles(),
+        bat1=osql.digest_batch("bat1", 1),
+        t1sh=osql.distinct_shingles("t1sh", "fresh1"),
+        cont1=osql.contamination("cont1", "t1sh"),
+        bat2=osql.digest_batch("bat2", 0),
+        t2sh=osql.distinct_shingles("t2sh", "fresh2"),
+        cont2=osql.contamination("cont2", "t2sh"),
+    ),
 )
 def q_stream_corpus_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING daily-delta commit loop (streaming/corpus_intake
@@ -10919,13 +9781,7 @@ def q_stream_corpus_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, toks,
                      unnest(generate_series(1, len(toks))) AS p
               FROM tr)
-    ), sp AS (
-        SELECT doc_id, st - 1 AS s,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS span
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, len(toks) - 2)) AS st
-              FROM tr WHERE len(toks) >= 3)
-    ), cov AS (
+    ), {sp}, cov AS (
         SELECT DISTINCT doc_id, p
         FROM (SELECT doc_id, unnest(generate_series(s, s + 2)) AS p
               FROM sp WHERE span IN (SELECT shingle FROM ev))
@@ -10939,7 +9795,9 @@ def q_stream_corpus_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
            COALESCE(string_agg(CASE WHEN NOT rm THEN t END, ' '
                                ORDER BY p ASC), '') AS text_clean
     FROM flagged GROUP BY doc_id
-    """,
+    """.format(
+        sp=osql.span_rows("tr", n=3),
+    ),
 )
 def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURGICAL decontamination (operators/dedup
@@ -10966,59 +9824,17 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_pipeline_surgical",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, text, source FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), qf AS (
-        SELECT doc_id, text, source,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS n_toks,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9_ \t\n]'))
-                   AS DOUBLE) AS n_punct,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                   AS n_digit
-        FROM base
-    ), gated AS (
-        SELECT doc_id, text, source FROM qf
-        WHERE (LEAST(n_toks / 64.0, 1.0) * 0.5
-               + (1.0 - LEAST(n_punct / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25
-               + (1.0 - LEAST(n_digit / GREATEST(n_chars, 1.0) * 4.0, 1.0))
-                   * 0.25) >= 0.5
-          AND n_toks >= 5.0
-    ), keepers AS (
-        SELECT MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id,
-                     md5(trim(regexp_replace(regexp_replace(lower(text),
-                         '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-              FROM gated)
-        GROUP BY dk
-    ), train AS (
+    WITH {base}, {gate}, {keepers}, train AS (
         SELECT g.doc_id, g.text, g.source,
                string_split_regex(trim(g.text), '\s+') AS toks
         FROM gated g JOIN keepers k USING (doc_id)
         WHERE g.source IS NULL OR g.source <> 'src0'
-    ), ev AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), tok AS (
+    ), {ev}, tok AS (
         SELECT doc_id, p - 1 AS p, toks[p] AS t
         FROM (SELECT doc_id, toks,
                      unnest(generate_series(1, len(toks))) AS p
               FROM train)
-    ), sp AS (
-        SELECT doc_id, st - 1 AS s,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS span
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, len(toks) - 2)) AS st
-              FROM train WHERE len(toks) >= 3)
-    ), cov AS (
+    ), {sp}, cov AS (
         SELECT DISTINCT doc_id, p
         FROM (SELECT doc_id, unnest(generate_series(s, s + 2)) AS p
               FROM sp WHERE span IN (SELECT shingle FROM ev))
@@ -11032,22 +9848,17 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT t.doc_id, r.text_clean AS text, t.source
         FROM train t JOIN reb r USING (doc_id)
         WHERE r.text_clean <> ''
-    ), toks2 AS (
-        SELECT doc_id, source AS domain,
-               CAST(len(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS BIGINT) AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS hk
-        FROM clean
-    ), cum AS (
-        SELECT doc_id, domain, n_tok,
-               CAST(SUM(n_tok) OVER (
-                   PARTITION BY domain ORDER BY hk ASC, doc_id ASC
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tok
-        FROM toks2
-    )
+    ), {toks2}, {cum}
     SELECT doc_id, domain, n_tok, cum_tok FROM cum WHERE cum_tok <= 700
-    """,
+    """.format(
+        base=osql.corpus_base(),
+        gate=osql.quality_gate(),
+        keepers=osql.exact_keepers(),
+        ev=osql.eval_shingles("ev"),
+        sp=osql.span_rows("train", n=3),
+        toks2=osql.budget_order("toks2", h="hk"),
+        cum=osql.budget_cumsum(src="toks2", h="hk"),
+    ),
 )
 def q_corpus_pipeline_surgical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus pipeline with SURGICAL decontamination
@@ -11147,27 +9958,7 @@ def q_quality_share_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE doc_id IS NOT NULL AND text IS NOT NULL
     ), gm AS (
         SELECT doc_id,
-               CAST(len(words) AS BIGINT) AS n_words,
-               CAST(GREATEST(len(lines), 1) AS BIGINT) AS n_lines,
-               CAST(COALESCE(list_sum(list_transform(words,
-                    w -> strlen(w))), 0) AS BIGINT) AS sum_chars,
-               CAST(len(list_filter(words, w -> position('#' IN w) > 0))
-                    + len(list_filter(words, w -> position('...' IN w) > 0))
-                    + len(list_filter(words, w -> position('…' IN w) > 0))
-                    AS BIGINT) AS n_symbols,
-               CAST(len(list_filter(lines,
-                    l -> regexp_matches(trim(l), '^[-*•‣▪]')))
-                    AS BIGINT) AS n_bullet,
-               CAST(len(list_filter(lines,
-                    l -> regexp_matches(trim(l), '(\.\.\.|…)$')))
-                    AS BIGINT) AS n_ell_end,
-               CAST(len(list_filter(words,
-                    w -> regexp_matches(w, '[A-Za-z]')))
-                    AS BIGINT) AS n_alpha,
-               CAST(len(list_distinct(list_filter(
-                    list_transform(words, w -> lower(w)),
-                    w -> w IN ('the','be','to','of','and','that','have',
-                               'with')))) AS BIGINT) AS n_stop
+               {gopher}
         FROM (SELECT doc_id,
                      list_filter(string_split_regex(trim(text), '\s+'),
                                  t -> t <> '') AS words,
@@ -11185,59 +9976,25 @@ def q_quality_share_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND 10 * gm.n_ell_end < 3 * gm.n_lines
           AND 5 * gm.n_alpha > 4 * gm.n_words
           AND gm.n_stop >= 2
-    ), keepers AS (
-        SELECT MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id,
-                     md5(trim(regexp_replace(regexp_replace(lower(text),
-                         '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS dk
-              FROM gated)
-        GROUP BY dk
-    ), train AS (
+    ), {keepers}, train AS (
         SELECT g.doc_id, g.text, g.source
         FROM gated g JOIN keepers k USING (doc_id)
         WHERE g.source IS NULL OR g.source <> 'src0'
-    ), ev_sh AS (
-        SELECT DISTINCT array_to_string(list_slice(toks, st, st + 2), ' ')
-                   AS shingle
-        FROM (SELECT toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-                    FROM base WHERE source = 'src0'))
-    ), tr_sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS shingle
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM train))
-    ), cont AS (
-        SELECT doc_id, COUNT(*) AS n_sh,
-               SUM(CASE WHEN shingle IN (SELECT shingle FROM ev_sh)
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM tr_sh GROUP BY doc_id
-    ), clean AS (
+    ), {ev_sh}, {tr_sh}, {cont}, clean AS (
         SELECT t.doc_id, t.text, t.source
         FROM train t JOIN cont c USING (doc_id)
         WHERE c.n_hit * 2 < c.n_sh
-    ), toks AS (
-        SELECT doc_id, source AS domain,
-               CAST(len(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS BIGINT) AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS hk
-        FROM clean
-    ), cum AS (
-        SELECT doc_id, domain, n_tok,
-               CAST(SUM(n_tok) OVER (
-                   PARTITION BY domain ORDER BY hk ASC, doc_id ASC
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tok
-        FROM toks
-    )
+    ), {toks}, {cum}
     SELECT doc_id, domain, n_tok, cum_tok FROM cum WHERE cum_tok <= 700
-    """,
+    """.format(
+        gopher=osql.gopher_counts(),
+        keepers=osql.exact_keepers(),
+        ev_sh=osql.eval_shingles(),
+        tr_sh=osql.distinct_shingles("tr_sh", "train"),
+        cont=osql.contamination("cont", "tr_sh"),
+        toks=osql.budget_order(h="hk"),
+        cum=osql.budget_cumsum(h="hk"),
+    ),
 )
 def q_corpus_pipeline_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus pipeline gated by the GOPHER rules instead of the
@@ -11289,18 +10046,7 @@ def q_corpus_pipeline_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH base AS (
         SELECT doc_id, replace(text, ' ', chr(10)) AS text FROM documents
         WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ), l AS (
-        SELECT doc_id, p - 1 AS p, lns[p] AS ln
-        FROM (SELECT doc_id, string_split(text, chr(10)) AS lns
-              FROM base),
-             LATERAL (SELECT unnest(generate_series(1, len(lns))) AS p)
-    ), h AS (
-        SELECT doc_id, p, ln,
-               CASE WHEN trim(ln) <> '' THEN
-                   md5(trim(regexp_replace(lower(ln), '\s+', ' ', 'g')))
-               END AS hh
-        FROM l
-    ), k AS (
+    ), {lines}, k AS (
         SELECT doc_id, p, ln, hh,
                (hh IS NULL OR ROW_NUMBER() OVER (
                     PARTITION BY doc_id, hh ORDER BY p) = 1) AS keep
@@ -11320,7 +10066,9 @@ def q_corpus_pipeline_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT t.doc_id, t.n_lines, t.n_removed,
            COALESCE(r.text_clean, '') AS text_clean
     FROM tot t LEFT JOIN reb r USING (doc_id)
-    """,
+    """.format(
+        lines=osql.line_hashes("base"),
+    ),
 )
 def q_text_dedup_lines_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITHIN-document repeated-line dedup (operators/text
@@ -11395,51 +10143,21 @@ def q_corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return source_overlap_matrix(
-        _t(spark, sf_dir, "documents"), shingle_n=3
+        _t(spark, sf_dir, "documents"), shingle_n=SHINGLE_N
     )
 
 
 @query(
     "q_dedup_lsh_audit",
     oracle=r"""
-    WITH base AS (
-        SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM base)
-    ), shd AS (
-        SELECT DISTINCT doc, s FROM sh
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM shd GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM shd a JOIN shd b ON a.s = b.s AND a.doc < b.doc
-        GROUP BY a.doc, b.doc
-    ), truth AS (
+    WITH {overlap}, truth AS (
         SELECT doc_a, doc_b
         FROM common
         JOIN sizes sa ON sa.doc = doc_a
         JOIN sizes sb ON sb.doc = doc_b
         WHERE CAST(n_common AS DOUBLE)
                   / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    ), sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sig GROUP BY doc, j // 4
-    ), cand AS (
-        SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-        FROM band a JOIN band b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
-    ), fj AS (
+    ), {sig}, {band}, {cand}, fj AS (
         SELECT t.doc_a IS NOT NULL AS is_t, c.doc_a IS NOT NULL AS is_c
         FROM truth t FULL OUTER JOIN cand c
           ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b
@@ -11456,7 +10174,12 @@ def q_corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         CAST(COALESCE(SUM(CASE WHEN NOT is_t AND is_c THEN 1 ELSE 0 END), 0)
              AS BIGINT) AS n_false_alarms
     FROM fj
-    """,
+    """.format(
+        overlap=osql.shingle_overlap(),
+        sig=osql.minhash_sig(),
+        band=osql.minhash_bands(),
+        cand=osql.band_candidates(),
+    ),
 )
 def q_dedup_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH recall/precision audit (operators/dedup.lsh_audit,
@@ -11472,9 +10195,9 @@ def q_dedup_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return lsh_audit(
         _t(spark, sf_dir, "documents"),
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
+        bands=NEAR_DUP_BANDS,
         min_jaccard=0.5,
         hash_fn="md5",
     )
@@ -11483,37 +10206,7 @@ def q_dedup_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_split_leakage_safe",
     oracle=r"""
-    WITH RECURSIVE base AS (
-        SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM base)
-    ), shd AS (
-        SELECT DISTINCT doc, s FROM sh
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM shd GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM shd a JOIN shd b ON a.s = b.s AND a.doc < b.doc
-        GROUP BY a.doc, b.doc
-    ), sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sig GROUP BY doc, j // 4
-    ), cand AS (
-        SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-        FROM band a JOIN band b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
-    ), verified AS (
+    WITH RECURSIVE {overlap}, {sig}, {band}, {cand}, verified AS (
         SELECT c.doc_a, c.doc_b
         FROM cand c
         JOIN common m ON m.doc_a = c.doc_a AND m.doc_b = c.doc_b
@@ -11521,14 +10214,7 @@ def q_dedup_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN sizes sb ON sb.doc = c.doc_b
         WHERE CAST(m.n_common AS DOUBLE)
                   / CAST(sa.n_sh + sb.n_sh - m.n_common AS DOUBLE) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM verified
-        UNION SELECT doc_b, doc_a FROM verified
-    ), reach(s, d) AS (
-        SELECT doc_id, doc_id FROM base
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ), cc AS (
+    ), {reach}, cc AS (
         SELECT s AS doc_id, MIN(d) AS cluster_id FROM reach GROUP BY s
     )
     SELECT doc_id, cluster_id,
@@ -11536,7 +10222,13 @@ def q_dedup_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                      < 'cccd'
                 THEN 'train' ELSE 'eval' END AS split
     FROM cc
-    """,
+    """.format(
+        overlap=osql.shingle_overlap(),
+        sig=osql.minhash_sig(),
+        band=osql.minhash_bands(),
+        cand=osql.band_candidates(),
+        reach=osql.cc_reach("verified", "base"),
+    ),
 )
 def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware 80/20 split (operators/splits.leakage_safe_split,
@@ -11554,9 +10246,9 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return leakage_safe_split(
         _t(spark, sf_dir, "documents"),
         splits=[("train", 0.8), ("eval", 0.2)],
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
+        bands=NEAR_DUP_BANDS,
         min_jaccard=0.5,
         hash_fn="md5",
     )
@@ -11855,19 +10547,7 @@ def q_quality_rank_calibrate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_containment",
     oracle=r"""
-    WITH tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    )
+    WITH {common}
     SELECT doc_a, doc_b, n_common,
            sa.n_sh AS n_a, sb.n_sh AS n_b,
            CAST(n_common AS DOUBLE) / CAST(sa.n_sh AS DOUBLE)
@@ -11880,7 +10560,9 @@ def q_quality_rank_calibrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE GREATEST(CAST(n_common AS DOUBLE) / CAST(sa.n_sh AS DOUBLE),
                    CAST(n_common AS DOUBLE) / CAST(sb.n_sh AS DOUBLE))
               >= 0.9
-    """,
+    """.format(
+        common=osql.ngram_jaccard_common(),
+    ),
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-superset pairs (operators/dedup
@@ -12152,33 +10834,9 @@ def q_multimodal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_ccnet_buckets",
     oracle=r"""
-    WITH ref AS (
-        SELECT unnest(list_filter(
-                   string_split_regex(trim(lower(text)), '\s+'),
-                   t -> t <> '')) AS term
-        FROM documents WHERE source = 'src0' AND text IS NOT NULL
-    ), lm AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS c_w FROM ref GROUP BY term
-    ), tot AS (
-        SELECT CAST(COALESCE(SUM(c_w), 0) AS BIGINT) AS n_ref,
-               CAST(COUNT(*) AS BIGINT) AS v_ref
-        FROM lm
-    ), dt AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c_dt
-        FROM (SELECT doc_id,
-                     unnest(list_filter(
-                         string_split_regex(trim(lower(text)), '\s+'),
-                         t -> t <> '')) AS term
-              FROM documents
-              WHERE doc_id IS NOT NULL AND text IS NOT NULL)
-        GROUP BY doc_id, term
-    ), contrib AS (
+    WITH {lm}, {dt}, contrib AS (
         SELECT doc_id, c_dt,
-               c_dt * CAST(FLOOR(ln((CAST(COALESCE(l.c_w, 0) AS DOUBLE)
-                          + 1.0)
-                     / GREATEST(CAST(t.n_ref AS DOUBLE)
-                                + CAST(t.v_ref AS DOUBLE), 1.0))
-                     * 1e6) AS BIGINT) AS lp
+               c_dt * {logprob} AS lp
         FROM dt LEFT JOIN lm l USING (term) CROSS JOIN tot t
     ), scored AS (
         SELECT doc_id,
@@ -12200,7 +10858,13 @@ def q_multimodal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
            END AS bucket
     FROM r
-    """,
+    """.format(
+        lm=osql.lm_reference(),
+        dt=osql.lm_doc_terms(
+            "documents", where="doc_id IS NOT NULL AND text IS NOT NULL"
+        ),
+        logprob=osql.lm_logprob(),
+    ),
 )
 def q_corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail bucketing (Wenzek et al. 2020 §4.3 — the
@@ -12494,15 +11158,7 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_t_closeness",
     oracle="""
-    WITH b AS (
-        SELECT event_id, user_id, event_type,
-               strftime(ts, '%Y-%m-%d') AS day_str,
-               COALESCE(CASE WHEN value >= -1000000000000.0
-                              AND value <= 1000000000000.0
-                             THEN CAST(floor(value / 50.0) AS BIGINT) END,
-                        -1) AS vb
-        FROM events
-    ), tot AS (
+    WITH {b}, tot AS (
         SELECT vb, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY vb
     ), n AS (
         SELECT CAST(SUM(c) AS BIGINT) AS N,
@@ -12537,7 +11193,9 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON b.event_type IS NOT DISTINCT FROM e.event_type
      AND b.day_str IS NOT DISTINCT FROM e.day_str
     WHERE 200 * e.emd_abs <= 3 * (e.m - 1) * e.n_g * e.N
-    """,
+    """.format(
+        b=osql.value_bins(),
+    ),
 )
 def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness release gate (operators/quality.enforce_t_closeness,
@@ -12689,28 +11347,7 @@ def q_text_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_eval_mrr",
     oracle="""
-    WITH it AS (
-        SELECT user_id, event_id, event_type, ts,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) % 50 AS item
-        FROM events
-        WHERE user_id IS NOT NULL
-          AND json_extract_string(props, '$.k') IS NOT NULL
-    ), pop AS (
-        SELECT item, CAST(COUNT(*) AS BIGINT) AS n
-        FROM it WHERE ts < TIMESTAMP '2024-01-25' GROUP BY item
-    ), topk AS (
-        SELECT item,
-               CAST(ROW_NUMBER() OVER (ORDER BY n DESC, item ASC)
-                    AS BIGINT) AS rank
-        FROM pop QUALIFY rank <= 10
-    ), test AS (
-        SELECT event_type, item FROM (
-            SELECT event_type, item,
-                   ROW_NUMBER() OVER (PARTITION BY user_id
-                                      ORDER BY ts ASC, event_id ASC) AS rn
-            FROM it WHERE ts >= TIMESTAMP '2024-01-25'
-        ) WHERE rn = 1
-    )
+    WITH {holdout}
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_test,
            CAST(SUM(CASE WHEN rank IS NOT NULL THEN 1 ELSE 0 END)
@@ -12723,7 +11360,9 @@ def q_text_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
                / CAST(COUNT(*) * 2520 AS DOUBLE) AS mrr
     FROM test LEFT JOIN topk USING (item)
     GROUP BY event_type
-    """,
+    """.format(
+        holdout=osql.popularity_holdout(),
+    ),
 )
 def q_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MRR@10 offline evaluation (operators/evaluation.
@@ -12784,18 +11423,7 @@ def q_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
                        AS term
             FROM q
         ) WHERE term <> ''
-    ), tok AS (
-        SELECT doc_id,
-               unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-        FROM documents
-    ), tok2 AS (SELECT * FROM tok WHERE term <> ''),
-    dl AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dl
-        FROM tok2 GROUP BY doc_id
-    ), st AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_dl) AS BIGINT) AS tot_dl FROM dl
-    ), tf AS (
+    ), {osql.bm25_corpus_stats()}, tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS n_tf
         FROM tok2 WHERE term IN (SELECT DISTINCT term FROM qt)
         GROUP BY doc_id, term
@@ -13199,15 +11827,7 @@ def q_eval_coverage_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_privacy_release",
     oracle="""
-    WITH b AS (
-        SELECT event_id, user_id, event_type,
-               strftime(ts, '%Y-%m-%d') AS day_str,
-               COALESCE(CASE WHEN value >= -1000000000000.0
-                              AND value <= 1000000000000.0
-                             THEN CAST(floor(value / 50.0) AS BIGINT) END,
-                        -1) AS vb
-        FROM events
-    ), kk AS (
+    WITH {b}, kk AS (
         SELECT * FROM (
             SELECT b.*,
                    CAST(COUNT(*) OVER (PARTITION BY event_type, day_str)
@@ -13259,7 +11879,9 @@ def q_eval_coverage_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON l2.event_type IS NOT DISTINCT FROM e.event_type
      AND l2.day_str IS NOT DISTINCT FROM e.day_str
     WHERE 200 * e.emd_abs <= 3 * (e.m - 1) * e.n_g * e.N
-    """,
+    """.format(
+        b=osql.value_bins(),
+    ),
 )
 def q_privacy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The privacy trio COMPOSED as one release pipeline: k-anonymity
@@ -13304,37 +11926,7 @@ def q_privacy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_keeper_quality",
     oracle=r"""
-    WITH RECURSIVE base AS (
-        SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM base)
-    ), shd AS (
-        SELECT DISTINCT doc, s FROM sh
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM shd GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM shd a JOIN shd b ON a.s = b.s AND a.doc < b.doc
-        GROUP BY a.doc, b.doc
-    ), sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sig GROUP BY doc, j // 4
-    ), cand AS (
-        SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-        FROM band a JOIN band b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
-    ), verified AS (
+    WITH RECURSIVE {overlap}, {sig}, {band}, {cand}, verified AS (
         SELECT c.doc_a, c.doc_b
         FROM cand c
         JOIN common m ON m.doc_a = c.doc_a AND m.doc_b = c.doc_b
@@ -13342,14 +11934,7 @@ def q_privacy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN sizes sb ON sb.doc = c.doc_b
         WHERE CAST(m.n_common AS DOUBLE)
                   / CAST(sa.n_sh + sb.n_sh - m.n_common AS DOUBLE) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM verified
-        UNION SELECT doc_b, doc_a FROM verified
-    ), reach(s, d) AS (
-        SELECT doc_id, doc_id FROM base
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ), cc AS (
+    ), {reach}, cc AS (
         SELECT s AS doc_id, MIN(d) AS cluster_id FROM reach GROUP BY s
     ), q AS (
         SELECT cc.doc_id, cc.cluster_id,
@@ -13362,7 +11947,13 @@ def q_privacy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
                          md5(CAST(doc_id AS VARCHAR)) ASC,
                          doc_id ASC) = 1 AS INT) AS is_keeper
     FROM q
-    """,
+    """.format(
+        overlap=osql.shingle_overlap(),
+        sig=osql.minhash_sig(),
+        band=osql.minhash_bands(),
+        cand=osql.band_candidates(),
+        reach=osql.cc_reach("verified", "base"),
+    ),
 )
 def q_dedup_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-based canonical keeper per near-dup cluster
@@ -13386,11 +11977,11 @@ def q_dedup_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
     cand = minhash_lsh_candidates(
-        base, id_col="doc_id", text_col="text", shingle_n=3,
-        num_hashes=16, bands=4, hash_fn="md5",
+        base, id_col="doc_id", text_col="text", shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES, bands=NEAR_DUP_BANDS, hash_fn="md5",
     ).select("doc_a", "doc_b")
     edges = jaccard_verify(
-        cand, base, id_col="doc_id", text_col="text", shingle_n=3,
+        cand, base, id_col="doc_id", text_col="text", shingle_n=SHINGLE_N,
         min_jaccard=0.5,
     ).select("doc_a", "doc_b")
     cc = connected_components(
@@ -14003,24 +12594,7 @@ def q_dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), alld AS (
         SELECT doc_id, text FROM src
         UNION ALL SELECT doc_id, text FROM fam
-    ), sh AS (
-        SELECT doc_id AS doc,
-               array_to_string(list_slice(toks, st, st + 2), ' ') AS s
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(text), '\s+') AS toks
-                    FROM alld))
-    ), sig AS (
-        SELECT doc, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS h
-        FROM sh, (SELECT unnest(generate_series(0, 15)) AS j)
-        GROUP BY doc, j
-    ), band AS (
-        SELECT doc, j // 4 AS band,
-               md5(string_agg(h, '_' ORDER BY j ASC)) AS bucket
-        FROM sig GROUP BY doc, j // 4
-    ), sized AS (
+    ), {sh}, {sig}, {band}, sized AS (
         SELECT doc, band, bucket,
                COUNT(*) OVER (PARTITION BY band, bucket) AS bsz,
                MIN(doc) OVER (PARTITION BY band, bucket) AS hub
@@ -14038,7 +12612,11 @@ def q_dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(capped) AS BIGINT) AS n_capped_bands
     FROM (SELECT * FROM clique UNION ALL SELECT * FROM star)
     GROUP BY doc_a, doc_b
-    """,
+    """.format(
+        sh=osql.minhash_shingles("sh", "alld"),
+        sig=osql.minhash_sig(),
+        band=osql.minhash_bands(),
+    ),
 )
 def q_dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-bucket-GUARDED MinHash-LSH candidates with the cap FIRING
@@ -14078,9 +12656,9 @@ def q_dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         alld,
         id_col="doc_id",
         text_col="text",
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
+        shingle_n=SHINGLE_N,
+        num_hashes=NEAR_DUP_NUM_HASHES,
+        bands=NEAR_DUP_BANDS,
         hash_fn="md5",
         max_bucket=20,
     )
@@ -14695,33 +13273,8 @@ def q_window_rolling_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_cluster_report",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT DISTINCT doc_id AS doc, lang, source,
-               unnest(string_split_regex(trim(text), '\\s+')) AS shingle
-        FROM documents
-    ), sizes AS (
-        SELECT doc, COUNT(*) AS n_sh FROM tok GROUP BY doc
-    ), common AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-        FROM tok a JOIN tok b
-          ON a.shingle = b.shingle AND a.doc < b.doc
-         AND a.lang = b.lang AND a.source = b.source
-        GROUP BY a.doc, b.doc
-    ), pairs AS (
-        SELECT doc_a, doc_b FROM common
-        JOIN sizes sa ON sa.doc = doc_a
-        JOIN sizes sb ON sb.doc = doc_b
-        WHERE CAST(n_common AS DOUBLE)
-                  / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ), reach(s, d) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ), cc AS (
+    oracle=r"""
+    WITH RECURSIVE {common}, {pairs}, {reach}, cc AS (
         SELECT s AS doc_id, MIN(d) AS cluster_id FROM reach GROUP BY s
     ), csz AS (
         SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS sz
@@ -14732,7 +13285,11 @@ def q_window_rolling_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sz * COUNT(*) AS BIGINT) AS n_docs,
            CAST((sz - 1) * COUNT(*) AS BIGINT) AS n_removable
     FROM csz GROUP BY sz
-    """,
+    """.format(
+        common=osql.ngram_jaccard_common(),
+        pairs=osql.jaccard_pairs(),
+        reach=osql.cc_reach(),
+    ),
 )
 def q_dedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-pass REPORT: cluster-size histogram over the Jaccard≥0.5
@@ -14840,17 +13397,15 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_incremental_embed",
     oracle="WITH "
-    + _EMBED_BUCKET_CTES.format(
-        src="(SELECT vec_id AS uid, embedding FROM embeddings "
+    + osql.embed_buckets(
+        "(SELECT vec_id AS uid, embedding FROM embeddings "
         "WHERE vec_id IS NOT NULL)",
-        tables_m1=3,
+        tables=4,
         # bits=12 (not 8): at 8 bits every random fixture batch vector
         # collides with SOME corpus vector and the survivor set is
         # vacuously empty; 12 bits gives a ~35% dup / 65% survivor mix,
         # so the hash checks BOTH branches
-        bits_m1=11,
-        dim=64,
-        dim_m1=63,
+        bits=12,
     )
     + """
     , dup1 AS (
@@ -14892,7 +13447,7 @@ def q_dedup_incremental_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-read or re-hashed. Unhashable batch rows (NULL vector)
     always survive (the q_dedup_exact NULL discipline). Fully
     value-hashed: buckets are md5-Rademacher × quantized-bigint
-    integers (_EMBED_BUCKET_CTES), so ONE CTE chain replays the whole
+    integers (oracle_sql.embed_buckets), so ONE CTE chain replays the whole
     hash → persist → bipartite-join → append → rejoin composition."""
     from bigdata_retailrocket_recsys_spark.operators.dedup import (
         embed_bucket_table,
@@ -14956,9 +13511,7 @@ def q_dedup_incremental_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT 'c' || CAST(vec_id AS VARCHAR) AS uid, embedding FROM corpus
     ), """
-    + _EMBED_BUCKET_CTES.format(
-        src="allv", tables_m1=3, bits_m1=11, dim=64, dim_m1=63
-    ).lstrip()
+    + osql.embed_buckets("allv", tables=4, bits=12).lstrip()
     + """
     , cand AS (
         SELECT DISTINCT CAST(substring(b.uid, 2) AS BIGINT) AS bvid,
@@ -15037,9 +13590,7 @@ def q_dedup_embed_vs_corpus_apply(
         SELECT 'c' || CAST(vec_id AS VARCHAR) AS uid, embedding FROM src
         WHERE ((vec_id % 5) + 5) % 5 >= 2
     ), """
-    + _EMBED_BUCKET_CTES.format(
-        src="allv", tables_m1=3, bits_m1=11, dim=64, dim_m1=63
-    ).lstrip()
+    + osql.embed_buckets("allv", tables=4, bits=12).lstrip()
     + """
     , bprobe AS (
         SELECT uid, t, bucket FROM bk WHERE uid LIKE 'b%'
@@ -15118,9 +13669,7 @@ def q_dedup_embed_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                      CAST(b.embedding AS DOUBLE[])) >= 0.6
     ), """
-    + _EMBED_BUCKET_CTES.format(
-        src="allv", tables_m1=3, bits_m1=11, dim=64, dim_m1=63
-    ).lstrip()
+    + osql.embed_buckets("allv", tables=4, bits=12).lstrip()
     + """
     , cand AS (
         SELECT DISTINCT a.uid AS vid_a, b.uid AS vid_b
@@ -15224,13 +13773,11 @@ def q_scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_stream_embed_commit",
     oracle="WITH "
-    + _EMBED_BUCKET_CTES.format(
-        src="(SELECT vec_id AS uid, embedding FROM embeddings "
+    + osql.embed_buckets(
+        "(SELECT vec_id AS uid, embedding FROM embeddings "
         "WHERE vec_id IS NOT NULL)",
-        tables_m1=3,
-        bits_m1=11,
-        dim=64,
-        dim_m1=63,
+        tables=4,
+        bits=12,
     )
     + """
     , dup1 AS (
@@ -15284,27 +13831,7 @@ def q_stream_embed_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id AS doc, ((doc_id % 4) + 4) % 4 AS m,
                string_split_regex(trim(text), '\s+') AS toks
         FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ), g AS (
-        SELECT doc, m, st - 1 AS pos,
-               md5(array_to_string(list_slice(toks, st, st + 2), ' ')) AS h
-        FROM (SELECT doc, m, toks,
-                     unnest(generate_series(1, GREATEST(len(toks) - 2, 1)))
-                         AS st
-              FROM base)
-    ), n AS (
-        SELECT doc, COUNT(*) AS npos FROM g GROUP BY doc
-    ), wnd AS (
-        SELECT g.doc, g.m, g.pos, g.h, w.j
-        FROM g JOIN n USING (doc),
-             LATERAL (SELECT unnest(generate_series(
-                 GREATEST(g.pos - 3, 0),
-                 LEAST(g.pos, GREATEST(n.npos - 4, 0)))) AS j) w
-    ), pick AS (
-        SELECT DISTINCT doc, m, h FROM (
-            SELECT doc, m, pos, h, ROW_NUMBER() OVER (
-                PARTITION BY doc, j ORDER BY h ASC, pos DESC) AS rn
-            FROM wnd) WHERE rn = 1
-    ), dup1 AS (
+    ), {winnow}, dup1 AS (
         SELECT DISTINCT bd FROM (
             SELECT b.doc AS bd, c.doc AS cd
             FROM pick b JOIN pick c ON b.h = c.h
@@ -15330,7 +13857,9 @@ def q_stream_embed_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.doc_id, d.source FROM documents d
     WHERE d.doc_id IN (SELECT doc_id FROM s1
                        UNION ALL SELECT doc_id FROM s2)
-    """,
+    """.format(
+        winnow=osql.winnow_fingerprints(carry="m", counts=False),
+    ),
 )
 def q_stream_winnowing_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING winnowing commit loop (streaming/winnow_intake

@@ -24,8 +24,7 @@ Usage::
     python scripts/volume_probe.py tpch --copies 20
     python scripts/volume_probe.py ops --docs 1000000 --edges 3000000
 
-Results are recorded as CLAUDE.md datapoints (the working-notes
-discipline of rounds 5-6).
+Results are recorded as measurement lines in CHANGES.md.
 """
 
 from __future__ import annotations

@@ -3357,6 +3357,19 @@ def test_simhash_md5_matches_python_replay(spark, bits):
     assert pairs == exp and (1, 5) in pairs and pairs[(1, 5)] == 0
 
 
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_simhash_lane_cap_raises(spark, hash_fn):
+    """Both bit sources share the SWAR reducer, whose 16-bit lanes hold
+    at most 65,535 bit counts: a doc with 65,536 distinct shingles must
+    raise, not carry silently into the next lane."""
+    from bigdata_retailrocket_recsys_spark.operators.dedup import simhash
+
+    text = " ".join(f"t{i}" for i in range(65536))
+    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+    with pytest.raises(Exception, match="lanes overflow"):
+        simhash(df, shingle_n=1, hash_fn=hash_fn).collect()
+
+
 def test_quality_filter_matches_score_thresholds(spark):
     """quality_filter (the narrow gate) must keep exactly the ids that
     quality_score's feature table says clear the same thresholds — the

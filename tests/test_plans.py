@@ -418,6 +418,24 @@ def test_simhash128_band_join_is_equi_not_nested_loop(spark):
     )
     assert "NestedLoop" not in plan, plan
     assert "sequence(0, 63" not in plan
+    # the md5 tier shares the SWAR reducer: the map-side signature
+    # aggregate is one count plus 16 lane-packed sums per 64-bit word
+    # (33 functions at 128 bits), not one sum per bit (129). The plan
+    # string elides long function lists as "... N more fields".
+    sig_aggs = [
+        line for line in plan.splitlines()
+        if "HashAggregate" in line and "partial_try_sum(((h0" in line
+    ]
+    assert sig_aggs, plan
+    for line in sig_aggs:
+        more = re.search(r"\.\.\. (\d+) more fields", line)
+        n_funcs = (
+            line.count("partial_count(")
+            + line.count("partial_try_sum(")
+            + (int(more.group(1)) if more else 0)
+        )
+        assert n_funcs == 1 + 16 * 2, line
+        assert "nibs" not in line, line
 
 
 def test_lsh_exactint_broadcasts_queries(spark):
