@@ -12,9 +12,9 @@ its body at 8. An entry writes ``WITH {gate}, keepers AS (`` and formats
 (``gopher_counts``, ``lm_logprob``) or a whole oracle
 (``simhash_md5_pairs``).
 
-The rendered SQL is the driver contract: ``tests/test_oracle_manifest.py``
+The rendered SQL is the oracle contract: ``tests/test_oracle_manifest.py``
 locks every oracle's text by sha256, so a fragment edit that changes a
-byte fails there before it can change what the driver runs. The docstring
+byte fails there before it can change the SQL the oracle check runs. The docstring
 of each fragment names the Spark function it mirrors; a change to that
 function's rule changes the fragment, and with it every oracle that
 replays it. The MinHash and shingle fragments read the same

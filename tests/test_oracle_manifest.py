@@ -1,5 +1,5 @@
-"""The DuckDB oracle contract: ``__spark_entry__.oracle_sql()`` is what the
-external driver runs, so its text is locked byte for byte.
+"""The DuckDB oracle contract: ``__spark_entry__.oracle_sql()`` is the SQL
+every oracle check runs, so its text is locked byte for byte.
 
 ``oracle_sql.sha256.json`` maps every oracle name to the sha256 of its SQL.
 A refactor of how the oracles are written (shared fragments in
