@@ -650,16 +650,21 @@ def _swar_signatures(sh: DataFrame, word_cols: list[str]) -> DataFrame:
     aggregation with the row count, then the majority rule
     (vote_j > 0 ⟺ 2·Σbit_j > n); NO bit explode — the r7 volume probe
     measured the explode form (64 vote rows per shingle → 1.9B rows at
-    1M docs) at 578 s vs ~20 s for this shape. Lane capacity bounds
-    per-doc shingle counts at 65535, and a top-lane bit count at 32767
-    (that lane holds the sign bit); exceeding either would carry between
-    lanes or overflow the long, so the majority expression routes
-    through a ``raise_error`` guard instead (a 65k-DISTINCT-shingle doc
-    is ~400 KB of unique bigrams — cap or pre-split such docs). Returns one
-    signature column per word column, named ``sig0, sig1, ...``."""
-    # try_sum: the top lane sits on the sign bit, so under ANSI a plain
-    # sum raises ARITHMETIC_OVERFLOW once a top-lane count reaches 32768
-    # and pre-empts the named guard; try_sum turns that into NULL
+    1M docs) at 578 s vs ~20 s for this shape.
+
+    Lane capacity: a lane holds a bit count up to 65,535, but the top
+    lane sits on the long's sign bit, so a top-lane count of 32,768
+    overflows the sum. A doc of n ≤ 32,767 distinct shingles therefore
+    always fits; above that a doc fails as soon as one of its top-lane
+    counts reaches 32,768 (for hashed bits, count ≈ n/2, so in practice
+    from n ≈ 64,500), and n ≥ 65,536 always fails. Failing means the
+    named ``raise_error`` guard, never a carry into the next lane or a
+    wrong bit (a 32k-DISTINCT-shingle doc is ~200 KB of unique bigrams
+    — cap or pre-split such docs). Returns one signature column per word
+    column, named ``sig0, sig1, ...``."""
+    # try_sum turns the top lane's overflow into NULL (a plain sum would
+    # wrap without ANSI and raise ARITHMETIC_OVERFLOW with it), and the
+    # guard below turns NULL into the named error
     sums = sh.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n"),
         *[
@@ -723,10 +728,12 @@ def simhash(
       read back to front and parsed as a signed 64-bit integer, so its
       bit ``j`` is exactly bit ``j%4`` of nibble ``16i + j//4``.
 
-    Both sources feed the same SWAR reducer (:func:`_swar_signatures`),
-    so the 65,535-distinct-shingles-per-doc lane cap (a ``raise_error``
-    past it) holds for both; before the md5 tier shared the reducer it
-    summed one bit per aggregate buffer and had no cap.
+    Both sources feed the same SWAR reducer (:func:`_swar_signatures`)
+    and share its lane cap: a doc of up to 32,767 distinct shingles
+    always fits, one of 65,536 or more always raises ``lanes overflow``,
+    and in between it raises once a top-lane bit count reaches 32,768
+    (in practice from about 64,500). Before the md5 tier shared the
+    reducer it summed one bit per aggregate buffer and had no cap.
 
     Signature bit j = (Σ ±1 votes over the doc's distinct shingles) > 0."""
     if bits not in (64, 128):

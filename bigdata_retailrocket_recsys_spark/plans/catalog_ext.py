@@ -9781,11 +9781,7 @@ def q_stream_corpus_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, toks,
                      unnest(generate_series(1, len(toks))) AS p
               FROM tr)
-    ), {sp}, cov AS (
-        SELECT DISTINCT doc_id, p
-        FROM (SELECT doc_id, unnest(generate_series(s, s + 2)) AS p
-              FROM sp WHERE span IN (SELECT shingle FROM ev))
-    ), flagged AS (
+    ), {cover}, flagged AS (
         SELECT t.doc_id, t.p, t.t, c.p IS NOT NULL AS rm
         FROM tok t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.p = c.p
     )
@@ -9796,7 +9792,7 @@ def q_stream_corpus_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY p ASC), '') AS text_clean
     FROM flagged GROUP BY doc_id
     """.format(
-        sp=osql.span_rows("tr", n=3),
+        cover=osql.eval_span_cover("tr", n=3),
     ),
 )
 def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9834,11 +9830,7 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, toks,
                      unnest(generate_series(1, len(toks))) AS p
               FROM train)
-    ), {sp}, cov AS (
-        SELECT DISTINCT doc_id, p
-        FROM (SELECT doc_id, unnest(generate_series(s, s + 2)) AS p
-              FROM sp WHERE span IN (SELECT shingle FROM ev))
-    ), reb AS (
+    ), {cover}, reb AS (
         SELECT t.doc_id,
                COALESCE(string_agg(CASE WHEN c.p IS NULL THEN t.t END, ' '
                                    ORDER BY t.p ASC), '') AS text_clean
@@ -9855,7 +9847,7 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate=osql.quality_gate(),
         keepers=osql.exact_keepers(),
         ev=osql.eval_shingles("ev"),
-        sp=osql.span_rows("train", n=3),
+        cover=osql.eval_span_cover("train", n=SHINGLE_N),
         toks2=osql.budget_order("toks2", h="hk"),
         cum=osql.budget_cumsum(src="toks2", h="hk"),
     ),

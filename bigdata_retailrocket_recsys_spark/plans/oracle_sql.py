@@ -211,11 +211,11 @@ def budget_order(name: str = "toks", src: str = "clean", h: str = "h") -> str:
     )"""
 
 
-def budget_cumsum(name: str = "cum", src: str = "toks", h: str = "h") -> str:
-    """``operators.splits.token_budget_sample``'s running total: per
-    domain, the cumulative ``n_tok`` in (md5 key, doc_id) order; the
+def budget_cumsum(src: str = "toks", h: str = "h") -> str:
+    """``operators.splits.token_budget_sample``'s running total ``cum``:
+    per domain, the cumulative ``n_tok`` in (md5 key, doc_id) order; the
     caller keeps the prefix with ``cum_tok`` ≤ budget."""
-    return f"""{name} AS (
+    return f"""cum AS (
         SELECT doc_id, domain, n_tok,
                CAST(SUM(n_tok) OVER (
                    PARTITION BY domain ORDER BY {h} ASC, doc_id ASC
@@ -349,12 +349,13 @@ def shingle_overlap() -> str:
     )"""
 
 
-def band_candidates(name: str = "cand", src: str = "band") -> str:
-    """``operators.dedup.minhash_lsh_candidates``' candidate pairs: docs
-    sharing a (band, bucket) in ``src``, each pair once, doc_a < doc_b."""
-    return f"""{name} AS (
+def band_candidates() -> str:
+    """``operators.dedup.minhash_lsh_candidates``' candidate pairs
+    ``cand``: docs sharing a (band, bucket) in ``band``, each pair once,
+    doc_a < doc_b."""
+    return """cand AS (
         SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-        FROM {src} a JOIN {src} b
+        FROM band a JOIN band b
           ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
     )"""
 
@@ -624,17 +625,29 @@ def embed_buckets(src: str, *, tables: int, bits: int) -> str:
     )
 
 
-def span_rows(src: str, n: int = SUBSTRING_N, name: str = "sp") -> str:
-    """``operators.dedup.strip_duplicated_spans``' candidate spans: every
-    word ``n``-gram ``span`` of ``src``'s ``toks`` with its 0-based start
-    ``s`` (docs shorter than ``n`` words have none)."""
+def span_rows(src: str, n: int = SUBSTRING_N) -> str:
+    """``operators.dedup.strip_duplicated_spans``' candidate spans ``sp``:
+    every word ``n``-gram ``span`` of ``src``'s ``toks`` with its 0-based
+    start ``s`` (docs shorter than ``n`` words have none)."""
     m = n - 1
-    return f"""{name} AS (
+    return f"""sp AS (
         SELECT doc_id, st - 1 AS s,
                array_to_string(list_slice(toks, st, st + {m}), ' ') AS span
         FROM (SELECT doc_id, toks,
                      unnest(generate_series(1, len(toks) - {m})) AS st
               FROM {src} WHERE len(toks) >= {n})
+    )"""
+
+
+def eval_span_cover(src: str, n: int) -> str:
+    """``operators.dedup.strip_contaminated_spans``' cut: the word
+    ``n``-gram spans of ``src`` (:func:`span_rows`) and every token
+    position ``p`` covered by a span that the eval shingle set ``ev``
+    holds (``cov``)."""
+    return span_rows(src, n) + f""", cov AS (
+        SELECT DISTINCT doc_id, p
+        FROM (SELECT doc_id, unnest(generate_series(s, s + {n - 1})) AS p
+              FROM sp WHERE span IN (SELECT shingle FROM ev))
     )"""
 
 

@@ -3357,14 +3357,17 @@ def test_simhash_md5_matches_python_replay(spark, bits):
     assert pairs == exp and (1, 5) in pairs and pairs[(1, 5)] == 0
 
 
+@pytest.mark.parametrize("n_tokens", [65535, 65536])
 @pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
-def test_simhash_lane_cap_raises(spark, hash_fn):
-    """Both bit sources share the SWAR reducer, whose 16-bit lanes hold
-    at most 65,535 bit counts: a doc with 65,536 distinct shingles must
-    raise, not carry silently into the next lane."""
+def test_simhash_lane_cap_raises(spark, hash_fn, n_tokens):
+    """Both bit sources share the SWAR reducer. 65,536 distinct shingles
+    trip the row-count guard; at 65,535 the row count fits a lane but
+    some top-lane bit count (≈ n/2, on the long's sign bit) reaches
+    32,768 and overflows its sum, which must raise the same named error
+    rather than fail with ARITHMETIC_OVERFLOW or decode a wrong bit."""
     from bigdata_retailrocket_recsys_spark.operators.dedup import simhash
 
-    text = " ".join(f"t{i}" for i in range(65536))
+    text = " ".join(f"t{i}" for i in range(n_tokens))
     df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
     with pytest.raises(Exception, match="lanes overflow"):
         simhash(df, shingle_n=1, hash_fn=hash_fn).collect()
