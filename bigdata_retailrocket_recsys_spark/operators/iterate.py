@@ -21,9 +21,9 @@ keep the lifetime their operators document.
 - Rounds: the iterative operators (``connected_components*`` in
   dedup.py; ``pagerank``, ``pagerank_exact``, ``k_core`` and
   ``bfs_distances`` in graph.py) loop through :meth:`Iteration.fixpoint`:
-  per round one eager ``localCheckpoint`` job carrying the step's
-  ``Observation`` metrics, no added Exchange, a constant-size plan for
-  the next round. With a convergence test, not converging within
+  per round one job that fills a ``localCheckpoint`` and carries the
+  step's ``Observation`` metrics, no added Exchange, a constant-size
+  plan for the next round. With a convergence test, not converging within
   ``max_iter`` rounds raises RuntimeError; without one, exactly
   ``max_iter`` rounds run.
 """
@@ -100,11 +100,20 @@ class Iteration:
         self.rounds = 0  # rounds run by the last fixpoint
 
     def checkpoint(self, df: DataFrame, *metrics: Column) -> Round:
-        """Eagerly checkpoint ``df``; ``metrics`` ride the same job."""
-        obs = Observation() if metrics else None
-        df = (df.observe(obs, *metrics) if obs else df).localCheckpoint(True)
+        """Eagerly checkpoint ``df``; ``metrics`` ride the same job.
+
+        The checkpoint's RDD is owned before the job that fills it runs,
+        so a raise in that job's last stage still releases it."""
+        df = df.localCheckpoint(False)
         rdd = df._jdf.queryExecution().logical().rdd()
         self._release[_pin_key(df, rdd)] = lambda: rdd.unpersist(False)
+        obs = Observation() if metrics else None
+        # an RDD without partitions has nothing to fill, but a write runs
+        # one task regardless: only an Observation needs it then
+        if obs or rdd.getNumPartitions():
+            (df.observe(obs, *metrics) if obs else df).write.format(
+                "noop"
+            ).mode("overwrite").save()
         return Round(df, obs.get if obs else {})
 
     def cache(self, df: DataFrame) -> DataFrame:

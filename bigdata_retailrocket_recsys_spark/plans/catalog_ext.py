@@ -1026,24 +1026,21 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark) → per-type counts. Bounded source ⇒
     equals batch DISTINCT ⇒ full oracle."""
     from bigdata_retailrocket_recsys_spark.sources.readers import events_stream
-    from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+    from bigdata_retailrocket_recsys_spark.streaming import (
+        SINK,
+        run_available_now,
+        stream_session,
+    )
 
-    pin_streaming_confs(spark)
+    session = stream_session(spark)
     out = (
-        events_stream(spark, sf_dir).select("event_id", "event_type")
+        events_stream(session, sf_dir).select("event_id", "event_type")
         .dropDuplicates(["event_id", "event_type"])
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bdrr_stream_dedup")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("bdrr_stream_dedup")
+    run_available_now(out, output_mode="complete")
+    return session.table(SINK)
 
 
 @query("q_stream_dedup_watermarked", oracle=_STREAM_DEDUP_ORACLE)
@@ -1056,26 +1053,23 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result equals batch DISTINCT and the same oracle applies (the
     semantic difference is purely the state-store eviction contract)."""
     from bigdata_retailrocket_recsys_spark.sources.readers import events_stream
-    from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+    from bigdata_retailrocket_recsys_spark.streaming import (
+        SINK,
+        run_available_now,
+        stream_session,
+    )
 
-    pin_streaming_confs(spark)
+    session = stream_session(spark)
     out = (
-        events_stream(spark, sf_dir)
+        events_stream(session, sf_dir)
         .select("event_id", "event_type", "ts")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id", "event_type"])
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bdrr_stream_dedup_wm")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("bdrr_stream_dedup_wm")
+    run_available_now(out, output_mode="complete")
+    return session.table(SINK)
 
 
 @query(
@@ -1096,14 +1090,18 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     enrichment (no state, dim re-resolved each batch). Bounded source ⇒
     equals the batch join ⇒ full oracle."""
     from bigdata_retailrocket_recsys_spark.sources.readers import events_stream
-    from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+    from bigdata_retailrocket_recsys_spark.streaming import (
+        SINK,
+        run_available_now,
+        stream_session,
+    )
 
-    pin_streaming_confs(spark)
-    stream = events_stream(spark, sf_dir).withColumn(
+    session = stream_session(spark)
+    stream = events_stream(session, sf_dir).withColumn(
         "user_bucket", F.col("user_id") % 10
     )
     static_dim = (
-        _t(spark, sf_dir, "events")
+        _t(session, sf_dir, "events")
         .select((F.col("user_id") % 10).alias("user_bucket"))
         .distinct()
     )
@@ -1112,15 +1110,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_bucket")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bdrr_stream_static")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("bdrr_stream_static")
+    run_available_now(out, output_mode="complete")
+    return session.table(SINK)
 
 
 @query(
@@ -1703,11 +1694,7 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return run_streaming_tumbling(
-        spark,
-        sf_dir,
-        window="1 hour",
-        slide="30 minutes",
-        sink_table="bdrr_stream_sliding",
+        spark, sf_dir, window="1 hour", slide="30 minutes"
     )
 
 

@@ -219,21 +219,27 @@ def run_generator_stream(
     *,
     rows: int = 30_000,
     batch_rows: int = 10_000,
-    sink_table: str = "bdrr_gen_stream",
     timeout_s: float = 120.0,
 ):
-    """Drive the generator's micro-batch reader to exhaustion: complete-mode
-    aggregate over ``rows // batch_rows`` batches, polling the memory sink
-    until every generated row is accounted for (Python micro-batch sources
-    don't support Trigger.AvailableNow), then stop. Returns the final
+    """Drive the generator's micro-batch reader to exhaustion in the
+    caller's stream session: complete-mode aggregate over
+    ``rows // batch_rows`` batches, polling the memory sink until every
+    generated row is accounted for (Python micro-batch sources don't
+    support Trigger.AvailableNow), then stop. Returns the final
     aggregate — batch-equal, so the catalog query carries a full oracle."""
     import time
 
     from pyspark.sql import functions as F
 
-    register_events_generator(spark)
+    from bigdata_retailrocket_recsys_spark.streaming import (
+        SINK,
+        stream_session,
+    )
+
+    session = stream_session(spark)
+    register_events_generator(session)
     st = (
-        spark.readStream.format("bdrr_events_gen")
+        session.readStream.format("bdrr_events_gen")
         .option("rows", rows)
         .option("batch_rows", batch_rows)
         .load()
@@ -247,7 +253,7 @@ def run_generator_stream(
     )
     q = (
         out.writeStream.format("memory")
-        .queryName(sink_table)
+        .queryName(SINK)
         .outputMode("complete")
         .trigger(processingTime="0 seconds")
         .start()
@@ -255,7 +261,7 @@ def run_generator_stream(
     deadline = time.time() + timeout_s
     got = 0
     while time.time() < deadline:
-        got = spark.table(sink_table).agg(F.sum("n_events")).collect()[0][0] or 0
+        got = session.table(SINK).agg(F.sum("n_events")).collect()[0][0] or 0
         if got >= rows:
             break
         time.sleep(0.3)
@@ -264,7 +270,7 @@ def run_generator_stream(
     if got < rows:
         # the stream may have delivered the remaining rows between the last
         # poll and the deadline — re-read once after stop before deciding
-        got = spark.table(sink_table).agg(F.sum("n_events")).collect()[0][0] or 0
+        got = session.table(SINK).agg(F.sum("n_events")).collect()[0][0] or 0
     if got < rows:
         # A partial aggregate must be a loud timeout, not a confusing oracle
         # hash mismatch downstream (ADVICE r2 #4).
@@ -272,4 +278,4 @@ def run_generator_stream(
             f"run_generator_stream: sink reached {got}/{rows} rows within "
             f"{timeout_s}s — raise timeout_s or reduce rows"
         )
-    return spark.table(sink_table)
+    return session.table(SINK)

@@ -5,7 +5,7 @@ At 100 TB the corpus never arrives at once: crawl shards land as files
 and the gate/dedup should run AT INGEST, not as a nightly rebuild. This
 runner stages the documents table to session scratch, streams it back
 file-by-file (``maxFilesPerTrigger`` — a real multi-micro-batch
-lifecycle, the q_stream_late_drop staging pattern), quality-gates each
+lifecycle), quality-gates each
 batch with the SAME narrow filter the batch pipeline uses, dedups on the
 16-byte digest of NORMALIZED text (``dropDuplicates`` — seen-digest
 state; production bounds it with dropDuplicatesWithinWatermark or the
@@ -30,7 +30,12 @@ from bigdata_retailrocket_recsys_spark.operators.text import (
 )
 from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
-from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+from bigdata_retailrocket_recsys_spark.streaming import (
+    SINK,
+    run_available_now,
+    staged_stream,
+    stream_session,
+)
 
 
 def run_streaming_corpus_intake(
@@ -40,19 +45,18 @@ def run_streaming_corpus_intake(
     eval_source: str = "src0",
     min_quality: float = 0.5,
     min_tokens: int = 5,
-    sink_table: str = "bdrr_stream_corpus_intake",
 ) -> DataFrame:
     """Stage → stream → gate → digest-dedup → per-domain counts.
 
     Output: (domain, n_docs [distinct accepted digests], n_tokens
     [normalized whitespace tokens summed over those digests]).
     """
-    pin_streaming_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    stage = session_scratch(spark, "corpus_intake_stage")
+    session = stream_session(spark)
+    docs = load_table(session, sf_dir, "documents")
+    stage = session_scratch(session, "corpus_intake_stage")
     docs.write.mode("overwrite").parquet(stage)
     stream = (
-        spark.readStream.schema(docs.schema)
+        session.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 8)
         .parquet(stage)
     )
@@ -77,15 +81,8 @@ def run_streaming_corpus_intake(
             F.sum("n_tok").cast("bigint").alias("n_tokens"),
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    run_available_now(out, output_mode="complete")
+    return session.table(SINK)
 
 
 def run_streaming_corpus_commit(
@@ -105,11 +102,10 @@ def run_streaming_corpus_commit(
 
     Determinism for the oracle: the day-0 corpus (doc_id % 4 ∈ {2,3},
     gated) seeds the digest table; the batch stream is TWO staged files
-    (% 4 = 1, then % 4 = 0) under ``maxFilesPerTrigger=1`` +
-    ``latestFirst=false`` (the late-drop staging pattern), so the
-    commit order — and therefore which duplicate wins across batches —
-    is pinned, and the final corpus-rows artifact equals the two-step
-    batch chain exactly.
+    (% 4 = 1, then % 4 = 0), one micro-batch each in that order
+    (``streaming.staged_stream``), so the commit order — and therefore
+    which duplicate wins across batches — is pinned, and the final
+    corpus-rows artifact equals the two-step batch chain exactly.
 
     Output: the committed rows (doc_id, domain, n_tok).
     """
@@ -123,8 +119,8 @@ def run_streaming_corpus_commit(
         corpus_commit,
     )
 
-    pin_streaming_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
+    session = stream_session(spark)
+    docs = load_table(session, sf_dir, "documents")
     base = docs.filter(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     ).select("doc_id", "text", "source")
@@ -133,23 +129,16 @@ def run_streaming_corpus_commit(
         .filter(F.col("source").isNull() | (F.col("source") != eval_source))
         .withColumn("__norm", normalize_text("text"))
     )
-    dig_path = session_scratch(spark, "stream_commit_digests")
-    rows_path = session_scratch(spark, "stream_commit_rows")
+    dig_path = session_scratch(session, "stream_commit_digests")
+    rows_path = session_scratch(session, "stream_commit_rows")
     _sh.rmtree(rows_path, ignore_errors=True)  # append-only artifact
     content_digest_table(corp0, dig_path, key_cols=["__norm"])
-    stage = session_scratch(spark, "stream_commit_stage")
-    base.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage + "/f=0")
-    base.filter(F.col("doc_id") % 4 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage + "/f=1")
     eval_docs = base.filter(F.col("source") == eval_source)
 
     def _decide_and_commit(batch_df: DataFrame, _batch_id: int) -> None:
         acc = build_corpus_incremental(
             batch_df,
-            spark.read.parquet(dig_path),
+            batch_df.sparkSession.read.parquet(dig_path),
             eval_docs,
             eval_source=eval_source,
         )
@@ -157,19 +146,13 @@ def run_streaming_corpus_commit(
             batch_df, acc, digest_path=dig_path, corpus_path=rows_path
         )
 
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(stage + "/f=*")
+    stream = staged_stream(
+        session,
+        "stream_commit_stage",
+        [base.filter(F.col("doc_id") % 4 == k) for k in (1, 0)],
     )
-    q = (
-        stream.writeStream.foreachBatch(_decide_and_commit)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    snap = spark.read.parquet(rows_path)
+    run_available_now(stream, foreach_batch=_decide_and_commit)
+    snap = session.read.parquet(rows_path)
     n_tok = F.size(
         F.filter(
             F.split(F.trim(F.lower(F.col("text"))), r"\s+"),

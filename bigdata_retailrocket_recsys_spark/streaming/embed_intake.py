@@ -9,11 +9,11 @@ nightly re-embed). The text-grain twin is
 
 Determinism for the oracle: the day-0 corpus (vec_id % 4 ∈ {2, 3})
 seeds the bucket table; the batch stream is TWO staged files
-(% 4 = 1, then % 4 = 0) under ``maxFilesPerTrigger=1`` +
-``latestFirst=false`` (the late-drop staging pattern), so the commit
-order is pinned and the final committed-rows artifact equals the
-two-step batch chain exactly — which is what the DuckDB oracle replays
-through the shared md5-Rademacher bucket CTEs.
+(% 4 = 1, then % 4 = 0), one micro-batch each in that order
+(``streaming.staged_stream``), so the commit order is pinned and the
+final committed-rows artifact equals the two-step batch chain exactly —
+which is what the DuckDB oracle replays through the shared md5-Rademacher
+bucket CTEs.
 
 refreshByPath discipline (CLAUDE.md hard-won fact): each batch's
 survivors derive from a READ of the very bucket table the commit
@@ -30,7 +30,11 @@ from pyspark.sql import functions as F
 from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
 from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
-from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+from bigdata_retailrocket_recsys_spark.streaming import (
+    run_available_now,
+    staged_stream,
+    stream_session,
+)
 
 
 def run_streaming_embed_commit(
@@ -51,33 +55,26 @@ def run_streaming_embed_commit(
         embed_sign_buckets,
     )
 
-    pin_streaming_confs(spark)
-    emb = load_table(spark, sf_dir, "embeddings").filter(
+    session = stream_session(spark)
+    emb = load_table(session, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull()
     )
     m = F.pmod(F.col("vec_id"), F.lit(4))
     base = emb.select("vec_id", "embedding", "label")
 
-    bucket_path = session_scratch(spark, "stream_embed_buckets")
-    rows_path = session_scratch(spark, "stream_embed_rows")
+    bucket_path = session_scratch(session, "stream_embed_buckets")
+    rows_path = session_scratch(session, "stream_embed_rows")
     _sh.rmtree(rows_path, ignore_errors=True)  # append-only artifact
     embed_bucket_table(
         base.filter(m.isin(2, 3)), bucket_path,
         dim=dim, tables=tables, bits=bits,
-    )
-    stage = session_scratch(spark, "stream_embed_stage")
-    base.filter(m == 1).coalesce(1).write.mode("overwrite").parquet(
-        stage + "/f=0"
-    )
-    base.filter(m == 0).coalesce(1).write.mode("overwrite").parquet(
-        stage + "/f=1"
     )
 
     def _decide_and_commit(batch_df: DataFrame, _batch_id: int) -> None:
         dup = (
             embed_candidates_vs_corpus(
                 batch_df,
-                spark.read.parquet(bucket_path),
+                batch_df.sparkSession.read.parquet(bucket_path),
                 dim=dim, tables=tables, bits=bits,
             )
             .select(F.col("batch_vid").alias("vec_id"))
@@ -96,16 +93,8 @@ def run_streaming_embed_commit(
                 rows_path
             )
 
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(stage + "/f=*")
+    stream = staged_stream(
+        session, "stream_embed_stage", [base.filter(m == k) for k in (1, 0)]
     )
-    q = (
-        stream.writeStream.foreachBatch(_decide_and_commit)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(rows_path).select("vec_id", "label")
+    run_available_now(stream, foreach_batch=_decide_and_commit)
+    return session.read.parquet(rows_path).select("vec_id", "label")

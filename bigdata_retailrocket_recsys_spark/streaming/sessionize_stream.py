@@ -18,13 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
-from bigdata_retailrocket_recsys_spark.streaming import (
-    pin_streaming_confs,
-)
 from bigdata_retailrocket_recsys_spark.sources.readers import (
     events_stream,
     load_table,
+)
+from bigdata_retailrocket_recsys_spark.streaming import (
+    SINK,
+    run_available_now,
+    staged_stream,
+    stream_session,
 )
 
 
@@ -102,23 +104,15 @@ def run_streaming_tumbling(
     *,
     window: str = "1 hour",
     slide: str | None = None,
-    sink_table: str = "bdrr_stream_tumbling",
 ) -> DataFrame:
     """Events table → parquet file stream → tumbling (or, with ``slide``,
     sliding) window agg → memory sink, Trigger.AvailableNow. Returns the
     sink contents (batch-equal)."""
-    pin_streaming_confs(spark)
-    stream = events_stream(spark, sf_dir)
+    session = stream_session(spark)
+    stream = events_stream(session, sf_dir)
     out = streaming_tumbling_counts(stream, window=window, slide=slide)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    run_available_now(out, output_mode="complete")
+    return session.table(SINK)
 
 
 def run_streaming_sessionize(
@@ -126,23 +120,15 @@ def run_streaming_sessionize(
     sf_dir: str,
     *,
     gap_minutes: int = 30,
-    sink_table: str = "bdrr_stream_sessions",
 ) -> DataFrame:
     """Drive the events table through a real streaming query: parquet file
     source → session_window agg → memory sink, Trigger.AvailableNow (one
     bounded pass — the batch-parity mode). Returns the sink contents."""
-    pin_streaming_confs(spark)
-    stream = events_stream(spark, sf_dir)
+    session = stream_session(spark)
+    stream = events_stream(session, sf_dir)
     out = streaming_session_stats(stream, gap_minutes=gap_minutes)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    run_available_now(out, output_mode="complete")
+    return session.table(SINK)
 
 
 def run_streaming_late_drop(
@@ -151,7 +137,6 @@ def run_streaming_late_drop(
     *,
     split_at: str = "2024-01-16",
     delay: str = "30 minutes",
-    sink_table: str = "bdrr_stream_late_drop",
 ) -> DataFrame:
     """Watermark late-data semantics, demonstrated deterministically.
 
@@ -177,14 +162,11 @@ def run_streaming_late_drop(
     bounded state (closed windows evicted), deterministic late-data
     policy (drop beyond watermark), exactly-once window emission.
     """
-    import os as _os
-    import tempfile as _tmp
-
-    pin_streaming_confs(spark)
+    session = stream_session(spark)
     # staged files bypass events_stream — apply its event-time domain
     # contract (non-null, post-epoch) here so both paths agree
     src = (
-        load_table(spark, sf_dir, "events")
+        load_table(session, sf_dir, "events")
         .select("event_id", "ts")
         .filter(
             F.col("ts").isNotNull()
@@ -192,29 +174,16 @@ def run_streaming_late_drop(
         )
     )
     cut = F.lit(split_at).cast("timestamp")
-    stage = session_scratch(spark, "late_drop_stage")
     early = src.filter(F.col("ts") < cut)
     late_replays = (
         early.filter(F.col("ts") < F.lit("2024-01-02").cast("timestamp"))
         .withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
     )
-    # three files, written oldest-first so the source processes them in
-    # order: early, rest, then the late replays as their own batch
-    early.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(stage, "f=0")
-    )
-    src.filter(F.col("ts") >= cut).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(stage, "f=1"))
-    late_replays.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(stage, "f=2")
-    )
-
-    stream = (
-        spark.readStream.schema("event_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(stage + "/f=*")
+    # three micro-batches in order: early, rest, then the late replays
+    stream = staged_stream(
+        session,
+        "late_drop_stage",
+        [early, src.filter(F.col("ts") >= cut), late_replays],
     )
     out = (
         stream.withWatermark("ts", delay)
@@ -226,25 +195,13 @@ def run_streaming_late_drop(
             "n",
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(out)
     # distinct: a sink table re-registered in the same session could
     # retain rows from a previous run of this query
-    return spark.table(sink_table).distinct()
+    return session.table(SINK).distinct()
 
 
-def run_streaming_observe(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    sink_table: str = "bdrr_stream_observe",
-) -> DataFrame:
+def run_streaming_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming observability: ``observe()`` metrics attached to a file
     stream, totalled across micro-batches.
 
@@ -256,10 +213,8 @@ def run_streaming_observe(
     plain GROUP-BY-less aggregate. (Float sums would NOT be: per-batch
     reduction order differs.) The pattern is how production streams get
     per-batch audit counters without a second pass."""
-    from pyspark.sql import functions as F
-
-    pin_streaming_confs(spark)
-    stream = events_stream(spark, sf_dir)
+    session = stream_session(spark)
+    stream = events_stream(session, sf_dir)
     guarded = F.when(
         ~F.isnan("value") & (F.abs("value") != float("inf")),
         F.col("value"),
@@ -271,14 +226,7 @@ def run_streaming_observe(
         F.count(F.lit(1)).cast("bigint").alias("b_rows"),
         (F.sum(guarded) * 100).cast("bigint").alias("b_sum_cents"),
     )
-    q = (
-        observed.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_available_now(observed)
     n_rows, cents = 0, 0
     for p in q.recentProgress:
         m = p.get("observedMetrics", {}).get("audit")
@@ -288,7 +236,7 @@ def run_streaming_observe(
                 cents += m["b_sum_cents"]
     # cents/100.0 and DuckDB's CAST(decimal AS DOUBLE) are both the
     # correctly-rounded double of the same rational -> bit-identical
-    return spark.createDataFrame(
+    return session.createDataFrame(
         [(n_rows, cents / 100.0)], "n_rows bigint, sum_value double"
     )
 
@@ -336,35 +284,18 @@ def streaming_chained_rollup(
 
 
 def run_streaming_chained_rollup(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    sink_table: str = "bdrr_stream_chained",
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Events parquet stream → hourly agg → 6-hour rollup → memory sink,
     Trigger.AvailableNow + the closing no-data batch. Append emits each
     rollup window once when the final watermark (max event time − delay)
     passes its end — the oracle cuts the identical tail."""
-    pin_streaming_confs(spark)
-    stream = events_stream(spark, sf_dir)
-    out = streaming_chained_rollup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    session = stream_session(spark)
+    run_available_now(streaming_chained_rollup(events_stream(session, sf_dir)))
+    return session.table(SINK)
 
 
-def run_state_reader(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    sink_table: str = "bdrr_state_probe",
-) -> DataFrame:
+def run_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline streaming-state inspection (Spark ≥4.0 State Data
     Source): run a checkpointed tumbling aggregation, then read the
     state store back with ``spark.read.format("statestore")`` — the ops
@@ -375,30 +306,22 @@ def run_state_reader(
     import shutil
     import tempfile
 
-    pin_streaming_confs(spark)
+    session = stream_session(spark)
     # per-application path: two concurrent sessions on one machine must
     # not rmtree each other's live checkpoint (ADVICE r6 #4)
-    app = spark.sparkContext.applicationId.replace(":", "_")
+    app = session.sparkContext.applicationId.replace(":", "_")
     ckpt = os.path.join(
         tempfile.gettempdir(), f"bdrr_state_reader_ckpt_{app}"
     )
     shutil.rmtree(ckpt, ignore_errors=True)
-    stream = events_stream(spark, sf_dir)
+    stream = events_stream(session, sf_dir)
     agg = (
         stream.groupBy(
             F.window(F.col("ts"), "1 hour").alias("w"), F.col("event_type")
         ).agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = spark.read.format("statestore").load(ckpt)
+    run_available_now(agg, output_mode="complete", checkpoint=ckpt)
+    state = session.read.format("statestore").load(ckpt)
     # the value struct's field carries the INTERNAL aggregate buffer name
     # ("count"), not the output alias — resolve it positionally
     buf_field = state.schema["value"].dataType.fields[0].name
@@ -410,10 +333,7 @@ def run_state_reader(
 
 
 def run_streaming_dynamic_gap(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    sink_table: str = "bdrr_stream_dyngap",
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """DYNAMIC-GAP streaming sessionization: ``session_window`` with a
     per-event gap expression (purchases hold the session open 60 min,
@@ -424,8 +344,8 @@ def run_streaming_dynamic_gap(
     oracle replays exactly (an event starting AT the previous max end
     begins a NEW session — interval overlap is strict, same boundary
     rule as fixed-gap session_window)."""
-    pin_streaming_confs(spark)
-    stream = events_stream(spark, sf_dir).filter(
+    session = stream_session(spark)
+    stream = events_stream(session, sf_dir).filter(
         F.col("user_id").isNotNull()
     )
     gap = F.when(
@@ -445,12 +365,5 @@ def run_streaming_dynamic_gap(
             "n_events",
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    run_available_now(out, output_mode="complete")
+    return session.table(SINK)

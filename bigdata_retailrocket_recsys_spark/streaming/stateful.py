@@ -23,10 +23,12 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_retailrocket_recsys_spark.streaming import (
-    pin_streaming_confs,
-)
 from bigdata_retailrocket_recsys_spark.sources.readers import events_stream
+from bigdata_retailrocket_recsys_spark.streaming import (
+    SINK,
+    run_available_now,
+    stream_session,
+)
 from pyspark.sql.types import (
     LongType,
     StructField,
@@ -135,29 +137,21 @@ def run_stateful_sessionize(
     sf_dir: str,
     *,
     gap_minutes: int = 30,
-    sink_table: str = "bdrr_stateful_sessions",
 ) -> DataFrame:
     """Events table → file stream → applyInPandasWithState → memory sink
     (AvailableNow). The bounded source arrives as one micro-batch, so the
     update-mode upserts ARE the final sessions — value-equal to batch
     sessionization with the strict-> rule."""
-    pin_streaming_confs(spark)
+    session = stream_session(spark)
     # batch-sessionize ingest policy: a session needs an identified user
     # and an event time (operators/sessionize.py applies the same filter)
-    stream = events_stream(spark, sf_dir).filter(
+    stream = events_stream(session, sf_dir).filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     out = stateful_sessionize(stream, gap_minutes=gap_minutes)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(out, output_mode="update")
     # the memory sink APPENDS update-mode rows; a real update sink upserts
     # by (user_id, session_start_us). AvailableNow runs a trailing
     # micro-batch where event-time timeouts flush — re-emitting the same
     # final row — so the append log contains exact duplicates: dedupe.
-    return spark.table(sink_table).distinct()
+    return session.table(SINK).distinct()

@@ -17,14 +17,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_retailrocket_recsys_spark.sources.readers import (
+    events_stream,
+    load_table,
+)
 from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
 from bigdata_retailrocket_recsys_spark.streaming import (
-    pin_streaming_confs,
+    SINK,
+    run_available_now,
+    staged_stream,
+    stream_session,
 )
-from bigdata_retailrocket_recsys_spark.sources.readers import (
-    events_stream as _events_stream,
-)
-from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 
 
 def run_stream_stream_join(
@@ -33,7 +36,6 @@ def run_stream_stream_join(
     *,
     horizon: str = "1 hour",
     watermark: str = "2 hours",
-    sink_table: str = "bdrr_stream_ssjoin",
 ) -> DataFrame:
     """Watermarked stream-stream inner join: each purchase matched to the
     same user's views in the preceding ``horizon`` (half-open, strict
@@ -41,9 +43,9 @@ def run_stream_stream_join(
     watermarks + the time-range condition, so Spark can bound and expire
     join state — the production requirement at continuous 100 TB ingest.
     """
-    pin_streaming_confs(spark)
+    session = stream_session(spark)
     views = (
-        _events_stream(spark, sf_dir)
+        events_stream(session, sf_dir)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -53,7 +55,7 @@ def run_stream_stream_join(
         .withWatermark("v_ts", watermark)
     )
     purchases = (
-        _events_stream(spark, sf_dir)
+        events_stream(session, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -75,23 +77,11 @@ def run_stream_stream_join(
         F.unix_micros("v_ts").alias("view_ts_us"),
         F.unix_micros("p_ts").alias("purchase_ts_us"),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    run_available_now(joined)
+    return session.table(SINK)
 
 
-def run_stream_foreach_batch(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    out_path: str | None = None,
-) -> DataFrame:
+def run_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink — the production pattern for exactly-once writes
     to systems without a native streaming sink: each micro-batch arrives
     as a plain DataFrame plus a monotonically increasing batch id, and an
@@ -100,13 +90,10 @@ def run_stream_foreach_batch(
     replays after failure safe. With a bounded source + AvailableNow the
     re-read output equals the batch aggregate → full DuckDB oracle.
     """
-    import os
-    import tempfile
-
-    pin_streaming_confs(spark)
-    out_path = out_path or session_scratch(spark, "stream_foreach_batch")
+    session = stream_session(spark)
+    out_path = session_scratch(session, "stream_foreach_batch")
     agg = (
-        _events_stream(spark, sf_dir)
+        events_stream(session, sf_dir)
         .withWatermark("ts", "2 hours")
         .groupBy("event_type")
         .agg(
@@ -121,14 +108,8 @@ def run_stream_foreach_batch(
         # idempotent: a replayed batch overwrites its own previous output
         batch_df.write.mode("overwrite").parquet(out_path)
 
-    q = (
-        agg.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    run_available_now(agg, output_mode="complete", foreach_batch=write_batch)
+    return session.read.parquet(out_path)
 
 
 def run_stream_upsert_merge(
@@ -136,7 +117,6 @@ def run_stream_upsert_merge(
     sf_dir: str,
     *,
     split_at: str = "2024-01-16",
-    base_path: str | None = None,
 ) -> DataFrame:
     """CDC-style serving-table maintenance: a streaming aggregation in
     UPDATE mode + foreachBatch MERGE keeps a parquet snapshot current —
@@ -153,23 +133,18 @@ def run_stream_upsert_merge(
     complete-mode overwrite.
     """
     import os as _os
-    import shutil as _sh
-    import tempfile as _tmp
 
     from bigdata_retailrocket_recsys_spark.sources.writers import (
         upsert_parquet,
     )
 
-    pin_streaming_confs(spark)
-    base_path = base_path or session_scratch(spark, "stream_upsert")
-    _sh.rmtree(base_path, ignore_errors=True)
-    stage = _os.path.join(base_path, "stage")
-
+    session = stream_session(spark)
+    base_path = session_scratch(session, "stream_upsert")
     # the staged time-split replay needs an event time to route each row —
     # NULL-ts and pre-epoch rows are dropped at ingest (the events_stream
     # event-time domain contract, mirrored in the oracle)
     src = (
-        load_table(spark, sf_dir, "events")
+        load_table(session, sf_dir, "events")
         .filter(
             F.col("ts").isNotNull()
             & (F.col("ts") >= F.timestamp_micros(F.lit(0)))
@@ -177,17 +152,10 @@ def run_stream_upsert_merge(
         .select("event_type", "ts", "value")
     )
     cut = F.lit(split_at).cast("timestamp")
-    src.filter(F.col("ts") < cut).coalesce(1).write.parquet(
-        _os.path.join(stage, "f=0")
-    )
-    src.filter(F.col("ts") >= cut).coalesce(1).write.parquet(
-        _os.path.join(stage, "f=1")
-    )
-
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage + "/f=*")
+    stream = staged_stream(
+        session,
+        "stream_upsert_stage",
+        [src.filter(F.col("ts") < cut), src.filter(F.col("ts") >= cut)],
     )
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -204,7 +172,7 @@ def run_stream_upsert_merge(
             batch_df.write.mode("overwrite").parquet(out)
         else:
             upsert_parquet(
-                spark,
+                batch_df.sparkSession,
                 versions[-1],
                 batch_df,
                 key_cols=["event_type"],
@@ -212,22 +180,11 @@ def run_stream_upsert_merge(
             )
         versions.append(out)
 
-    q = (
-        agg.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(versions[-1])
+    run_available_now(agg, output_mode="update", foreach_batch=merge_batch)
+    return session.read.parquet(versions[-1])
 
 
-def run_streaming_scd2_enrich(
-    spark,
-    sf_dir: str,
-    *,
-    sink_table: str = "bdrr_stream_scd2",
-):
+def run_streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static POINT-IN-TIME enrichment against SCD-type-2
     intervals: each streamed event joins the dimension state that was
     valid AT ITS EVENT TIME (`valid_from <= ts < valid_to`, open-ended
@@ -238,18 +195,9 @@ def run_streaming_scd2_enrich(
     static table), so append mode is exact. Output: per-state event
     counts, batch-deterministic for a bounded source."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from bigdata_retailrocket_recsys_spark.sources.readers import (
-        events_stream,
-        load_table,
-    )
-    from bigdata_retailrocket_recsys_spark.streaming.sessionize_stream import (
-        pin_streaming_confs,
-    )
-
-    pin_streaming_confs(spark)
-    ev = load_table(spark, sf_dir, "events")
+    session = stream_session(spark)
+    ev = load_table(session, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dim = ev.filter(F.col("ts").isNotNull()).select(
         F.col("user_id").alias("d_user"),
@@ -257,7 +205,7 @@ def run_streaming_scd2_enrich(
         F.unix_micros("ts").alias("valid_from_us"),
         F.unix_micros(F.lead("ts").over(w)).alias("valid_to_us"),
     )
-    stream = events_stream(spark, sf_dir).select(
+    stream = events_stream(session, sf_dir).select(
         "user_id", F.unix_micros("ts").alias("ts_us")
     )
     enriched = stream.join(
@@ -270,16 +218,9 @@ def run_streaming_scd2_enrich(
         ),
         "inner",
     ).select("state")
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(enriched)
     return (
-        spark.table(sink_table)
+        session.table(SINK)
         .groupBy("state")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     )

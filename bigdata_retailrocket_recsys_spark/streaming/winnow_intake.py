@@ -11,10 +11,10 @@ streaming.
 
 Determinism for the oracle: the day-0 corpus (doc_id % 4 ∈ {2, 3})
 seeds the fingerprint table; the batch stream is TWO staged files
-(% 4 = 1, then % 4 = 0) under ``maxFilesPerTrigger=1`` +
-``latestFirst=false``, so the commit order is pinned and the committed
-artifact equals the two-step batch chain exactly (unit-locked), which
-one DuckDB CTE chain replays through the winnowing window explode.
+(% 4 = 1, then % 4 = 0), one micro-batch each in that order
+(``streaming.staged_stream``), so the commit order is pinned and the
+committed artifact equals the two-step batch chain exactly (unit-locked),
+which one DuckDB CTE chain replays through the winnowing window explode.
 
 refreshByPath discipline (CLAUDE.md hard-won fact): each batch's
 survivors derive from a READ of the very fingerprint table the commit
@@ -34,7 +34,11 @@ from pyspark.sql import functions as F
 from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
 from bigdata_retailrocket_recsys_spark.sources.readers import load_table
 from bigdata_retailrocket_recsys_spark.sources.scratch import session_scratch
-from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+from bigdata_retailrocket_recsys_spark.streaming import (
+    run_available_now,
+    staged_stream,
+    stream_session,
+)
 
 
 def run_streaming_winnowing_commit(
@@ -55,25 +59,18 @@ def run_streaming_winnowing_commit(
         winnowing_fingerprints,
     )
 
-    pin_streaming_confs(spark)
-    docs = load_table(spark, sf_dir, "documents").filter(
+    session = stream_session(spark)
+    docs = load_table(session, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull()
     )
     m = F.pmod(F.col("doc_id"), F.lit(4))
     base = docs.select("doc_id", "text", "source")
 
-    fp_path = session_scratch(spark, "stream_winnow_fp")
-    rows_path = session_scratch(spark, "stream_winnow_rows")
+    fp_path = session_scratch(session, "stream_winnow_fp")
+    rows_path = session_scratch(session, "stream_winnow_rows")
     _sh.rmtree(rows_path, ignore_errors=True)  # append-only artifact
     winnowing_fingerprint_table(
         base.filter(m.isin(2, 3)), fp_path, k=k, w=w, hash_fn=hash_fn
-    )
-    stage = session_scratch(spark, "stream_winnow_stage")
-    base.filter(m == 1).coalesce(1).write.mode("overwrite").parquet(
-        stage + "/f=0"
-    )
-    base.filter(m == 0).coalesce(1).write.mode("overwrite").parquet(
-        stage + "/f=1"
     )
 
     def _decide_and_commit(batch_df: DataFrame, _batch_id: int) -> None:
@@ -85,7 +82,7 @@ def run_streaming_winnowing_commit(
             .distinct()
         )
         cfp = (
-            spark.read.parquet(fp_path)
+            batch_df.sparkSession.read.parquet(fp_path)
             .select(F.col("doc").alias("cdoc"), "fp")
             .distinct()
         )
@@ -110,16 +107,8 @@ def run_streaming_winnowing_commit(
                 rows_path
             )
 
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(stage + "/f=*")
+    stream = staged_stream(
+        session, "stream_winnow_stage", [base.filter(m == k) for k in (1, 0)]
     )
-    q = (
-        stream.writeStream.foreachBatch(_decide_and_commit)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(rows_path).select("doc_id", "source")
+    run_available_now(stream, foreach_batch=_decide_and_commit)
+    return session.read.parquet(rows_path).select("doc_id", "source")

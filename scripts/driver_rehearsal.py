@@ -6,7 +6,8 @@ using the driver's compare (sorted column names, stringified rows).
 The driver samples ~50 of the catalog per round and rotates; this runs all
 of them, so a rotation can't surprise us. Each result line carries the
 entry's Spark-side wall (build, collect and the pandas/arrow conversions;
-DuckDB excluded), and the run ends with the ten slowest entries. Usage:
+DuckDB excluded), and the run ends with the ten slowest entries and the
+runtime confs the sweep changed in the driver's session. Usage:
 
     python scripts/driver_rehearsal.py [sf_dir]     # default /root/testdata/sf0.01
     python scripts/driver_rehearsal.py tests/_advdata   # adversarial fixture
@@ -71,6 +72,7 @@ def _spark(name, fn):
         _spark_s[name] = _spark_s.get(name, 0.0) + time.perf_counter() - t0
 
 
+_conf_before = spark.conf.getAll
 bad = []
 for i, name in enumerate(sorted(qs)):
     try:
@@ -155,6 +157,22 @@ _slowest = sorted(_spark_s.items(), key=lambda kv: -kv[1])[:10]
 print(
     f"SLOWEST: spark total {sum(_spark_s.values()):.1f}s; "
     + ", ".join(f"{n} {s:.1f}s" for n, s in _slowest),
+    flush=True,
+)
+# what the sweep left behind in the caller's session: an entry that sets
+# a conf there changes every entry the driver runs after it
+_conf_after = spark.conf.getAll
+print(
+    "CONF: "
+    + (
+        "; ".join(
+            f"{k} {_conf_before.get(k, '<unset>')}"
+            f" → {_conf_after.get(k, '<unset>')}"
+            for k in sorted(set(_conf_before) | set(_conf_after))
+            if _conf_before.get(k) != _conf_after.get(k)
+        )
+        or "unchanged"
+    ),
     flush=True,
 )
 if _peak_bytes > _bound:

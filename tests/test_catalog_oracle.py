@@ -117,3 +117,27 @@ def test_contract_shapes():
     os_ = e.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 40
+
+
+@pytest.mark.slow
+def test_stream_entries_leave_the_callers_session_alone(spark):
+    """Stream entries run in the caller's stream session: a caller with a
+    non-UTC time zone and 200 shuffle partitions gets the same rows as
+    the test session, and its conf is the same afterwards, over memory
+    sinks (stateful sessionize, stream-stream join) and a foreachBatch
+    sink (upsert merge)."""
+    names = [
+        "q_stream_stateful_sessionize",
+        "q_stream_stream_join",
+        "q_stream_upsert_merge",
+    ]
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", "America/New_York")
+    caller.conf.set("spark.sql.shuffle.partitions", "200")
+    before = caller.conf.getAll
+    for name in names:
+        fn = QUERIES[name].fn
+        got = sorted(map(_sortable, fn(caller, SF_ORACLE).collect()))
+        want = sorted(map(_sortable, fn(spark, SF_ORACLE).collect()))
+        assert got == want, name
+    assert caller.conf.getAll == before

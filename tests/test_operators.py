@@ -831,6 +831,31 @@ def test_operator_releases_its_pins_when_its_job_raises(spark, op, tmp_path):
     assert not added, (op, sorted(added))
 
 
+@pytest.mark.fast
+@pytest.mark.parametrize("with_metrics", [False, True])
+def test_checkpoint_releases_its_rdd_when_its_own_job_raises(
+    spark, with_metrics
+):
+    """A raise in the checkpoint job itself, with no shuffle before it,
+    fails the job that fills the checkpoint's RDD: the Iteration still
+    releases that RDD."""
+    from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
+
+    frame = spark.range(16).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("planted failure")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    metrics = [F.count(F.lit(1)).alias("n")] if with_metrics else []
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(Exception, match="planted failure"):
+        with Iteration() as it:
+            it.checkpoint(frame, *metrics)
+    added = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert not added, sorted(added)
+
+
 def test_tfidf_hand_computed(spark):
     import math
 
@@ -4324,9 +4349,7 @@ def test_streaming_corpus_intake_gates_and_dedups(spark, tmp_path):
     docs.write.parquet(f"{sf}/documents.parquet")
     out = {
         r.domain: (r.n_docs, r.n_tokens)
-        for r in run_streaming_corpus_intake(
-            spark, sf, sink_table="bdrr_test_intake"
-        ).collect()
+        for r in run_streaming_corpus_intake(spark, sf).collect()
     }
     assert out == {"srcA": (1, 12), "srcB": (1, 13)}
 

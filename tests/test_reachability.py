@@ -173,3 +173,42 @@ def test_pins_go_through_iteration():
         "pin call-scoped storage through operators/iterate.Iteration "
         "(it.cache / it.checkpoint / it.result):\n  " + "\n  ".join(sorted(found))
     )
+
+
+# the attributes that start, await or spawn a session for a stream
+_STREAM_STARTS = {"writeStream", "awaitTermination", "newSession"}
+
+
+@pytest.mark.fast
+def test_streams_start_through_the_streaming_package():
+    """Every stream starts in ``streaming/__init__.py``, in the caller's
+    stream session: a query started anywhere else runs in the caller's
+    session, with its shuffle width as state-store width and whatever
+    confs the runner sets left behind in it."""
+    owner = os.path.join(PKG, "streaming", "__init__.py")
+    # Python micro-batch sources cannot run Trigger.AvailableNow (Spark
+    # takes one batch and stops), so the generator polls its own
+    # processing-time query to exhaustion — in the stream session
+    poller = os.path.join(PKG, "sources", "generator.py")
+    found = []
+    for layer in ENGINE_LAYERS + ("plans",):
+        for path in _py_files(os.path.join(ROOT, PKG, layer)):
+            rel = os.path.relpath(path, ROOT)
+            if rel == owner:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), rel)
+            names = {}  # enclosing top-level def → names it uses
+            for name, owner_def in _uses(tree):
+                names.setdefault(owner_def, set()).add(name)
+            found += [
+                f"{rel}:{owner_def}"
+                for owner_def, used in names.items()
+                if used & _STREAM_STARTS
+                and not (rel == poller and "stream_session" in used)
+            ]
+    assert not found, (
+        f"{len(found)} definitions start a stream themselves; build it on "
+        "streaming.stream_session and run it with "
+        "streaming.run_available_now:\n  " + "\n  ".join(sorted(found))
+    )

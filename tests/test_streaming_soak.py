@@ -32,12 +32,12 @@ def test_streaming_state_bounded_under_watermark(spark):
     from bigdata_retailrocket_recsys_spark.sources.generator import (
         register_events_generator,
     )
-    from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+    from bigdata_retailrocket_recsys_spark.streaming import stream_session
 
-    pin_streaming_confs(spark)
-    register_events_generator(spark)
+    session = stream_session(spark)
+    register_events_generator(session)
     st = (
-        spark.readStream.format("bdrr_events_gen")
+        session.readStream.format("bdrr_events_gen")
         .option("rows", ROWS)
         .option("batch_rows", BATCH_ROWS)
         .option("step_us", STEP_US)
@@ -91,7 +91,7 @@ def test_streaming_state_bounded_under_watermark(spark):
     assert any(b < a for a, b in zip(curve, curve[1:])), curve
     # and the aggregate itself is correct-to-date: every ingested row
     # landed in exactly one (window, type) cell of the sink's latest rows
-    sink = spark.table("bdrr_soak_sink")
+    sink = session.table("bdrr_soak_sink")
     latest = (
         sink.groupBy("w", "event_type").agg(F.max("n").alias("n"))
     )
@@ -122,12 +122,12 @@ def test_dynamic_gap_state_bounded_under_watermark(spark):
     from bigdata_retailrocket_recsys_spark.sources.generator import (
         register_events_generator,
     )
-    from bigdata_retailrocket_recsys_spark.streaming import pin_streaming_confs
+    from bigdata_retailrocket_recsys_spark.streaming import stream_session
 
-    pin_streaming_confs(spark)
-    register_events_generator(spark)
+    session = stream_session(spark)
+    register_events_generator(session)
     st = (
-        spark.readStream.format("bdrr_events_gen")
+        session.readStream.format("bdrr_events_gen")
         .option("rows", DG_ROWS)
         .option("batch_rows", DG_BATCH)
         .option("step_us", STEP_US)
@@ -190,7 +190,7 @@ def test_dynamic_gap_state_bounded_under_watermark(spark):
     assert removed > 10_000, (removed, curve)
     # append-mode sink carries only CLOSED sessions: every non-purchase
     # event is its own 1-event session; purchase chains never close
-    sink = spark.table("bdrr_dyngap_soak_sink").collect()
+    sink = session.table("bdrr_dyngap_soak_sink").collect()
     assert sink and all(r["etype"] != "purchase" for r in sink)
     assert all(r["n_events"] == 1 for r in sink)
     emitted = len(sink)
