@@ -1436,7 +1436,8 @@ def connected_components(
         e.select(F.col(dst_col).alias("__n"), F.col(src_col).alias("__peer"))
     )
 
-    def step(labels: DataFrame | None) -> DataFrame:
+    def step(cur: Round) -> DataFrame:
+        labels = cur.df
         if labels is None:
             old = sym.select("__n", F.col("__n").alias("__lbl"))
             nbr = sym.select("__n", F.col("__peer").alias("__lbl"))
@@ -1467,7 +1468,7 @@ def connected_components(
             converged=lambda prev, cur: not cur.seen["changed"],
             hint="connected_components: use connected_components_bigstar "
             "(O(log^2 n) rounds) or raise max_iter.",
-        ).select("__n", "__lbl")
+        ).df.select("__n", "__lbl")
         if nodes is not None:
             passive = nodes.select(F.col(node_col).alias("__n")).join(
                 sym.select("__n"), "__n", "left_anti"
@@ -1505,16 +1506,18 @@ def connected_components_bigstar(
     fixpoint the edges are the star forest {(u, component_min)}; labels
     read off it with one left join (singletons keep their own id). Edges
     with a NULL endpoint are dropped, so no NULL node is labeled. Each
-    round observes its edge count and a checksum (xxhash64 mod 2^30
-    summed, in range up to ~2^33 edges under ANSI); the exact
+    round's checkpoint counts its edges and observes a checksum (xxhash64
+    mod 2^30 summed, in range up to ~2^33 edges under ANSI); the exact
     ``exceptAll`` proof runs only when both match the previous round.
 
     ``stats``: optional dict; ``stats["rounds"]`` is set to the number of
-    large+small iterations executed.
+    large+small iterations executed and ``stats["per_round"]`` to one
+    ``(round, rows, wall_s)`` record each (rows: the round's edge count).
     """
 
-    def step(e: DataFrame) -> DataFrame:
+    def step(cur: Round) -> DataFrame:
         # large-star: symmetrize, per-u min over {u} ∪ N(u), hook v > u
+        e = cur.df
         sym = e.union(e.select(F.col("__v").alias("__u"), F.col("__u").alias("__v")))
         mins = sym.groupBy("__u").agg(F.min("__v").alias("__nm")).select(
             "__u", F.least("__u", "__nm").alias("__m")
@@ -1540,29 +1543,26 @@ def connected_components_bigstar(
             .distinct()
         )
 
-    fingerprint = (
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.pmod(F.xxhash64("__u", "__v"), F.lit(1 << 30))).alias("ck"),
-    )
+    checksum = F.sum(F.pmod(F.xxhash64("__u", "__v"), F.lit(1 << 30))).alias("ck")
     with Iteration() as it:
         start = it.checkpoint(
             edges.select(F.col(src_col).alias("__u"), F.col(dst_col).alias("__v"))
             .filter(F.col("__u") != F.col("__v"))
             .filter(F.col("__u").isNotNull() & F.col("__v").isNotNull())
             .distinct(),
-            *fingerprint,
+            checksum,
         )
         e = it.fixpoint(
             step,
             start,
             max_iter=max_iter,
-            metrics=fingerprint,
-            converged=lambda prev, cur: cur.seen == prev.seen
+            metrics=(checksum,),
+            converged=lambda prev, cur: (cur.rows, cur.seen) == (prev.rows, prev.seen)
             and cur.df.exceptAll(prev.df).isEmpty(),
             hint="connected_components_bigstar: raise max_iter.",
-        )
+        ).df
         if stats is not None:
-            stats["rounds"] = it.rounds
+            stats.update(rounds=it.rounds, per_round=it.records)
         roots = e.groupBy(F.col("__u").alias("__n")).agg(F.min("__v").alias("__root"))
         return it.result(
             nodes.select(F.col(node_col).alias("__n"))

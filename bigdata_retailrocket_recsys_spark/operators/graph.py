@@ -88,9 +88,17 @@ def pagerank(
     Standard formulation: ``r' = (1-d)/N + d * (Σ_in r/outdeg +
     dangling_mass/N)`` — dangling nodes (no out-edges) redistribute their
     mass uniformly, so total rank mass stays 1 every iteration (asserted
-    in tests). Exactly ``iters >= 1`` rounds; the dangling mass is a 1-row
-    aggregate broadcast into the rank update (no driver round-trip), and
-    the last round stays lazy for the caller's action.
+    in tests). Exactly ``iters >= 1`` rounds; duplicate edges count once
+    and edges with a NULL endpoint are dropped.
+
+    Each node carries its out-list through the rounds, as in Spark's RDD
+    PageRank (Zaharia et al., "Resilient Distributed Datasets", NSDI'12
+    §3.2.2), so no round joins or broadcasts the graph: a round explodes
+    every out-list into ``(dst, rank/outdeg)`` contributions, unions them
+    with the ``(node, out)`` rows and sums per node — one Exchange. The
+    dangling mass is an observed metric of the previous round's
+    checkpoint job; ``N`` and the dangling count are metrics of the node
+    table's. The last round stays lazy for the caller's action.
 
     Output: (node, rank) — float ranks are reduction-order dependent →
     rows-only in the driver contract; invariants (mass conservation,
@@ -98,57 +106,59 @@ def pagerank(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
+    e = edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
+    peer = e.schema[dst_col].dataType
+    # (node, out): collect_set drops duplicate edges and the NULL peer
+    # that gives every destination a row
+    adj = (
+        e.select(F.col(src_col).alias("node"), F.col(dst_col).alias("peer"))
+        .union(e.select(F.col(dst_col).alias("node"), F.lit(None).cast(peer)))
+        .groupBy("node")
+        .agg(F.collect_set("peer").alias("out"))
+    )
+    dangling = F.size("out") == 0
     with Iteration() as it:
-        e = it.checkpoint(
-            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-            .distinct()
-        ).df
-        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        # each node carries its dangling flag: the dangling mass is then a
-        # 1-row aggregate over the ranks themselves
         nodes = it.checkpoint(
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .join(
-                outdeg.select(F.col("src").alias("node"), F.lit(1).alias("__o")),
-                "node",
-                "left",
-            )
-            .select("node", F.col("__o").isNull().alias("__dng"))
-        ).df
-        n = nodes.count()
-        w = it.cache(  # edge weight = 1/outdeg of the source
-            e.join(outdeg, "src").select(
-                "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")
-            )
+            adj, F.count(F.lit(1)).alias("n"), F.count_if(dangling).alias("dng")
         )
+        n = nodes.seen["n"]
+        if n == 0:
+            return it.result(nodes.df.select("node", F.lit(0.0).alias("rank")))
         base = (1.0 - damping) / n
+        # a round's columns but the dangling term, built once: each
+        # Column costs the driver round trips to the JVM
+        kept = (F.col("node"), F.lit(0.0).alias("c"), F.col("out"))
+        moved = (
+            F.explode("out").alias("node"),
+            (F.col("rank") / F.size("out")).alias("c"),
+            F.lit(None).cast(nodes.df.schema["out"].dataType).alias("out"),
+        )
+        out = F.first("out", ignorenulls=True).alias("out")
 
-        def step(ranks: DataFrame) -> DataFrame:
-            dangling = ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("__dng"), F.col("rank"))), F.lit(0.0)
-                ).alias("dangling_m")
-            )
-            contribs = (
-                w.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("inflow"))
-            )
+        def step(cur: Round) -> DataFrame:
             rank = F.lit(base) + F.lit(damping) * (
-                F.coalesce("inflow", F.lit(0.0))
-                + F.col("dangling_m") / F.lit(float(n))
+                F.sum("c") + F.lit(cur.seen["dangling_m"]) / F.lit(float(n))
             )
             return (
-                nodes.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select("node", "__dng", rank.alias("rank"))
+                cur.df.select(*kept)
+                .union(cur.df.select(*moved))
+                .groupBy("node")
+                .agg(rank.alias("rank"), out)
             )
 
-        ranks = nodes.select("node", "__dng", F.lit(1.0 / n).alias("rank"))
-        ranks = it.fixpoint(step, Round(ranks), max_iter=iters - 1)
-        return it.result(step(ranks).select("node", "rank"))
+        start = Round(
+            nodes.df.select("node", "out", F.lit(1.0 / n).alias("rank")),
+            {"dangling_m": nodes.seen["dng"] / n},
+        )
+        last = it.fixpoint(
+            step,
+            start,
+            max_iter=iters - 1,
+            metrics=(
+                F.sum(F.when(dangling, F.col("rank")).otherwise(0.0)).alias("dangling_m"),
+            ),
+        )
+        return it.result(step(last).select("node", "rank"))
 
 
 def triangle_counts(
@@ -250,7 +260,8 @@ def pagerank_exact(
         )
         base = (unit * (damping_den - damping_num)) // damping_den
 
-        def step(ranks: DataFrame) -> DataFrame:
+        def step(cur: Round) -> DataFrame:
+            ranks = cur.df
             return (
                 out_edges.join(ranks, out_edges.s == ranks.vtx)
                 .select(F.col("d").alias("vtx"), F.expr("mass div o").alias("c"))
@@ -391,23 +402,21 @@ def k_core(
             .agg(F.count("*").cast("bigint").alias("deg"))
         )
 
-    def step(cur: DataFrame) -> DataFrame:
-        keep = degrees(cur).filter(F.col("deg") >= k).select("vtx")
+    def step(cur: Round) -> DataFrame:
+        keep = degrees(cur.df).filter(F.col("deg") >= k).select("vtx")
         return (
-            cur.join(keep.withColumnRenamed("vtx", "u"), "u", "left_semi")
+            cur.df.join(keep.withColumnRenamed("vtx", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("vtx", "v"), "v", "left_semi")
         )
 
-    n_edges = F.count(F.lit(1)).alias("n")
     with Iteration() as it:
         cur = it.fixpoint(
             step,
-            it.checkpoint(_undirected(edges, src_col, dst_col), n_edges),
+            it.checkpoint(_undirected(edges, src_col, dst_col)),
             max_iter=max_iter,
-            metrics=(n_edges,),
-            converged=lambda prev, cur: cur.seen == prev.seen,
+            converged=lambda prev, cur: cur.rows == prev.rows,
             hint="k_core is still peeling.",
-        )
+        ).df
         return it.result(degrees(cur))
 
 
@@ -439,7 +448,8 @@ def bfs_distances(
         visited.append(frontier.select("node", F.lit(len(visited)).alias("min_hop")))
         return reduce(DataFrame.union, visited)
 
-    def step(frontier: DataFrame) -> DataFrame:
+    def step(cur: Round) -> DataFrame:
+        frontier = cur.df
         return (
             frontier.join(adj, frontier.node == adj.x)
             .select(F.col("y").alias("node"))
@@ -457,7 +467,7 @@ def bfs_distances(
         start = it.checkpoint(
             edges.sparkSession.createDataFrame([(source,)], ["node"])
         )
-        last = it.fixpoint(step, start, max_iter=max_hops)
+        last = it.fixpoint(step, start, max_iter=max_hops).df
         return it.result(
             visit(last).select("node", F.col("min_hop").cast("bigint").alias("min_hop"))
         )

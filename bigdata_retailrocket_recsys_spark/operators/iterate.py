@@ -18,28 +18,40 @@ keep the lifetime their operators document.
   its own meanwhile. Finding what the output reads builds no cache.
 - Pinned input: :func:`require_pinned` checks a caller's promise that a
   frame is already materialized.
+- Checkpoints: :meth:`Iteration.checkpoint` runs one Spark job, an
+  ``rdd.count()`` that fills a lazy ``localCheckpoint`` (its map stages
+  run as their own jobs, as under any action). Metrics ride that job as
+  ``observe`` aggregates, read off the observed frame's own execution
+  once the count returns. A pyspark ``Observation`` would not do: it
+  completes when the lazy checkpoint's planning action ends, before the
+  filling job has run.
 - Rounds: the iterative operators (``connected_components*`` in
   dedup.py; ``pagerank``, ``pagerank_exact``, ``k_core`` and
   ``bfs_distances`` in graph.py) loop through :meth:`Iteration.fixpoint`:
-  per round one job that fills a ``localCheckpoint`` and carries the
-  step's ``Observation`` metrics, no added Exchange, a constant-size
-  plan for the next round. With a convergence test, not converging within
-  ``max_iter`` rounds raises RuntimeError; without one, exactly
-  ``max_iter`` rounds run.
+  per round one checkpoint with the step's metrics, no added Exchange, a
+  constant-size plan for the next round, and one ``(round, rows,
+  wall_s)`` record whose rows are the count the checkpoint returned.
+  With a convergence test, not converging within ``max_iter`` rounds
+  raises RuntimeError; without one, exactly ``max_iter`` rounds run.
 """
 
 from __future__ import annotations
 
+import time
+import uuid
 from typing import Callable, NamedTuple
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql import Column, DataFrame
 
 
 class Round(NamedTuple):
-    """A materialized state and the metrics observed while building it."""
+    """A materialized state, the metrics observed while building it and
+    its row count."""
 
     df: DataFrame | None
     seen: dict = {}
+    rows: int = 0
 
 
 def _nodes(plan):
@@ -51,6 +63,15 @@ def _nodes(plan):
 def _plan(df: DataFrame):
     # a fresh query execution: an executed one keeps its old cache lookup
     return df.select("*")._jdf.queryExecution().withCachedData()
+
+
+def _observed(df: DataFrame, name: str) -> dict:
+    """The metrics ``df.observe(name, ...)`` collected in the jobs run
+    so far on ``df``'s own query execution."""
+    jvm = df.sparkSession.sparkContext._jvm
+    row = df._jdf.queryExecution().observedMetrics().get(name).get()
+    utils = getattr(jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+    return CPickleSerializer().loads(utils.toPyRow(row)).asDict()
 
 
 def _pin_key(df: DataFrame, pin) -> int:
@@ -97,24 +118,28 @@ class Iteration:
     def __init__(self) -> None:
         self._release: dict[int, Callable] = {}  # pin key -> release
         self._out: DataFrame | None = None
-        self.rounds = 0  # rounds run by the last fixpoint
+        # the last fixpoint's rounds, one (round, rows, wall_s) each
+        self.records: list[tuple[int, int, float]] = []
+
+    @property
+    def rounds(self) -> int:
+        """Rounds run by the last fixpoint."""
+        return len(self.records)
 
     def checkpoint(self, df: DataFrame, *metrics: Column) -> Round:
-        """Eagerly checkpoint ``df``; ``metrics`` ride the same job.
+        """Eagerly checkpoint ``df`` in one job; ``metrics`` ride it.
 
         The checkpoint's RDD is owned before the job that fills it runs,
-        so a raise in that job's last stage still releases it."""
-        df = df.localCheckpoint(False)
+        so a raise in that job's last stage still releases it. A frame
+        without partitions runs no job; its metrics are those of no
+        rows."""
+        name = f"iteration_{uuid.uuid4().hex}"
+        observed = df.observe(name, *metrics) if metrics else df
+        df = observed.localCheckpoint(False)
         rdd = df._jdf.queryExecution().logical().rdd()
         self._release[_pin_key(df, rdd)] = lambda: rdd.unpersist(False)
-        obs = Observation() if metrics else None
-        # an RDD without partitions has nothing to fill, but a write runs
-        # one task regardless: only an Observation needs it then
-        if obs or rdd.getNumPartitions():
-            (df.observe(obs, *metrics) if obs else df).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        return Round(df, obs.get if obs else {})
+        rows = rdd.count()
+        return Round(df, _observed(observed, name) if metrics else {}, rows)
 
     def cache(self, df: DataFrame) -> DataFrame:
         """``df.cache()``, as lazy: the first job that reads it builds it."""
@@ -124,28 +149,30 @@ class Iteration:
 
     def fixpoint(
         self,
-        step: Callable[[DataFrame | None], DataFrame],
+        step: Callable[[Round], DataFrame],
         start: Round,
         *,
         max_iter: int,
         metrics: tuple[Column, ...] = (),
         converged: Callable[[Round, Round], bool] | None = None,
         hint: str = "",
-    ) -> DataFrame:
+    ) -> Round:
         """Feed ``start`` through ``step`` until ``converged(previous,
         current)`` holds, or for exactly ``max_iter`` rounds without a
-        test; returns the last round's checkpoint."""
-        cur, self.rounds = start, 0
+        test; returns the last round."""
+        cur, self.records = start, []
         while self.rounds < max_iter:
-            self.rounds += 1
-            prev, cur = cur, self.checkpoint(step(cur.df), *metrics)
-            if converged is not None and converged(prev, cur):
-                return cur.df
+            t0 = time.perf_counter()
+            prev, cur = cur, self.checkpoint(step(cur), *metrics)
+            done = converged is not None and converged(prev, cur)
+            self.records.append((self.rounds + 1, cur.rows, time.perf_counter() - t0))
+            if done:
+                return cur
         if converged is not None:
             raise RuntimeError(
                 f"no fixpoint within max_iter={max_iter} rounds. {hint}"
             )
-        return cur.df
+        return cur
 
     def result(self, df: DataFrame) -> DataFrame:
         """Mark ``df`` as the call's output: what it reads stays pinned."""

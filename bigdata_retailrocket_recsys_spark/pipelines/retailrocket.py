@@ -478,12 +478,15 @@ def attach_embeddings(
         embeddings.select(F.col("category_id").alias(cat_col), "vector")
     )
     out = features.join(emb, [cat_col], "left")
-    for i in range(cfg.embedding_dim):
-        out = out.withColumn(
-            f"emb_{i}",
-            F.coalesce(F.element_at("vector", i + 1), F.lit(0.0)).cast("float"),
-        )
-    return out.drop("vector")
+    return out.select(
+        *[c for c in out.columns if c != "vector"],
+        *[
+            F.coalesce(F.element_at("vector", i + 1), F.lit(0.0))
+            .cast("float")
+            .alias(f"emb_{i}")
+            for i in range(cfg.embedding_dim)
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -2953,10 +2953,12 @@ def q_recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the symmetric category co-visitation graph (10 power
     iterations, damping 0.85): the graph-importance complement of the
-    popularity candidate strategy (py:331-340). One shuffle per
-    iteration, localCheckpoint lineage truncation (operators/graph.
-    pagerank). Float ranks are reduction-order dependent → rows-only;
-    mass conservation + NumPy agreement are property-tested."""
+    popularity candidate strategy (py:331-340). Nodes carry their
+    out-lists, so each round is one Exchange with no join or broadcast,
+    checkpointed in one job whose metrics give the next round's dangling
+    mass (operators/graph.pagerank). Float ranks are reduction-order
+    dependent → rows-only; mass conservation + NumPy agreement are
+    property-tested."""
     from bigdata_retailrocket_recsys_spark.operators.graph import pagerank
     from bigdata_retailrocket_recsys_spark.operators.joins import covis_pairs
 

@@ -856,6 +856,59 @@ def test_checkpoint_releases_its_rdd_when_its_own_job_raises(
     assert not added, sorted(added)
 
 
+@pytest.mark.fast
+@pytest.mark.parametrize("empty", [False, True])
+def test_checkpoint_metrics_equal_a_direct_aggregate(spark, empty):
+    """A checkpoint's metrics are those of the rows it holds, read after
+    the job that fills it (a pyspark Observation completes before that
+    job and reads no rows): on a shuffled frame, and on a frame without
+    partitions, where no job runs."""
+    from bigdata_retailrocket_recsys_spark.operators.iterate import Iteration
+
+    frame = spark.range(1000).groupBy((F.col("id") % 10).alias("k")).agg(
+        F.sum("id").alias("s")
+    )
+    if empty:
+        frame = frame.filter(F.lit(False))
+    metrics = (F.count(F.lit(1)).alias("n"), F.sum("s").alias("t"))
+    want = frame.agg(*metrics).first().asDict()
+    with Iteration() as it:
+        got = it.checkpoint(frame, *metrics)
+        assert (got.df.rdd.getNumPartitions() == 0) == empty
+    assert got.seen == want, (got.seen, want)
+    assert got.rows == want["n"] == (0 if empty else 10)
+
+
+@pytest.mark.fast
+def test_connected_components_records_each_round(spark, count_jobs):
+    """The large-star/small-star rounds leave one (round, rows, wall_s)
+    record each, with no job added for it: rows are the count of the job
+    that fills the round's checkpoint."""
+    from bigdata_retailrocket_recsys_spark.operators.dedup import (
+        connected_components_bigstar,
+    )
+
+    nodes = spark.createDataFrame([(i,) for i in range(13)], "node bigint")
+    # chain 0-1-2-3-4, pair 10-11, singletons
+    edges = spark.createDataFrame(
+        [(1, 0), (1, 2), (3, 2), (3, 4), (10, 11)], "src bigint, dst bigint"
+    )
+    stats: dict = {}
+    labels, jobs = count_jobs(
+        lambda: connected_components_bigstar(nodes, edges, stats=stats).collect()
+    )
+    expect = {i: i for i in range(13)} | {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 11: 10}
+    assert dict(labels) == expect
+    records = stats["per_round"]
+    assert [r for r, _, _ in records] == list(range(1, stats["rounds"] + 1))
+    assert all(wall > 0 for _, _, wall in records)
+    # the fixpoint's last two rounds hold the star forest: 5 edges
+    assert [rows for _, rows, _ in records[-2:]] == [5, 5], records
+    # the call's job count from before rounds were recorded: a record
+    # must cost no job
+    assert (stats["rounds"], jobs) == (3, 38)
+
+
 def test_tfidf_hand_computed(spark):
     import math
 

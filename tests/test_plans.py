@@ -536,6 +536,29 @@ def test_duplicated_spans_shingle_frame_cached(spark):
     assert plan.count("InMemoryTableScan") >= 2, plan[:1200]
 
 
+@pytest.mark.fast
+def test_pagerank_round_is_one_exchange(spark, count_jobs):
+    """A PageRank round carries each node's out-list, so it runs one
+    shuffle and never joins or broadcasts the graph; ten rounds stay
+    within 30 jobs (a node checkpoint, then a map stage and a fill per
+    round)."""
+    from pyspark.sql import functions as F
+
+    from bigdata_retailrocket_recsys_spark.operators.graph import pagerank
+
+    edges = spark.range(300).select(
+        F.pmod(F.col("id") * 7, F.lit(120)).alias("src"),
+        F.pmod(F.col("id") * 13 + 5, F.lit(150)).alias("dst"),
+    )
+    ranks, jobs = count_jobs(lambda: pagerank(edges, iters=10))
+    _, jobs_collect = count_jobs(ranks.collect)
+    assert jobs + jobs_collect <= 30, (jobs, jobs_collect)
+    executed = plan_str(ranks, "simple").split("== Initial Plan ==")[0]
+    assert executed.count("Exchange hashpartitioning") == 1, executed
+    assert "BroadcastExchange" not in executed, executed
+    assert "BroadcastNestedLoopJoin" not in executed, executed
+
+
 def test_epoch_shuffle_has_no_single_reducer_window(spark):
     """The epoch shuffle's global rank must ride the sharded
     global_rank — every window spec in the plan involves the shard

@@ -355,7 +355,7 @@ def test_corr_moments_close_to_builtin(spark):
 def test_pagerank_invariants(spark):
     """Rank mass is conserved (Σ = 1) and ranks match a dense NumPy power
     iteration of the same formulation on a small digraph with a dangling
-    node."""
+    node; a graph without edges ranks nothing."""
     import numpy as np
 
     from bigdata_retailrocket_recsys_spark.operators.graph import pagerank
@@ -382,6 +382,9 @@ def test_pagerank_invariants(spark):
         r = (1 - d) / n + d * (M @ r + dangling / n)
     for i in range(n):
         assert abs(got[i] - r[i]) < 1e-9, (i, got[i], r[i])
+    # no edges (or only NULL-ended ones): no nodes to rank
+    none = spark.createDataFrame([(1, None)], "src bigint, dst bigint")
+    assert pagerank(none, iters=3).count() == 0
 
 
 @given(
