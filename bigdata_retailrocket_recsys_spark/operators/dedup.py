@@ -41,7 +41,7 @@ _span_islands_lazy /            span frame                     caller's
 _vs_corpus_islands_lazy                                        Iteration
 _hot_bucket_edges (capped       sized bucket rows              caller's
 MinHash / SimHash / sign-LSH)                                  Iteration
-connected_components*           per-round labels               Iteration
+connected_components*           adjacency, per-round state     Iteration
 winnowing_pairs (r13)           distinct (doc, fp) — corpus-   lazy return
                                 proportional NARROW (density
                                 2/(w+1) of grams)
@@ -83,6 +83,7 @@ from bigdata_retailrocket_recsys_spark.functions.vector import (
     quantize_sql,
     to_double_array,
 )
+from bigdata_retailrocket_recsys_spark.operators.graph import _neighbors, _push
 from bigdata_retailrocket_recsys_spark.operators.iterate import (
     Iteration,
     Round,
@@ -1416,66 +1417,48 @@ def connected_components(
     and a node whose only edges have a NULL end is a singleton.
 
     ``edges_pinned``: promise that ``edges`` is already materialized (e.g.
-    :func:`jaccard_verify` output), so the symmetrized edges need no
-    checkpoint of their own. A lazy frame raises ValueError: every round
-    would re-run its upstream.
+    :func:`jaccard_verify` output); a lazy frame raises ValueError. The
+    promise does not change the plan: the adjacency checkpoint reads the
+    edges once either way.
 
-    Min-label propagation: each round a node takes the min of its label
-    and its neighbors' (round 1 reads the identity labels off the edges)
-    until no label changes — ≤ diameter rounds; deeper graphs than
-    ``max_iter`` raise RuntimeError and belong to the bigstar form. The
-    round's min aggregate also carries the old label, so the changed count
-    (labels never increase) rides the round's own job.
+    Min-label propagation: each node carries its neighbor list and starts
+    at its own id; each round one :func:`_push` sends every label to the
+    neighbors and a node takes the min of its label and theirs, until no
+    label changes — ≤ diameter rounds; deeper graphs than ``max_iter``
+    raise RuntimeError and belong to the bigstar form. The kept row
+    carries the old label, so the changed count (labels never increase)
+    rides the round's own job.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     if edges_pinned:
         require_pinned(edges)
     e = edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-    sym = e.select(F.col(src_col).alias("__n"), F.col(dst_col).alias("__peer")).union(
-        e.select(F.col(dst_col).alias("__n"), F.col(src_col).alias("__peer"))
-    )
+    lbl = F.col("lbl")
+    # only the kept row has an out-list: its c is the old label
+    old = F.min(F.when(F.col("out").isNotNull(), F.col("c"))).alias("old")
 
     def step(cur: Round) -> DataFrame:
-        labels = cur.df
-        if labels is None:
-            old = sym.select("__n", F.col("__n").alias("__lbl"))
-            nbr = sym.select("__n", F.col("__peer").alias("__lbl"))
-        else:
-            old = labels.select("__n", "__lbl")
-            nbr = sym.join(
-                labels.select(F.col("__n").alias("__peer"), "__lbl"), "__peer"
-            ).select("__n", "__lbl")
-        return (
-            old.withColumn("__src", F.lit(0))
-            .union(nbr.withColumn("__src", F.lit(1)))
-            .groupBy("__n")
-            .agg(
-                F.min("__lbl").alias("__lbl"),
-                F.min(F.when(F.col("__src") == 0, F.col("__lbl"))).alias("__old"),
-            )
-        )
+        return _push(cur.df, lbl, lbl, F.min("c").alias("lbl"), old)
 
-    changed = F.sum((F.col("__lbl") < F.col("__old")).cast("bigint"))
     with Iteration() as it:
-        if not edges_pinned:  # a lazy upstream runs once, not per round
-            sym = it.checkpoint(sym).df
+        start = it.checkpoint(_neighbors(e, src_col, dst_col).withColumn("lbl", F.col("node")))
         labels = it.fixpoint(
             step,
-            Round(None),
+            start,
             max_iter=max_iter,
-            metrics=(changed.alias("changed"),),
+            metrics=(F.sum((lbl < F.col("old")).cast("bigint")).alias("changed"),),
             converged=lambda prev, cur: not cur.seen["changed"],
             hint="connected_components: use connected_components_bigstar "
             "(O(log^2 n) rounds) or raise max_iter.",
-        ).df.select("__n", "__lbl")
+        ).df.select("node", "lbl")
         if nodes is not None:
-            passive = nodes.select(F.col(node_col).alias("__n")).join(
-                sym.select("__n"), "__n", "left_anti"
+            passive = nodes.select(F.col(node_col).alias("node")).join(
+                start.df.select("node"), "node", "left_anti"
             )
-            labels = labels.union(passive.select("__n", F.col("__n").alias("__lbl")))
+            labels = labels.union(passive.select("node", F.col("node").alias("lbl")))
         return it.result(
-            labels.select(F.col("__n").alias(node_col), F.col("__lbl").alias("cluster_id"))
+            labels.select(F.col("node").alias(node_col), F.col("lbl").alias("cluster_id"))
         )
 
 

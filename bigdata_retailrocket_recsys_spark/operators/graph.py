@@ -8,20 +8,44 @@ is the degenerate damping=1-iteration version of this).
 
 The iterative operators here (``pagerank``, ``pagerank_exact``,
 ``k_core``, ``bfs_distances``) run through ``operators/iterate.py``,
-which states their round, round-limit and pin-lifetime contract once.
+which states their round, round-limit and pin-lifetime contract once;
+all but ``bfs_distances`` carry each node's adjacency, as dedup.py's
+min-label ``connected_components`` does, so a round is one :func:`_push`.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_retailrocket_recsys_spark.operators.iterate import (
     Iteration,
     Round,
 )
+
+
+def _adjacency(pairs: DataFrame) -> DataFrame:
+    """``(node, peer)`` rows as ``(node, out)``, ``out`` the set of the
+    node's peers; NULL peers are dropped, so a node with only NULL peers
+    keeps a row with an empty ``out``."""
+    return pairs.groupBy("node").agg(F.collect_set("peer").alias("out"))
+
+
+def _push(state: DataFrame, keep: Column, send: Column, *aggs: Column) -> DataFrame:
+    """One message-passing round over ``(node, out, ...)`` state, as in
+    Pregel (Malewicz et al., SIGMOD'10): each row keeps ``(node, out,
+    c=keep)`` and sends ``(peer, NULL, c=send)`` to every peer in
+    ``out``; per node, ``aggs`` fold ``c`` and ``out`` carries over. The
+    union and its groupBy are one Exchange, no join."""
+    sent = F.explode("out").alias("node"), F.lit(None).alias("out"), send.alias("c")
+    return (
+        state.select("node", "out", keep.alias("c"))
+        .union(state.select(*sent))
+        .groupBy("node")
+        .agg(*aggs, F.first("out", ignorenulls=True).alias("out"))
+    )
 
 
 def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -33,6 +57,16 @@ def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
+    )
+
+
+def _neighbors(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """``(node, out)``: every endpoint of ``edges`` with its peers in
+    either direction, in one aggregate."""
+    return _adjacency(
+        edges.select(F.col(src_col).alias("node"), F.col(dst_col).alias("peer")).union(
+            edges.select(F.col(dst_col).alias("node"), F.col(src_col).alias("peer"))
+        )
     )
 
 
@@ -93,12 +127,11 @@ def pagerank(
 
     Each node carries its out-list through the rounds, as in Spark's RDD
     PageRank (Zaharia et al., "Resilient Distributed Datasets", NSDI'12
-    §3.2.2), so no round joins or broadcasts the graph: a round explodes
-    every out-list into ``(dst, rank/outdeg)`` contributions, unions them
-    with the ``(node, out)`` rows and sums per node — one Exchange. The
-    dangling mass is an observed metric of the previous round's
-    checkpoint job; ``N`` and the dangling count are metrics of the node
-    table's. The last round stays lazy for the caller's action.
+    §3.2.2), so no round joins or broadcasts the graph: a round is one
+    :func:`_push` of ``rank/outdeg`` to every out-neighbor. The dangling
+    mass is an observed metric of the previous round's checkpoint job;
+    ``N`` and the dangling count are metrics of the node table's. The
+    last round stays lazy for the caller's action.
 
     Output: (node, rank) — float ranks are reduction-order dependent →
     rows-only in the driver contract; invariants (mass conservation,
@@ -107,14 +140,11 @@ def pagerank(
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     e = edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-    peer = e.schema[dst_col].dataType
-    # (node, out): collect_set drops duplicate edges and the NULL peer
-    # that gives every destination a row
-    adj = (
-        e.select(F.col(src_col).alias("node"), F.col(dst_col).alias("peer"))
-        .union(e.select(F.col(dst_col).alias("node"), F.lit(None).cast(peer)))
-        .groupBy("node")
-        .agg(F.collect_set("peer").alias("out"))
+    # duplicate edges count once; the NULL peer gives every destination a row
+    adj = _adjacency(
+        e.select(F.col(src_col).alias("node"), F.col(dst_col).alias("peer")).union(
+            e.select(F.col(dst_col).alias("node"), F.lit(None).alias("peer"))
+        )
     )
     dangling = F.size("out") == 0
     with Iteration() as it:
@@ -125,26 +155,14 @@ def pagerank(
         if n == 0:
             return it.result(nodes.df.select("node", F.lit(0.0).alias("rank")))
         base = (1.0 - damping) / n
-        # a round's columns but the dangling term, built once: each
-        # Column costs the driver round trips to the JVM
-        kept = (F.col("node"), F.lit(0.0).alias("c"), F.col("out"))
-        moved = (
-            F.explode("out").alias("node"),
-            (F.col("rank") / F.size("out")).alias("c"),
-            F.lit(None).cast(nodes.df.schema["out"].dataType).alias("out"),
-        )
-        out = F.first("out", ignorenulls=True).alias("out")
+        # built once: each Column costs the driver round trips to the JVM
+        keep, send = F.lit(0.0), F.col("rank") / F.size("out")
 
         def step(cur: Round) -> DataFrame:
             rank = F.lit(base) + F.lit(damping) * (
                 F.sum("c") + F.lit(cur.seen["dangling_m"]) / F.lit(float(n))
             )
-            return (
-                cur.df.select(*kept)
-                .union(cur.df.select(*moved))
-                .groupBy("node")
-                .agg(rank.alias("rank"), out)
-            )
+            return _push(cur.df, keep, send, rank.alias("rank"))
 
         start = Round(
             nodes.df.select("node", "out", F.lit(1.0 / n).alias("rank")),
@@ -241,43 +259,31 @@ def pagerank_exact(
     with ``base = unit·(den−num) div den``. The floors leak a little
     mass (deterministically — this is a defined fixed-point scheme, not
     an approximation of the float one); ranking order converges to the
-    same importance order as float PageRank on these graphs. One
-    join+agg shuffle per round; the last round stays lazy.
+    same importance order as float PageRank on these graphs. Each node
+    carries its neighbor list, so a round is one :func:`_push` of ``mass
+    div outdeg`` (one Exchange, no join); the last round stays lazy.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    und = _undirected(edges, src_col, dst_col)
+    base = (unit * (damping_den - damping_num)) // damping_den
+    send = F.expr("mass div size(out)")
+    mass = (
+        (F.lit(base) + F.expr(f"({damping_num} * sum(c)) div {damping_den}"))
+        .cast("bigint")
+        .alias("mass")
+    )
+
+    e = edges.filter(F.col(src_col) != F.col(dst_col))  # no self-loop, no NULL end
+
+    def step(cur: Round) -> DataFrame:
+        return _push(cur.df, F.lit(0), send, mass)
+
     with Iteration() as it:
-        sym = it.checkpoint(
-            und.select(F.col("u").alias("s"), F.col("v").alias("d")).unionAll(
-                und.select(F.col("v").alias("s"), F.col("u").alias("d"))
-            )
-        ).df
-        # cached: every round reads it, and Spark never reuses a
-        # twice-referenced subtree
-        out_edges = it.cache(
-            sym.join(sym.groupBy("s").agg(F.count(F.lit(1)).alias("o")), "s")
+        start = it.checkpoint(
+            _neighbors(e, src_col, dst_col).withColumn("mass", F.lit(unit).cast("bigint"))
         )
-        base = (unit * (damping_den - damping_num)) // damping_den
-
-        def step(cur: Round) -> DataFrame:
-            ranks = cur.df
-            return (
-                out_edges.join(ranks, out_edges.s == ranks.vtx)
-                .select(F.col("d").alias("vtx"), F.expr("mass div o").alias("c"))
-                .groupBy("vtx")
-                .agg(
-                    (F.lit(base) + F.expr(f"({damping_num} * sum(c)) div {damping_den}"))
-                    .cast("bigint")
-                    .alias("mass")
-                )
-            )
-
-        ranks = sym.select(F.col("s").alias("vtx")).distinct().withColumn(
-            "mass", F.lit(unit).cast("bigint")
-        )
-        ranks = it.fixpoint(step, Round(ranks), max_iter=iters - 1)
-        return it.result(step(ranks))
+        last = it.fixpoint(step, start, max_iter=iters - 1)
+        return it.result(step(last).select(F.col("node").alias("vtx"), "mass"))
 
 
 def edge_jaccard(
@@ -381,43 +387,47 @@ def k_core(
     triangles and Jaccard — a cohesion gate for the reference's
     co-visitation graph (py:331-340), like the other graph operators.
 
-    Each round is one degree agg + two semi joins (edges keep only
-    endpoints that survived), until a round keeps every edge; rounds are
-    bounded by the degeneracy ordering depth, typically ≪ 20 on real
-    graphs. Not SQL-recursion expressible (fixpoint needs aggregation in
-    the recursive term, which neither engine allows) → rows-only entry
-    with the defining invariant locked in tests.
+    Each vertex carries its neighbor list, and each round is one
+    :func:`_push`: a vertex of degree < k sends its id to its neighbors
+    and drops out, every survivor removes the ids it receives (a vertex
+    left with no neighbor drops out too), until a round keeps every
+    vertex; rounds are bounded by the degeneracy ordering depth,
+    typically ≪ 20 on real graphs. Not SQL-recursion expressible
+    (fixpoint needs aggregation in the recursive term, which neither
+    engine allows) → rows-only entry with the defining invariant locked
+    in tests.
 
     Returns ``(vtx, deg)`` — vertices of the k-core with their degree
     WITHIN the core.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("u").alias("vtx"))
-            .unionAll(e.select(F.col("v").alias("vtx")))
-            .groupBy("vtx")
-            .agg(F.count("*").cast("bigint").alias("deg"))
-        )
+    e = edges.filter(F.col(src_col) != F.col(dst_col))  # no self-loop, no NULL end
+    # survivors send NULL, which collect_set drops
+    keep, send = F.lit(None), F.when(F.size("out") < k, F.col("node"))
 
     def step(cur: Round) -> DataFrame:
-        keep = degrees(cur.df).filter(F.col("deg") >= k).select("vtx")
+        # messages to a vertex that dies this round go with its row; a
+        # vertex left with no neighbor goes too, so the row count holds
+        # exactly when a round peels no edge
         return (
-            cur.df.join(keep.withColumnRenamed("vtx", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("vtx", "v"), "v", "left_semi")
+            _push(cur.df, keep, send, F.collect_set("c").alias("dead"))
+            .filter(F.size("out") >= k)
+            .select("node", F.array_except("out", "dead").alias("out"))
+            .filter(F.size("out") > 0)
         )
 
     with Iteration() as it:
         cur = it.fixpoint(
             step,
-            it.checkpoint(_undirected(edges, src_col, dst_col)),
+            it.checkpoint(_neighbors(e, src_col, dst_col)),
             max_iter=max_iter,
             converged=lambda prev, cur: cur.rows == prev.rows,
             hint="k_core is still peeling.",
         ).df
-        return it.result(degrees(cur))
+        return it.result(
+            cur.select(F.col("node").alias("vtx"), F.size("out").cast("bigint").alias("deg"))
+        )
 
 
 def bfs_distances(

@@ -28,11 +28,16 @@ keep the lifetime their operators document.
 - Rounds: the iterative operators (``connected_components*`` in
   dedup.py; ``pagerank``, ``pagerank_exact``, ``k_core`` and
   ``bfs_distances`` in graph.py) loop through :meth:`Iteration.fixpoint`:
-  per round one checkpoint with the step's metrics, no added Exchange, a
-  constant-size plan for the next round, and one ``(round, rows,
-  wall_s)`` record whose rows are the count the checkpoint returned.
-  With a convergence test, not converging within ``max_iter`` rounds
-  raises RuntimeError; without one, exactly ``max_iter`` rounds run.
+  per round one checkpoint with the step's metrics, no added Exchange,
+  and one ``(round, rows, wall_s)`` record whose rows are the count the
+  checkpoint returned. The min-label ``connected_components``, both
+  PageRanks and ``k_core`` carry each node's adjacency in the round
+  state, so their round is one ``graph._push``: one Exchange, no join.
+  The next round's plan is constant-size for every operator but
+  ``bfs_distances``, whose anti-join reads a union that gains one
+  checkpointed leaf per round (at most ``max_hops``). With a
+  convergence test, not converging within ``max_iter`` rounds raises
+  RuntimeError; without one, exactly ``max_iter`` rounds run.
 """
 
 from __future__ import annotations

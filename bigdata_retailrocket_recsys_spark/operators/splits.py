@@ -130,9 +130,6 @@ def leakage_safe_split(
         node_col=id_col,
         src_col="doc_a",
         dst_col="doc_b",
-        # jaccard_verify eagerly checkpointed the edges — no sym
-        # checkpoint job needed (r14)
-        edges_pinned=True,
     )
     return hash_split(
         cc, key_cols=["cluster_id"], splits=splits, split_col=split_col

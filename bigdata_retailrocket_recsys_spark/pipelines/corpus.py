@@ -227,16 +227,13 @@ def build_corpus(
         # assigns the same labels to edge nodes, and keepers = all docs
         # minus {edge nodes with cluster_id != id} (oracle-locked).
         # nodes=None (r14): CC derives the endpoint set itself (no
-        # distinct / semi-join / passive branch); edges_pinned because
-        # jaccard_verify eagerly checkpointed them — no sym checkpoint
-        # job either.
+        # distinct / semi-join / passive branch).
         cc = connected_components(
             None,
             edges,
             node_col=id_col,
             src_col="doc_a",
             dst_col="doc_b",
-            edges_pinned=True,
         )
         nd_lose = cc.filter(F.col(id_col) != F.col("cluster_id")).select(
             id_col

@@ -5312,7 +5312,8 @@ def q_graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction-order safe, so unlike float `q_graph_pagerank` every mass
     matches a DuckDB recursive-CTE replay bit-for-bit. Same importance
     ordering signal (py:331-340 complement), now with a hard
-    cross-engine correctness gate on an iterative dataflow."""
+    cross-engine correctness gate on an iterative dataflow. Each node
+    carries its neighbor list, so a round is one Exchange, no join."""
     from bigdata_retailrocket_recsys_spark.operators.graph import (
         pagerank_exact,
     )
@@ -6806,7 +6807,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     community analysis. Fixpoint peeling needs aggregation inside the
     recursion (neither engine's recursive SQL allows it) → rows-only;
     the defining invariant (every surviving vertex keeps ≥ k neighbors
-    among survivors, and the result is a fixpoint) is test-locked."""
+    among survivors, and the result is a fixpoint) is test-locked. Each
+    vertex carries its neighbor list, so a peeling round is one
+    Exchange, no join."""
     from bigdata_retailrocket_recsys_spark.operators.graph import k_core
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -11968,7 +11971,6 @@ def q_dedup_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components(
         base.select("doc_id"), edges, node_col="doc_id",
         src_col="doc_a", dst_col="doc_b",
-        edges_pinned=True,  # jaccard_verify checkpointed them (r14)
     )
     scores = base.select(
         "doc_id",

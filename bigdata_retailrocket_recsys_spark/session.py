@@ -24,9 +24,13 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "bigdata-retailrocket-recsys-spark"
 
 
+def _cpus() -> str:
+    """The local core count: ``SPARK_GRAFT_CPUS``, else the machine's."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+
+
 def _default_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    return os.environ.get("SPARK_MASTER", f"local[{_cpus()}]")
 
 
 def get_spark(
@@ -48,9 +52,8 @@ def get_spark(
     """
     master = master or _default_master()
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
         try:
-            shuffle_partitions = max(int(cpus), 4)
+            shuffle_partitions = max(int(_cpus()), 4)
         except ValueError:
             shuffle_partitions = 32
 

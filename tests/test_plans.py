@@ -537,26 +537,56 @@ def test_duplicated_spans_shingle_frame_cached(spark):
 
 
 @pytest.mark.fast
-def test_pagerank_round_is_one_exchange(spark, count_jobs):
+@pytest.mark.parametrize("op", ["pagerank", "pagerank_exact"])
+def test_pagerank_round_is_one_exchange(spark, count_jobs, op):
     """A PageRank round carries each node's out-list, so it runs one
     shuffle and never joins or broadcasts the graph; ten rounds stay
     within 30 jobs (a node checkpoint, then a map stage and a fill per
     round)."""
     from pyspark.sql import functions as F
 
-    from bigdata_retailrocket_recsys_spark.operators.graph import pagerank
+    from bigdata_retailrocket_recsys_spark.operators import graph
 
     edges = spark.range(300).select(
         F.pmod(F.col("id") * 7, F.lit(120)).alias("src"),
         F.pmod(F.col("id") * 13 + 5, F.lit(150)).alias("dst"),
     )
-    ranks, jobs = count_jobs(lambda: pagerank(edges, iters=10))
+    ranks, jobs = count_jobs(lambda: getattr(graph, op)(edges, iters=10))
     _, jobs_collect = count_jobs(ranks.collect)
     assert jobs + jobs_collect <= 30, (jobs, jobs_collect)
     executed = plan_str(ranks, "simple").split("== Initial Plan ==")[0]
     assert executed.count("Exchange hashpartitioning") == 1, executed
     assert "BroadcastExchange" not in executed, executed
-    assert "BroadcastNestedLoopJoin" not in executed, executed
+    assert "Join" not in executed, executed
+
+
+@pytest.mark.fast
+@pytest.mark.parametrize(
+    "op, most",
+    [("connected_components", 13), ("pagerank_exact", 11), ("k_core", 11)],
+)
+def test_message_passing_job_bounds(spark, count_jobs, op, most):
+    """The iterative operators that carry their adjacency run a start
+    checkpoint and two jobs per round: bounds on a call plus its collect,
+    which a round that joins the graph exceeds (24, 19 and 20 jobs)."""
+    from bigdata_retailrocket_recsys_spark.operators import dedup, graph
+
+    # chain 0-4 and pair 10-11: five CC rounds; triangle with a 3-tail
+    # for k_core, which peels in three rounds
+    chain = spark.createDataFrame(
+        [(1, 0), (1, 2), (3, 2), (3, 4), (10, 11)], "src bigint, dst bigint"
+    )
+    tail = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6)], "src bigint, dst bigint"
+    )
+    call = {
+        "connected_components": lambda: dedup.connected_components(None, chain),
+        "pagerank_exact": lambda: graph.pagerank_exact(chain, iters=4),
+        "k_core": lambda: graph.k_core(tail, 2),
+    }[op]
+    out, jobs = count_jobs(call)
+    _, jobs_collect = count_jobs(out.collect)
+    assert jobs + jobs_collect <= most, (jobs, jobs_collect)
 
 
 def test_epoch_shuffle_has_no_single_reducer_window(spark):
